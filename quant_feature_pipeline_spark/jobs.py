@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from .config import PipelineConfig, tf_seconds
 from .plans.checkpoint import Checkpointer
 from .plans.pipeline import run_pipeline
+from .session import build_session
 
 FEATURES_STAGE = "features"
 
@@ -174,14 +175,8 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
 
 def main(argv: list[str] | None = None) -> None:
     args = _parse_args(argv if argv is not None else sys.argv[1:])
-    spark = (
-        SparkSession.builder.appName("qfp-features")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    # no master here: spark-submit's --master decides where the job runs
+    spark = build_session("qfp-features", {})
     try:
         metrics = build_features(spark, args)
     finally:

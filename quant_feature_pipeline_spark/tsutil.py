@@ -32,7 +32,7 @@ def repartition_by_size(df, *keys):
     constant tuned for one scale).
 
     count = max(defaultParallelism, ceil(estimated_bytes / target)),
-    target = spark.qfps.inputBytesPerPartition (default 16 MiB). The
+    target = spark.qfps.inputBytesPerPartition (default 8 MiB). The
     count is explicit and deterministic at plan time: deriving it from
     statistics rather than leaving a bare repartition for AQE avoids the
     near-boundary coalescing flips that can merge the downstream WIDE
