@@ -14,6 +14,14 @@ Layout
 - ``textops``      dedup (minhash/simhash/ngram), similarity search, text quality
 - ``multimodal``   binary-column (image/audio) plumbing with stubbed decoders
 - ``streaming``    structured-streaming wrappers for the micro-batch mode
+- ``pyworker``     Python-worker start-up: import zips parsed once per worker
 """
 
+from .pyworker import install as _install_zip_stamps
+
 __version__ = "0.1.0"
+
+# Python workers import this package when they unpickle the engine's
+# Arrow kernels; from then on each task's importlib.invalidate_caches()
+# re-reads only the import zips that changed.
+_install_zip_stamps()

@@ -8,8 +8,12 @@ session.py.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def epoch_seconds(col: Column | str) -> Column:
@@ -38,13 +42,19 @@ def repartition_by_size(df, *keys):
     near-boundary coalescing flips that can merge the downstream WIDE
     stages (10-25x the input width) into partitions that exhaust task
     memory. Tiny inputs get defaultParallelism partitions; big inputs
-    scale linearly with bytes. Falls back to a bare AQE-coalescible
-    repartition when no estimate is available."""
+    scale linearly with bytes. Falls back, with a warning, to a bare
+    AQE-coalescible repartition when no estimate is available."""
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 — estimation must never break the plan
         est = None
     if est is None or est <= 0:
+        log.warning(
+            "repartition_by_size: no size estimate for the input keyed by %s; "
+            "falling back to a bare repartition (count from "
+            "spark.sql.shuffle.partitions, coalesced by AQE)",
+            ", ".join(map(str, keys)),
+        )
         return df.repartition(*keys)
     spark = df.sparkSession
     target = int(

@@ -166,3 +166,74 @@ def test_grid_fill_ranges_matches_join_ffill(spark):
     a, b = got["close"].to_numpy(), want["close"].to_numpy()
     assert np.array_equal(np.isnan(a), np.isnan(b))
     assert np.array_equal(a[~np.isnan(a)], b[~np.isnan(b)])
+
+
+
+def _null(v):
+    return None if pd.isna(v) else v
+
+
+def _bfill_admissible(ev: pd.DataFrame) -> dict[int, set]:
+    """event_id -> the purchase_val values a per-user backward fill in ts
+    order may give the row (``None`` for null). The window orders by ts
+    only, so rows tied on (user_id, ts) may come in any order: a null row
+    takes a non-null value of a tied row or, placed last among its ties,
+    the fill from later ts. An untied row has exactly one value."""
+    out: dict[int, set] = {}
+    for _, user in ev.groupby("user_id"):
+        later = {None}  # what the first non-null after the current ts may be
+        for _, tied in reversed(list(user.groupby("ts"))):
+            vals = dict(zip(tied["event_id"], map(_null, tied["purchase_val"])))
+            for eid, v in vals.items():
+                others = {w for k, w in vals.items() if k != eid and w is not None}
+                out[eid] = {v} if v is not None else others | later
+            later = {v for v in vals.values() if v is not None} or later
+    return out
+
+
+def _check_bfill(got: pd.DataFrame, ev: pd.DataFrame) -> dict[int, set]:
+    """``got`` == pandas' per-user ``bfill`` of ``ev`` in (ts, event_id)
+    order wherever the ts order decides the value; elsewhere (ties) the
+    value is one that some order of the tied rows gives."""
+    ev = ev.sort_values(["user_id", "ts", "event_id"])
+    want = dict(zip(ev["event_id"], map(_null, ev.groupby("user_id")["purchase_val"].bfill())))
+    admissible = _bfill_admissible(ev)
+    assert sorted(got["event_id"]) == sorted(want)
+    for eid, v in zip(got["event_id"], map(_null, got["purchase_val"])):
+        assert want[eid] in admissible[eid]
+        if len(admissible[eid]) == 1:
+            assert v == want[eid], (eid, v, want[eid])
+        assert v in admissible[eid], (eid, v, admissible[eid])
+    return admissible
+
+
+def test_bfill_value_query_matches_pandas(spark):
+    """bfill_value (the declared query without a DuckDB oracle entry) ==
+    a pandas per-user backward fill of purchase_val in ts order."""
+    import __spark_entry__ as e
+
+    from .test_plan_shape import SF
+
+    ev = pd.read_parquet(f"{SF}/events.parquet")
+    ev = ev.assign(purchase_val=ev["value"].where(ev["event_type"] == "purchase"))
+    got = e.queries()["bfill_value"](spark, SF).toPandas()
+    assert got["purchase_val"].notna().any() and got["purchase_val"].isna().any()
+    _check_bfill(got, ev[["user_id", "ts", "event_id", "purchase_val"]])
+
+
+def test_bfill_ties_on_ts(spark):
+    """Rows tied on (user_id, ts) may take either order's fill."""
+    t0 = pd.Timestamp("2024-01-01")
+    ev = pd.DataFrame(
+        {
+            "user_id": [1, 1, 1, 1, 1, 1],
+            "ts": [t0 + pd.Timedelta(minutes=m) for m in (0, 0, 1, 2, 2, 3)],
+            "event_id": [1, 2, 3, 4, 5, 6],
+            "purchase_val": [np.nan, 5.0, np.nan, 7.0, 8.0, np.nan],
+        }
+    )
+    got = bfill(spark.createDataFrame(ev), ["purchase_val"], by="user_id").toPandas()
+    admissible = _check_bfill(got, ev)
+    assert admissible == {
+        1: {5.0, 7.0, 8.0}, 2: {5.0}, 3: {7.0, 8.0}, 4: {7.0}, 5: {8.0}, 6: {None}
+    }

@@ -3,6 +3,7 @@ on must stay visible in the executed plan (SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import logging
 import re
 
 from pyspark.sql import functions as F
@@ -58,3 +59,31 @@ def test_prefix_sum_sma_no_sliding_frame(spark):
     # sliding frames print as 'ROWS BETWEEN 199 PRECEDING AND CURRENT ROW'
     assert "199 PRECEDING" not in p
     assert "unboundedpreceding" in p.lower() or "UNBOUNDED PRECEDING" in p
+
+
+class _NoStatsJdf:
+    """A Java DataFrame handle whose size estimate is unavailable."""
+
+    def __init__(self, jdf):
+        self._jdf = jdf
+
+    def queryExecution(self):
+        raise RuntimeError("no statistics")
+
+    def __getattr__(self, name):
+        return getattr(self._jdf, name)
+
+
+def test_repartition_by_size_warns_without_estimate(spark, caplog):
+    """A missing size estimate falls back to a bare repartition, loudly."""
+    from quant_feature_pipeline_spark.tsutil import repartition_by_size
+
+    df = spark.createDataFrame(make_bars_pdf(n=20))
+    df._jdf = _NoStatsJdf(df._jdf)
+    with caplog.at_level(logging.WARNING, logger="quant_feature_pipeline_spark.tsutil"):
+        out = repartition_by_size(df, "entity")
+    warnings = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "no size estimate" in warnings[0] and "entity" in warnings[0]
+    assert out.count() == 40
+    assert "RepartitionByExpression ['entity]\n" in out._jdf.queryExecution().logical().toString()
