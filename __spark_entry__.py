@@ -120,7 +120,6 @@ def q_asof_backward_noexact(spark, sf_dir):
     left = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     return asof_join(
         left, _axis_15m(spark, sf_dir), by="user_id", allow_exact_matches=False,
-        strategy="sorted_merge",
     ).select("user_id", "ts", "event_id", "bucket_close", "matched_ts")
 
 

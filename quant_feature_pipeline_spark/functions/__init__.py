@@ -1,11 +1,9 @@
 from .indicators import (
     sma,
-    rolling_std,
     bollinger_width,
     roc_momentum,
     realized_vol,
     rolling_zscore,
-    rolling_volume_sum,
 )
 from .recurrence import compute_recurrence_indicators
 from .rank import rolling_percentile_rank
@@ -14,12 +12,10 @@ from .timefeat import time_encodings
 
 __all__ = [
     "sma",
-    "rolling_std",
     "bollinger_width",
     "roc_momentum",
     "realized_vol",
     "rolling_zscore",
-    "rolling_volume_sum",
     "compute_recurrence_indicators",
     "rolling_percentile_rank",
     "winsorize_tanh",

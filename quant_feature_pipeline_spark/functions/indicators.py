@@ -21,7 +21,6 @@ Reproduced semantics (SURVEY.md §2.4/2.5):
 - ROC momentum: close/close.shift(n)-1 (`tools/real_sliding_simple.py:44`)
 - realized vol rv_win{n}: rolling sample std of log returns
 - rolling z-score: population σ (reference cumsum form)
-- rolling volume sum (`step5_featueres_unified.py:595-620`)
 """
 
 from __future__ import annotations
@@ -110,20 +109,6 @@ def sma(
     return rs.strip(out)
 
 
-def rolling_std(
-    df: DataFrame,
-    n: int,
-    src: str = "close",
-    by: str = "entity",
-    ts_col: str = "ts",
-    out: str | None = None,
-    ddof: int = 1,
-) -> DataFrame:
-    rs = _RollStats(df, src, by, ts_col, need_sq=True)
-    res = rs.df.withColumn(out or f"std_{n}", rs.std(n, ddof=ddof, min_periods=1 + ddof))
-    return rs.strip(res)
-
-
 def bollinger_width(
     df: DataFrame,
     n: int = 20,
@@ -205,22 +190,6 @@ def rolling_zscore(
     return df.withColumn(
         out or f"{src}_z{n}", (F.col(src) - mu) / F.greatest(sigma, F.lit(eps))
     )
-
-
-def rolling_volume_sum(
-    df: DataFrame,
-    steps: int,
-    src: str = "volume",
-    by: str = "entity",
-    ts_col: str = "ts",
-    out: str | None = None,
-) -> DataFrame:
-    rs = _RollStats(df, src, by, ts_col, need_sq=False)
-    cnt = rs.count(steps)
-    res = rs.df.withColumn(
-        out or f"{src}_sum{steps}", F.when(cnt >= 1, rs._win("S", steps))
-    )
-    return rs.strip(res)
 
 
 def window_indicator_layers(

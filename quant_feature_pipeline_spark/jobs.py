@@ -64,7 +64,6 @@ def _parse_args(argv: list[str] | None) -> argparse.Namespace:
                    help="comma-separated resample targets (first = base axis)")
     p.add_argument("--by", default="entity")
     p.add_argument("--ts-col", default="ts")
-    p.add_argument("--asof-strategy", default="multi")
     p.add_argument("--warmup-bars", type=int, default=600,
                    help="recurrence warm-up replayed before last_ts on "
                         "incremental runs, in LARGEST-target-tf bars")
@@ -113,10 +112,7 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
         # match the full rebuild to the same tolerance as the new rows.
         backtrack_s = 5 * tf_seconds(cfg.base_tf)
         tail = bars.filter(F.col(args.ts_col) >= F.lit(plan.recompute_from))
-        feats = run_pipeline(
-            tail, cfg, by=args.by, ts_col=args.ts_col,
-            asof_strategy=args.asof_strategy,
-        ).filter(
+        feats = run_pipeline(tail, cfg, by=args.by, ts_col=args.ts_col).filter(
             F.col(args.ts_col)
             >= F.lit(plan.last_ts) - F.expr(f"INTERVAL {backtrack_s} SECONDS")
         )
@@ -124,10 +120,7 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
             FEATURES_STAGE, feats, keys=(args.by, args.ts_col)
         )
     else:
-        publish = run_pipeline(
-            bars, cfg, by=args.by, ts_col=args.ts_col,
-            asof_strategy=args.asof_strategy,
-        )
+        publish = run_pipeline(bars, cfg, by=args.by, ts_col=args.ts_col)
     compute_planned_s = time.time() - t0
 
     # snapshot-publish is atomic-by-rename semantics on a real catalog;

@@ -1,5 +1,5 @@
 from .resample import resample_ohlcv, rolling_bars
-from .asof import asof_join, asof_join_union_ffill, asof_join_sorted_merge, asof_join_bucketed
+from .asof import asof_join, asof_join_union_ffill, asof_join_bucketed
 from .fill import grid_fill, ffill, bfill, clean_numeric
 from .shift import lag_momentum, log_return, sliding_momentum, lead_shift, lag_shift, boundary_momentum
 from .sessionize import sessionize, session_stats
@@ -11,7 +11,6 @@ __all__ = [
     "rolling_bars",
     "asof_join",
     "asof_join_union_ffill",
-    "asof_join_sorted_merge",
     "asof_join_bucketed",
     "grid_fill",
     "ffill",

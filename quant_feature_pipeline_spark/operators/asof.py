@@ -5,7 +5,7 @@ Reference semantics (`/root/reference/step4_merge_features.py:347-359,
 ``right.ts <= ts`` (backward; forward/nearest + ``allow_exact_matches`` +
 ``tolerance`` configurable per `congfigs/main_config.yaml` merge block).
 
-Spark has no built-in as-of join, so three from-scratch formulations:
+Spark has no built-in as-of join, so two from-scratch formulations:
 
 1. ``asof_join_union_ffill`` (default) — pure Catalyst: union left and
    right on the time axis, tag provenance, and forward-fill the right
@@ -19,12 +19,7 @@ Spark has no built-in as-of join, so three from-scratch formulations:
    NULL value and pair an older row's value with the newer matched_ts,
    diverging from ``pd.merge_asof`` (ADVICE r3).
 
-2. ``asof_join_sorted_merge`` — the north-rule formulation: cogrouped
-   ``applyInPandas`` running a vectorized ``pd.merge_asof`` per
-   ts-sorted entity group (Arrow batches, never per-row Python).
-   Best when entity cardinality >> cores.
-
-3. ``asof_join_bucketed`` — range-partitioned variant for few/huge
+2. ``asof_join_bucketed`` — range-partitioned variant for few/huge
    entities: bucket ts into ranges, carry each bucket's latest
    preceding right row in via a small per-bucket ffill, equi-join on
    (entity, bucket), then pick max(right_ts <= ts) per left row.
@@ -33,8 +28,11 @@ Spark has no built-in as-of join, so three from-scratch formulations:
    a single entity — this is what survives a 100x scale-up on a
    single hot symbol.
 
-All three are cross-checked against each other and against a pandas
-oracle in tests/test_asof.py.
+``asof_join`` dispatches between them (``strategy="auto"`` routes hot
+entities to the bucketed form, the rest to union_ffill), and
+``asof_join_multi`` fuses k backward right tables into one narrow sort.
+Both formulations are cross-checked against a pandas oracle in
+tests/test_asof.py.
 """
 
 from __future__ import annotations
@@ -130,13 +128,16 @@ def asof_join(
                 f"asof_join key {k!r} type mismatch: left {lt.simpleString()} "
                 f"vs right {rt.simpleString()} — cast one side explicitly"
             )
-    impl = {
+    impls = {
         "union_ffill": asof_join_union_ffill,
-        "sorted_merge": asof_join_sorted_merge,
         "bucketed": asof_join_bucketed,
         "auto": asof_join_hot_routed,
-    }[strategy]
-    return impl(
+    }
+    if strategy not in impls:
+        raise ValueError(
+            f"strategy must be one of {', '.join(impls)}, got {strategy!r}"
+        )
+    return impls[strategy](
         left,
         right,
         on=on,
@@ -224,73 +225,6 @@ def asof_join_union_ffill(
         rts_expr = F.col("_fpay.m").alias(f"{right_prefix}matched_{on}")
 
     return filled.select(F.col(by), F.col(on), *[F.col(c) for c in lcols], *value_exprs, rts_expr)
-
-
-def asof_join_sorted_merge(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "entity",
-    direction: str = "backward",
-    allow_exact_matches: bool = True,
-    tolerance_s: float | None = None,
-    right_prefix: str = "",
-    **_: object,
-) -> DataFrame:
-    """Cogrouped applyInPandas `pd.merge_asof` per entity — vectorized,
-    exactly the reference's pandas semantics, Arrow-batched.
-
-    Memory boundary: cogroup buffers one whole entity (both sides) per
-    task. Best when entity cardinality >> cores and histories fit in
-    task memory; for few/huge entities use ``asof_join_bucketed``, which
-    range-partitions inside an entity."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    vcols = _right_value_cols(left, right, by, on)
-    out_names = _prefixed(vcols, right_prefix)
-    lcols = [c for c in left.columns if c not in (by, on)]
-
-    fields = [left.schema[by], left.schema[on]]
-    fields += [left.schema[c] for c in lcols]
-    fields += [
-        T.StructField(o, right.schema[c].dataType, True)
-        for c, o in zip(vcols, out_names)
-    ]
-    fields += [T.StructField(f"{right_prefix}matched_{on}", left.schema[on].dataType, True)]
-    out_schema = T.StructType(fields)
-
-    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        rename = {c: o for c, o in zip(vcols, out_names)}
-        if rpdf.empty:
-            res = lpdf.copy()
-            for o in out_names:
-                res[o] = None
-            res[f"{right_prefix}matched_{on}"] = pd.NaT
-            return res[[f.name for f in out_schema.fields]]
-        rpdf = rpdf.sort_values(on, kind="mergesort").drop(columns=[by])
-        rpdf[f"{right_prefix}matched_{on}"] = rpdf[on]
-        res = pd.merge_asof(
-            lpdf,
-            rpdf.rename(columns=rename),
-            on=on,
-            direction=direction,
-            allow_exact_matches=allow_exact_matches,
-            tolerance=tol,
-        )
-        return res[[f.name for f in out_schema.fields]]
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(merge, schema=out_schema)
-    )
 
 
 def asof_join_bucketed(
@@ -668,9 +602,7 @@ def asof_join_multi(
     by: str = "entity",
     allow_exact_matches: bool = True,
     tolerance_s: float | None = None,
-    carry_left_payload: bool | None = None,
     axis_tables: dict[str, DataFrame] | None = None,
-    hash_payload_joins: bool = False,
     route_hot: bool = True,
     hot_rows: int = 64_000_000,
     bucket_s: int = 3600,
@@ -698,8 +630,8 @@ def asof_join_multi(
     Each dict key is the output column prefix for that right table
     (reference P6 `{tf}_` prefixing, `step4_merge_features.py:340-344`).
 
-    Left-payload handling: a NARROW left payload (default: <= 12 columns)
-    rides straight through the union sort — the row only grows by the
+    Left-payload handling: a NARROW left payload (<= 12 columns) rides
+    straight through the union sort — the row only grows by the
     payload width, every left row maps 1:1 by construction (duplicate
     left timestamps included), and no re-attach join exists at all. A
     wide left payload is instead re-attached by equi-join on a synthetic
@@ -716,14 +648,6 @@ def asof_join_multi(
     column-pruned through — without the hint the full indicator compute
     runs TWICE (once to feed the narrow union, once in the payload
     join). The caller owns the rows-identical guarantee.
-
-    ``hash_payload_joins``: plant SHUFFLE_HASH hints on the payload
-    attach joins. MEASURED SLOWER than sort-merge on the token bench
-    (merge phase 17.0 -> 19.4 s at 4x4): the per-partition build maps
-    lose to SMJ's whole-stage-codegen sorts at these row widths, so the
-    default stays False; kept as a switch for skewed/wider rights where
-    the trade can flip. Hints never change semantics, only the physical
-    strategy.
 
     Hot-entity routing (r6, VERDICT r5 item 4): the fused union sorts
     each entity's narrow rows in ONE task, so a single entity holding
@@ -762,13 +686,11 @@ def asof_join_multi(
                 {p: r.filter(~is_hot) for p, r in rights.items()},
                 on=on, by=by, allow_exact_matches=allow_exact_matches,
                 tolerance_s=tolerance_s,
-                carry_left_payload=carry_left_payload,
                 axis_tables=(
                     {p: a.filter(~is_hot) for p, a in axis_tables.items()}
                     if axis_tables
                     else None
                 ),
-                hash_payload_joins=hash_payload_joins,
                 route_hot=False,
             )
             hot_out = left.filter(is_hot)
@@ -789,9 +711,8 @@ def asof_join_multi(
     blocks = {p: [c for c in r.columns if c not in (by, on)] for p, r in rights.items()}
     ts_type = left.schema[on].dataType
     prefixes = list(rights)
-    if carry_left_payload is None:
-        carry_left_payload = len(lcols) <= 12
-    carried = lcols if carry_left_payload else []
+    reattach = len(lcols) > 12
+    carried = [] if reattach else lcols
 
     # deterministic per-row id within (by): stable under task retry and
     # across the two plan subtrees that recompute `lidded` (the narrow
@@ -799,12 +720,8 @@ def asof_join_multi(
     # could assign different ids per recomputation and silently mispair
     # (ADVICE r2). The id window's HashPartitioning(by) is reused by the
     # (by, _mlid) re-attach join on both sides.
-    lidded = (
-        left.withColumn("_mlid", _dup_rank(left, [by], on))
-        if lcols and not carry_left_payload
-        else left
-    )
-    id_cols = ["_mlid"] if lcols and not carry_left_payload else []
+    lidded = left.withColumn("_mlid", _dup_rank(left, [by], on)) if reattach else left
+    id_cols = ["_mlid"] if reattach else []
     # Narrow union encoding: a right row sets exactly ONE matched-ts, so
     # the union carries (src_idx, rts) — 2 columns — instead of k
     # nullable timestamp columns (k x 8 bytes/row through the shuffle
@@ -865,7 +782,7 @@ def asof_join_multi(
             ],
         )
 
-    if lcols and not carry_left_payload:
+    if reattach:
         # wide left payload: re-attach on (by, unique-in-by row id) —
         # joining on (by, on) would fan out duplicate left ts
         out = (
@@ -881,8 +798,6 @@ def asof_join_multi(
             F.col(on).alias(f"_ron_{i}"),
             *[F.col(c).alias(f"{p}{c}") for c in blocks[p]],
         )
-        if hash_payload_joins:
-            r = r.hint("shuffle_hash")
         out = out.join(
             r,
             (F.col(by) == F.col(f"_rby_{i}")) & (F.col(f"_m_{i}") == F.col(f"_ron_{i}")),

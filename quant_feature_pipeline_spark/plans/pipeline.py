@@ -130,7 +130,6 @@ def merge_timeframes(
     cfg: PipelineConfig,
     by: str = "entity",
     ts_col: str = "ts",
-    asof_strategy: str = "multi",
     keep_right_cols: tuple[str, ...] = (),
     axis_tables: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
@@ -139,9 +138,10 @@ def merge_timeframes(
     flagship price group keeps ``close``) onto the base axis with
     ``{tf}_`` prefixes.
 
-    Default "multi" fuses all timeframes into ONE sorted window pass
-    (asof_join_multi); any two-table strategy falls back to the
-    reference-shaped iterated loop (k sorts, k× row-width growth).
+    A backward ``cfg.align_direction`` fuses all timeframes into ONE
+    sorted window pass (asof_join_multi); forward/nearest run the
+    reference-shaped iterated loop of two-table ``asof_join`` calls
+    (k sorts, k× row-width growth).
 
     ``axis_tables`` maps tf -> the pre-indicator resampled bar table.
     indicator_table is row-preserving, so each resampled table has
@@ -157,7 +157,7 @@ def merge_timeframes(
         )
         for tf, ind in indicator_tables.items()
     }
-    if asof_strategy == "multi" and cfg.align_direction == "backward":
+    if cfg.align_direction == "backward":
         # the base-tf indicator block lives on exactly the base axis —
         # that's an equi-join, not an as-of join; only coarser tfs as-of.
         # The as-of runs FIRST, on the naked base: its narrow left payload
@@ -201,7 +201,6 @@ def merge_timeframes(
             allow_exact_matches=cfg.allow_exact_match,
             tolerance_s=tol,
             right_prefix=f"{tf}_",
-            strategy=asof_strategy,
         ).drop(f"{tf}_matched_{ts_col}")
     return merged
 
@@ -252,7 +251,6 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     by: str = "entity",
     ts_col: str = "ts",
-    asof_strategy: str = "multi",
     persist_stages: bool = True,
     input_partitioned: bool = False,
 ) -> DataFrame:
@@ -309,7 +307,6 @@ def run_pipeline(
         for tf, df in tfs.items()
     }
     merged = merge_timeframes(
-        base, inds, cfg, by=by, ts_col=ts_col, asof_strategy=asof_strategy,
-        axis_tables=tfs,
+        base, inds, cfg, by=by, ts_col=ts_col, axis_tables=tfs,
     )
     return feature_table(merged, cfg, by=by, ts_col=ts_col)

@@ -95,131 +95,6 @@ def streaming_ema(
     )
 
 
-def streaming_asof_backward(
-    left_stream: DataFrame,
-    right_stream: DataFrame,
-    on: str = "ts",
-    by: str = "entity",
-    tolerance_s: float | None = None,
-    right_prefix: str = "",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming point-in-time enrich: each left row gets the latest
-    right row with ``right.ts <= left.ts`` — the streaming analog of the
-    batch backward as-of join (operators/asof.py), via
-    ``applyInPandasWithState``.
-
-    Mechanics: the two streams are union-tagged; per entity and
-    micro-batch the group state carries the LAST right row seen, the
-    batch's rights are prepended with that carry row, and one vectorized
-    ``pd.merge_asof`` enriches the batch's lefts (never per-row Python).
-    The new state is the last right row of (carry + batch rights).
-
-    Exactness contract: equals the batch as-of when event-time order is
-    non-decreasing per entity ACROSS micro-batches (replayed ordered
-    files, per-entity-ordered Kafka partitions) — the same in-order
-    contract the reference's online poll loop assumes. A left row
-    arriving before its right rows within one micro-batch is still
-    matched exactly (the batch sorts internally); only cross-batch
-    late RIGHT rows degrade to processing-time semantics.
-    """
-    lcols = [c for c in left_stream.columns if c not in (by, on)]
-    vcols = [c for c in right_stream.columns if c not in (by, on)]
-    out_names = [f"{right_prefix}{c}" for c in vcols]
-
-    l_tag = left_stream.select(
-        F.col(by), F.col(on).cast("timestamp").alias(on), F.lit(1).alias("_side"),
-        *[F.col(c) for c in lcols],
-        *[F.lit(None).cast(right_stream.schema[c].dataType).alias(f"_r_{c}") for c in vcols],
-    )
-    r_tag = right_stream.select(
-        F.col(by), F.col(on).cast("timestamp").alias(on), F.lit(0).alias("_side"),
-        *[F.lit(None).cast(left_stream.schema[c].dataType).alias(c) for c in lcols],
-        *[F.col(c).alias(f"_r_{c}") for c in vcols],
-    )
-    u = l_tag.unionByName(r_tag).withWatermark(on, watermark)
-
-    out_schema = T.StructType(
-        [left_stream.schema[by], T.StructField(on, T.TimestampType(), True)]
-        + [left_stream.schema[c] for c in lcols]
-        + [
-            T.StructField(o, right_stream.schema[c].dataType, True)
-            for c, o in zip(vcols, out_names)
-        ]
-        + [T.StructField(f"{right_prefix}matched_{on}", T.TimestampType(), True)]
-    )
-    # state = the latest right row (its ts + value columns)
-    state_schema = T.StructType(
-        [T.StructField("_rts", T.DoubleType(), True)]  # epoch us (timestamps not allowed in state tuples)
-        + [right_stream.schema[c] for c in vcols]
-    )
-    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
-    out_cols = [f.name for f in out_schema.fields]
-
-    def update(key, pdfs, state: GroupState):
-        carry = state.get if state.exists else None
-        # concat the group's WHOLE micro-batch before sorting: the
-        # iterator yields Arrow-sized chunks in arrival order, so a
-        # per-chunk sort would process chunk 1's lefts before chunk 2's
-        # earlier rights on large (multi-chunk) batches
-        chunks = [p for p in pdfs]
-        if not chunks:
-            return
-        merged = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) != 1 else chunks[0]
-        )
-        for pdf in ([merged] if len(merged) else []):
-            pdf = pdf.sort_values([on, "_side"], kind="mergesort")
-            rights = pdf[pdf["_side"] == 0][[on] + [f"_r_{c}" for c in vcols]]
-            if carry is not None and carry[0] is not None:
-                crow = pd.DataFrame(
-                    {
-                        on: [pd.Timestamp(int(carry[0]), unit="us")],
-                        **{f"_r_{c}": [carry[1 + i]] for i, c in enumerate(vcols)},
-                    }
-                )
-                # re-sort: a late (out-of-order) carry-vs-batch boundary
-                # must not hand merge_asof an unsorted right side
-                rights = pd.concat([crow, rights], ignore_index=True).sort_values(
-                    on, kind="mergesort"
-                )
-            lefts = pdf[pdf["_side"] == 1][[on] + lcols].reset_index(drop=True)
-            if len(lefts):
-                if len(rights):
-                    r = rights.rename(columns={f"_r_{c}": o for c, o in zip(vcols, out_names)})
-                    r[f"{right_prefix}matched_{on}"] = r[on]
-                    res = pd.merge_asof(
-                        lefts, r, on=on, direction="backward",
-                        allow_exact_matches=True, tolerance=tol,
-                    )
-                else:
-                    res = lefts.copy()
-                    for o in out_names:
-                        res[o] = None
-                    res[f"{right_prefix}matched_{on}"] = pd.NaT
-                res.insert(0, by, key[0])
-                yield res[out_cols]
-            if len(rights):
-                last = rights.iloc[-1]
-                carry = (
-                    float(last[on].value // 1000),
-                    *[
-                        None if pd.isna(last[f"_r_{c}"]) else last[f"_r_{c}"]
-                        for c in vcols
-                    ],
-                )
-        if carry is not None:
-            state.update(carry)
-
-    return u.groupBy(by).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_asof_buffered(
     left_stream: DataFrame,
     right_stream: DataFrame,
@@ -233,8 +108,8 @@ def streaming_asof_buffered(
     idle_right_ttl_s: float | None = None,
 ) -> DataFrame:
     """Watermark-buffered streaming backward as-of join — EXACT event-time
-    semantics under cross-batch disorder (VERDICT r3 item 2; the fast
-    carry-state variant above assumes per-entity in-order arrival).
+    semantics for ANY arrival order (VERDICT r3 item 2): in-order
+    replays and cross-batch disorder alike.
 
     Mechanics per entity group: both sides are buffered in group state;
     a left row is emitted only once the watermark strictly passes its
@@ -403,8 +278,7 @@ def streaming_asof_buffered(
                 f"{n_state} rows ({len(held)} held lefts + {len(rights)} "
                 f"rights) > max_held_rows={max_held_rows}. The watermark "
                 f"({watermark!r}) is too large for this arrival rate — "
-                "shrink it, raise max_held_rows, or use the in-order "
-                "carry-state variant (streaming_asof_backward)"
+                "shrink it or raise max_held_rows"
             )
         if len(held) or len(rights):
             state.update(

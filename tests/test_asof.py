@@ -1,7 +1,8 @@
-"""As-of join: all three Spark strategies vs the pandas merge_asof oracle
-(the reference's own operator, `/root/reference/step4_merge_features.py:522-535`),
-across direction / exact-match / tolerance, with edge timestamps per
-FIXTURES.md F5: exact boundary matches, mid-bucket, before-all-right."""
+"""As-of join: both Spark formulations (union_ffill, bucketed) vs the
+pandas merge_asof oracle (the reference's own operator,
+`/root/reference/step4_merge_features.py:522-535`), across direction /
+exact-match / tolerance, with edge timestamps per FIXTURES.md F5: exact
+boundary matches, mid-bucket, before-all-right."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ from quant_feature_pipeline_spark.operators.asof import asof_join
 
 from .conftest import T0, assert_frame_close
 
-STRATEGIES = ["union_ffill", "sorted_merge", "bucketed"]
+STRATEGIES = ["union_ffill", "bucketed"]
 
 
 def _left_right(seed=7):
@@ -100,6 +101,17 @@ def test_asof_matches_pandas(spark, strategy, direction, allow_exact, tol_s):
     assert_frame_close(got, want, keys=["entity", "ts", "lval"])
 
 
+@pytest.mark.parametrize("strategy", ["sorted_merge", "multi"])
+def test_asof_unknown_strategy_rejected(spark, strategy):
+    lpdf, rpdf = _left_right()
+    with pytest.raises(ValueError, match="union_ffill, bucketed, auto"):
+        asof_join(
+            spark.createDataFrame(lpdf),
+            spark.createDataFrame(rpdf),
+            strategy=strategy,
+        )
+
+
 def test_asof_nearest(spark):
     lpdf, rpdf = _left_right()
     got = asof_join(
@@ -141,15 +153,16 @@ def test_asof_bucketed_bucket_sizes(spark, bucket_s, direction):
 
 def test_asof_multi_duplicate_left_ts_no_fanout(spark):
     """Duplicate left (entity, ts) rows must map 1:1 through the fused
-    multi-asof and the nearest recombine (row-id join, not key join)."""
+    multi-asof and the nearest recombine (row-id join, not key join) —
+    both for a narrow left payload, which rides the union sort, and for
+    a wide one (> 12 columns), which re-attaches on a row id."""
     import pandas as pd
 
     from quant_feature_pipeline_spark.operators.asof import asof_join_multi
 
     lts = [T0 + datetime.timedelta(minutes=m) for m in (1, 5, 5, 5, 9)]
-    left = spark.createDataFrame(
-        pd.DataFrame({"entity": "A", "ts": lts, "lval": range(5)})
-    )
+    lpdf = pd.DataFrame({"entity": "A", "ts": lts, "lval": range(5)})
+    left = spark.createDataFrame(lpdf)
     rts = [T0 + datetime.timedelta(minutes=m) for m in (0, 4, 8)]
     right = spark.createDataFrame(
         pd.DataFrame({"entity": "A", "ts": rts, "rval": [10.0, 20.0, 30.0]})
@@ -158,6 +171,19 @@ def test_asof_multi_duplicate_left_ts_no_fanout(spark):
     assert len(out) == 5
     assert sorted(out["lval"]) == [0, 1, 2, 3, 4]
     assert (out[out["lval"] > 0].sort_values("lval")["r_rval"] == [20.0] * 3 + [30.0]).all()
+
+    wide_cols = [f"w{k}" for k in range(12)]
+    wpdf = lpdf.assign(**{c: lpdf["lval"] * 100.0 + k for k, c in enumerate(wide_cols)})
+    wide_df = asof_join_multi(spark.createDataFrame(wpdf), {"r_": right})
+    assert "_mlid" in wide_df._jdf.queryExecution().optimizedPlan().toString()
+    wide = wide_df.toPandas().sort_values("lval").reset_index(drop=True)
+    assert len(wide) == 5
+    assert sorted(wide["lval"]) == [0, 1, 2, 3, 4]
+    for k, c in enumerate(wide_cols):
+        assert (wide[c] == wide["lval"] * 100.0 + k).all(), c
+    narrow = out.sort_values("lval").reset_index(drop=True)
+    assert wide["ts"].equals(narrow["ts"])
+    assert wide["r_rval"].equals(narrow["r_rval"])
 
     near = asof_join(left, right, direction="nearest").toPandas()
     assert len(near) == 5

@@ -163,15 +163,16 @@ def test_streaming_stateful_ema_matches_batch(spark, tmp_path):
 
 @pytest.mark.parametrize("tol_s", [None, 1200])
 def test_streaming_asof_matches_batch(spark, tmp_path, tol_s):
-    """Streaming point-in-time enrich == batch backward as-of join on
-    in-order bounded input (with and without a staleness tolerance),
-    state carrying the latest right row across micro-batches (each side
-    split into ts-aligned files, maxFilesPerTrigger=1)."""
+    """Buffered streaming point-in-time enrich == batch backward as-of
+    join on an IN-ORDER replay (with and without a staleness tolerance):
+    each side split into two ts-aligned micro-batches, then a far-future
+    right sentinel batch that advances the watermark past every real
+    left so the finite replay flushes."""
     import pandas as pd
 
     from quant_feature_pipeline_spark.operators.asof import asof_join
     from quant_feature_pipeline_spark.streaming.stateful import (
-        streaming_asof_backward,
+        streaming_asof_buffered,
     )
 
     rng = np.random.RandomState(11)
@@ -203,24 +204,34 @@ def test_streaming_asof_matches_batch(spark, tmp_path, tol_s):
         ],
         ignore_index=True,
     )
+    sentinel = pd.DataFrame(
+        {"entity": ["A"], "ts": [t0 + pd.Timedelta(hours=100)], "rval": [0.0]}
+    )
     split = t0 + pd.Timedelta(hours=5)
+    lsorted = lpdf.sort_values(["ts", "entity"]).reset_index(drop=True)
+    rsorted = rpdf.sort_values(["ts", "entity"]).reset_index(drop=True)
     src = str(tmp_path / "asof_src")
-    for name, pdf in (("left", lpdf), ("right", rpdf)):
-        pdf = pdf.sort_values(["ts", "entity"]).reset_index(drop=True)
-        for part, piece in (("a", pdf[pdf.ts < split]), ("b", pdf[pdf.ts >= split])):
-            spark.createDataFrame(piece).coalesce(1).write.mode("overwrite").parquet(
-                f"{src}/{name}/{part}"
-            )
+    _write_replay_batches(
+        spark,
+        src,
+        [
+            {"left": lsorted[lsorted.ts < split], "right": rsorted[rsorted.ts < split]},
+            {"left": lsorted[lsorted.ts >= split], "right": rsorted[rsorted.ts >= split]},
+            {"left": lpdf.iloc[:0], "right": sentinel},
+        ],
+        {"left": lpdf, "right": rpdf},
+    )
 
-    def _stream(name):
+    def _stream(name, schema_src):
         return (
-            spark.readStream.schema(spark.read.parquet(f"{src}/{name}/a").schema)
+            spark.readStream.schema(spark.createDataFrame(schema_src).schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/{name}/*")
         )
 
-    out = streaming_asof_backward(
-        _stream("left"), _stream("right"), right_prefix="r_", tolerance_s=tol_s
+    out = streaming_asof_buffered(
+        _stream("left", lpdf), _stream("right", rpdf),
+        right_prefix="r_", tolerance_s=tol_s,
     )
     q = (
         out.writeStream.format("memory")
@@ -240,7 +251,7 @@ def test_streaming_asof_matches_batch(spark, tmp_path, tol_s):
     want = (
         asof_join(
             spark.createDataFrame(lpdf),
-            spark.createDataFrame(rpdf),
+            spark.createDataFrame(pd.concat([rpdf, sentinel], ignore_index=True)),
             right_prefix="r_",
             tolerance_s=tol_s,
         )
@@ -257,8 +268,8 @@ def test_streaming_asof_matches_batch(spark, tmp_path, tol_s):
 def test_streaming_asof_buffered_late_rights(spark, tmp_path, delay_side):
     """Watermark-buffered streaming as-of (r4): RIGHT rows arrive one
     micro-batch LATE (cross-batch event-time disorder, within the
-    watermark delay) — output must still equal the batch as-of join,
-    which the carry-state variant cannot guarantee. delay_side="both"
+    watermark delay) — output must still equal the batch as-of join.
+    delay_side="both"
     additionally delays the LEFT stream by one batch relative to event
     time, so neither side arrives in order. A far-future right sentinel
     advances the watermark so the finite replay flushes."""

@@ -32,7 +32,6 @@ def _job_args(tmp_path, input_path, mode="auto", warmup_bars=600,
         targets="3m,15m",
         by="entity",
         ts_col="ts",
-        asof_strategy="multi",
         warmup_bars=warmup_bars,
         mode=mode,
     )
