@@ -1,14 +1,22 @@
-"""Grouped pandas execution with amortized per-group overhead.
+"""Grouped Arrow stages over array kernels, with amortized per-group
+overhead.
 
 ``applyInPandas`` pays a fixed Python-side cost per group (Arrow batch
 + DataFrame construction), which dominates when groups are small/many.
 ``grouped_apply`` instead hash-repartitions by the group key and runs
-ONE ``mapInPandas`` over each partition, splitting into groups with a
-pandas groupby — identical semantics for whole-key groups (hash
-partitioning puts a key's rows in exactly one partition), a fraction of
-the overhead. NOTE: rows arrive in arbitrary order within each group —
-``fn`` MUST sort its group itself if it is order-sensitive (the
-indicator/rank kernels here all do).
+ONE ``mapInPandas`` over each partition: the partition is stable-sorted
+once by (group key, ts) and every contiguous group slice runs through
+an array kernel — no pandas groupby, no per-group DataFrame. Identical
+semantics for whole-key groups (hash partitioning puts a key's rows in
+exactly one partition), a fraction of the overhead.
+
+Kernel contract: ``kernel({src_col: float64 slice})`` receives ONE
+group's rows in ts order (stable: ts ties keep input order) and returns
+``{new_col: float64 array}`` with exactly one value per input row —
+checked on every call (ValueError otherwise), because a length mismatch
+would silently shift values onto the neighbouring group's rows. The
+stage's output is the input columns plus one double column per name in
+``new_cols``.
 
 Memory note: buffers one partition per task (like applyInPandas buffers
 one group); partition sizing via spark.sql.shuffle.partitions /
@@ -17,14 +25,20 @@ maxPartitionBytes controls the bound at scale.
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from ..tsutil import repartition_by_size
+
+Kernel = Callable[[dict[str, np.ndarray]], dict[str, np.ndarray]]
 
 
 class StageMetrics:
@@ -64,30 +78,63 @@ class StageMetrics:
         }
 
 
+def _output_schema(df: DataFrame, new_cols: list[str]) -> T.StructType:
+    return T.StructType(
+        list(df.schema.fields)
+        + [T.StructField(c, T.DoubleType(), True) for c in new_cols]
+    )
+
+
+def _concat(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    chunks = list(batches)
+    pdf = pd.concat(chunks, ignore_index=True) if chunks else None
+    return None if pdf is None or pdf.empty else pdf
+
+
+def _group_bounds(pdf: pd.DataFrame, keys: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """[start, end) of every run of equal ``keys`` in a key-sorted frame."""
+    n = len(pdf)
+    change = np.zeros(n - 1, dtype=bool)
+    for k in keys:
+        a = pdf[k].to_numpy()
+        change |= a[1:] != a[:-1]
+    cut = np.nonzero(change)[0] + 1
+    return np.concatenate(([0], cut)), np.concatenate((cut, [n]))
+
+
+def _call(
+    kernel: Kernel, arrs: dict[str, np.ndarray], new_cols: list[str],
+    lo: int, hi: int, stage: str,
+) -> dict[str, np.ndarray]:
+    res = kernel({c: a[lo:hi] for c, a in arrs.items()})
+    for k in new_cols:
+        if len(res[k]) != hi - lo:
+            raise ValueError(
+                f"{stage}: the kernel must return exactly one row per input "
+                f"row (got {len(res[k])} values of {k!r} for {hi - lo} rows)"
+            )
+    return res
+
+
+def _attach(base: pd.DataFrame, new: dict[str, np.ndarray]) -> pd.DataFrame:
+    return pd.concat([base, pd.DataFrame(new, index=base.index)], axis=1)
+
+
 def grouped_apply(
     df: DataFrame,
     by: str,
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: T.StructType,
-    num_partitions: int | None = None,
+    ts_col: str,
+    src_cols: list[str],
+    kernel: Kernel,
+    new_cols: list[str],
     metrics: StageMetrics | None = None,
-    ts_col: str | None = None,
     auto_chunk_rows: int | None = 1_048_576,
     chunk_rows: int = 262_144,
     warmup_rows: int = 4_096,
     lookback_rows: int | None = None,
     prepartitioned: bool = False,
-    partition_fn: Callable[[pd.DataFrame], Iterator[pd.DataFrame]] | None = None,
 ) -> DataFrame:
     """One Arrow stage over entity-hash partitions; see module docstring.
-
-    ``partition_fn`` (r6 optimization): a whole-partition kernel that
-    owns grouping/sorting internally (e.g. one stable (by, ts) sort and
-    array slices per group instead of a pandas groupby + per-group
-    DataFrame assembly — measured ~4x less Python overhead for small
-    groups). It MUST implement the same group semantics as ``fn`` over a
-    group-complete partition; ``fn`` remains the reference path and the
-    chunked/cogroup paths keep using it.
 
     ``lookback_rows`` declares the kernel's EXACT finite history
     requirement (e.g. a rolling-rank window): auto-chunking replays
@@ -109,165 +156,86 @@ def grouped_apply(
     per partition silently corrupts results — internal pipeline use
     only.
 
-    Huge-entity auto-dispatch (ADVICE r3 — previously callers had to
-    opt into chunked execution to avoid the whole-entity pandas memory
-    hazard): when ``ts_col`` is known and a group exceeds
-    ``auto_chunk_rows`` rows, the group is processed in ts-sorted
+    Huge-entity auto-dispatch (no caller opt-in): a group above
+    ``auto_chunk_rows`` rows runs through the kernel in ts-ordered
     ``chunk_rows`` slices with ``warmup_rows`` of replayed history per
-    slice — bounding ``fn``'s working set (the wide output frame and
-    kernel temporaries, the dominant memory term) with NO plan change:
-    partitioning is preserved, nothing extra shuffles or sorts JVM-side,
-    and normal-size groups pay zero overhead. Same exactness contract as
-    grouped_apply_chunked (warm-up ≥ the slowest recurrence decay ⇒
-    bit-identical; asserted in tests). This dispatch is LOCAL — a huge
-    entity still lands in one task; when single entities dwarf task
-    memory or need cross-task parallelism, use grouped_apply_chunked,
-    which range-splits the entity across the cluster."""
-    cols = [f.name for f in schema.fields]
-    local_chunking = ts_col is not None and auto_chunk_rows is not None
-    eff_warmup = max(warmup_rows, lookback_rows or 0)
-
-    def run_group(g: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        if not local_chunking or len(g) <= auto_chunk_rows:
-            yield fn(g)[cols]
-            return
-        # stable ts sort here makes chunk boundaries deterministic AND
-        # is idempotent with the kernel's own stable ts sort, so the
-        # positional warm-row slice below stays row-aligned
-        g = g.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-        for start in range(0, len(g), chunk_rows):
-            lo = max(0, start - eff_warmup)
-            piece = g.iloc[lo : start + chunk_rows].reset_index(drop=True)
-            out = fn(piece)
-            if len(out) != len(piece):
-                raise ValueError(
-                    "grouped_apply auto-chunking: fn must return exactly "
-                    f"one row per input row (got {len(out)} for "
-                    f"{len(piece)}); pass auto_chunk_rows=None for "
-                    "row-count-changing kernels"
-                )
-            yield out.iloc[start - lo :][cols]
+    slice, and output flushes every ~``chunk_rows`` rows, so neither the
+    kernel temporaries nor the wide output frame ever cover a whole huge
+    entity — with NO plan change: partitioning is preserved, nothing
+    extra shuffles or sorts JVM-side, and normal-size groups pay zero
+    overhead. Same exactness contract as grouped_apply_chunked (warm-up
+    ≥ the slowest recurrence decay ⇒ bit-identical; asserted in tests).
+    This dispatch is LOCAL — a huge entity still lands in one task; when
+    single entities dwarf task memory or need cross-task parallelism,
+    use grouped_apply_chunked, which range-splits the entity across the
+    cluster."""
+    warm = max(warmup_rows, lookback_rows or 0)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
         t0 = time.time()
-        chunks = list(batches)
-        if not chunks:
+        pdf = _concat(batches)
+        if pdf is None:
             if metrics is not None:
                 metrics.partitions.add(1)
             return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            if metrics is not None:
-                metrics.partitions.add(1)
-            return
-        if partition_fn is not None:
-            n_groups = int(pdf[by].nunique()) if metrics is not None else 0
-            yield from partition_fn(pdf)
-        else:
-            n_groups = 0
-            for _, g in pdf.groupby(by, sort=False):
-                n_groups += 1
-                yield from run_group(g)
-        if metrics is not None:
-            metrics.partitions.add(1)
-            metrics.rows.add(int(len(pdf)))
-            metrics.groups.add(n_groups)
-            metrics.busy_s.add(time.time() - t0)
-
-    if prepartitioned:
-        return df.mapInPandas(run, schema=schema)
-    if num_partitions is not None:
-        return df.repartition(num_partitions, by).mapInPandas(run, schema=schema)
-    from ..tsutil import repartition_by_size
-
-    # partition count derived from the input size estimate (r6)
-    return repartition_by_size(df, by).mapInPandas(run, schema=schema)
-
-
-def array_partition_fn(
-    by: str,
-    ts_col: str,
-    src_cols: list[str],
-    array_fn: Callable[[dict], dict],
-    ind_cols: list[str],
-    out_cols: list[str],
-    auto_chunk_rows: int | None,
-    chunk_rows: int,
-    warmup_rows: int,
-):
-    """Build a ``partition_fn`` for grouped_apply from an array kernel.
-
-    ``array_fn`` maps {src_col: float64 slice} of ONE ts-sorted group to
-    {ind_col: float64 array} of the same length. The partition is stable-
-    sorted ONCE by (by, ts) — within a group that is exactly the
-    per-group stable ts sort the reference ``fn`` path performs — then
-    each contiguous group slice runs through ``array_fn`` with no pandas
-    groupby and no per-group DataFrame/concat (r6, guide §4.2). Groups
-    above ``auto_chunk_rows`` run in ``chunk_rows`` slices with
-    ``warmup_rows`` of replayed history (same row math as run_group's
-    auto-chunking), and output flushes every ~chunk_rows rows so a huge
-    entity never buffers its whole wide output frame."""
-    import numpy as np
-
-    def partition_fn(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         pdf = pdf.sort_values([by, ts_col], kind="mergesort").reset_index(drop=True)
         n = len(pdf)
-        ents = pdf[by].to_numpy()
-        change = np.nonzero(ents[1:] != ents[:-1])[0] + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [n]))
+        starts, ends = _group_bounds(pdf, [by])
         arrs = {c: pdf[c].to_numpy(dtype=np.float64) for c in src_cols}
         flush_from = 0
-        bufs: dict[str, list] = {k: [] for k in ind_cols}
+        bufs: dict[str, list] = {k: [] for k in new_cols}
 
         def assemble(upto: int) -> pd.DataFrame:
             nonlocal flush_from, bufs
-            base = pdf.iloc[flush_from:upto]
-            ind = pd.DataFrame(
-                {
-                    k: (np.concatenate(v) if len(v) > 1 else v[0])
-                    for k, v in bufs.items()
-                },
-                index=base.index,
+            out = _attach(
+                pdf.iloc[flush_from:upto],
+                {k: (np.concatenate(v) if len(v) > 1 else v[0]) for k, v in bufs.items()},
             )
             flush_from = upto
-            bufs = {k: [] for k in ind_cols}
-            return pd.concat([base, ind], axis=1)[out_cols]
+            bufs = {k: [] for k in new_cols}
+            return out
 
         for s, e in zip(starts, ends):
             if auto_chunk_rows is not None and e - s > auto_chunk_rows:
                 if s > flush_from:  # flush buffered smaller groups first
                     yield assemble(s)
                 for cs in range(s, e, chunk_rows):
-                    lo = max(s, cs - warmup_rows)
+                    lo = max(s, cs - warm)
                     ce = min(e, cs + chunk_rows)
-                    res = array_fn({c: a[lo:ce] for c, a in arrs.items()})
-                    for k in ind_cols:
+                    res = _call(kernel, arrs, new_cols, lo, ce, "grouped_apply")
+                    for k in new_cols:
                         bufs[k].append(res[k][cs - lo :])
                     yield assemble(ce)
             else:
-                res = array_fn({c: a[s:e] for c, a in arrs.items()})
-                for k in ind_cols:
+                res = _call(kernel, arrs, new_cols, s, e, "grouped_apply")
+                for k in new_cols:
                     bufs[k].append(res[k])
                 if e - flush_from >= chunk_rows:
                     yield assemble(e)
         if flush_from < n:
             yield assemble(n)
+        if metrics is not None:
+            metrics.partitions.add(1)
+            metrics.rows.add(n)
+            metrics.groups.add(len(starts))
+            metrics.busy_s.add(time.time() - t0)
 
-    return partition_fn
+    schema = _output_schema(df, new_cols)
+    if prepartitioned:
+        return df.mapInPandas(run, schema=schema)
+    # partition count derived from the input size estimate (r6)
+    return repartition_by_size(df, by).mapInPandas(run, schema=schema)
 
 
 def grouped_apply_chunked(
     df: DataFrame,
     by: str,
     ts_col: str,
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema: T.StructType,
+    src_cols: list[str],
+    kernel: Kernel,
+    new_cols: list[str],
     chunk_rows: int = 262_144,
     warmup_rows: int = 4_096,
-    num_partitions: int | None = None,
     lookback_rows: int | None = None,
 ) -> DataFrame:
     """grouped_apply for HUGE entities: no task ever buffers a whole
@@ -283,10 +251,11 @@ def grouped_apply_chunked(
     the last ``warmup_rows`` rows of every chunk are REPLICATED into the
     next chunk as warm-up (the same replay-a-tail warm-start the
     incremental resume uses, plans/checkpoint.py / reference
-    `step2_resample.py:370-397`), ``fn`` runs per (entity, chunk), and
-    the warm rows are sliced off the output. Memory per task is bounded
-    by chunk_rows + warmup_rows regardless of entity size, and a single
-    entity's chunks process in PARALLEL (shuffle key is (by, chunk)).
+    `step2_resample.py:370-397`), the kernel runs per (entity, chunk),
+    and the warm rows are sliced off the output. Memory per task is
+    bounded by chunk_rows + warmup_rows regardless of entity size, and a
+    single entity's chunks process in PARALLEL (shuffle key is (by,
+    chunk)).
 
     Output equality vs the unchunked path: EXACT for kernels whose state
     window is <= warmup_rows (rolling windows, lags); for infinite-decay
@@ -296,13 +265,12 @@ def grouped_apply_chunked(
     alpha (span-200 EMA needs ~3.7k rows); asserted bit-identical in
     tests/test_grouped_chunked.py.
 
-    ``fn`` contract (stricter than grouped_apply): one output row per
-    input row, ordered by ts ascending with a STABLE sort (ties keep
-    input order) — indicator_frame and the rank kernels comply. The
-    JVM-side row_number sort spills to disk, so assigning chunk ids does
-    not reintroduce the memory hazard. Note the output partitioning is
-    (by, chunk), not (by): a downstream per-entity window or join will
-    re-exchange — use plain grouped_apply when entities fit in memory.
+    Rows reach the kernel in (ts, content-hash) order, the JVM-side
+    row_number below; that sort spills to disk, so assigning chunk ids
+    does not reintroduce the memory hazard. Note the output partitioning
+    is (by, chunk), not (by): a downstream per-entity window or join
+    will re-exchange — use plain grouped_apply when entities fit in
+    memory.
     """
     warmup_rows = max(warmup_rows, lookback_rows or 0)
     if warmup_rows > chunk_rows:
@@ -312,9 +280,6 @@ def grouped_apply_chunked(
             "replicate only from the immediately preceding chunk — raise "
             "chunk_rows to at least the kernel's lookback"
         )
-    cols = [f.name for f in schema.fields]
-    helper = ["_rn", "_ck", "_warm"]
-
     # deterministic rank: content-hash tiebreaker for duplicate ts (ties
     # among byte-identical rows are interchangeable)
     tiebreak = F.xxhash64(F.lit(13), *[F.col(c) for c in df.columns])
@@ -345,36 +310,26 @@ def grouped_apply_chunked(
         F.col("_cw.c").alias("_ck"),
         F.col("_cw.w").alias("_warm"),
     )
+    cols = list(df.columns)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunks = list(batches)
-        if not chunks:
+        pdf = _concat(batches)
+        if pdf is None:
             return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        for _, g in pdf.groupby([by, "_ck"], sort=False):
-            g = g.sort_values("_rn", kind="mergesort")
-            n_warm = int(g["_warm"].sum())
-            out = fn(g.drop(columns=helper).reset_index(drop=True))
-            if len(out) != len(g):
-                # the warm-row slice below is positional — a kernel that
-                # drops/adds rows would silently misalign (ADVICE r3)
-                raise ValueError(
-                    "grouped_apply_chunked: fn must return exactly one "
-                    f"row per input row (got {len(out)} out rows for "
-                    f"{len(g)} in rows); kernels that filter rows cannot "
-                    "run under chunked execution"
+        pdf = pdf.sort_values([by, "_ck", "_rn"], kind="mergesort").reset_index(drop=True)
+        starts, ends = _group_bounds(pdf, [by, "_ck"])
+        arrs = {c: pdf[c].to_numpy(dtype=np.float64) for c in src_cols}
+        warm = pdf["_warm"].to_numpy()
+        for s, e in zip(starts, ends):
+            res = _call(kernel, arrs, new_cols, s, e, "grouped_apply_chunked")
+            # warm rows strictly precede the chunk's own rows in _rn order,
+            # so they are exactly the first n_warm rows of the slice
+            w = s + int(warm[s:e].sum())
+            if e > w:
+                yield _attach(
+                    pdf.iloc[w:e][cols], {k: res[k][w - s :] for k in new_cols}
                 )
-            # fn is row-aligned and stable-sorted by ts, and warm rows
-            # strictly precede real rows in _rn order, so they are
-            # exactly the first n_warm output rows
-            res = out.iloc[n_warm:]
-            if len(res):
-                yield res[cols]
 
-    if num_partitions is not None:
-        return dup.repartition(num_partitions, by, "_ck").mapInPandas(run, schema=schema)
-    from ..tsutil import repartition_by_size
-
-    return repartition_by_size(dup, by, "_ck").mapInPandas(run, schema=schema)
+    return repartition_by_size(dup, by, "_ck").mapInPandas(
+        run, schema=_output_schema(df, new_cols)
+    )

@@ -5,8 +5,8 @@ row, the mid-rank of the current value within the trailing ``window``
 values: ``(count_less + 0.5*count_equal)/count``, clipped to
 [0.01, 0.99]; warm-up (fewer than ``min_periods`` values) → NaN.
 
-No Spark built-in computes a rolling rank, so this is a grouped
-``applyInPandas`` stage with an O(N·W) vectorized numpy kernel (a
+No Spark built-in computes a rolling rank, so this is a grouped Arrow
+stage (functions/grouped.py) with an O(N·W) vectorized numpy kernel (a
 sliding-window broadcast compare, chunked to bound memory) — the Spark
 analog of the reference's numba kernel. Bounded windows keep the cost
 linear in N at fixed W (SURVEY.md §7.3.6).
@@ -18,7 +18,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+
+from .grouped import grouped_apply
 
 
 def _rank_kernel(x: np.ndarray, window: int, min_periods: int) -> np.ndarray:
@@ -49,11 +50,15 @@ def _rank_kernel(x: np.ndarray, window: int, min_periods: int) -> np.ndarray:
     return np.clip(out, 0.01, 0.99, out=out)
 
 
+def _min_periods(window: int, min_periods: int | None = None) -> int:
+    return min_periods if min_periods is not None else max(2, window // 2)
+
+
 def rolling_rank_series(s: pd.Series, window: int, min_periods: int | None = None) -> pd.Series:
     """Single-series oracle/kernel (vectorized-enough; see _rank_kernel)."""
-    mp = min_periods if min_periods is not None else max(2, window // 2)
     return pd.Series(
-        _rank_kernel(s.to_numpy(dtype=np.float64), window, mp), index=s.index
+        _rank_kernel(s.to_numpy(dtype=np.float64), window, _min_periods(window, min_periods)),
+        index=s.index,
     )
 
 
@@ -67,30 +72,13 @@ def rolling_percentile_rank(
     min_periods: int | None = None,
 ) -> DataFrame:
     out_name = out or f"{src}_rank{window}"
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_name, T.DoubleType(), True)]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-        pdf[out_name] = rolling_rank_series(pdf[src], window, min_periods)
-        return pdf
-
-    from .grouped import array_partition_fn, grouped_apply
-
-    mp = min_periods if min_periods is not None else max(2, window // 2)
-    partition_fn = array_partition_fn(
-        by, ts_col, [src],
-        lambda sl: {out_name: _rank_kernel(sl[src], window, mp)},
-        [out_name], [f.name for f in schema.fields],
-        auto_chunk_rows=1_048_576, chunk_rows=262_144,
-        warmup_rows=max(4_096, window),
-    )
+    mp = _min_periods(window, min_periods)
     # lookback_rows: rank is a HARD window — auto-chunking must replay
     # >= window-1 rows or boundary rows silently corrupt (ADVICE r4)
     return grouped_apply(
-        df, by, fn, schema, ts_col=ts_col, lookback_rows=window,
-        partition_fn=partition_fn,
+        df, by, ts_col, [src],
+        lambda sl: {out_name: _rank_kernel(sl[src], window, mp)},
+        [out_name], lookback_rows=window,
     )
 
 
@@ -108,36 +96,15 @@ def rolling_rank_multi(
     volume} × fast/slow); computing them in a single grouped pass costs
     one shuffle+sort instead of 24 (`step5_featueres_unified.py:547-587,
     810-883` run the same kernels serially over one in-memory frame)."""
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out, T.DoubleType(), True) for _, _, _, out in specs]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-        new = {}
-        for src, window, mp, out in specs:
-            new[out] = _rank_kernel(pdf[src].to_numpy(np.float64), window, mp)
-        return pd.concat([pdf, pd.DataFrame(new, index=pdf.index)], axis=1)
-
-    from .grouped import array_partition_fn, grouped_apply
-
-    max_w = max(w for _, w, _, _ in specs)
-    partition_fn = array_partition_fn(
-        by, ts_col, sorted({s[0] for s in specs}),
+    return grouped_apply(
+        df, by, ts_col, sorted({s[0] for s in specs}),
         lambda sl: {
             out: _rank_kernel(sl[src], window, mp)
             for src, window, mp, out in specs
         },
-        [s[3] for s in specs], [f.name for f in schema.fields],
-        auto_chunk_rows=1_048_576, chunk_rows=262_144,
-        warmup_rows=max(4_096, max_w),
-    )
-    return grouped_apply(
-        df, by, fn, schema, ts_col=ts_col,
-        lookback_rows=max_w,
+        [s[3] for s in specs],
+        lookback_rows=max(w for _, w, _, _ in specs),
         prepartitioned=prepartitioned,
-        partition_fn=partition_fn,
     )
 
 
@@ -154,20 +121,14 @@ def fused_rank(
     """W10 fused fast/slow rank: 0.6*rank(fast)+0.4*rank(slow)
     (`step5_featueres_unified.py:547-587`). One grouped stage, two kernels."""
     out_name = out or f"{src}_fused_rank"
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_name, T.DoubleType(), True)]
-    )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-        fr = rolling_rank_series(pdf[src], fast_window)
-        sr = rolling_rank_series(pdf[src], slow_window)
-        pdf[out_name] = fast_weight * fr + (1.0 - fast_weight) * sr
-        return pdf
-
-    from .grouped import grouped_apply
+    def kernel(sl: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
+        x = sl[src]
+        fr = _rank_kernel(x, fast_window, _min_periods(fast_window))
+        sr = _rank_kernel(x, slow_window, _min_periods(slow_window))
+        return {out_name: fast_weight * fr + (1.0 - fast_weight) * sr}
 
     return grouped_apply(
-        df, by, fn, schema, ts_col=ts_col,
+        df, by, ts_col, [src], kernel, [out_name],
         lookback_rows=max(fast_window, slow_window),
     )

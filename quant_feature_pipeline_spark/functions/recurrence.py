@@ -1,10 +1,11 @@
-"""Stateful recurrence indicators — one vectorized ``applyInPandas`` stage.
+"""Stateful recurrence indicators — one grouped Arrow stage of array kernels.
 
 EMA-family recurrences (e_t = α·x_t + (1-α)·e_{t-1}) are inherently
 sequential per entity and not expressible as Spark window aggregates, so
-they run as ONE grouped Arrow-batched pandas stage per entity (never
-per-row Python), exactly as the north rule mandates. Inside the group
-everything is vectorized ``Series.ewm(..., adjust=False)`` / numpy; the
+they run as ONE grouped Arrow stage (functions/grouped.py: one stable
+(entity, ts) sort per partition, the array kernel per entity slice —
+never per-row Python), exactly as the north rule mandates. Inside the
+kernel everything is numpy and pandas' Cython ``ewm(adjust=False)``; the
 only scalar loop is SuperTrend's band-flip scan (path-dependent by
 definition — the reference's external `IndicatorCalculator` does the
 same, `/root/reference/indicators.py:1-3`).
@@ -37,13 +38,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 from ..config import PipelineConfig
-
-
-def _wilder(s: pd.Series, n: int) -> pd.Series:
-    return s.ewm(alpha=1.0 / n, adjust=False).mean()
+from .grouped import grouped_apply, grouped_apply_chunked
 
 
 # ---- direct Cython ewm (r6 optimization, guide §4.2) -------------------
@@ -92,7 +89,8 @@ def _wilder_arr(x: np.ndarray, n: int) -> np.ndarray:
 
 
 def _rsi_wilder_arr(c: np.ndarray, n: int) -> np.ndarray:
-    """Array twin of rsi_wilder — same op order, bit-identical."""
+    """Raw Wilder RSI in [0,100] — same op order as the Series oracle
+    (tests/oracles.py::rsi_wilder), bit-identical."""
     m = len(c)
     d = np.empty(m, dtype=np.float64)
     if m:
@@ -112,49 +110,6 @@ def _rsi_wilder_arr(c: np.ndarray, n: int) -> np.ndarray:
     return rsi
 
 
-def rsi_wilder(close: pd.Series, n: int = 14) -> pd.Series:
-    """Raw Wilder RSI in [0,100]."""
-    d = close.diff()
-    gain = d.clip(lower=0.0)
-    loss = (-d).clip(lower=0.0)
-    ag = _wilder(gain.fillna(0.0), n)
-    al = _wilder(loss.fillna(0.0), n)
-    rs = ag / al.replace(0.0, np.nan)
-    rsi = 100.0 - 100.0 / (1.0 + rs)
-    rsi = rsi.where(al != 0, 100.0)
-    rsi.iloc[: 1] = np.nan  # first diff undefined
-    return rsi
-
-
-def rsi_events(
-    rsi_reshaped: pd.Series, threshold: float, min_persist: int
-) -> tuple[pd.Series, pd.Series, pd.Series]:
-    """Run-length-filtered RSI events on the [-100,100] axis.
-
-    overbought mask = rsi' >= +threshold; oversold = rsi' <= -threshold;
-    an event fires only when the mask has been true for >= min_persist
-    consecutive bars (`step5_featueres_unified.py:1045-1064`).
-    """
-    ob = (rsi_reshaped >= threshold).fillna(False).to_numpy()
-    os_ = (rsi_reshaped <= -threshold).fillna(False).to_numpy()
-
-    def run_len(mask: np.ndarray) -> np.ndarray:
-        # consecutive-True counter, vectorized gaps-and-islands
-        idx = np.arange(len(mask))
-        start = np.where(mask & ~np.concatenate(([False], mask[:-1])), idx, -1)
-        start = np.maximum.accumulate(np.where(mask, start, idx + 1))
-        return np.where(mask, idx - start + 1, 0)
-
-    ob_persist = run_len(ob) >= min_persist
-    os_persist = run_len(os_) >= min_persist
-    event = np.where(ob_persist, 1.0, np.where(os_persist, -1.0, 0.0))
-    return (
-        pd.Series(event, index=rsi_reshaped.index),
-        pd.Series(ob_persist.astype(np.float64), index=rsi_reshaped.index),
-        pd.Series(os_persist.astype(np.float64), index=rsi_reshaped.index),
-    )
-
-
 def _run_len(mask: np.ndarray) -> np.ndarray:
     # consecutive-True counter, vectorized gaps-and-islands
     idx = np.arange(len(mask))
@@ -166,8 +121,12 @@ def _run_len(mask: np.ndarray) -> np.ndarray:
 def _rsi_events_arr(
     rsi_reshaped: np.ndarray, threshold: float, min_persist: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Array twin of rsi_events (NaN compares False, like the Series
-    comparison + fillna(False))."""
+    """Run-length-filtered RSI events on the [-100,100] axis.
+
+    overbought mask = rsi' >= +threshold; oversold = rsi' <= -threshold;
+    an event fires only when the mask has been true for >= min_persist
+    consecutive bars (`step5_featueres_unified.py:1045-1064`). NaN
+    compares False."""
     with np.errstate(invalid="ignore"):
         ob = rsi_reshaped >= threshold
         os_ = rsi_reshaped <= -threshold
@@ -205,69 +164,12 @@ def supertrend_direction(
     return direction
 
 
-def indicator_frame_ref(
-    pdf: pd.DataFrame, cfg: PipelineConfig, ts_col: str = "ts"
-) -> pd.DataFrame:
-    """Single-entity, ts-sorted pandas REFERENCE kernel — the
-    Series-based formulation, kept verbatim as the oracle the optimized
-    array kernel (indicator_frame) is asserted bit-identical against
-    (tests/test_kernel_numpy.py).
-
-    All derived columns are assembled in a dict and concatenated once:
-    per-column insertion into a wide DataFrame churns the pandas block
-    manager (measured ~4x slower at 80k-row groups).
-    """
-    pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-    c = pdf["close"].astype(np.float64)
-    h = pdf["high"].astype(np.float64)
-    low = pdf["low"].astype(np.float64)
-    new: dict[str, object] = {}
-
-    for span in cfg.ema_spans:
-        new[f"ema_{span}"] = c.ewm(span=span, adjust=False).mean()
-
-    raw_rsi = rsi_wilder(c, cfg.rsi_window)
-    reshaped = (raw_rsi - 50.0) * 2.0
-    new[f"rsi{cfg.rsi_window}"] = reshaped
-    ev, ob, os_ = rsi_events(reshaped, cfg.rsi_event_threshold, cfg.rsi_min_persist)
-    new["rsi_event"] = ev
-    new["rsi_overbought"] = ob
-    new["rsi_oversold"] = os_
-
-    ema_fast = c.ewm(span=cfg.macd_fast, adjust=False).mean()
-    ema_slow = c.ewm(span=cfg.macd_slow, adjust=False).mean()
-    macd = ema_fast - ema_slow
-    signal = macd.ewm(span=cfg.macd_signal, adjust=False).mean()
-    new["macd"] = macd
-    new["macd_signal"] = signal
-    new["macd_histogram"] = macd - signal
-
-    prev_c = c.shift(1)
-    hl = (h - low).to_numpy()
-    tr_np = np.maximum(
-        hl,
-        np.maximum(
-            np.abs((h - prev_c).to_numpy()), np.abs((low - prev_c).to_numpy())
-        ),
-    )
-    tr_np = np.where(np.isnan(tr_np), hl, tr_np)
-    tr = pd.Series(tr_np, index=c.index)
-    atr = _wilder(tr, cfg.atr_window)
-    new[f"atr{cfg.atr_window}"] = atr
-    new[f"atr{cfg.atr_window}_pct"] = np.where(c > 0, atr / c, np.nan)
-
-    st_atr = _wilder(tr, cfg.supertrend_period).to_numpy()
-    new["supertrend_direction"] = supertrend_direction(
-        h.to_numpy(), low.to_numpy(), c.to_numpy(), st_atr, cfg.supertrend_mult
-    )
-    return pd.concat([pdf, pd.DataFrame(new, index=pdf.index)], axis=1)
-
-
 def _indicator_arrays(
     c: np.ndarray, h: np.ndarray, low: np.ndarray, cfg: PipelineConfig
 ) -> dict[str, np.ndarray]:
     """The per-group indicator math on plain float64 arrays (ts-sorted).
-    Same op order per element as indicator_frame_ref — bit-identical."""
+    Same op order per element as the Series-form oracle
+    (tests/oracles.py::indicator_frame_ref) — bit-identical."""
     m = len(c)
     new: dict[str, np.ndarray] = {}
 
@@ -312,30 +214,9 @@ def _indicator_arrays(
     return new
 
 
-def indicator_frame(pdf: pd.DataFrame, cfg: PipelineConfig, ts_col: str = "ts") -> pd.DataFrame:
-    """Single-entity, ts-sorted indicator kernel — optimized array form.
-
-    Same math, same op order per element as indicator_frame_ref, but on
-    plain float64 arrays with the EWM recurrences dispatched straight to
-    pandas' Cython aggregation (guide §4.2: hand whole batches to native
-    code). This removes the ~15 Series/ewm-object constructions per
-    group that dominate small-group cost (measured 4.75 -> ~1.2 ms per
-    66-row group; bit-identical output asserted in
-    tests/test_kernel_numpy.py over every sf0.1 entity)."""
-    pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
-    new = _indicator_arrays(
-        pdf["close"].to_numpy(dtype=np.float64),
-        pdf["high"].to_numpy(dtype=np.float64),
-        pdf["low"].to_numpy(dtype=np.float64),
-        cfg,
-    )
-    return pd.concat([pdf, pd.DataFrame(new, index=pdf.index)], axis=1)
-
-
-def recurrence_output_schema(input_schema: T.StructType, cfg: PipelineConfig) -> T.StructType:
-    fields = list(input_schema.fields)
-    names = [f"ema_{s}" for s in cfg.ema_spans]
-    names += [
+def indicator_columns(cfg: PipelineConfig) -> list[str]:
+    """The recurrence stage's output columns, in _indicator_arrays order."""
+    return [f"ema_{s}" for s in cfg.ema_spans] + [
         f"rsi{cfg.rsi_window}",
         "rsi_event",
         "rsi_overbought",
@@ -347,9 +228,6 @@ def recurrence_output_schema(input_schema: T.StructType, cfg: PipelineConfig) ->
         f"atr{cfg.atr_window}_pct",
         "supertrend_direction",
     ]
-    for n in names:
-        fields.append(T.StructField(n, T.DoubleType(), True))
-    return T.StructType(fields)
 
 
 def compute_recurrence_indicators(
@@ -377,45 +255,21 @@ def compute_recurrence_indicators(
     warmup 4096 rows drives the slowest recurrence seed error — span-200
     EMA — below float64 ulp; see grouped.py)."""
     cfg = cfg or PipelineConfig()
-    out_schema = recurrence_output_schema(bars.schema, cfg)
-    out_cols = [f.name for f in out_schema.fields]
-    in_cols = [f.name for f in bars.schema.fields]
-    ind_cols = [c for c in out_cols if c not in in_cols]
+    src = ["close", "high", "low"]
+    new = indicator_columns(cfg)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = indicator_frame(pdf, cfg, ts_col=ts_col)
-        return res[out_cols]
-
-    from .grouped import grouped_apply, grouped_apply_chunked
+    def kernel(sl: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
+        return _indicator_arrays(sl["close"], sl["high"], sl["low"], cfg)
 
     if chunk_rows is not None:
         return grouped_apply_chunked(
-            bars, by, ts_col, fn, out_schema,
+            bars, by, ts_col, src, kernel, new,
             chunk_rows=chunk_rows, warmup_rows=warmup_rows,
         )
-
-    from .grouped import array_partition_fn
-
-    # whole-partition array kernel (r6, guide §4.2): one stable (by, ts)
-    # sort per partition, the array kernel per contiguous group slice —
-    # no pandas groupby, no per-group DataFrame/concat churn (the
-    # assembly was ~60% of kernel wall once the EWMs went through the
-    # Cython fast path); bit-identical, asserted in tests
-    partition_fn = array_partition_fn(
-        by, ts_col, ["close", "high", "low"],
-        lambda sl: _indicator_arrays(sl["close"], sl["high"], sl["low"], cfg),
-        ind_cols, out_cols,
-        auto_chunk_rows, local_chunk_rows, warmup_rows,
-    )
-
-    # ts_col enables the local huge-entity auto-chunking inside the
-    # Arrow task (bounded fn working set, no caller opt-in; grouped.py)
     # prepartitioned: caller guarantees entity-complete partitions (the
     # pipeline's one up-front repartition) — skips this stage's shuffle
     return grouped_apply(
-        bars, by, fn, out_schema, metrics=metrics,
-        ts_col=ts_col, warmup_rows=warmup_rows,
+        bars, by, ts_col, src, kernel, new, metrics=metrics,
         auto_chunk_rows=auto_chunk_rows, chunk_rows=local_chunk_rows,
-        prepartitioned=prepartitioned,
-        partition_fn=partition_fn,
+        warmup_rows=warmup_rows, prepartitioned=prepartitioned,
     )

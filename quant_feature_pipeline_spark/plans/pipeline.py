@@ -4,8 +4,8 @@ reference's Step2→Step5 chain (`/root/reference/unified_feature_pipeline.py:59
 Stages (each a lazy DataFrame transformation; checkpointable between):
 
 1. resample: base bars → one OHLCV table per timeframe (A1)
-2. indicators: per-tf stateless window indicators + ONE recurrence
-   applyInPandas stage (SURVEY.md §2.5)
+2. indicators: per-tf stateless window indicators + ONE grouped Arrow
+   recurrence stage of array kernels (functions/grouped.py; SURVEY.md §2.5)
 3. merge: iterated backward as-of join of every larger tf onto the base
    axis, columns prefixed ``{tf}_`` (J1 + P6,
    `step4_merge_features.py:340-344, 522-535`)

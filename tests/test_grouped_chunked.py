@@ -24,36 +24,34 @@ def _key(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(["entity", "ts"]).reset_index(drop=True)
 
 
+def _roll20(sl: dict) -> dict:
+    c = sl["close"]
+    out = np.full(len(c), np.nan)
+    if len(c) >= 20:
+        # window-LOCAL mean (each window summed independently):
+        # pandas' rolling().mean() streams an accumulator across the
+        # whole series, so its float result is not chunk-invariant
+        out[19:] = np.lib.stride_tricks.sliding_window_view(c, 20).mean(axis=1)
+    return {"roll20": out}
+
+
 def test_chunked_exact_for_finite_window_kernel(spark):
     """A rolling window-20 kernel is EXACTLY reproduced as long as
     warmup_rows >= window - 1 (here with plenty of margin)."""
-    from pyspark.sql import types as T
-
     pdf = make_bars_pdf(n=2600, entities=("A", "B"))
     df = spark.createDataFrame(pdf)
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("roll20", T.DoubleType(), True)]
+    cols = df.columns + ["roll20"]
+
+    want = _key(
+        grouped_apply(df, "entity", "ts", ["close"], _roll20, ["roll20"]).toPandas()
     )
-    cols = [f.name for f in schema.fields]
-
-    def fn(g: pd.DataFrame) -> pd.DataFrame:
-        g = g.sort_values("ts", kind="mergesort").reset_index(drop=True)
-        c = g["close"].to_numpy()
-        out = np.full(len(c), np.nan)
-        if len(c) >= 20:
-            # window-LOCAL mean (each window summed independently):
-            # pandas' rolling().mean() streams an accumulator across the
-            # whole series, so its float result is not chunk-invariant
-            out[19:] = np.lib.stride_tricks.sliding_window_view(c, 20).mean(axis=1)
-        g["roll20"] = out
-        return g[cols]
-
-    want = _key(grouped_apply(df, "entity", fn, schema).toPandas())
     got = _key(
         grouped_apply_chunked(
-            df, "entity", "ts", fn, schema, chunk_rows=500, warmup_rows=100
+            df, "entity", "ts", ["close"], _roll20, ["roll20"],
+            chunk_rows=500, warmup_rows=100,
         ).toPandas()
     )
+    assert list(got.columns) == list(want.columns) == cols
     assert len(got) == len(want) == len(pdf)
     for c in cols:
         if got[c].dtype.kind == "f":
@@ -90,19 +88,22 @@ def test_chunked_recurrence_identical_on_huge_entity(spark):
 
 def test_chunked_rejects_warmup_larger_than_chunk(spark):
     import pytest
-    from pyspark.sql import types as T
 
     df = spark.createDataFrame(make_bars_pdf(n=10, entities=("A",)))
+
+    def ident(sl: dict) -> dict:
+        return {"x": sl["close"]}
+
     with pytest.raises(ValueError, match="warm-up"):
         grouped_apply_chunked(
-            df, "entity", "ts", lambda g: g, df.schema,
+            df, "entity", "ts", ["close"], ident, ["x"],
             chunk_rows=10, warmup_rows=11,
         )
     # same guard for a kernel-declared lookback (ADVICE r4): a hard
     # window the chunk size cannot cover must fail loudly
     with pytest.raises(ValueError, match="lookback"):
         grouped_apply_chunked(
-            df, "entity", "ts", lambda g: g, df.schema,
+            df, "entity", "ts", ["close"], ident, ["x"],
             chunk_rows=10, warmup_rows=5, lookback_rows=11,
         )
 
@@ -111,42 +112,45 @@ def test_rank_window_larger_than_warmup_exact_under_auto_chunking(spark):
     """ADVICE r4 (high): rolling rank with window > warmup_rows was
     silently corrupted at chunk boundaries for entities above
     auto_chunk_rows. The fix passes the kernel window as lookback_rows,
-    which bumps the replayed history — result must be BIT-identical to
-    the unchunked path even with warmup_rows far below the window."""
-    from quant_feature_pipeline_spark.functions.rank import rolling_rank_series
-    from pyspark.sql import types as T
+    which bumps the replayed history — the production rank kernel under
+    auto-chunking must be BIT-identical to the unchunked path AND to a
+    per-entity pandas rolling_rank_series, even with warmup_rows far
+    below the window."""
+    from quant_feature_pipeline_spark.functions.rank import (
+        _rank_kernel,
+        rolling_percentile_rank,
+        rolling_rank_series,
+    )
 
     pdf = make_bars_pdf(n=4_000, entities=("HUGE", "T"))
     pdf = pdf[(pdf.entity == "HUGE") | (pdf.index % 37 == 0)].reset_index(drop=True)
     df = spark.createDataFrame(pdf)
     window = 300  # >> the warmup_rows=64 below: old code corrupted here
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("rk", T.DoubleType(), True)]
-    )
-    cols = [f.name for f in schema.fields]
+    mp = max(2, window // 2)
 
-    def fn(g: pd.DataFrame) -> pd.DataFrame:
-        g = g.sort_values("ts", kind="mergesort").reset_index(drop=True)
-        g["rk"] = rolling_rank_series(g["close"], window)
-        return g[cols]
+    def rank(sl: dict) -> dict:
+        return {"rk": _rank_kernel(sl["close"], window, mp)}
 
     want = _key(
-        grouped_apply(df, "entity", fn, schema, ts_col="ts",
+        grouped_apply(df, "entity", "ts", ["close"], rank, ["rk"],
                       auto_chunk_rows=None).toPandas()
     )
     got = _key(
         grouped_apply(
-            df, "entity", fn, schema, ts_col="ts",
+            df, "entity", "ts", ["close"], rank, ["rk"],
             auto_chunk_rows=1_000, chunk_rows=500, warmup_rows=64,
             lookback_rows=window,
         ).toPandas()
     )
+    ref = _key(pdf)
+    ref["rk"] = pd.concat(
+        [rolling_rank_series(g["close"], window) for _, g in ref.groupby("entity")]
+    )
     assert len(got) == len(want) == len(pdf)
     a, b = got["rk"].to_numpy(), want["rk"].to_numpy()
     assert np.array_equal(a, b, equal_nan=True)
+    assert np.array_equal(a, ref["rk"].to_numpy(), equal_nan=True)
     # and the public entry point wires the lookback itself
-    from quant_feature_pipeline_spark.functions.rank import rolling_percentile_rank
-
     via_api = _key(
         rolling_percentile_rank(df, "close", window, out="rk").toPandas()
     )
@@ -204,24 +208,45 @@ def test_auto_local_chunking_bit_identical(spark):
 
 
 def test_auto_local_chunking_rejects_row_dropping_kernel(spark):
-    """A kernel that drops rows under auto-chunking must FAIL LOUDLY,
-    not silently misalign the warm-row slice (ADVICE r3)."""
+    """A kernel whose output length differs from its input must FAIL
+    LOUDLY on every call — auto-chunked, whole-group and cross-task
+    chunked alike — not silently misalign rows (ADVICE r3). The
+    two-entity case is the one a per-partition total cannot catch: +1
+    row for A and -1 for B cancel to the right partition length, and
+    without the per-call check B's rows carried A's values."""
     import pytest
-    from pyspark.sql import types as T
 
     pdf = make_bars_pdf(n=3_000, entities=("A",))
     df = spark.createDataFrame(pdf)
-    schema = df.schema
 
-    def bad(g: pd.DataFrame) -> pd.DataFrame:
-        return g.iloc[1:]
+    def drop_first(sl: dict) -> dict:
+        return {"x": sl["close"][1:]}
 
-    out = grouped_apply(
-        df, "entity", bad, schema,
-        ts_col="ts", auto_chunk_rows=1_000, chunk_rows=1_000, warmup_rows=100,
-    )
-    with pytest.raises(Exception, match="one row per input row"):
-        out.collect()
+    two = make_bars_pdf(n=5, entities=("A", "B"))
+    two["side"] = np.where(two["entity"] == "A", 1.0, -1.0)
+    df2 = spark.createDataFrame(two).coalesce(1)  # A and B share a partition
+
+    def cancelling(sl: dict) -> dict:
+        c = sl["close"]
+        return {"x": np.append(c, 0.0) if sl["side"][0] > 0 else c[:-1]}
+
+    runs = [
+        grouped_apply(
+            df, "entity", "ts", ["close"], drop_first, ["x"],
+            auto_chunk_rows=1_000, chunk_rows=1_000, warmup_rows=100,
+        ),
+        grouped_apply(
+            df2, "entity", "ts", ["close", "side"], cancelling, ["x"],
+            prepartitioned=True,
+        ),
+        grouped_apply_chunked(
+            df2, "entity", "ts", ["close", "side"], cancelling, ["x"],
+            chunk_rows=4, warmup_rows=2,
+        ),
+    ]
+    for out in runs:
+        with pytest.raises(Exception, match="one row per input row"):
+            out.collect()
 
 
 def test_asof_auto_routes_hot_entity(spark):

@@ -1,8 +1,8 @@
 """Indicator kernels vs independent pandas oracles.
 
-The recurrence stage is validated two ways: (a) Spark applyInPandas
-output == direct pandas `indicator_frame` per entity (plumbing/grouping
-correctness), and (b) spot formulas vs pandas ewm/rolling computed here
+The recurrence stage is validated two ways: (a) the Spark grouped Arrow
+stage's output == the pandas oracle `tests/oracles.py::indicator_frame_ref`
+per entity (plumbing/grouping correctness), and (b) spot formulas vs pandas ewm/rolling computed here
 from first principles (no shared code path) — EMA, Wilder RSI, MACD,
 ATR, Bollinger width, realized vol, z-score."""
 
@@ -20,11 +20,12 @@ from quant_feature_pipeline_spark.functions.indicators import (
     sma,
 )
 from quant_feature_pipeline_spark.functions.recurrence import (
+    _rsi_events_arr,
     compute_recurrence_indicators,
-    indicator_frame,
 )
 
 from .conftest import assert_frame_close, make_bars_pdf
+from .oracles import indicator_frame_ref
 
 CFG = PipelineConfig()
 
@@ -33,7 +34,7 @@ def test_recurrence_stage_matches_pandas_per_entity(spark):
     pdf = make_bars_pdf(n=300, entities=("A", "B", "C"))
     got = compute_recurrence_indicators(spark.createDataFrame(pdf), CFG).toPandas()
     want = pd.concat(
-        [indicator_frame(g.copy(), CFG) for _, g in pdf.groupby("entity")],
+        [indicator_frame_ref(g.copy(), CFG) for _, g in pdf.groupby("entity")],
         ignore_index=True,
     )
     assert_frame_close(got, want, keys=["entity", "ts"])
@@ -101,10 +102,8 @@ def test_macd_first_principles(spark):
 def test_rsi_event_persistence():
     """Run-length gate: events fire only after min_persist consecutive
     bars beyond the threshold (`step5_featueres_unified.py:1045-1064`)."""
-    from quant_feature_pipeline_spark.functions.recurrence import rsi_events
-
-    r = pd.Series([0, 45, 45, 0, 50, -45, -45, -45, 41])
-    ev, ob, os_ = rsi_events(r, threshold=40, min_persist=2)
+    r = np.array([0, 45, 45, 0, 50, -45, -45, -45, 41], dtype=np.float64)
+    ev, ob, os_ = _rsi_events_arr(r, threshold=40, min_persist=2)
     assert ev.tolist() == [0, 0, 1, 0, 0, 0, -1, -1, 0]
     assert ob.tolist() == [0, 0, 1, 0, 0, 0, 0, 0, 0]
     assert os_.tolist() == [0, 0, 0, 0, 0, 0, 1, 1, 0]

@@ -1,7 +1,8 @@
 """r6 optimization guard: the array-form indicator kernel must be
-BIT-identical to the Series-form reference kernel (indicator_frame_ref),
-column by column, NaN placement included — the gate hashes round-6
-floats, so even a last-ulp drift could flip a quantization boundary."""
+BIT-identical to the Series-form reference kernel (tests/oracles.py::
+indicator_frame_ref), column by column, NaN placement included — the
+gate hashes round-6 floats, so even a last-ulp drift could flip a
+quantization boundary."""
 
 import numpy as np
 import pandas as pd
@@ -9,23 +10,29 @@ import pytest
 
 from quant_feature_pipeline_spark.config import PipelineConfig
 from quant_feature_pipeline_spark.functions.recurrence import (
-    indicator_frame,
-    indicator_frame_ref,
+    _indicator_arrays,
+    indicator_columns,
 )
+
+from .oracles import indicator_frame_ref
 
 CFG = PipelineConfig()
 
 
 def _assert_bit_identical(pdf: pd.DataFrame) -> None:
-    got = indicator_frame(pdf.copy(), CFG)
     ref = indicator_frame_ref(pdf.copy(), CFG)
-    assert list(got.columns) == list(ref.columns)
-    for c in got.columns:
-        g, r = got[c].to_numpy(), ref[c].to_numpy()
-        if g.dtype.kind == "f":
-            assert np.array_equal(g, r, equal_nan=True), c
-        else:
-            assert (g == r).all(), c
+    # the kernel's contract: one group's rows, stable-sorted by ts
+    srt = pdf.sort_values("ts", kind="mergesort")
+    got = _indicator_arrays(
+        *(srt[c].to_numpy(dtype=np.float64) for c in ("close", "high", "low")),
+        CFG,
+    )
+    assert list(got) == indicator_columns(CFG)
+    assert list(ref.columns) == list(pdf.columns) + list(got)
+    for c, g in got.items():
+        r = ref[c].to_numpy()
+        assert len(g) == len(pdf), c
+        assert np.array_equal(g, r, equal_nan=True), c
 
 
 def _bars(n: int, seed: int, entity: str = "E") -> pd.DataFrame:
