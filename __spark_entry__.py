@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from quant_feature_pipeline_spark.config import PipelineConfig
 from quant_feature_pipeline_spark.operators.asof import asof_join
-from quant_feature_pipeline_spark.operators.fill import bfill, ffill, grid_fill_ranges
+from quant_feature_pipeline_spark.operators.fill import bfill, grid_fill_ranges
 from quant_feature_pipeline_spark.operators.resample import (
     continuity_stats,
     resample_ohlcv,
@@ -34,8 +34,9 @@ from quant_feature_pipeline_spark.operators.skew import salted_agg
 from quant_feature_pipeline_spark.operators.sessionize import session_stats
 from quant_feature_pipeline_spark.operators.dedup import dedup_exact
 from quant_feature_pipeline_spark.functions.indicators import (
-    bollinger_width,
+    apply_window_indicators,
     rolling_zscore,
+    window_indicator_layers,
 )
 from quant_feature_pipeline_spark.functions.rank import rolling_percentile_rank
 from quant_feature_pipeline_spark.functions.recurrence import compute_recurrence_indicators
@@ -66,7 +67,6 @@ from quant_feature_pipeline_spark.textops.similarity import (
     ivf_topk,
     ivf_train,
 )
-from quant_feature_pipeline_spark.tsutil import epoch_seconds
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -256,7 +256,9 @@ def q_bb_width_20(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", F.col("value").alias("close")
     )
-    out = bollinger_width(ev, 20, 2.0, by="user_id")
+    out = apply_window_indicators(
+        ev, *window_indicator_layers(PipelineConfig(bb_window=20, bb_std=2.0), by="user_id")
+    )
     return out.select(
         "user_id", "ts", "event_id", F.round("bb_width", R6).alias("bb_width")
     )

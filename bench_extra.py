@@ -1,12 +1,16 @@
-"""Extra benchmarks / profilers for optimization round 6.
+"""Extra benchmarks for paths ``perfbench/`` does not measure.
 
-bench.py is FROZEN for measurement (the driver re-runs the round-start
-copy); everything exploratory lives here. Each mode prints one JSON line.
+bench.py stays fixed for measurement; exploratory timings live here.
+Per-layer and per-stage traces of the flagship and refresh runs come
+from ``perfbench/tracing.py`` (``python perfbench/run.py --trace 1``).
+Each mode prints one JSON line.
 
 Usage:
-    python bench_extra.py --profile-flagship      # per-job/stage split of the flagship first+warm run
-    python bench_extra.py --query NAME            # first/warm timing of one headline query (same method as bench.py)
-    python bench_extra.py --explain NAME          # write plans/r06/<NAME>_{before,after}.txt (set PLAN_TAG)
+    python bench_extra.py --query NAME [--reps N]  # first/warm timing of one gate query (same method as bench.py)
+    python bench_extra.py --headline [A,B,...]     # first/warm sum over bench.HEADLINE (or the named queries)
+    python bench_extra.py --skew-multi             # asof_join_multi with one hot entity, un-routed vs auto-routed
+    python bench_extra.py --stream-state50         # streaming as-of state rows over ~50 micro-batches
+    python bench_extra.py --explain NAME           # write plans/r06/<NAME>_<PLAN_TAG>.txt (PLAN_TAG defaults to "before")
 """
 
 from __future__ import annotations
@@ -20,13 +24,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _spark(ui: bool = False):
+def _spark():
     from quant_feature_pipeline_spark.session import get_spark
 
-    extra = {"spark.ui.showConsoleProgress": "false"}
-    if ui:
-        extra.update({"spark.ui.enabled": "true", "spark.ui.port": "0"})
-    return get_spark(app_name="bench-extra", cpus=CPUS, extra_conf=extra)
+    return get_spark(
+        app_name="bench-extra", cpus=CPUS,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
 
 def _warm(spark):
@@ -36,93 +40,6 @@ def _warm(spark):
     spark.range(10_000_000).select(F.sum(F.pmod(F.xxhash64("id"), F.lit(997)))).first()
     _w = F.pandas_udf(lambda x: x, "long")
     spark.range(100_000).repartition(CPUS).select(F.sum(_w("id"))).first()
-
-
-def _rest_jobs(spark):
-    import urllib.request
-
-    url = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    jobs = json.load(urllib.request.urlopen(f"{url}/api/v1/applications/{app}/jobs"))
-    out = []
-    for j in jobs:
-        try:
-            from datetime import datetime
-
-            fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-            t0 = datetime.strptime(j["submissionTime"], fmt)
-            t1 = datetime.strptime(j["completionTime"], fmt)
-            dur = (t1 - t0).total_seconds()
-        except Exception:  # noqa: BLE001
-            dur = None
-        out.append(
-            {
-                "jobId": j["jobId"],
-                "sec": dur,
-                "desc": (j.get("description") or j.get("name") or "")[:120],
-                "stages": j.get("stageIds"),
-            }
-        )
-    return out
-
-
-def _rest_stages(spark):
-    import urllib.request
-
-    url = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    stages = json.load(
-        urllib.request.urlopen(f"{url}/api/v1/applications/{app}/stages")
-    )
-    return [
-        {
-            "stageId": s["stageId"],
-            "name": s["name"][:90],
-            "executorRunTime_s": round(s["executorRunTime"] / 1e3, 2),
-            "executorCpuTime_s": round(s.get("executorCpuTime", 0) / 1e9, 2),
-            "shuffleRead_mb": round(s["shuffleReadBytes"] / 1e6, 1),
-            "shuffleWrite_mb": round(s["shuffleWriteBytes"] / 1e6, 1),
-            "numTasks": s["numTasks"],
-        }
-        for s in stages
-    ]
-
-
-def profile_flagship() -> None:
-    import __spark_entry__ as entrymod
-
-    spark = _spark(ui=True)
-    _warm(spark)
-    spark.catalog.clearCache()
-    qs = entrymod.queries()
-
-    marks = [("start", time.time(), len(_rest_jobs(spark)))]
-    t0 = time.time()
-    df = qs["flagship_features"](spark, SF_DIR)
-    t_build = time.time() - t0  # includes the eager stats jobs
-    marks.append(("built", time.time(), None))
-    df.write.format("noop").mode("overwrite").save()
-    t_first = time.time() - t0
-    t1 = time.time()
-    qs["flagship_features"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    t_warm = time.time() - t1
-
-    jobs = _rest_jobs(spark)
-    stages = _rest_stages(spark)
-    payload = {
-        "first_sec": round(t_first, 2),
-        "build_sec_incl_stats_jobs": round(t_build, 2),
-        "warm_sec": round(t_warm, 2),
-        "job_wall_total_sec": round(sum(j["sec"] or 0 for j in jobs), 2),
-        "jobs": jobs,
-        "stages_top": sorted(
-            stages, key=lambda s: -s["executorRunTime_s"]
-        )[:20],
-    }
-    spark.stop()
-    print(json.dumps(payload, indent=1))
 
 
 def time_query(name: str, reps: int = 1) -> None:
@@ -406,9 +323,7 @@ def explain_query(name: str, tag: str) -> None:
 
 
 def main() -> None:
-    if "--profile-flagship" in sys.argv:
-        profile_flagship()
-    elif "--headline" in sys.argv:
+    if "--headline" in sys.argv:
         i = sys.argv.index("--headline")
         names = sys.argv[i + 1].split(",") if len(sys.argv) > i + 1 else None
         headline(names)

@@ -9,7 +9,7 @@ The reference duplicates a timeframe-string parser five times
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 _TF_RE = re.compile(r"^(\d+)\s*(s|m|h|d)$")
 _UNIT_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400}
@@ -23,24 +23,9 @@ def tf_seconds(tf: str) -> int:
     return int(m.group(1)) * _UNIT_SECONDS[m.group(2)]
 
 
-def tf_minutes(tf: str) -> int:
-    s = tf_seconds(tf)
-    if s % 60:
-        raise ValueError(f"timeframe {tf!r} is not a whole number of minutes")
-    return s // 60
-
-
 def tf_interval(tf: str) -> str:
     """Spark `window()` duration string: '15m' -> '15 minutes'."""
     return f"{tf_seconds(tf)} seconds"
-
-
-def steps_between(base_tf: str, target_tf: str) -> int:
-    """How many base bars per target bar (e.g. 3m→15m = 5)."""
-    b, t = tf_seconds(base_tf), tf_seconds(target_tf)
-    if t % b:
-        raise ValueError(f"{target_tf} not a multiple of {base_tf}")
-    return t // b
 
 
 @dataclass
@@ -73,13 +58,4 @@ class PipelineConfig:
     supertrend_mult: float = 3.0
     rv_windows: tuple[int, ...] = (20, 50, 100)
     # step5 normalization
-    winsorize_p: tuple[float, float] = (0.1, 99.9)
-    tanh_sigma_mult: float = 3.0
     mom_tanh_scale: float = 30.0
-    rank_fast_weight: float = 0.6
-    atr_calib_target: float = 0.8
-    atr_calib_quantile: float = 95.0
-    # partitioning / skew
-    salt_buckets: int = 8
-    entity_partitions: int | None = None
-    extra: dict = field(default_factory=dict)

@@ -7,6 +7,9 @@ row. The reference's own step5 kernels avoid this with prefix sums
 the same in Catalyst: one unbounded-preceding running sum (O(1)/row,
 UnboundedPrecedingWindowFunctionFrame) + a lag(n) (O(1) offset frame),
 windowed sum = S_t − S_{t−n}. Variance via the (S, SS, count) triple.
+``window_indicator_layers`` is the one place these expressions are
+built; every caller (pipeline, flagship, the ``bb_width_20`` gate query)
+applies them with ``apply_window_indicators``.
 
 Numerical note: differencing large cumsums loses relative precision on
 very long per-entity series (~1e-7 at 10M rows of 1e2-magnitude values)
@@ -41,131 +44,6 @@ def _ord(by: str, ts_col: str):
     return Window.partitionBy(by).orderBy(ts_col)
 
 
-class _RollStats:
-    """Shared (sum, sum-of-squares, count) prefix columns over one
-    (by, ts) ordering; hands out O(1) windowed mean/std expressions."""
-
-    def __init__(self, df: DataFrame, src: str, by: str, ts_col: str, need_sq: bool):
-        self.by, self.ts = by, ts_col
-        wc = _cum(by, ts_col)
-        x = F.col(src).cast("double")  # isnan/arith need floating input
-        self.tag = f"_rs_{src}"
-        # NaN is treated as missing exactly like null (pandas skip-NaN
-        # semantics): a NaN reaching the cumsum would poison S (and Q)
-        # for every later row of the entity while C still excluded it
-        ok = x.isNotNull() & ~F.isnan(x)
-        cols = {
-            f"{self.tag}_S": F.sum(F.when(ok, x).otherwise(0.0)).over(wc),
-            f"{self.tag}_C": F.sum(F.when(ok, 1.0).otherwise(0.0)).over(wc),
-        }
-        if need_sq:
-            cols[f"{self.tag}_Q"] = F.sum(
-                F.when(ok, x * x).otherwise(0.0)
-            ).over(wc)
-        self.df = df.withColumns(cols)
-        self.need_sq = need_sq
-
-    def _win(self, base: str, n: int) -> Column:
-        wo = _ord(self.by, self.ts)
-        c = F.col(f"{self.tag}_{base}")
-        return c - F.coalesce(F.lag(f"{self.tag}_{base}", n).over(wo), F.lit(0.0))
-
-    def count(self, n: int) -> Column:
-        return self._win("C", n)
-
-    def mean(self, n: int, min_periods: int = 1) -> Column:
-        cnt = self.count(n)
-        return F.when(cnt >= min_periods, self._win("S", n) / cnt)
-
-    def var(self, n: int, ddof: int, min_periods: int) -> Column:
-        cnt = self.count(n)
-        s = self._win("S", n)
-        q = self._win("Q", n)
-        denom = cnt - ddof
-        v = (q - s * s / cnt) / denom
-        return F.when((cnt >= min_periods) & (denom > 0), F.greatest(v, F.lit(0.0)))
-
-    def std(self, n: int, ddof: int = 1, min_periods: int = 1) -> Column:
-        return F.sqrt(self.var(n, ddof, min_periods))
-
-    def strip(self, df: DataFrame) -> DataFrame:
-        drop = [c for c in df.columns if c.startswith(self.tag + "_")]
-        return df.drop(*drop)
-
-
-def sma(
-    df: DataFrame,
-    windows: tuple[int, ...],
-    src: str = "close",
-    by: str = "entity",
-    ts_col: str = "ts",
-    min_periods: int = 1,
-    prefix: str = "sma_",
-) -> DataFrame:
-    rs = _RollStats(df, src, by, ts_col, need_sq=False)
-    out = rs.df.withColumns(
-        {f"{prefix}{n}": rs.mean(n, min_periods) for n in windows}
-    )
-    return rs.strip(out)
-
-
-def bollinger_width(
-    df: DataFrame,
-    n: int = 20,
-    n_std: float = 2.0,
-    src: str = "close",
-    by: str = "entity",
-    ts_col: str = "ts",
-    out: str = "bb_width",
-    min_periods: int | None = None,
-) -> DataFrame:
-    """width = (upper-lower)/ma = 2*k*σ/ma; min_periods defaults to
-    max(10, n//2) like the reference (`tools/real_sliding_simple.py:170`)."""
-    mp = min_periods if min_periods is not None else max(10, n // 2)
-    rs = _RollStats(df, src, by, ts_col, need_sq=True)
-    ma = rs.mean(n, mp)
-    sd = rs.std(n, ddof=1, min_periods=mp)
-    res = rs.df.withColumn(
-        out, F.when(ma != 0, (2.0 * n_std * sd) / ma)
-    )
-    return rs.strip(res)
-
-
-def roc_momentum(
-    df: DataFrame,
-    n: int = 14,
-    src: str = "close",
-    by: str = "entity",
-    ts_col: str = "ts",
-    out: str = "mom",
-) -> DataFrame:
-    w = _ord(by, ts_col)
-    prev = F.lag(src, n).over(w)
-    return df.withColumn(
-        out, F.when(prev.isNotNull() & (prev != 0), F.col(src) / prev - 1.0)
-    )
-
-
-def realized_vol(
-    df: DataFrame,
-    windows: tuple[int, ...] = (20, 50, 100),
-    src: str = "close",
-    by: str = "entity",
-    ts_col: str = "ts",
-    prefix: str = "rv_win",
-) -> DataFrame:
-    wlag = _ord(by, ts_col)
-    prev = F.lag(src, 1).over(wlag)
-    tmp = df.withColumn(
-        "_lr", F.when((prev > 0) & (F.col(src) > 0), F.log(F.col(src) / prev))
-    )
-    rs = _RollStats(tmp, "_lr", by, ts_col, need_sq=True)
-    out = rs.df.withColumns(
-        {f"{prefix}{n}": rs.std(n, ddof=1, min_periods=2) for n in windows}
-    )
-    return rs.strip(out).drop("_lr")
-
-
 def rolling_zscore(
     df: DataFrame,
     n: int,
@@ -198,22 +76,22 @@ def window_indicator_layers(
     ts_col: str = "ts",
     src: str = "close",
 ) -> tuple[list[dict[str, Column]], dict[str, Column], list[str]]:
-    """The full sma/bollinger/roc/realized-vol expression set as THREE
-    reusable withColumns layers + one final projection (r6).
+    """The full sma/bollinger/roc/realized-vol expression set as four
+    reusable withColumns layers + one final projection.
 
-    Motivation (guide §1.2 per-task work + §7.2 plan size): the chained
-    sma() -> bollinger_width() -> roc_momentum() -> realized_vol() form
-    rebuilt identical prefix-sum columns per helper and paid ~750 ms of
-    py4j Column construction PER TIMEFRAME (25k JVM round-trips across
-    the 4-tf flagship build); expressions here are built once per config
-    and reused across every timeframe table — Column objects are plan-
-    independent. Formulas are verbatim _RollStats algebra, so outputs
-    are expression-identical to the chained helpers (pinned by the
-    unchanged oracle hashes and tests/test_indicators.py).
+    Layer 1 holds the running (S, C, Q) prefix sums of ``src`` and its
+    lags; layer 2 the lagged prefix sums each window needs plus the log
+    return; layers 3-4 the same for the log return (realized vol).
+    NaN counts as missing exactly like null (pandas skip-NaN semantics):
+    a NaN reaching a cumsum would poison S and Q for every later row of
+    the entity. Expressions are built once per config and reused across
+    every timeframe table — Column objects are plan-independent, so the
+    py4j construction cost is paid once, not per table. Columns a caller
+    never selects are pruned by Catalyst with their window expressions.
 
     Returns (layers, final, drop_cols): apply each layer dict in order
     with ``withColumns``, then ``withColumns(final)``, then drop
-    ``drop_cols``."""
+    ``drop_cols`` (``apply_window_indicators`` does all three)."""
     wc = _cum(by, ts_col)
     wo = _ord(by, ts_col)
     x = F.col(src).cast("double")
@@ -295,7 +173,3 @@ def apply_window_indicators(
         df = df.withColumns(layer)
     return df.withColumns(final).drop(*drop)
 
-
-def true_range(high: Column, low: Column, prev_close: Column) -> Column:
-    """TR = max(h-l, |h-prev_c|, |l-prev_c|) — ATR's building block."""
-    return F.greatest(high - low, F.abs(high - prev_close), F.abs(low - prev_close))

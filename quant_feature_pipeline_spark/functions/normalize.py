@@ -1,86 +1,25 @@
-"""W8/W9/W10 — normalization + governance expressions.
+"""W9/W13 — normalization expressions used by the feature plans.
 
-- winsorize+tanh (`/root/reference/step5_featueres_unified.py:1181-1235`):
-  clip to global [p_lo, p_hi] percentiles then ``tanh(x/(k·σ))``. The
-  percentiles/σ are **computed once and broadcast** (train/serve
-  determinism — the reference persists fixed per-period γ/quantiles,
-  `congfigs/step5_mapping.yaml`), never recomputed per partition.
 - momentum tanh compression: ``tanh(x*30)`` (`step5_featueres_unified.py:513-526`)
-- power calibration: ``y = clip(x,0,1)^γ`` with γ solved from
-  ``q^γ = target`` at the p95 quantile (`step5_featueres_unified.py:199-229`)
 - market-state threshold (W13): supertrend_direction >= 0 → 1 else -1
+
+The winsorize+tanh (W8) and power-calibration (W10) steps need global
+statistics computed once and broadcast (train/serve determinism — the
+reference persists fixed per-period γ/quantiles,
+`congfigs/step5_mapping.yaml`). The flagship computes them in its stats
+pass and persists them in ``FlagshipStats`` (plans/flagship.py); the
+``winsorize_tanh`` and ``power_calibration`` gate queries compute theirs
+inline in ``__spark_entry__.py``.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def global_percentiles(
-    df: DataFrame, src: str, ps: tuple[float, ...]
-) -> list[float]:
-    """Exact percentiles computed once on the driver (A6). At 100 TB use
-    percentile_approx with a tight accuracy instead; the contract is the
-    same: compute once, persist, broadcast as literals."""
-    row = df.select(
-        F.percentile(src, F.array(*[F.lit(p / 100.0) for p in ps])).alias("q")
-    ).first()
-    return list(row["q"])
-
-
-def winsorize_tanh(
-    df: DataFrame,
-    src: str,
-    out: str | None = None,
-    p_lo: float = 0.1,
-    p_hi: float = 99.9,
-    sigma_mult: float = 3.0,
-    bounds: tuple[float, float] | None = None,
-    sigma: float | None = None,
-) -> DataFrame:
-    """Pass persisted ``bounds``/``sigma`` for train/serve parity; if
-    absent they are computed from this df (one extra aggregate job)."""
-    if bounds is None:
-        lo, hi = global_percentiles(df, src, (p_lo, p_hi))
-    else:
-        lo, hi = bounds
-    if sigma is None:
-        sigma = df.select(F.stddev_samp(src)).first()[0] or 1.0
-    clipped = F.least(F.greatest(F.col(src), F.lit(lo)), F.lit(hi))
-    return df.withColumn(
-        out or f"{src}_wt", F.tanh(clipped / (sigma_mult * float(sigma)))
-    )
 
 
 def tanh_compress(col: Column, scale: float = 30.0) -> Column:
     return F.tanh(col * scale)
-
-
-def solve_gamma(q: float, target: float) -> float:
-    """γ from q^γ = target (q = p95 of the raw series, both in (0,1))."""
-    q = min(max(q, 1e-9), 1 - 1e-9)
-    target = min(max(target, 1e-9), 1 - 1e-9)
-    return math.log(target) / math.log(q)
-
-
-def power_calibrate(
-    df: DataFrame,
-    src: str,
-    out: str | None = None,
-    gamma: float | None = None,
-    quantile: float = 95.0,
-    target: float = 0.8,
-) -> DataFrame:
-    """y = clip(x,0,1)^γ; γ persisted per period in the reference
-    (`congfigs/step5_mapping.yaml` atr.calibration.per_period)."""
-    if gamma is None:
-        (q,) = global_percentiles(df, src, (quantile,))
-        gamma = solve_gamma(q, target)
-    x = F.least(F.greatest(F.col(src), F.lit(0.0)), F.lit(1.0))
-    return df.withColumn(out or f"{src}_cal", F.pow(x, F.lit(float(gamma))))
 
 
 def market_state(col: Column) -> Column:

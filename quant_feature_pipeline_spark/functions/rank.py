@@ -15,7 +15,6 @@ linear in N at fixed W (SURVEY.md §7.3.6).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
@@ -52,14 +51,6 @@ def _rank_kernel(x: np.ndarray, window: int, min_periods: int) -> np.ndarray:
 
 def _min_periods(window: int, min_periods: int | None = None) -> int:
     return min_periods if min_periods is not None else max(2, window // 2)
-
-
-def rolling_rank_series(s: pd.Series, window: int, min_periods: int | None = None) -> pd.Series:
-    """Single-series oracle/kernel (vectorized-enough; see _rank_kernel)."""
-    return pd.Series(
-        _rank_kernel(s.to_numpy(dtype=np.float64), window, _min_periods(window, min_periods)),
-        index=s.index,
-    )
 
 
 def rolling_percentile_rank(
@@ -107,28 +98,3 @@ def rolling_rank_multi(
         prepartitioned=prepartitioned,
     )
 
-
-def fused_rank(
-    df: DataFrame,
-    src: str,
-    fast_window: int,
-    slow_window: int,
-    fast_weight: float = 0.6,
-    by: str = "entity",
-    ts_col: str = "ts",
-    out: str | None = None,
-) -> DataFrame:
-    """W10 fused fast/slow rank: 0.6*rank(fast)+0.4*rank(slow)
-    (`step5_featueres_unified.py:547-587`). One grouped stage, two kernels."""
-    out_name = out or f"{src}_fused_rank"
-
-    def kernel(sl: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
-        x = sl[src]
-        fr = _rank_kernel(x, fast_window, _min_periods(fast_window))
-        sr = _rank_kernel(x, slow_window, _min_periods(slow_window))
-        return {out_name: fast_weight * fr + (1.0 - fast_weight) * sr}
-
-    return grouped_apply(
-        df, by, ts_col, [src], kernel, [out_name],
-        lookback_rows=max(fast_window, slow_window),
-    )

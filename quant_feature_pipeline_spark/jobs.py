@@ -30,10 +30,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import shutil
 import sys
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig, tf_seconds
@@ -128,21 +131,19 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
     # the merged result before the overwrite replaces what it reads
     t0 = time.time()
     staging = None
-    if incremental:
-        import os
-        import uuid
-
-        staging = os.path.join(
-            args.checkpoint_root, f"_staging-{uuid.uuid4().hex[:8]}"
-        )
-        publish.write.mode("overwrite").parquet(staging)
-        publish = spark.read.parquet(staging)
-    path = ck.write(publish, FEATURES_STAGE, by=args.by, ts_col=args.ts_col)
-    publish_s = time.time() - t0
-    if staging is not None:
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
+    try:
+        if incremental:
+            staging = os.path.join(
+                args.checkpoint_root, f"_staging-{uuid.uuid4().hex[:8]}"
+            )
+            publish.write.mode("overwrite").parquet(staging)
+            publish = spark.read.parquet(staging)
+        path = ck.write(publish, FEATURES_STAGE, by=args.by, ts_col=args.ts_col)
+        publish_s = time.time() - t0
+    finally:
+        # a failed publish must not leave its staging copy behind
+        if staging is not None:
+            shutil.rmtree(staging, ignore_errors=True)
 
     if args.output:
         from .sources.sink import write_table

@@ -373,12 +373,16 @@ def asof_join_bucketed(
     )
 
 
+# cap on the detected hot-entity list: both routers split on a literal
+# isin over it, and hot entities past the cap stay on the cold path
+_HOT_ISIN_MAX = 10_000
+
+
 def _detect_hot_entities(
     left: DataFrame,
     by: str,
     hot_rows: int,
     hot_detect_sample: float | None,
-    hot_isin_max: int = 10_000,
 ) -> list:
     """Bounded hot-entity list for skew routing (shared by
     asof_join_hot_routed and asof_join_multi).
@@ -390,7 +394,10 @@ def _detect_hot_entities(
     and the empty list returns with ZERO jobs. Otherwise one count
     aggregate (optionally over a ``hot_detect_sample`` Bernoulli sample,
     threshold scaled accordingly) collects the by-construction-bounded
-    list (< total_rows / hot_rows entries). Nones are dropped so callers
+    list (< total_rows / hot_rows entries), capped at ``_HOT_ISIN_MAX``
+    names so the callers' literal ``isin`` stays small; hot entities past
+    the cap take the exact cold path (routing is performance-only, so
+    the cap never changes a result row). Nones are dropped so callers
     can safely build literal isin predicates (ADVICE r5: a None literal
     makes both branch predicates NULL and loses null-key rows)."""
     try:
@@ -414,7 +421,7 @@ def _detect_hot_entities(
         .filter(F.col("_n") > threshold)
         .select(by)
     )
-    hot_list = [r[0] for r in hot.limit(hot_isin_max + 1).collect()]
+    hot_list = [r[0] for r in hot.limit(_HOT_ISIN_MAX).collect()]
     return [x for x in hot_list if x is not None]
 
 
@@ -447,15 +454,15 @@ def asof_join_hot_routed(
     Eagerness buys the common case: with NO hot entity the call returns
     the plain one-window union_ffill plan — no anti/semi joins, no
     empty bucketed branch, no union (r5: the lazy always-both-branches
-    form cost 2-3x on non-skewed inputs, the usual shape). With a small
-    hot list (<= ``hot_isin_max``) the branches split on a LITERAL
-    ``isin`` filter — no broadcast join, and the hot SET is fixed on the
-    driver (ADVICE r5 note: the left subtree is still evaluated once per
-    branch filter, so a non-deterministic ``by`` value can still land a
-    row in both or neither branch — persist non-deterministic inputs
-    before routing; null-key rows flow to the cold branch explicitly).
-    Only an implausibly large hot list falls back to the broadcast
-    semi/anti-join form.
+    form cost 2-3x on non-skewed inputs, the usual shape). Otherwise the
+    branches split on a LITERAL ``isin`` filter over at most
+    ``_HOT_ISIN_MAX`` names — no broadcast join, and the hot SET is fixed
+    on the driver (ADVICE r5 note: the left subtree is still evaluated
+    once per branch filter, so a non-deterministic ``by`` value can
+    still land a row in both or neither branch — persist
+    non-deterministic inputs before routing; null-key rows flow to the
+    cold branch explicitly). Hot entities past the cap stay on the exact
+    cold path.
 
     Cost note: each branch still scans the left subtree (plus one scan
     for the detection count) — a parquet scan is cheap next to the
@@ -482,40 +489,19 @@ def asof_join_hot_routed(
         allow_exact_matches=allow_exact_matches,
         tolerance_s=tolerance_s, right_prefix=right_prefix,
     )
-    hot_isin_max = 10_000  # literal-isin cap; above it, broadcast joins
     # detection via _detect_hot_entities: free size-estimate skip on
     # small inputs (VERDICT r5 item 3), one bounded count otherwise
-    hot_list = _detect_hot_entities(
-        left, by, hot_rows, hot_detect_sample, hot_isin_max
-    )
+    hot_list = _detect_hot_entities(left, by, hot_rows, hot_detect_sample)
     if not hot_list:  # the common case: the r4-shaped one-window plan
         return asof_join_union_ffill(left, right, **kw)
-    if len(hot_list) <= hot_isin_max:
-        # null-key rows route to the cold branch explicitly (ADVICE r5)
-        is_hot = F.col(by).isNotNull() & F.col(by).isin(hot_list)
-        cold_l, cold_r = left.filter(~is_hot), right.filter(~is_hot)
-        hot_l, hot_r = left.filter(is_hot), right.filter(is_hot)
-    else:  # implausibly many hot entities: broadcast-join split
-        counted = (
-            left if hot_detect_sample is None
-            else left.sample(fraction=float(hot_detect_sample), seed=7)
-        )
-        threshold = float(hot_rows) * (
-            1.0 if hot_detect_sample is None else float(hot_detect_sample)
-        )
-        hot = (
-            counted.groupBy(by)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > threshold)
-            .select(by)
-            .persist()
-        )
-        cold_l = left.join(F.broadcast(hot), [by], "left_anti")
-        cold_r = right.join(F.broadcast(hot), [by], "left_anti")
-        hot_l = left.join(F.broadcast(hot), [by], "left_semi")
-        hot_r = right.join(F.broadcast(hot), [by], "left_semi")
-    cold_out = asof_join_union_ffill(cold_l, cold_r, **kw)
-    hot_out = asof_join_bucketed(hot_l, hot_r, bucket_s=bucket_s, **kw)
+    # null-key rows route to the cold branch explicitly (ADVICE r5)
+    is_hot = F.col(by).isNotNull() & F.col(by).isin(hot_list)
+    cold_out = asof_join_union_ffill(
+        left.filter(~is_hot), right.filter(~is_hot), **kw
+    )
+    hot_out = asof_join_bucketed(
+        left.filter(is_hot), right.filter(is_hot), bucket_s=bucket_s, **kw
+    )
     return cold_out.unionByName(hot_out)
 
 

@@ -32,15 +32,3 @@ def dedup_exact(
         .drop("_h", "_rn")
     )
 
-
-def dup_groups(
-    df: DataFrame, content_col: str = "text", hash_fn: str = "md5"
-) -> DataFrame:
-    """Duplicate-group summary: one row per content hash with its count —
-    the audit view of exact dedup."""
-    h = {"md5": F.md5, "sha1": F.sha1}[hash_fn](F.col(content_col).cast("binary"))
-    return (
-        df.withColumn("_h", h)
-        .groupBy(F.col("_h").alias("content_hash"))
-        .agg(F.count(F.lit(1)).alias("n_dups"))
-    )

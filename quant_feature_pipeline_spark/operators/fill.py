@@ -1,17 +1,20 @@
-"""W14/P8 — grid reindex + forward/backward fill + numeric cleaning.
+"""W14 — grid reindex + forward/backward fill.
 
 Reference semantics (`/root/reference/tools/filling.py:19-73`): build a
-complete time grid at the bar frequency, reindex onto it, forward-fill
-``close``, seed missing ``open/high/low`` from the filled close, set
-missing ``volume`` to 0. Generic ffill/bfill on request
-(`fill_nan`, `tools/filling.py:49-73`). Cleaning (`tools/export_utils.py:72-94`):
-±inf → null, ffill, then 0.
+complete time grid at the bar frequency, reindex onto it and
+forward-fill; generic ffill/bfill on request (`fill_nan`,
+`tools/filling.py:49-73`).
 
-Spark-first: the grid is ``sequence(min_ts, max_ts, interval)`` exploded
-per entity and left-joined (no driver loop); ffill is
+Spark-first: ``grid_fill_ranges`` explodes each bar over its own
+validity range (no driver loop, no O(grid) sort); ffill is
 ``last(x, ignorenulls=True)`` over an unbounded-preceding row frame;
 bfill is the mirrored ``first`` over the following frame. All Catalyst,
 one shuffle on entity.
+
+The reference's OHLCV seeding rules (open/high/low from the filled
+close, volume 0) have no implementation here: the pipeline fills no
+OHLCV gaps, since resample emits only observed buckets and the as-of
+merge carries the last observed value forward.
 """
 
 from __future__ import annotations
@@ -53,49 +56,6 @@ def bfill(df: DataFrame, cols: list[str], by: str = "entity", ts_col: str = "ts"
         *[c for c in df.columns if c not in cols],
         *[F.first(c, ignorenulls=True).over(w).alias(c) for c in cols],
     )
-
-
-def grid_fill(
-    bars: DataFrame,
-    tf: str,
-    by: str = "entity",
-    ts_col: str = "ts",
-    price_cols: tuple[str, ...] = ("open", "high", "low", "close"),
-    volume_col: str = "volume",
-) -> DataFrame:
-    """Complete the per-entity time grid and fill OHLCV per reference
-    rules: close→ffill; open/high/low→(their own value else filled close);
-    volume→0. Grid spans each entity's own [min_ts, max_ts]."""
-    step = tf_seconds(tf)
-    grid = (
-        bars.groupBy(by)
-        .agg(F.min(ts_col).alias("_t0"), F.max(ts_col).alias("_t1"))
-        .select(
-            by,
-            F.explode(
-                F.sequence(
-                    F.col("_t0"), F.col("_t1"), F.expr(f"INTERVAL {step} SECONDS")
-                )
-            ).alias(ts_col),
-        )
-    )
-    joined = grid.join(bars, [by, ts_col], "left")
-    w = _w_back(by, ts_col)
-    close_f = F.last("close", ignorenulls=True).over(w)
-    out = joined.withColumn("_close_f", close_f)
-    exprs = []
-    for c in joined.columns:
-        if c in (by, ts_col):
-            exprs.append(F.col(c))
-        elif c == "close":
-            exprs.append(F.col("_close_f").alias("close"))
-        elif c in price_cols:
-            exprs.append(F.coalesce(F.col(c), F.col("_close_f")).alias(c))
-        elif c == volume_col:
-            exprs.append(F.coalesce(F.col(c), F.lit(0.0)).alias(c))
-        else:
-            exprs.append(F.col(c))
-    return out.select(*exprs)
 
 
 def grid_fill_ranges(
@@ -165,33 +125,3 @@ def grid_fill_ranges(
     )
     return head.unionByName(seg)
 
-
-def clean_numeric(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    by: str = "entity",
-    ts_col: str = "ts",
-    fill_value: float = 0.0,
-) -> DataFrame:
-    """±inf/NaN → null → ffill → constant fill (`tools/export_utils.py:72-94`)."""
-    if cols is None:
-        cols = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.typeName() in ("double", "float") and f.name not in (by, ts_col)
-        ]
-    w = _w_back(by, ts_col)
-    exprs = []
-    for c in df.columns:
-        if c in cols:
-            nulled = F.when(
-                F.isnan(F.col(c)) | (F.abs(F.col(c)) == float("inf")), F.lit(None)
-            ).otherwise(F.col(c))
-            exprs.append(
-                F.coalesce(
-                    F.last(nulled, ignorenulls=True).over(w), F.lit(fill_value)
-                ).alias(c)
-            )
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)

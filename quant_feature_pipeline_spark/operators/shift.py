@@ -1,12 +1,14 @@
-"""W1/W2/W7 — lag/lead shift features, momentum, log return.
+"""W2/W7 — boundary-anchored momentum and log return.
 
 Reference semantics:
-- W1 "true sliding window" momentum (`/root/reference/tools/real_sliding_simple.py:30-78`):
-  ``mom = close/close.shift(k*steps) - 1`` recomputed on the base grid so
-  a large-timeframe momentum updates every base bar; NaN → ffill → 0.
+- W2 boundary-anchored momentum (`step5_featueres_unified.py:320-424`),
+  see ``boundary_momentum``.
 - W7 log return (`step5_featueres_unified.py:1158-1163`): log(p_t/p_{t-1})
   with zero-price guard.
-- lead shift: the mirrored forward-looking shift (label construction).
+
+The plain W1 lag momentum ``close/close.shift(k) - 1`` is one ``lag``
+expression: the indicator layers' ``mom`` column
+(functions/indicators.py) and the ``lag_momentum_3`` gate query.
 
 All pure window/lag expressions — whole-stage codegen, no Python.
 """
@@ -20,48 +22,6 @@ from pyspark.sql.window import Window
 
 def _w(by: str, ts_col: str):
     return Window.partitionBy(by).orderBy(ts_col)
-
-
-def lag_momentum(
-    df: DataFrame,
-    periods: int,
-    src: str = "close",
-    out: str = "mom",
-    by: str = "entity",
-    ts_col: str = "ts",
-    fill_zero: bool = True,
-) -> DataFrame:
-    """mom = src/lag(src, periods) - 1, warm-up rows 0-filled like the
-    reference (`tools/real_sliding_simple.py:75`)."""
-    w = _w(by, ts_col)
-    prev = F.lag(src, periods).over(w)
-    mom = F.when(prev.isNotNull() & (prev != 0), F.col(src) / prev - 1.0)
-    if fill_zero:
-        mom = F.coalesce(mom, F.lit(0.0))
-    return df.withColumn(out, mom)
-
-
-def sliding_momentum(
-    df: DataFrame,
-    tf_periods: dict[str, int],
-    base_steps: dict[str, int],
-    src: str = "close",
-    by: str = "entity",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """W1 driver: for each timeframe tf with lookback L bars and
-    ``steps`` base bars per tf bar, compute ``{tf}_mom{L}`` on the base
-    grid with shift L*steps (`tools/real_sliding_simple.py:81-155`)."""
-    w = _w(by, ts_col)
-    cols = {}
-    for tf, L in tf_periods.items():
-        k = L * base_steps[tf]
-        prev = F.lag(src, k).over(w)
-        cols[f"{tf}_mom{L}"] = F.coalesce(
-            F.when(prev.isNotNull() & (prev != 0), F.col(src) / prev - 1.0),
-            F.lit(0.0),
-        )
-    return df.withColumns(cols)
 
 
 def log_return(
@@ -80,33 +40,6 @@ def log_return(
             F.lit(0.0),
         ),
     )
-
-
-def lead_shift(
-    df: DataFrame,
-    cols: list[str],
-    periods: int,
-    by: str = "entity",
-    ts_col: str = "ts",
-    suffix: str | None = None,
-) -> DataFrame:
-    """Forward shift (lead) — label/targets; suffix defaults to _lead{k}."""
-    w = _w(by, ts_col)
-    sfx = suffix or f"_lead{periods}"
-    return df.withColumns({f"{c}{sfx}": F.lead(c, periods).over(w) for c in cols})
-
-
-def lag_shift(
-    df: DataFrame,
-    cols: list[str],
-    periods: int,
-    by: str = "entity",
-    ts_col: str = "ts",
-    suffix: str | None = None,
-) -> DataFrame:
-    w = _w(by, ts_col)
-    sfx = suffix or f"_lag{periods}"
-    return df.withColumns({f"{c}{sfx}": F.lag(c, periods).over(w) for c in cols})
 
 
 def boundary_momentum(

@@ -64,15 +64,3 @@ def salted_agg(
     partial = salted.groupBy(*key_cols, "_salt").agg(*partial_exprs)
     return partial.groupBy(*key_cols).agg(*merge_exprs)
 
-
-def skewed_entity_report(df: DataFrame, by: str = "entity", top: int = 10) -> DataFrame:
-    """Per-entity row counts + share of total — the planning view that
-    decides whether an entity needs the range-partitioned path."""
-    total = df.count()
-    return (
-        df.groupBy(by)
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("share", F.col("rows") / F.lit(float(total)))
-        .orderBy(F.col("rows").desc())
-        .limit(top)
-    )

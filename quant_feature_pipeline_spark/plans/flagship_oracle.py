@@ -9,9 +9,10 @@ arithmetic closely enough that round-6 values hash-match:
 - per-tf recurrences (Wilder RSI + run-length events, ATR, SuperTrend)
   as recursive CTEs whose per-step updates replicate pandas
   ``ewm(adjust=False)`` bit-for-bit (see __spark_entry__._ewm_sql notes)
-- the engine's prefix-sum window stats (_RollStats S/Q folds) carried IN
-  the recursion as exact sequential adds, then differenced with LAG —
-  the same fl-op sequence Spark's cumulative window frame performs
+- the engine's prefix-sum window stats (the S/Q folds of
+  ``window_indicator_layers``) carried IN the recursion as exact
+  sequential adds, then differenced with LAG — the same fl-op sequence
+  Spark's cumulative window frame performs
 - backward as-of merge via DuckDB ASOF LEFT JOIN (exact matches allowed)
 - rolling mid-ranks via a bounded self-join producing the identical
   (less + 0.5·equal)/count rationals the numpy kernel emits
@@ -20,8 +21,8 @@ arithmetic closely enough that round-6 values hash-match:
   round-6 boundary with probability ~1e-9 per value
 
 Engine reference points: plans/flagship.py (assembly),
-functions/indicators.py (_RollStats), functions/recurrence.py (folds),
-operators/resample.py (bucketing), operators/asof.py (merge).
+functions/indicators.py (window_indicator_layers), functions/recurrence.py
+(folds), operators/resample.py (bucketing), operators/asof.py (merge).
 """
 
 from __future__ import annotations
@@ -87,7 +88,7 @@ def _bars_ctes() -> str:
 
 def _rec_cte(tf: str, cfg: PipelineConfig) -> str:
     """Recursive fold per tf: RSI gains/losses, ATR, SuperTrend bands,
-    RSI-event run lengths, and the _RollStats S/Q folds for close
+    RSI-event run lengths, and the window_indicator_layers S/Q folds for close
     (bollinger) and log-return (realized vol)."""
     a14 = 1.0 / cfg.rsi_window
     a_atr = 1.0 / cfg.atr_window

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig, steps_between, tf_seconds
+from ..config import PipelineConfig, tf_seconds
 from ..functions.indicators import (
     apply_window_indicators,
     window_indicator_layers,
@@ -63,13 +63,12 @@ def indicator_table(
     same inputs — bit-identical output, only column ORDER changes
     (window family before the recurrence block).
 
-    The sma/bollinger/roc/realized-vol family applies as the fused
-    expression layers from window_indicator_layers (r6): identical
-    formulas to the chained helpers, built once per config and REUSED
-    across every timeframe (the chained form re-derived equal prefix-sum
-    columns per helper and paid ~750 ms of py4j Column construction per
-    tf on the driver). ``window_exprs``: pass the prebuilt
-    window_indicator_layers(...) tuple to share it across calls.
+    The sma/bollinger/roc/realized-vol family applies as the expression
+    layers from window_indicator_layers, built once per config and
+    REUSED across every timeframe (building them per table paid ~750 ms
+    of py4j Column construction per tf on the driver). ``window_exprs``:
+    pass the prebuilt window_indicator_layers(...) tuple to share it
+    across calls.
 
     ``prepartitioned``: the input is already hash-partitioned by ``by``
     with every entity's rows in one partition (run_pipeline's up-front

@@ -111,9 +111,3 @@ def get_spark(
         "spark.ui.enabled": "false",
         **(extra_conf or {}),
     })
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

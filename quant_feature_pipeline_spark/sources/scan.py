@@ -6,8 +6,10 @@ Reference behaviors re-expressed (not ported):
   filter that Catalyst pushes into the parquet scan (stats pruning)
 - P4 dedup keep-last by ts (`step2_resample.py:143`,
   `tools/incremental.py:33-40`) — here a row_number window
-- S5 fast last-timestamp probe (`tools/io_paths.py:33-134`) — here a
-  metadata-only max(ts) aggregate over parquet footer stats
+
+The S5 last-timestamp probe (`tools/io_paths.py:33-134`) is the
+snapshot max(ts) aggregate in ``Checkpointer.resume_plan``
+(plans/checkpoint.py).
 """
 
 from __future__ import annotations
@@ -82,9 +84,3 @@ def slice_time_range(df: DataFrame, start=None, end=None, ts_col: str = "ts") ->
     if end is not None:
         df = df.filter(F.col(ts_col) <= F.lit(end))
     return df
-
-
-def last_timestamp(df: DataFrame, by: str = "entity", ts_col: str = "ts") -> DataFrame:
-    """Metadata-cheap max(ts) per entity (parquet footer stats make the
-    global variant a near-metadata-only scan)."""
-    return df.groupBy(by).agg(F.max(ts_col).alias("last_ts"))

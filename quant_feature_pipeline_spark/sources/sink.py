@@ -3,10 +3,10 @@
 The reference writes per-step CSV/Parquet files with tmp+rename atomicity
 (`/root/reference/tools/export_utils.py:265-290`). Here: partitioned
 parquet writes (atomic at the directory-commit level via Spark's
-FileOutputCommitter), partitionBy(entity-bucket) so a 1000-executor read
-gets balanced splits, plus a JSON sidecar manifest carrying the schema
-hash (the reference's NPZ `schema_sha` contract,
-`tools/export_utils.py:47-50`).
+FileOutputCommitter) with optional ``partitionBy`` columns, a real
+bucketed table (``write_bucketed_table``) for exchange-free re-reads,
+plus a JSON sidecar manifest carrying the schema hash (the reference's
+NPZ `schema_sha` contract, `tools/export_utils.py:47-50`).
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..plans.schema_contract import schema_sha
 
@@ -60,12 +59,6 @@ def write_table(
     return path
 
 
-def bucket_column(df: DataFrame, col: str = "entity", buckets: int = 64):
-    """Stable bucket id for partitioned layout (co-locates an entity's
-    history; bounded file count at high entity cardinality)."""
-    return df.withColumn("_bucket", F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int"))
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,
@@ -77,8 +70,8 @@ def write_bucketed_table(
 ) -> DataFrame:
     """Write ``df`` as a REAL Spark bucketed table and return its scan.
 
-    Unlike ``bucket_column`` (a directory-layout hint), ``bucketBy``
-    records the hash layout in the catalog: the returned scan reports
+    Unlike a ``partitionBy`` directory layout, ``bucketBy`` records the
+    hash layout in the catalog: the returned scan reports
     ``HashPartitioning(by, buckets)``, so every downstream
     groupBy/window/join clustered on ``by`` (or, under subset-key
     co-partitioning, on a superset like ``(by, ts)``) starts WITHOUT an

@@ -1,17 +1,13 @@
-"""Custom stateful streaming operator: incremental EMA/Wilder state via
-``applyInPandasWithState`` — the streaming analog of the batch
-recurrence stage (SURVEY.md §2.9 'stateful recurrence').
+"""Custom stateful streaming operator: the watermark-buffered as-of join
+via ``applyInPandasWithState`` (SURVEY.md §2.9 'streaming as-of').
 
-Each entity's group state carries the last EMA values; every
-micro-batch folds its (ts-sorted) rows into the recurrences and emits
-one output row per input row. This is exactly the reference's
-bar-to-bar state carry (`IndicatorCalculator`), lifted into Structured
-Streaming with watermark-driven state cleanup.
+Each entity's group state holds the left rows not yet passed by the
+watermark and the right rows any future left can still match; every
+micro-batch merges what the watermark has released and emits those
+lefts exactly once. See ``streaming_asof_buffered``.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
@@ -19,80 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("entity", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("close", T.DoubleType(), True),
-        T.StructField("ema_fast", T.DoubleType(), True),
-        T.StructField("ema_slow", T.DoubleType(), True),
-    ]
-)
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ema_fast", T.DoubleType(), True),
-        T.StructField("ema_slow", T.DoubleType(), True),
-    ]
-)
-
-
-def _make_fn(fast_span: int, slow_span: int):
-    a_f = 2.0 / (fast_span + 1)
-    a_s = 2.0 / (slow_span + 1)
-
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        ef, es = state.get if state.exists else (None, None)
-        outs = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts", kind="mergesort")
-            fast, slow = [], []
-            for c in pdf["close"].astype(float):
-                ef = c if ef is None else a_f * c + (1 - a_f) * ef
-                es = c if es is None else a_s * c + (1 - a_s) * es
-                fast.append(ef)
-                slow.append(es)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "entity": key[0],
-                        "ts": pdf["ts"],
-                        "close": pdf["close"],
-                        "ema_fast": fast,
-                        "ema_slow": slow,
-                    }
-                )
-            )
-        state.update((ef, es))
-        for o in outs:
-            yield o
-
-    return update
-
-
-def streaming_ema(
-    stream: DataFrame,
-    fast_span: int = 12,
-    slow_span: int = 26,
-    watermark: str = "10 minutes",
-    by: str = "entity",
-    ts_col: str = "ts",
-) -> DataFrame:
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(by)
-        .applyInPandasWithState(
-            _make_fn(fast_span, slow_span),
-            outputStructType=OUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def streaming_asof_buffered(

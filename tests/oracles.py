@@ -2,7 +2,9 @@
 
 The Series-form recurrence indicators: the production engine runs the
 array kernels in ``functions/recurrence.py``; these pandas formulations
-are what those kernels are asserted bit-identical against.
+are what those kernels are asserted bit-identical against. The
+Series-form rolling rank wraps the production ``_rank_kernel`` for
+per-entity pandas comparisons.
 """
 
 from __future__ import annotations
@@ -11,7 +13,18 @@ import numpy as np
 import pandas as pd
 
 from quant_feature_pipeline_spark.config import PipelineConfig
+from quant_feature_pipeline_spark.functions.rank import _min_periods, _rank_kernel
 from quant_feature_pipeline_spark.functions.recurrence import supertrend_direction
+
+
+def rolling_rank_series(
+    s: pd.Series, window: int, min_periods: int | None = None
+) -> pd.Series:
+    """Single-series rolling percentile rank (the production kernel)."""
+    return pd.Series(
+        _rank_kernel(s.to_numpy(dtype=np.float64), window, _min_periods(window, min_periods)),
+        index=s.index,
+    )
 
 
 def _wilder(s: pd.Series, n: int) -> pd.Series:

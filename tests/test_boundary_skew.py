@@ -1,6 +1,6 @@
 """W2 boundary momentum vs a literal replication of the reference loop
 (`step5_featueres_unified.py:320-424`), salting utilities, feature
-contract, streaming stateful EMA."""
+contract, streaming as-of join."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from quant_feature_pipeline_spark.operators.shift import boundary_momentum
-from quant_feature_pipeline_spark.operators.skew import (
-    add_salt,
-    salted_agg,
-    skewed_entity_report,
-)
+from quant_feature_pipeline_spark.operators.skew import add_salt, salted_agg
 from quant_feature_pipeline_spark.plans.features_contract import (
     assemble_features,
     group_of,
@@ -100,15 +96,6 @@ def test_salt_deterministic(spark):
     assert a.between(0, 7).all()
 
 
-def test_skewed_entity_report(spark):
-    pdf = pd.concat(
-        [make_bars_pdf(n=400, entities=("HOT",)), make_bars_pdf(n=40, entities=("A", "B"))]
-    )
-    rep = skewed_entity_report(spark.createDataFrame(pdf)).toPandas()
-    assert rep.iloc[0]["entity"] == "HOT"
-    assert rep.iloc[0]["share"] > 0.8
-
-
 def test_assemble_features_and_health(spark):
     pdf = make_bars_pdf(n=100)
     sdf = spark.createDataFrame(pdf)
@@ -122,43 +109,6 @@ def test_assemble_features_and_health(spark):
     hc = health_check(sdf, ["close", "volume"]).toPandas().set_index("feature")
     assert hc.loc["close", "min"] > 0
     assert hc.loc["close", "oor_ratio"] == 0.0  # price >= 0 always holds
-
-
-def test_streaming_stateful_ema_matches_batch(spark, tmp_path):
-    """applyInPandasWithState EMA across micro-batches == batch ewm."""
-    from quant_feature_pipeline_spark.streaming.stateful import streaming_ema
-
-    pdf = make_bars_pdf(n=120, entities=("A", "B"))
-    src = str(tmp_path / "stream_src")
-    # two files -> with maxFilesPerTrigger=1, state must carry across batches
-    half = len(pdf) // 2
-    pdf_sorted = pdf.sort_values(["ts", "entity"]).reset_index(drop=True)
-    spark.createDataFrame(pdf_sorted.iloc[:half]).coalesce(1).write.mode("overwrite").parquet(src + "/a")
-    spark.createDataFrame(pdf_sorted.iloc[half:]).coalesce(1).write.mode("overwrite").parquet(src + "/b")
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src + "/a").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    out = streaming_ema(stream, fast_span=12, slow_span=26)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ema_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.sql("SELECT * FROM ema_stream").toPandas().sort_values(["entity", "ts"])
-    assert len(got) == len(pdf)
-    for e, g in pdf.groupby("entity"):
-        c = g.sort_values("ts")["close"].reset_index(drop=True)
-        want_fast = c.ewm(span=12, adjust=False).mean().to_numpy()
-        np.testing.assert_allclose(
-            got[got.entity == e]["ema_fast"].to_numpy(), want_fast, rtol=1e-9,
-        )
 
 
 @pytest.mark.parametrize("tol_s", [None, 1200])

@@ -1,39 +1,15 @@
-"""Grid fill / ffill / bfill / cleaning (W14, P8) and lag/lead shifts
-(W1/W7) vs pandas oracles."""
+"""Grid fill / ffill / bfill (W14) and log return (W7) vs pandas
+oracles."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from quant_feature_pipeline_spark.operators.fill import bfill, clean_numeric, ffill, grid_fill
-from quant_feature_pipeline_spark.operators.shift import (
-    lag_momentum,
-    lead_shift,
-    log_return,
-    sliding_momentum,
-)
+from quant_feature_pipeline_spark.operators.fill import bfill, ffill
+from quant_feature_pipeline_spark.operators.shift import log_return
 
 from .conftest import assert_frame_close, make_bars_pdf
-
-
-def test_grid_fill_reference_rules(spark):
-    pdf = make_bars_pdf(n=200, gap_every=7)
-    got = grid_fill(spark.createDataFrame(pdf), "1m").toPandas()
-    out = []
-    for e, g in pdf.groupby("entity"):
-        g = g.set_index("ts").sort_index()
-        full = pd.date_range(g.index.min(), g.index.max(), freq="1min")
-        r = g.reindex(full)
-        r["close"] = r["close"].ffill()
-        for c in ("open", "high", "low"):
-            r[c] = r[c].fillna(r["close"])
-        r["volume"] = r["volume"].fillna(0.0)
-        r["entity"] = e
-        r.index.name = "ts"
-        out.append(r.reset_index())
-    want = pd.concat(out, ignore_index=True)[got.columns]
-    assert_frame_close(got, want, keys=["entity", "ts"])
 
 
 def test_ffill_bfill(spark):
@@ -55,55 +31,14 @@ def test_ffill_bfill(spark):
     assert_frame_close(got_b, pd.concat(out_b)[got_b.columns], keys=["entity", "ts"])
 
 
-def test_clean_numeric(spark):
-    pdf = make_bars_pdf(n=60, entities=("A",))
-    pdf.loc[5, "close"] = np.inf
-    pdf.loc[6, "close"] = np.nan
-    pdf.loc[0, "volume"] = -np.inf
-    got = clean_numeric(spark.createDataFrame(pdf), ["close", "volume"]).toPandas().sort_values("ts")
-    assert np.isfinite(got["close"]).all() and np.isfinite(got["volume"]).all()
-    # inf at row 5 ffilled from row 4; leading inf in volume -> 0
-    assert got["close"].iloc[5] == pdf["close"].iloc[4]
-    assert got["close"].iloc[6] == pdf["close"].iloc[4]
-    assert got["volume"].iloc[0] == 0.0
-
-
 def test_lag_momentum_and_log_return(spark):
     pdf = make_bars_pdf(n=120)
     sdf = spark.createDataFrame(pdf)
-    got = log_return(lag_momentum(sdf, 5), src="close").toPandas()
+    got = log_return(sdf, src="close").toPandas()
     out = []
     for e, g in pdf.groupby("entity"):
         g = g.sort_values("ts").copy()
-        g["mom"] = (g["close"] / g["close"].shift(5) - 1.0).fillna(0.0)
         g["ret_log"] = np.log(g["close"] / g["close"].shift(1)).fillna(0.0)
-        out.append(g)
-    assert_frame_close(got, pd.concat(out)[got.columns], keys=["entity", "ts"])
-
-
-def test_sliding_momentum_multi_tf(spark):
-    pdf = make_bars_pdf(n=200)
-    got = sliding_momentum(
-        spark.createDataFrame(pdf),
-        tf_periods={"15m": 3, "30m": 2},
-        base_steps={"15m": 15, "30m": 30},
-    ).toPandas()
-    out = []
-    for e, g in pdf.groupby("entity"):
-        g = g.sort_values("ts").copy()
-        g["15m_mom3"] = (g["close"] / g["close"].shift(45) - 1.0).fillna(0.0)
-        g["30m_mom2"] = (g["close"] / g["close"].shift(60) - 1.0).fillna(0.0)
-        out.append(g)
-    assert_frame_close(got, pd.concat(out)[got.columns], keys=["entity", "ts"])
-
-
-def test_lead_shift(spark):
-    pdf = make_bars_pdf(n=50)
-    got = lead_shift(spark.createDataFrame(pdf), ["close"], 2).toPandas()
-    out = []
-    for e, g in pdf.groupby("entity"):
-        g = g.sort_values("ts").copy()
-        g["close_lead2"] = g["close"].shift(-2)
         out.append(g)
     assert_frame_close(got, pd.concat(out)[got.columns], keys=["entity", "ts"])
 

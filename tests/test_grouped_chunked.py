@@ -119,8 +119,9 @@ def test_rank_window_larger_than_warmup_exact_under_auto_chunking(spark):
     from quant_feature_pipeline_spark.functions.rank import (
         _rank_kernel,
         rolling_percentile_rank,
-        rolling_rank_series,
     )
+
+    from .oracles import rolling_rank_series
 
     pdf = make_bars_pdf(n=4_000, entities=("HUGE", "T"))
     pdf = pdf[(pdf.entity == "HUGE") | (pdf.index % 37 == 0)].reset_index(drop=True)
@@ -249,13 +250,10 @@ def test_auto_local_chunking_rejects_row_dropping_kernel(spark):
             out.collect()
 
 
-def test_asof_auto_routes_hot_entity(spark):
-    """asof_join(strategy='auto'): hot entities route through the
-    bucketed path, cold through union_ffill — results identical to the
-    plain union_ffill join (both branches are exact)."""
+def _skewed_asof_pair(spark):
+    """Left: HOT 5,000 rows, C1 300, C2 7 (11 s apart); right: 20 rows
+    per entity, 5 min apart."""
     import datetime
-
-    from quant_feature_pipeline_spark.operators.asof import asof_join
 
     t0 = datetime.datetime(2024, 1, 1)
     rows = []
@@ -273,6 +271,16 @@ def test_asof_auto_routes_hot_entity(spark):
     right = spark.createDataFrame(
         pd.DataFrame(rrows, columns=["entity", "ts", "rval"])
     )
+    return left, right
+
+
+def test_asof_auto_routes_hot_entity(spark):
+    """asof_join(strategy='auto'): hot entities route through the
+    bucketed path, cold through union_ffill — results identical to the
+    plain union_ffill join (both branches are exact)."""
+    from quant_feature_pipeline_spark.operators.asof import asof_join
+
+    left, right = _skewed_asof_pair(spark)
     for direction, tol in (
         ("backward", None), ("forward", None), ("nearest", None), ("backward", 400)
     ):
@@ -298,26 +306,9 @@ def test_asof_auto_sampled_hot_detection(spark):
     detected (expected sample count 50 >> threshold 10) and at one where
     nothing can be (threshold above the whole sampled row count), so
     both routing outcomes are covered."""
-    import datetime
-
     from quant_feature_pipeline_spark.operators.asof import asof_join
 
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    for e, n in (("HOT", 5_000), ("C1", 300), ("C2", 7)):
-        for k in range(n):
-            rows.append((e, t0 + datetime.timedelta(seconds=11 * k), float(k)))
-    left = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["entity", "ts", "lval"])
-    )
-    rrows = [
-        (e, t0 + datetime.timedelta(minutes=5 * k), float(100 + k))
-        for e in ("HOT", "C1", "C2")
-        for k in range(20)
-    ]
-    right = spark.createDataFrame(
-        pd.DataFrame(rrows, columns=["entity", "ts", "rval"])
-    )
+    left, right = _skewed_asof_pair(spark)
     want = _key(asof_join(left, right, strategy="union_ffill").toPandas())
     for hot_rows in (1_000, 10_000_000):  # detected / undetectable
         got = _key(
@@ -327,6 +318,31 @@ def test_asof_auto_sampled_hot_detection(spark):
             ).toPandas()
         )
         assert got.equals(want), hot_rows
+
+def test_asof_auto_hot_list_past_cap_stays_exact(spark, monkeypatch):
+    """The detected hot list is capped; hot entities past the cap take
+    the cold union_ffill branch. Both routers split on one literal isin
+    over the capped list, and the result is still the exact join."""
+    from quant_feature_pipeline_spark.operators import asof as asof_mod
+
+    left, right = _skewed_asof_pair(spark)
+    monkeypatch.setattr(asof_mod, "_HOT_ISIN_MAX", 1)
+    # HOT (5,000 rows) and C1 (300) both exceed hot_rows=200
+    assert len(asof_mod._detect_hot_entities(left, "entity", 200, None)) == 1
+    want = _key(
+        asof_mod.asof_join(left, right, strategy="union_ffill").toPandas()
+    )
+    got = _key(
+        asof_mod.asof_join(left, right, strategy="auto", hot_rows=200).toPandas()
+    )
+    assert got.equals(want)
+    multi_want = _key(
+        asof_mod.asof_join_multi(left, {"r_": right}, route_hot=False).toPandas()
+    )
+    multi_got = _key(
+        asof_mod.asof_join_multi(left, {"r_": right}, hot_rows=200).toPandas()
+    )
+    assert multi_got.equals(multi_want)
 
 
 def test_asof_auto_small_input_skips_detection(spark):

@@ -13,11 +13,9 @@ import pandas as pd
 
 from quant_feature_pipeline_spark.config import PipelineConfig
 from quant_feature_pipeline_spark.functions.indicators import (
-    bollinger_width,
-    realized_vol,
-    roc_momentum,
+    apply_window_indicators,
     rolling_zscore,
-    sma,
+    window_indicator_layers,
 )
 from quant_feature_pipeline_spark.functions.recurrence import (
     _rsi_events_arr,
@@ -136,19 +134,22 @@ def test_atr_first_principles(spark):
     )
 
 
+def _windows(df, **cfg):
+    """The production window-indicator layers for a PipelineConfig."""
+    return apply_window_indicators(df, *window_indicator_layers(PipelineConfig(**cfg)))
+
+
 def test_window_indicators_vs_pandas(spark):
     pdf = make_bars_pdf(n=300)
     sdf = spark.createDataFrame(pdf)
-    got = realized_vol(
-        rolling_zscore(
-            roc_momentum(
-                bollinger_width(sma(sdf, (5, 20)), 20, 2.0), 14
-            ),
-            20,
-            "close",
-            out="z20",
+    got = rolling_zscore(
+        _windows(
+            sdf, sma_windows=(5, 20), bb_window=20, bb_std=2.0,
+            mom_window=14, rv_windows=(20,),
         ),
-        (20,),
+        20,
+        "close",
+        out="z20",
     ).toPandas()
     out = []
     for e, g in pdf.groupby("entity"):
@@ -175,87 +176,40 @@ def test_rollstats_nan_does_not_poison(spark):
     """A single NaN input must behave like a missing value: later windows
     that no longer contain it are unaffected (pandas skip-NaN semantics);
     windows that do contain it use the remaining observations."""
-    import numpy as np
-    import pandas as pd
-
-    from quant_feature_pipeline_spark.functions.indicators import sma
-
-    pdf = make_bars_pdf(n=30, entities=("A",))
+    pdf = make_bars_pdf(n=40, entities=("A",))
     pdf.loc[10, "close"] = np.nan
     df = spark.createDataFrame(pdf)
     got = (
-        sma(df, (5,), src="close", by="entity", ts_col="ts")
+        _windows(df, sma_windows=(5,), bb_window=12)
         .toPandas().sort_values("ts").reset_index(drop=True)
     )
     want = pdf["close"].rolling(5, min_periods=1).mean()
     np.testing.assert_allclose(
         got["sma_5"].to_numpy(), want.to_numpy(), rtol=1e-9, equal_nan=True
     )
-
-
-def test_fused_window_layers_equal_chained_helpers(spark):
-    """r6 refactor lock: the fused window_indicator_layers expression set
-    must be BIT-identical, column by column, to the original chained
-    sma -> bollinger_width -> roc_momentum -> realized_vol helpers on
-    the same input (incl. warm-up NULL placement)."""
-    from quant_feature_pipeline_spark.functions.indicators import (
-        apply_window_indicators,
-        bollinger_width,
-        realized_vol,
-        roc_momentum,
-        sma,
-        window_indicator_layers,
+    # bb_width sums squares too: the NaN must not poison Q either
+    ma = pdf["close"].rolling(12, min_periods=10).mean()
+    sd = pdf["close"].rolling(12, min_periods=10).std()
+    np.testing.assert_allclose(
+        got["bb_width"].to_numpy(), (2 * 2.0 * sd / ma).to_numpy(),
+        rtol=1e-9, equal_nan=True,
     )
-
-    cfg = CFG
-    pdf = make_bars_pdf(n=600, entities=("A", "B", "C"), seed=9)
-    df = spark.createDataFrame(pdf)
-
-    chained = sma(df, cfg.sma_windows)
-    chained = bollinger_width(chained, cfg.bb_window, cfg.bb_std)
-    chained = roc_momentum(chained, cfg.mom_window)
-    chained = realized_vol(chained, cfg.rv_windows)
-
-    layers, final, drop = window_indicator_layers(cfg)
-    fused = apply_window_indicators(df, layers, final, drop)
-
-    assert list(fused.columns) == list(chained.columns)
-    key = ["entity", "ts"]
-    a = chained.toPandas().sort_values(key).reset_index(drop=True)
-    b = fused.toPandas().sort_values(key).reset_index(drop=True)
-    for c in a.columns:
-        ga, gb = a[c].to_numpy(), b[c].to_numpy()
-        if ga.dtype.kind == "f":
-            assert np.array_equal(ga, gb, equal_nan=True), c
-        else:
-            assert (ga == gb).all(), c
 
 
 def test_indicator_table_stage_reorder_equivalence(spark):
     """r6 reorder lock: indicator_table (windows FIRST, recurrence Arrow
     stage LAST) must produce value-identical columns to the original
-    order (recurrence first, chained window helpers after) — only the
-    column ORDER may differ."""
-    from quant_feature_pipeline_spark.functions.indicators import (
-        bollinger_width,
-        realized_vol,
-        roc_momentum,
-        sma,
-    )
-    from quant_feature_pipeline_spark.functions.recurrence import (
-        compute_recurrence_indicators,
-    )
+    order (recurrence first, window layers after) — only the column
+    ORDER may differ."""
     from quant_feature_pipeline_spark.plans.pipeline import indicator_table
 
     cfg = CFG
     pdf = make_bars_pdf(n=500, entities=("A", "B"), seed=11)
     df = spark.createDataFrame(pdf)
 
-    old = compute_recurrence_indicators(df, cfg)
-    old = sma(old, cfg.sma_windows)
-    old = bollinger_width(old, cfg.bb_window, cfg.bb_std)
-    old = roc_momentum(old, cfg.mom_window)
-    old = realized_vol(old, cfg.rv_windows)
+    old = apply_window_indicators(
+        compute_recurrence_indicators(df, cfg), *window_indicator_layers(cfg)
+    )
 
     new = indicator_table(df, cfg)
     assert sorted(new.columns) == sorted(old.columns)

@@ -6,12 +6,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from quant_feature_pipeline_spark.functions.rank import (
-    fused_rank,
-    rolling_percentile_rank,
-)
+from quant_feature_pipeline_spark.functions.rank import rolling_percentile_rank
 
 from .conftest import assert_frame_close, make_bars_pdf
+from .oracles import rolling_rank_series
 
 
 def _naive_rank(x: np.ndarray, window: int, min_periods: int) -> np.ndarray:
@@ -40,8 +38,6 @@ def test_rolling_rank_vs_naive(spark):
 
 
 def test_rank_with_duplicates():
-    from quant_feature_pipeline_spark.functions.rank import rolling_rank_series
-
     s = pd.Series([1.0, 1.0, 1.0, 2.0, 0.5])
     r = rolling_rank_series(s, window=3, min_periods=2)
     assert np.isnan(r.iloc[0])
@@ -50,16 +46,3 @@ def test_rank_with_duplicates():
     assert abs(r.iloc[3] - (2 + 0.5) / 3) < 1e-12  # less=2, equal=1 (itself)
     assert abs(r.iloc[4] - 0.5 / 3) < 1e-12  # less=0, equal=1 (itself)
 
-
-def test_fused_rank_weights(spark):
-    pdf = make_bars_pdf(n=120, entities=("A",))
-    got = fused_rank(
-        spark.createDataFrame(pdf), "close", fast_window=10, slow_window=40,
-        fast_weight=0.6, out="fr",
-    ).toPandas().sort_values("ts")
-    g = pdf.sort_values("ts")
-    fr = _naive_rank(g["close"].to_numpy(), 10, 5)
-    sr = _naive_rank(g["close"].to_numpy(), 40, 20)
-    np.testing.assert_allclose(
-        got["fr"].to_numpy(), 0.6 * fr + 0.4 * sr, rtol=1e-12, equal_nan=True
-    )

@@ -174,3 +174,31 @@ def test_job_incremental_resume_matches_full(spark, tmp_path):
             )
         else:
             assert got[c].equals(want[c]), c
+
+
+def test_job_failed_publish_removes_staging(spark, tmp_path, monkeypatch):
+    """An incremental build whose snapshot publish raises: the error
+    propagates, the ``_staging-*`` copy is removed, and the previous
+    snapshot still reads its rows."""
+    from quant_feature_pipeline_spark.jobs import build_features
+    from quant_feature_pipeline_spark.plans.checkpoint import Checkpointer
+
+    full_pdf = make_bars_pdf(n=240, entities=("A", "B"), freq_s=180)
+    hist = full_pdf[full_pdf.ts <= full_pdf["ts"].iloc[159]]
+    hist_path, full_path = tmp_path / "hist.parquet", tmp_path / "full.parquet"
+    hist.to_parquet(hist_path, coerce_timestamps="us")
+    full_pdf.to_parquet(full_path, coerce_timestamps="us")
+
+    m1 = build_features(spark, _job_args(tmp_path, hist_path, mode="auto"))
+    assert m1["mode"] == "full"
+
+    def failing_write(self, *a, **k):
+        raise RuntimeError("publish failed")
+
+    monkeypatch.setattr(Checkpointer, "write", failing_write)
+    with pytest.raises(RuntimeError, match="publish failed"):
+        build_features(spark, _job_args(tmp_path, full_path, mode="auto"))
+    ck_root = tmp_path / "ck"
+    assert not [p.name for p in ck_root.iterdir() if p.name.startswith("_staging-")]
+    snap = pd.read_parquet(ck_root / "features")
+    assert len(snap) == m1["rows_published"] == len(hist)

@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from quant_feature_pipeline_spark.operators.dedup import dedup_exact, dup_groups
+from quant_feature_pipeline_spark.operators.dedup import dedup_exact
 from quant_feature_pipeline_spark.textops.dedup import (
     minhash_lsh_dup_pairs,
     ngram_jaccard_pairs,
@@ -42,8 +42,6 @@ def test_dedup_exact(spark):
     kept = dedup_exact(docs, order_col="doc_id").toPandas()
     assert 1 not in kept["doc_id"].tolist()
     assert 0 in kept["doc_id"].tolist()
-    groups = dup_groups(docs).toPandas()
-    assert groups["n_dups"].max() == 2 and len(groups) == 6
 
 
 def test_minhash_lsh_finds_near_dups(spark):
