@@ -511,7 +511,7 @@ def _csv_scan_oracle_sql() -> str:
 
 def q_embed_near_dup(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    out = embedding_near_dup_pairs(emb, cosine_threshold=0.4, exact=True)
+    out = embedding_near_dup_pairs(emb, cosine_threshold=0.4)
     return out.select("id_a", "id_b", F.round("cosine", R6).alias("cosine"))
 
 

@@ -236,16 +236,14 @@ def grouped_apply_chunked(
     new_cols: list[str],
     chunk_rows: int = 262_144,
     warmup_rows: int = 4_096,
-    lookback_rows: int | None = None,
 ) -> DataFrame:
     """grouped_apply for HUGE entities: no task ever buffers a whole
     entity history in pandas.
 
-    ``lookback_rows``: the kernel's exact finite history requirement —
-    the effective warm-up becomes ``max(warmup_rows, lookback_rows)``
-    and the call FAILS LOUDLY when chunk_rows cannot cover it (warm rows
-    replicate only from the immediately preceding chunk), instead of
-    silently corrupting boundary rows (ADVICE r4).
+    ``warmup_rows`` must cover the kernel's exact finite history (e.g. a
+    rolling-rank window); the call FAILS LOUDLY when chunk_rows cannot
+    cover it (warm rows replicate only from the immediately preceding
+    chunk), instead of silently corrupting boundary rows (ADVICE r4).
 
     Each entity's ts-ordered rows are split into ``chunk_rows`` chunks;
     the last ``warmup_rows`` rows of every chunk are REPLICATED into the
@@ -272,11 +270,10 @@ def grouped_apply_chunked(
     will re-exchange — use plain grouped_apply when entities fit in
     memory.
     """
-    warmup_rows = max(warmup_rows, lookback_rows or 0)
     if warmup_rows > chunk_rows:
         raise ValueError(
-            f"effective warm-up ({warmup_rows} rows, incl. lookback_rows="
-            f"{lookback_rows}) must be <= chunk_rows ({chunk_rows}): warm rows "
+            f"warm-up ({warmup_rows} rows) must be <= chunk_rows "
+            f"({chunk_rows}): warm rows "
             "replicate only from the immediately preceding chunk — raise "
             "chunk_rows to at least the kernel's lookback"
         )

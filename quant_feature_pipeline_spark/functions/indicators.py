@@ -51,9 +51,8 @@ def rolling_zscore(
     by: str = "entity",
     ts_col: str = "ts",
     out: str | None = None,
-    eps: float = 1e-6,
 ) -> DataFrame:
-    """z=(x-μ)/max(σ,eps); population σ like the reference
+    """z=(x-μ)/max(σ,1e-6); population σ like the reference
     (`step5_featueres_unified.py:157-196`).
 
     Uses the exact sliding frame, not the prefix-sum trick: z divides by
@@ -66,7 +65,7 @@ def rolling_zscore(
     mu = F.avg(src).over(w)
     sigma = F.stddev_pop(src).over(w)
     return df.withColumn(
-        out or f"{src}_z{n}", (F.col(src) - mu) / F.greatest(sigma, F.lit(eps))
+        out or f"{src}_z{n}", (F.col(src) - mu) / F.greatest(sigma, F.lit(1e-6))
     )
 
 

@@ -49,10 +49,6 @@ def _rank_kernel(x: np.ndarray, window: int, min_periods: int) -> np.ndarray:
     return np.clip(out, 0.01, 0.99, out=out)
 
 
-def _min_periods(window: int, min_periods: int | None = None) -> int:
-    return min_periods if min_periods is not None else max(2, window // 2)
-
-
 def rolling_percentile_rank(
     df: DataFrame,
     src: str,
@@ -60,10 +56,11 @@ def rolling_percentile_rank(
     by: str = "entity",
     ts_col: str = "ts",
     out: str | None = None,
-    min_periods: int | None = None,
 ) -> DataFrame:
+    """Mid-rank of ``src`` over the trailing ``window`` rows per entity;
+    NaN until ``max(2, window // 2)`` values are in the window."""
     out_name = out or f"{src}_rank{window}"
-    mp = _min_periods(window, min_periods)
+    mp = max(2, window // 2)
     # lookback_rows: rank is a HARD window — auto-chunking must replay
     # >= window-1 rows or boundary rows silently corrupt (ADVICE r4)
     return grouped_apply(

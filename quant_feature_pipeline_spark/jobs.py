@@ -85,7 +85,7 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
     )
     ck = Checkpointer(args.checkpoint_root, spark)
     bars = spark.read.parquet(args.input)
-    if getattr(args, "input_kind", "bars") == "tokens":
+    if args.input_kind == "tokens":
         from .sources.bars import bars_from_tokens
 
         # decode the pre-tokenized sequence table onto the bar shape;

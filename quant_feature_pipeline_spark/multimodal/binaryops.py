@@ -5,7 +5,7 @@ The Spark-side plumbing (schemas, Arrow batch shape, partitioning) is
 real and tested; the actual pixel/sample decode is STUBBED because this
 container has no image/audio libraries — ``decode_image_features`` uses
 a clearly-marked deterministic fake (byte-level stats standing in for
-pixel stats) and raises ``NotImplementedError`` when ``real=True``.
+pixel stats) where a real decoder would plug in.
 
 Design for 100 TB: binaries never shuffle — metadata extraction and
 feature UDFs are map-only (``mapInPandas``); anything that needs a
@@ -37,12 +37,12 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
-def synth_media_table(spark: SparkSession, n: int = 256, seed: int = 42) -> DataFrame:
+def synth_media_table(spark: SparkSession, n: int = 256) -> DataFrame:
     """Deterministic fake media rows (payload = seeded digest bytes) for
     exercising the plumbing.
 
     Every column is reproducible OUTSIDE Spark with hashlib + integer
-    arithmetic (payload = UTF-8 bytes of sha512-hex of f"{seed}{id}";
+    arithmetic (payload = UTF-8 bytes of sha512-hex of f"42{id}";
     width/height/duration are modular-arithmetic of id), so an
     independent Python oracle can assert the whole media pipeline
     byte-for-byte — see ``__spark_entry__._media_expected_rows``.
@@ -53,7 +53,7 @@ def synth_media_table(spark: SparkSession, n: int = 256, seed: int = 42) -> Data
             F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
             (F.pmod(F.col("id"), F.lit(3)) + 1).cast("int"),
         ).alias("kind"),
-        F.sha2(F.concat(F.lit(seed), F.col("id").cast("string")), 512)
+        F.sha2(F.concat(F.lit(42), F.col("id").cast("string")), 512)
         .cast("binary")
         .alias("payload"),
         F.lit("application/octet-stream").alias("mime"),
@@ -82,19 +82,14 @@ _FEAT_SCHEMA = T.StructType(
 )
 
 
-def decode_image_features(df: DataFrame, real: bool = False) -> DataFrame:
+def decode_image_features(df: DataFrame) -> DataFrame:
     """Feature extraction as mapInPandas over Arrow batches.
 
-    real=True is the stub boundary: plug in PIL/libvips here on a real
-    cluster. The fake path computes deterministic byte-level stats so
+    ``extract`` is the stub boundary: plug in PIL/libvips there on a
+    real cluster. The fake computes deterministic byte-level stats so
     the full plumbing (batching, schema, partition parallelism) is
     exercised and testable.
     """
-    if real:
-        raise NotImplementedError(
-            "image decode requires PIL/libvips, not present in this container; "
-            "the Arrow/mapInPandas plumbing below is the integration point"
-        )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -114,9 +109,7 @@ def decode_image_features(df: DataFrame, real: bool = False) -> DataFrame:
     return df.select("media_id", "payload").mapInPandas(extract, schema=_FEAT_SCHEMA)
 
 
-def resize_plan(
-    df: DataFrame, target_w: int, target_h: int, real: bool = False
-) -> DataFrame:
+def resize_plan(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Aspect-preserving image-resize *plan* (JVM-side, map-only).
 
     Computes each image's output dimensions with integer-rational
@@ -127,16 +120,11 @@ def resize_plan(
     outside Spark (the media oracle re-derives it with hashlib + // in
     Python). The actual pixel resample is the stub boundary: plug
     PIL/libvips into a mapInPandas over (payload, resized_w, resized_h)
-    on a real cluster; ``real=True`` raises at the integration point.
+    on a real cluster.
 
     Non-image rows get resized dims 0 and an empty fingerprint (typed,
     non-null — hash-stable across engines).
     """
-    if real:
-        raise NotImplementedError(
-            "pixel resize requires PIL/libvips, not present in this container; "
-            "map a decode+resize mapInPandas over (payload, resized_w, resized_h)"
-        )
     w, h = F.col("width"), F.col("height")
     width_limited = (w * target_h) >= (h * target_w)
     rdiv = lambda num, den: F.floor((num + F.floor(den / 2)) / den).cast("int")  # noqa: E731
@@ -159,15 +147,13 @@ def resize_plan(
     )
 
 
-def frame_sample_plan(
-    df: DataFrame, every_ms: int = 1000, max_frames: int = 32
-) -> DataFrame:
+def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling *plan*: explode (media_id, frame_ts_ms) rows
-    JVM-side from duration metadata; the decode of each frame is the
-    stubbed boundary. This is how sampling parallelizes at scale: the
+    JVM-side from duration metadata, at most 32 frames per video; the
+    decode of each frame is the stubbed boundary. This is how sampling parallelizes at scale: the
     plan is rows, the heavy decode is a map-only UDF over them."""
     n_frames = F.least(
-        (F.col("duration_ms") / every_ms).cast("int") + 1, F.lit(max_frames)
+        (F.col("duration_ms") / every_ms).cast("int") + 1, F.lit(32)
     )
     return df.filter(F.col("kind") == "video").select(
         "media_id",

@@ -106,18 +106,18 @@ def asof_join(
     tolerance_s: float | None = None,
     right_prefix: str = "",
     strategy: str = "auto",
-    **strategy_kwargs: object,
+    bucket_s: int = 3600,
 ) -> DataFrame:
     """Dispatching front-end; see module docstring for the strategies.
 
     ``strategy="auto"`` (the DEFAULT since r5 — VERDICT r4: the skew-
     aware path used to be opt-in, so the default entry point kept the
     single-task hot-entity sort) routes hot entities (left row count
-    above a threshold) through the range-bucketed implementation and the
-    rest through union_ffill — see asof_join_hot_routed. Extra keyword
-    arguments (``bucket_s``, ``hot_rows``) pass through to the chosen
-    implementation. Pass ``strategy="union_ffill"`` to skip the routing
-    scans when the caller knows no entity is hot."""
+    above ``_HOT_ROWS``) through the range-bucketed implementation and
+    the rest through union_ffill — see asof_join_hot_routed.
+    ``bucket_s`` is the bucketed implementation's time-bucket width.
+    Pass ``strategy="union_ffill"`` to skip the routing scans when the
+    caller knows no entity is hot."""
     for k in (by, on):
         lt, rt = left.schema[k].dataType, right.schema[k].dataType
         if lt != rt:
@@ -128,25 +128,19 @@ def asof_join(
                 f"asof_join key {k!r} type mismatch: left {lt.simpleString()} "
                 f"vs right {rt.simpleString()} — cast one side explicitly"
             )
-    impls = {
-        "union_ffill": asof_join_union_ffill,
-        "bucketed": asof_join_bucketed,
-        "auto": asof_join_hot_routed,
-    }
-    if strategy not in impls:
-        raise ValueError(
-            f"strategy must be one of {', '.join(impls)}, got {strategy!r}"
-        )
-    return impls[strategy](
-        left,
-        right,
-        on=on,
-        by=by,
-        direction=direction,
+    kw = dict(
+        on=on, by=by, direction=direction,
         allow_exact_matches=allow_exact_matches,
-        tolerance_s=tolerance_s,
-        right_prefix=right_prefix,
-        **strategy_kwargs,
+        tolerance_s=tolerance_s, right_prefix=right_prefix,
+    )
+    if strategy == "union_ffill":
+        return asof_join_union_ffill(left, right, **kw)
+    if strategy == "bucketed":
+        return asof_join_bucketed(left, right, bucket_s=bucket_s, **kw)
+    if strategy == "auto":
+        return asof_join_hot_routed(left, right, bucket_s=bucket_s, **kw)
+    raise ValueError(
+        f"strategy must be one of union_ffill, bucketed, auto, got {strategy!r}"
     )
 
 
@@ -159,7 +153,6 @@ def asof_join_union_ffill(
     allow_exact_matches: bool = True,
     tolerance_s: float | None = None,
     right_prefix: str = "",
-    **_: object,
 ) -> DataFrame:
     if direction == "nearest":
         return _asof_nearest_union(
@@ -237,7 +230,6 @@ def asof_join_bucketed(
     tolerance_s: float | None = None,
     right_prefix: str = "",
     bucket_s: int = 3600,
-    **_: object,
 ) -> DataFrame:
     """Range-partitioned as-of join (pure Catalyst), all three directions.
 
@@ -376,14 +368,15 @@ def asof_join_bucketed(
 # cap on the detected hot-entity list: both routers split on a literal
 # isin over it, and hot entities past the cap stay on the cold path
 _HOT_ISIN_MAX = 10_000
+# left rows above which an entity is hot: asof_join_hot_routed replaces
+# a WIDE window sort, so bucketing pays early; asof_join_multi's fused
+# sort moves ~60-byte rows and stays faster in one task up to the point
+# where a task's sort buffer reaches ~4 GB (see asof_join_multi)
+_HOT_ROWS = 4_000_000
+_HOT_ROWS_MULTI = 64_000_000
 
 
-def _detect_hot_entities(
-    left: DataFrame,
-    by: str,
-    hot_rows: int,
-    hot_detect_sample: float | None,
-) -> list:
+def _detect_hot_entities(left: DataFrame, by: str, hot_rows: int) -> list:
     """Bounded hot-entity list for skew routing (shared by
     asof_join_hot_routed and asof_join_multi).
 
@@ -392,9 +385,8 @@ def _detect_hot_entities(
     — the sf0.1 events scan estimates ~10 bytes/row), so an estimate
     below ``hot_rows`` bytes proves no entity can hold ``hot_rows`` rows
     and the empty list returns with ZERO jobs. Otherwise one count
-    aggregate (optionally over a ``hot_detect_sample`` Bernoulli sample,
-    threshold scaled accordingly) collects the by-construction-bounded
-    list (< total_rows / hot_rows entries), capped at ``_HOT_ISIN_MAX``
+    aggregate collects the by-construction-bounded list (< total_rows /
+    hot_rows entries), capped at ``_HOT_ISIN_MAX``
     names so the callers' literal ``isin`` stays small; hot entities past
     the cap take the exact cold path (routing is performance-only, so
     the cap never changes a result row). Nones are dropped so callers
@@ -408,17 +400,10 @@ def _detect_hot_entities(
         est_bytes = None
     if est_bytes is not None and est_bytes < hot_rows:
         return []
-    counted = (
-        left if hot_detect_sample is None
-        else left.sample(fraction=float(hot_detect_sample), seed=7)
-    )
-    threshold = float(hot_rows) * (
-        1.0 if hot_detect_sample is None else float(hot_detect_sample)
-    )
     hot = (
-        counted.groupBy(by)
+        left.groupBy(by)
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > threshold)
+        .filter(F.col("_n") > float(hot_rows))
         .select(by)
     )
     hot_list = [r[0] for r in hot.limit(_HOT_ISIN_MAX).collect()]
@@ -434,22 +419,19 @@ def asof_join_hot_routed(
     allow_exact_matches: bool = True,
     tolerance_s: float | None = None,
     right_prefix: str = "",
-    hot_rows: int = 4_000_000,
     bucket_s: int = 3600,
-    hot_detect_sample: float | None = None,
-    **_: object,
 ) -> DataFrame:
     """Skew-aware dispatch (ADVICE/VERDICT r3 — choosing the bucketed
     path for a hot symbol used to be a manual call-site decision):
-    entities whose LEFT history exceeds ``hot_rows`` take
+    entities whose LEFT history exceeds ``_HOT_ROWS`` take
     ``asof_join_bucketed`` (the entity's timeline splits across time
     buckets, so one symbol holding 90% of rows is not one straggler
     sort task); everything else takes the one-window union_ffill path.
 
     Detection runs EAGERLY at call time (one small driver action): the
     hot-entity list is bounded by construction — at most
-    total_left_rows / hot_rows entities can exceed the threshold (25
-    names at 100 TB of 1k-byte rows with the 4M default), so collecting
+    total_left_rows / _HOT_ROWS entities can exceed the threshold (25
+    names at 100 TB of 1k-byte rows with the 4M threshold), so collecting
     it costs one count-aggregate job and a few strings on the driver.
     Eagerness buys the common case: with NO hot entity the call returns
     the plain one-window union_ffill plan — no anti/semi joins, no
@@ -470,20 +452,12 @@ def asof_join_hot_routed(
     should ``.persist()`` it before routing, or pick a strategy
     explicitly. The measured crossover on the skew bench (bench.py
     _skew_bench: 20M-row hot entity, generic 14.0 s vs bucketed 9.2 s)
-    sits well above the default threshold.
+    sits well above the threshold.
 
-    Scale note (100 TB): the exact per-entity count is one FULL extra
-    pass over the left table. ``hot_detect_sample=f`` (e.g. ``0.001``)
-    detects hot entities from an ``f``-fraction Bernoulli sample instead
-    — the count threshold scales to ``f * hot_rows`` (expected sample
-    count of a boundary entity; at the default 4M-row threshold and
-    f=0.001 that is 4,000 expected rows with a binomial sd of ~63, so a
-    truly hot entity is essentially never missed). Routing is
-    PERFORMANCE-ONLY — both branches compute the identical exact join,
-    so sampling error can only move a near-boundary entity between two
-    exact plans, never change a result row. The sample is seeded and the
-    detected list is materialized once before any branch is built, so
-    both branches always filter against one hot set."""
+    Routing is PERFORMANCE-ONLY — both branches compute the identical
+    exact join, and the detected list is materialized once before any
+    branch is built, so both branches always filter against one hot
+    set."""
     kw = dict(
         on=on, by=by, direction=direction,
         allow_exact_matches=allow_exact_matches,
@@ -491,7 +465,7 @@ def asof_join_hot_routed(
     )
     # detection via _detect_hot_entities: free size-estimate skip on
     # small inputs (VERDICT r5 item 3), one bounded count otherwise
-    hot_list = _detect_hot_entities(left, by, hot_rows, hot_detect_sample)
+    hot_list = _detect_hot_entities(left, by, _HOT_ROWS)
     if not hot_list:  # the common case: the r4-shaped one-window plan
         return asof_join_union_ffill(left, right, **kw)
     # null-key rows route to the cold branch explicitly (ADVICE r5)
@@ -590,9 +564,7 @@ def asof_join_multi(
     tolerance_s: float | None = None,
     axis_tables: dict[str, DataFrame] | None = None,
     route_hot: bool = True,
-    hot_rows: int = 64_000_000,
     bucket_s: int = 3600,
-    hot_detect_sample: float | None = None,
 ) -> DataFrame:
     """Backward as-of join of MANY right tables onto one left axis with
     ONE narrow sort — the fused, scale-tuned form of the reference's
@@ -639,10 +611,9 @@ def asof_join_multi(
     each entity's narrow rows in ONE task, so a single entity holding
     most of the left would serialize the merge. ``route_hot`` applies
     the same discipline as asof_join_hot_routed: skipped for free when
-    the optimizer's size estimate proves left < ``hot_rows`` bytes
-    (every gate-scale call), otherwise entities whose left row count
-    exceeds ``hot_rows`` (optionally detected from a
-    ``hot_detect_sample`` Bernoulli sample) route through iterated
+    the optimizer's size estimate proves left < ``_HOT_ROWS_MULTI``
+    bytes (every gate-scale call), otherwise entities whose left row
+    count exceeds ``_HOT_ROWS_MULTI`` route through iterated
     range-bucketed two-table joins — partition-parallel inside the
     entity — while cold entities keep the fused one-sort plan; the two
     results union. Both branches are exact, so routing is
@@ -652,15 +623,15 @@ def asof_join_multi(
     union rows are NARROW (~60 bytes), so a 20M-row hot entity still
     sorts faster in one task than the iterated bucketed alternative
     (25.6 s vs 39.4 s at 23.1M rows, 87% hot, 2 rights — checksums
-    equal). The default ``hot_rows`` therefore sits at 64M rows — the
+    equal). ``_HOT_ROWS_MULTI`` therefore sits at 64M rows — the
     point where ONE task's sort buffer reaches ~4 GB and the concern
     stops being wall-clock and becomes task memory — far above the
-    two-table router's 4M default, whose hot branch replaces a WIDE
-    window sort where bucketing pays much earlier.
+    two-table router's 4M ``_HOT_ROWS``, whose hot branch replaces a
+    WIDE window sort where bucketing pays much earlier.
     """
     lcols = [c for c in left.columns if c not in (by, on)]
     if route_hot:
-        hot_list = _detect_hot_entities(left, by, hot_rows, hot_detect_sample)
+        hot_list = _detect_hot_entities(left, by, _HOT_ROWS_MULTI)
         if hot_list:
             blocks_h = {
                 p: [c for c in r.columns if c not in (by, on)]

@@ -20,10 +20,9 @@ def dedup_exact(
     df: DataFrame,
     content_col: str = "text",
     order_col: str = "doc_id",
-    hash_fn: str = "md5",
 ) -> DataFrame:
-    """Keep the first row (min order_col) per exact content match."""
-    h = {"md5": F.md5, "sha1": F.sha1}[hash_fn](F.col(content_col).cast("binary"))
+    """Keep the first row (min order_col) per exact content match (md5)."""
+    h = F.md5(F.col(content_col).cast("binary"))
     w = Window.partitionBy("_h").orderBy(F.col(order_col).asc())
     return (
         df.withColumn("_h", h)

@@ -8,6 +8,7 @@ bug (closed='right' puts the bar stamped T INTO the bar labeled T,
 `step2_resample.py:237-239`); the *correct* leakage-free semantics is the
 half-open bucket ``[T-p, T)`` labeled T. We default to the correct form
 and expose ``closed="right"`` as an explicit reference-compat mode.
+Incomplete buckets are kept; their ``bar_count`` tells them apart.
 
 Spark-first: ``groupBy(entity, window(ts, tf))`` with
 ``min_by/max_by`` picking open/close by timestamp — one shuffle on
@@ -31,17 +32,13 @@ def resample_ohlcv(
     by: str = "entity",
     ts_col: str = "ts",
     closed: str = "left",
-    label: str = "right",
-    drop_incomplete: bool = False,
-    expected_rows: int | None = None,
 ) -> DataFrame:
-    """Tumbling OHLCV aggregation onto timeframe ``tf``.
+    """Tumbling OHLCV aggregation onto timeframe ``tf``; every bucket is
+    labelled with its end and kept, with its row count in ``bar_count``.
 
-    closed="left"  -> bucket [start, end), label end   (leakage-free default)
-    closed="right" -> bucket (start, end], label end   (reference-compat,
+    closed="left"  -> bucket [start, end)   (leakage-free default)
+    closed="right" -> bucket (start, end]   (reference-compat,
                       `/root/reference/step2_resample.py:229` label/closed='right')
-    ``drop_incomplete`` drops buckets with fewer than ``expected_rows``
-    rows (reference `dropna()` effect on a regular 1m grid).
     """
     ts = F.col(ts_col)
     if closed == "right":
@@ -62,10 +59,9 @@ def resample_ohlcv(
             F.count(F.lit(1)).alias("bar_count"),
         )
     )
-    label_col = F.col("w.end") if label == "right" else F.col("w.start")
-    out = agg.select(
+    return agg.select(
         F.col(by),
-        label_col.alias(ts_col),
+        F.col("w.end").alias(ts_col),
         "open",
         "high",
         "low",
@@ -73,9 +69,6 @@ def resample_ohlcv(
         "volume",
         "bar_count",
     )
-    if drop_incomplete and expected_rows:
-        out = out.filter(F.col("bar_count") >= expected_rows)
-    return out
 
 
 def rolling_bars(

@@ -47,7 +47,6 @@ def boundary_momentum(
     lookback: int,
     steps: int,
     method: str = "boundary",
-    anchor_steps: int = 0,
     src: str = "close",
     out: str = "bmom",
     by: str = "entity",
@@ -56,26 +55,26 @@ def boundary_momentum(
     """W2 — boundary-anchored momentum
     (`/root/reference/step5_featueres_unified.py:320-424`).
 
-    Positional semantics on the per-entity row grid (0-based rn):
-      Ls = lookback*steps; a = anchor_steps
-      point:    out[i] = c[i]/c[i-Ls] - 1                     (i >= Ls+a)
-      boundary: cur = ((i-a)//steps)*steps + a
-                out[i] = c[cur]/c[cur-Ls] - 1                 (i >= Ls+a)
+    Positional semantics on the per-entity row grid (0-based rn), with
+    buckets of ``steps`` rows anchored at row 0:
+      Ls = lookback*steps
+      point:    out[i] = c[i]/c[i-Ls] - 1                     (i >= Ls)
+      boundary: cur = (i//steps)*steps
+                out[i] = c[cur]/c[cur-Ls] - 1                 (i >= Ls)
       boundary_intra_avg:
-                num = mean(c[bucket_start..i]) (anchored bucket)
-                out[i] = num/c[i-(Ls-steps)] - 1  (i >= max(Ls, Ls-steps)+a)
+                num = mean(c[bucket_start..i])
+                out[i] = num/c[i-(Ls-steps)] - 1              (i >= Ls)
       warm-up rows -> 0 (reference ffills NaN then zero-fills).
 
-    Spark-first: cur's close is `first(src)` over the anchored-bucket
+    Spark-first: cur's close is `first(src)` over the bucket
     frame; c[cur-Ls] is `lag(bucket_start_close, Ls)` — the phase of
     i-Ls matches i, so the lagged row's bucket-start IS cur-Ls. No UDF.
     """
     Ls = lookback * steps
-    a = anchor_steps % steps
     w_ord = Window.partitionBy(by).orderBy(ts_col)
     rn = F.row_number().over(w_ord) - 1
     dfi = df.withColumn("_rn", rn).withColumn(
-        "_bucket", F.floor((F.col("_rn") - a) / steps)
+        "_bucket", F.floor(F.col("_rn") / steps)
     )
     w_bucket = (
         Window.partitionBy(by, "_bucket")
@@ -86,7 +85,7 @@ def boundary_momentum(
     if method == "point":
         prev = F.lag(src, Ls).over(w_ord2)
         raw = F.when(
-            (F.col("_rn") >= Ls + a) & prev.isNotNull() & (prev != 0),
+            (F.col("_rn") >= Ls) & prev.isNotNull() & (prev != 0),
             F.col(src) / prev - 1.0,
         )
     elif method == "boundary":
@@ -94,16 +93,15 @@ def boundary_momentum(
         dfi = dfi.withColumn("_bs", bs)
         prev = F.lag("_bs", Ls).over(w_ord2)
         raw = F.when(
-            (F.col("_rn") >= Ls + a) & prev.isNotNull() & (prev != 0),
+            (F.col("_rn") >= Ls) & prev.isNotNull() & (prev != 0),
             F.col("_bs") / prev - 1.0,
         )
     elif method == "boundary_intra_avg":
         ref_shift = max(0, Ls - steps)
         num = F.avg(src).over(w_bucket)
         prev = F.lag(src, ref_shift).over(w_ord2)
-        min_start = max(Ls + a, ref_shift + a)
         raw = F.when(
-            (F.col("_rn") >= min_start) & prev.isNotNull() & (prev != 0),
+            (F.col("_rn") >= Ls) & prev.isNotNull() & (prev != 0),
             num / prev - 1.0,
         )
     else:

@@ -151,9 +151,7 @@ def run_flagship(
     cfg: PipelineConfig | None = None,
     by: str = "entity",
     ts_col: str = "ts",
-    persist_stages: bool = True,
     approx_percentiles: bool = False,
-    approx_accuracy: int = 10_000,
     stats: FlagshipStats | None = None,
     return_stats: bool = False,
 ) -> DataFrame:
@@ -162,8 +160,8 @@ def run_flagship(
     ``approx_percentiles`` swaps the two global-stats passes from exact
     ``F.percentile`` (a full sort of the stat column — required for the
     byte-exact oracle, fine at gate scale) to ``F.percentile_approx``
-    (KLL-sketch, one streaming pass, the 100 TB path). Approximate
-    quantiles move the winsor/clip bounds by O(1/accuracy) quantile
+    (KLL-sketch at accuracy 10,000, one streaming pass, the 100 TB path).
+    Approximate quantiles move the winsor/clip bounds by O(1e-4) quantile
     mass, so downstream features shift within the health-gate ranges but
     are no longer bit-comparable — keep False wherever the oracle runs
     (VERDICT r3 item 3 made this a real switch instead of a doc note).
@@ -178,7 +176,7 @@ def run_flagship(
 
     def pctl(col: str, p: float):
         if approx_percentiles:
-            return F.percentile_approx(col, F.lit(p), F.lit(approx_accuracy))
+            return F.percentile_approx(col, F.lit(p), F.lit(10_000))
         return F.percentile(col, F.lit(p))
     base_tf = cfg.resample_targets[0]
     ret_name = f"ret_{base_tf}_log"
@@ -197,7 +195,7 @@ def run_flagship(
     # repartition was measured flipping the token job's wide stages to
     # too-few partitions on a near-boundary coalesce decision)
     bars = repartition_by_size(bars, by)
-    tfs = resample_all(bars, cfg, by=by, ts_col=ts_col, persist=persist_stages)
+    tfs = resample_all(bars, cfg, by=by, ts_col=ts_col, persist=True)
     # the tf tables inherit the up-front entity hash layout (subset-key
     # distribution satisfaction leaves agg output partitioning at
     # hash(entity)), so every recurrence Arrow stage skips its own
@@ -258,11 +256,9 @@ def run_flagship(
         prep_cols[f"_vl_{tf}"] = F.greatest(F.col(f"_vs_{tf}"), F.lit(0.0))
         ax = F.coalesce(F.col(f"{tf}_atr{cfg.atr_window}_pct"), F.lit(0.0))
         prep_cols[f"_ax_{tf}"] = F.greatest(ax, F.lit(0.0))
-    df = df.withColumns(prep_cols)
-    if persist_stages:
-        # consumed by the stats pass, the rank branch, and the join-back —
-        # without persistence Catalyst recomputes the merge per consumer
-        df = df.persist()
+    # consumed by the stats pass, the rank branch, and the join-back —
+    # without persistence Catalyst recomputes the merge per consumer
+    df = df.withColumns(prep_cols).persist()
 
     # pass-1 global stats (one job, broadcast as literals): atr 2-98%
     # winsor bounds per tf + return winsorize bounds — or the persisted
@@ -334,9 +330,8 @@ def run_flagship(
             FUSE_W_FAST * F.col(f"_axrf_{tf}")
             + (1.0 - FUSE_W_FAST) * F.col(f"_axrs_{tf}")
         )
-    df = df.withColumns(fused_cols)
-    if persist_stages:
-        df = df.persist()  # rank stage feeds pass-2 stats AND the final select
+    # the rank stage feeds pass-2 stats AND the final select
+    df = df.withColumns(fused_cols).persist()
 
     # pass-2 global stats: q95 of each fused atr rank (γ solve) + std of
     # the winsorized return (population σ like np.std) — or train-time γ

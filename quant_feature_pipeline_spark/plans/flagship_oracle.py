@@ -364,12 +364,13 @@ def _q6(expr: str) -> str:
     rationals land exactly on .xxxxxx5 boundaries)."""
     return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"
 
-def flagship_oracle_sql(cfg: PipelineConfig | None = None) -> str:
+def flagship_oracle_sql() -> str:
     """The full standalone oracle statement (round-6 output columns
-    matching q_flagship_features)."""
+    matching q_flagship_features, whose config is the default one over
+    ``TFS``)."""
     from ..functions.timefeat import DAY_COS6, DAY_SIN6, HOUR_COS6, HOUR_SIN6
 
-    cfg = cfg or PipelineConfig(base_tf="3m", resample_targets=TFS)
+    cfg = PipelineConfig(base_tf="3m", resample_targets=TFS)
     eps = FL.SHRINK_EPS
     scale_bb_a = 1.0 - 2.0 * eps
 

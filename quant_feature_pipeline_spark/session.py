@@ -89,25 +89,35 @@ def build_session(app_name: str, conf: dict[str, str]) -> SparkSession:
     return spark
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 16g: a local-mode
+    driver heap is the whole engine's heap, and a fixed 16g exceeds a
+    smaller host outright."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "quant_feature_pipeline_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession.
 
     ``cpus`` controls ``local[N]`` parallelism — the bench harness runs the
     identical job at two levels (e.g. 8 and 32) to evidence scaling
-    efficiency in lieu of a real two-size cluster.
+    efficiency in lieu of a real two-size cluster. The driver heap is
+    ``SPARK_DRIVER_MEMORY`` when set, else ``_default_driver_memory()``.
     """
     n = cpus or DEFAULT_CPUS
     return build_session(app_name, {
         "spark.master": f"local[{n}]",
         # 2x overpartition: per-entity groups hash unevenly into exactly-N
         # partitions (Poisson stragglers); AQE coalesces the small ones
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or 2 * n),
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        "spark.sql.shuffle.partitions": str(2 * n),
+        "spark.driver.memory": (
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
+        ),
         "spark.ui.enabled": "false",
         **(extra_conf or {}),
     })

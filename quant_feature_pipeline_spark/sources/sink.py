@@ -1,12 +1,12 @@
 """Sinks — S6/S7 equivalents.
 
 The reference writes per-step CSV/Parquet files with tmp+rename atomicity
-(`/root/reference/tools/export_utils.py:265-290`). Here: partitioned
-parquet writes (atomic at the directory-commit level via Spark's
-FileOutputCommitter) with optional ``partitionBy`` columns, a real
-bucketed table (``write_bucketed_table``) for exchange-free re-reads,
-plus a JSON sidecar manifest carrying the schema hash (the reference's
-NPZ `schema_sha` contract, `tools/export_utils.py:47-50`).
+(`/root/reference/tools/export_utils.py:265-290`). Here: overwriting
+parquet/CSV writes (atomic at the directory-commit level via Spark's
+FileOutputCommitter), a real bucketed table (``write_bucketed_table``)
+for exchange-free re-reads, plus a JSON sidecar manifest carrying the
+schema hash (the reference's NPZ `schema_sha` contract,
+`tools/export_utils.py:47-50`).
 """
 
 from __future__ import annotations
@@ -22,12 +22,11 @@ from ..plans.schema_contract import schema_sha
 def write_table(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
-    partition_cols: tuple[str, ...] = (),
-    manifest: bool = True,
     fmt: str = "parquet",
 ) -> str:
-    """``fmt`` dispatches like the reference's ``io.output_format``
+    """Overwrite ``path`` with ``df`` plus a ``_manifest.json`` sidecar.
+
+    ``fmt`` dispatches like the reference's ``io.output_format``
     (`/root/reference/step2_resample.py:325-343`): "parquet", "csv", or
     "both" ("both" writes parquet at ``path`` and CSV beside it at
     ``path + "_csv"`` — Spark writers own their whole directory). CSV
@@ -36,26 +35,21 @@ def write_table(
     if fmt not in ("parquet", "csv", "both"):
         raise ValueError(f"fmt must be parquet/csv/both, got {fmt!r}")
 
-    def _writer():
-        w = df.write.mode(mode)
-        return w.partitionBy(*partition_cols) if partition_cols else w
-
     if fmt in ("parquet", "both"):
-        _writer().parquet(path)
+        df.write.mode("overwrite").parquet(path)
     if fmt in ("csv", "both"):
         csv_path = path if fmt == "csv" else path + "_csv"
-        _writer().option("header", True).option(
+        df.write.mode("overwrite").option("header", True).option(
             "timestampFormat", "yyyy-MM-dd HH:mm:ss"
         ).csv(csv_path)
-    if manifest:
-        meta = {
-            "columns": df.columns,
-            "schema_sha": schema_sha(df.columns),
-            "partition_cols": list(partition_cols),
-            "format": fmt,
-        }
-        with open(os.path.join(path, "_manifest.json"), "w") as fh:
-            json.dump(meta, fh, indent=2)
+    meta = {
+        "columns": df.columns,
+        "schema_sha": schema_sha(df.columns),
+        "partition_cols": [],
+        "format": fmt,
+    }
+    with open(os.path.join(path, "_manifest.json"), "w") as fh:
+        json.dump(meta, fh, indent=2)
     return path
 
 
@@ -66,9 +60,9 @@ def write_bucketed_table(
     by: str = "entity",
     sort_cols: tuple[str, ...] = ("entity", "ts"),
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> DataFrame:
-    """Write ``df`` as a REAL Spark bucketed table and return its scan.
+    """(Over)write ``df`` as a REAL Spark bucketed table and return its
+    scan.
 
     Unlike a ``partitionBy`` directory layout, ``bucketBy`` records the
     hash layout in the catalog: the returned scan reports
@@ -86,7 +80,7 @@ def write_bucketed_table(
     spark = df.sparkSession
     writer = (
         df.repartition(buckets, by)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .format("parquet")
         .bucketBy(buckets, by)
         .sortBy(*sort_cols)

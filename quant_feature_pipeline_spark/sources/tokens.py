@@ -25,33 +25,18 @@ def synth_token_table(
     n_entities: int = 4,
     minutes: int = 2000,
     seed: int = 42,
-    skew_hot_factor: int = 0,
-    max_tok: int = 64,
 ) -> DataFrame:
-    """Build the token table deterministically.
-
-    ``skew_hot_factor`` > 0 gives entity 0 that many times the rows of the
-    others (duplicate minutes with distinct doc_ids) to exercise salting /
-    AQE skew handling.
-    """
+    """Build the token table deterministically: one row per (entity,
+    minute), each with 4 to 63 tokens."""
     n_rows = n_entities * minutes
     df = spark.range(n_rows).select(
         (F.col("id") % n_entities).alias("eidx"),
         (F.col("id") / n_entities).cast("long").alias("midx"),
     )
-    if skew_hot_factor > 0:
-        hot = (
-            spark.range(minutes * (skew_hot_factor - 1))
-            .select(
-                F.lit(0).cast("long").alias("eidx"),
-                (F.col("id") % minutes).cast("long").alias("midx"),
-            )
-        )
-        df = df.unionByName(hot)
 
     # deterministic pseudo-random stream: xxhash64 of (seed, eidx, midx)
     h = F.xxhash64(F.lit(seed), F.col("eidx"), F.col("midx"))
-    n_tok = (F.pmod(h, F.lit(max_tok - 4)) + 4).cast("int")
+    n_tok = (F.pmod(h, F.lit(60)) + 4).cast("int")
     df = df.select(
         F.concat(
             F.lit("E"), F.col("eidx").cast("string"), F.lit(":"),

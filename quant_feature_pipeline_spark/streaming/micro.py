@@ -37,16 +37,15 @@ def stream_bars_from_dir(
 def streaming_resample(
     stream: DataFrame,
     tf: str,
-    watermark: str = "10 minutes",
     by: str = "entity",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Streaming tumbling OHLCV with late-data watermark; same agg dict
-    as the batch resample (A1)."""
+    """Streaming tumbling OHLCV with a 10-minute late-data watermark;
+    same agg dict as the batch resample (A1)."""
     # watermarks require TIMESTAMP_LTZ; parquet from other engines is NTZ
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark(ts_col, "10 minutes")
         .groupBy(F.col(by), F.window(F.col(ts_col), tf_interval(tf)).alias("w"))
         .agg(
             F.min_by("open", ts_col).alias("open"),
@@ -66,12 +65,14 @@ def streaming_resample(
 # (VERDICT r4 item 7). Telemetry only; never read by the queries.
 LAST_PROGRESS: dict[str, dict] = {}
 
+# wall-clock budget for one AvailableNow run of a bounded replay
+_STREAM_TIMEOUT_S = 600
+
 
 def run_stream_to_table(
     stream_df: DataFrame,
     table_name: str,
     output_mode: str = "complete",
-    timeout_s: int = 600,
 ) -> None:
     """Execute a streaming DataFrame to completion with AvailableNow into
     a memory sink (``spark.table(table_name)`` afterwards). Complete
@@ -88,7 +89,7 @@ def run_stream_to_table(
     # awaitTermination returns False on timeout with the query still
     # running — a caller reading the memory table then would see a
     # partially-filled result and silently pass it downstream. Fail loud.
-    finished = q.awaitTermination(timeout_s)
+    finished = q.awaitTermination(_STREAM_TIMEOUT_S)
     prog = [p for p in q.recentProgress if p]
     if prog:
         ops = prog[-1].get("stateOperators") or []
@@ -108,22 +109,21 @@ def run_stream_to_table(
     if not finished:
         q.stop()
         raise TimeoutError(
-            f"streaming query '{table_name}' did not finish within {timeout_s}s"
+            f"streaming query '{table_name}' did not finish within {_STREAM_TIMEOUT_S}s"
         )
 
 
 def streaming_session_counts(
     stream: DataFrame,
     gap: str = "30 minutes",
-    watermark: str = "10 minutes",
     by: str = "entity",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Gap-based session windows (the built-in streaming analog of
-    operators.sessionize)."""
+    """Gap-based session windows with a 10-minute late-data watermark
+    (the built-in streaming analog of operators.sessionize)."""
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark(ts_col, "10 minutes")
         .groupBy(F.col(by), F.session_window(F.col(ts_col), gap).alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(

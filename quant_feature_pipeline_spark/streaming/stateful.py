@@ -16,18 +16,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+# hard per-entity cap on buffered rows (held lefts + rights) after each
+# batch; see streaming_asof_buffered's state-size contract
+_MAX_HELD_ROWS = 10_000_000
+
 
 def streaming_asof_buffered(
     left_stream: DataFrame,
     right_stream: DataFrame,
     on: str = "ts",
     by: str = "entity",
-    tolerance_s: float | None = None,
     right_prefix: str = "",
     watermark: str = "10 minutes",
-    max_held_rows: int | None = 10_000_000,
-    held_rows_acc=None,
-    idle_right_ttl_s: float | None = None,
 ) -> DataFrame:
     """Watermark-buffered streaming backward as-of join — EXACT event-time
     semantics for ANY arrival order (VERDICT r3 item 2): in-order
@@ -68,25 +68,17 @@ def streaming_asof_buffered(
       held lefts drain every time the watermark advances past them, and
       the right buffer keeps only the newest at-or-below-watermark row
       plus above-watermark rows.
-    - ``max_held_rows``: HARD per-entity cap on (held lefts + buffered
-      rights) after each batch — exceeding it FAILS LOUDLY with the
-      observed counts instead of silently pickling an ever-growing
-      frame. Size it to arrival_rate x watermark with headroom.
-    - ``held_rows_acc``: optional Spark accumulator; every (entity,
-      batch) state update adds its post-batch buffered row count, so
-      acc.value / batches ~= mean buffered rows — the state-growth
-      telemetry surfaced in BENCH.md. At-least-once semantics (added in
-      a transformation), telemetry only.
+    - ``_MAX_HELD_ROWS``: HARD per-entity cap on (held lefts +
+      buffered rights) after each batch — exceeding it FAILS LOUDLY
+      with the observed counts instead of silently pickling an
+      ever-growing frame. A watermark whose arrival_rate x watermark
+      approaches it is too large.
     - Idle entities (ADVICE r4): a group holding only rights used to
       keep them forever once lefts stopped arriving (no timeout armed,
       rows above the watermark never re-pruned). Now a rights-only
       group arms an event-time timeout past its newest right, so the
       next wake re-prunes it down to the single newest candidate row —
       O(1) per idle entity, still exact for any future left.
-      ``idle_right_ttl_s`` optionally expires even that candidate after
-      the watermark passes it by the TTL (state fully removed; a left
-      arriving later than the TTL then gets a null match — an explicit
-      retention trade, off by default).
     """
     lcols = [c for c in left_stream.columns if c not in (by, on)]
     vcols = [c for c in right_stream.columns if c not in (by, on)]
@@ -119,7 +111,9 @@ def streaming_asof_buffered(
             T.StructField("rbuf", T.BinaryType(), True),
         ]
     )
-    tol = pd.Timedelta(seconds=tolerance_s) if tolerance_s is not None else None
+    # bound here, not read as a global in ``update``: the pickled closure
+    # carries the value the driver saw
+    max_held_rows = _MAX_HELD_ROWS
     out_cols = [f.name for f in out_schema.fields]
     rcols_full = [on] + [f"_r_{c}" for c in vcols]
     lcols_full = [on] + lcols
@@ -133,7 +127,7 @@ def streaming_asof_buffered(
             r[f"{right_prefix}matched_{on}"] = r[on]
             res = pd.merge_asof(
                 lefts, r, on=on, direction="backward",
-                allow_exact_matches=True, tolerance=tol,
+                allow_exact_matches=True,
             )
         else:
             res = lefts.copy()
@@ -182,25 +176,14 @@ def streaming_asof_buffered(
             older = rights[rights[on] <= wm]
             if len(older):
                 rights = rights[rights[on] >= older[on].max()]
-        if (
-            idle_right_ttl_s is not None
-            and not len(held)
-            and len(rights)
-        ):
-            # opt-in retention cut: expire candidates the watermark has
-            # passed by more than the TTL (idle entity, no lefts held)
-            cutoff = wm - pd.Timedelta(seconds=idle_right_ttl_s)
-            rights = rights[rights[on] >= cutoff]
         n_state = len(held) + len(rights)
-        if held_rows_acc is not None:
-            held_rows_acc.add(int(n_state))
-        if max_held_rows is not None and n_state > max_held_rows:
+        if n_state > max_held_rows:
             raise ValueError(
                 f"streaming_asof_buffered: entity {key[0]!r} buffers "
                 f"{n_state} rows ({len(held)} held lefts + {len(rights)} "
-                f"rights) > max_held_rows={max_held_rows}. The watermark "
+                f"rights) > _MAX_HELD_ROWS={max_held_rows}. The watermark "
                 f"({watermark!r}) is too large for this arrival rate — "
-                "shrink it or raise max_held_rows"
+                "shrink it"
             )
         if len(held) or len(rights):
             state.update(
@@ -214,14 +197,11 @@ def streaming_asof_buffered(
                 # held left (must arm strictly above the current wm)
                 t = int(held[on].min().value // 1_000_000) + 1
                 state.setTimeoutTimestamp(max(t, wm_ms + 1))
-            elif len(rights) > 1 or idle_right_ttl_s is not None:
+            elif len(rights) > 1:
                 # rights-only group (ADVICE r4): arm a wake so the
                 # buffer re-prunes as the watermark advances — down to
-                # ONE candidate row, or to zero under the TTL. A single
-                # candidate with no TTL stays without a timer (O(1)).
+                # ONE candidate row, which stays without a timer (O(1)).
                 t = int(rights[on].max().value // 1_000_000) + 1
-                if idle_right_ttl_s is not None:
-                    t += int(idle_right_ttl_s * 1000)
                 state.setTimeoutTimestamp(max(t, wm_ms + 1))
         else:
             state.remove()

@@ -13,7 +13,6 @@ from .dedup import (
 )
 from .similarity import (
     cosine_topk_bruteforce,
-    lsh_bucket_candidates,
     embedding_near_dup_pairs,
     ivf_topk,
     ivf_train,
@@ -30,7 +29,6 @@ __all__ = [
     "simhash_dup_pairs",
     "ngram_jaccard_pairs",
     "cosine_topk_bruteforce",
-    "lsh_bucket_candidates",
     "embedding_near_dup_pairs",
     "ivf_topk",
     "ivf_train",

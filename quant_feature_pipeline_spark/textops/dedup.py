@@ -13,10 +13,12 @@ shingle arrays.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,6 +32,18 @@ def shingles(text_col: str, n: int = 3, out: str = "shingles"):
     return F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
     ).alias(out)
+
+
+# word n-gram size of the MinHash shingles, and the seed of the
+# permutation parameters
+_LSH_SHINGLE_N = 3
+_MINHASH_SEED = 1315423911
+# candidate buckets above this many ids are dropped: a bucket of k ids
+# emits k·(k-1)/2 pairs
+_MAX_BUCKET = 1024
+# shingles shared by more than this many documents are dropped: a
+# shingle in k documents fans out k² pair rows
+_MAX_DOC_FREQ = 1000
 
 
 def _minhash_perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -60,11 +74,9 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_perm: int = 64,
-    shingle_n: int = 3,
-    seed: int = 1315423911,
 ) -> DataFrame:
-    """(id, minhash_sig array<long>[num_perm]) — sig[i] = min over
-    shingles of a_i·hash64(shingle) + b_i (mod 2^64).
+    """(id, minhash_sig array<long>[num_perm]) — sig[i] = min over word
+    3-gram shingles of a_i·hash64(shingle) + b_i (mod 2^64).
 
     Tokenize → shingle → hash → permutation-min all happen in ONE
     Arrow-vectorized stage: shingle strings of a whole batch are hashed
@@ -75,11 +87,11 @@ def minhash_signatures(
     (~9 s — every string hashed num_perm times, interpreted), and even a
     single-pass transform/slice/array_join shingle expression (~5 s —
     higher-order functions evaluate interpreted, ~15 µs/shingle)."""
-    a_params, b_params = _minhash_perm_params(num_perm, seed)
+    a_params, b_params = _minhash_perm_params(num_perm, _MINHASH_SEED)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig_udf(texts: pd.Series) -> pd.Series:
-        sets = [_py_shingle_set(t, shingle_n) for t in texts]
+        sets = [_py_shingle_set(t, _LSH_SHINGLE_N) for t in texts]
         n = len(sets)
         lens = np.fromiter((len(x) for x in sets), dtype=np.int64, count=n)
         sig = np.empty((n, num_perm), dtype=np.uint64)
@@ -105,10 +117,7 @@ def minhash_lsh_dup_pairs(
     text_col: str = "text",
     num_perm: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
     jaccard_threshold: float | None = 0.7,
-    max_bucket: int | None = 1024,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs from banded MinHash, verified with exact
     shingle Jaccard. Output: (id_a, id_b, jaccard).
@@ -118,15 +127,13 @@ def minhash_lsh_dup_pairs(
     bucket's id-combinations with an in-row transform over the (tiny, by
     the LSH contract) sorted id array. The signature table is consumed
     exactly once, so it needs no persist, and only 16-byte band rows
-    ever reach the shuffle. ``max_bucket`` drops degenerate buckets
-    bigger than that (a bucket of k ids emits k·(k-1)/2 pairs — an
-    all-equal-hash pathology would go quadratic); dropped buckets mean
-    MISSED candidates for documents whose only collision is in a mega
-    bucket — pass None for the uncapped result. Dropped buckets are
-    ALWAYS logged as a warning, counted for free by an ``Observation``
-    riding the materializing action (no extra job — ADVICE r3;
-    ``log_dropped`` is retained for API compatibility and additionally
-    logs the zero-dropped case at INFO).
+    ever reach the shuffle. Buckets bigger than ``_MAX_BUCKET`` ids are
+    dropped (a bucket of k ids emits k·(k-1)/2 pairs — an all-equal-hash
+    pathology would go quadratic); dropped buckets mean MISSED
+    candidates for documents whose only collision is in a mega bucket.
+    Dropped buckets are logged as a warning, counted for free by an
+    ``Observation`` riding the materializing action (no extra job —
+    ADVICE r3).
 
     Returns the verified pairs persisted + materialized (they are tiny).
     CALLER CONTRACT: ``.unpersist()`` the returned DataFrame when done —
@@ -135,7 +142,7 @@ def minhash_lsh_dup_pairs(
     """
     assert num_perm % bands == 0
     r = num_perm // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_n)
+    sigs = minhash_signatures(df, id_col, text_col, num_perm)
     # Banding as a literal struct array: measured 600x faster than the
     # equivalent nested transform(sequence(...), slice(...)) formulation,
     # which falls off the codegen path entirely.
@@ -158,17 +165,13 @@ def minhash_lsh_dup_pairs(
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    obs = None
-    if max_bucket is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation("minhash_bucket_cap")
-        buckets = buckets.observe(
-            obs,
-            F.coalesce(
-                F.sum((F.size("ids") > max_bucket).cast("long")), F.lit(0)
-            ).alias("dropped_buckets"),
-        ).filter(F.size("ids") <= max_bucket)
+    obs = Observation("minhash_bucket_cap")
+    buckets = buckets.observe(
+        obs,
+        F.coalesce(
+            F.sum((F.size("ids") > _MAX_BUCKET).cast("long")), F.lit(0)
+        ).alias("dropped_buckets"),
+    ).filter(F.size("ids") <= _MAX_BUCKET)
     # k ids -> k(k-1)/2 (id_a < id_b) pairs; interpreted HOF but over
     # arrays of a few elements each
     pair_arr = F.flatten(
@@ -198,8 +201,8 @@ def minhash_lsh_dup_pairs(
     def _jac_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
         vals = np.empty(len(ta), dtype=np.float64)
         for i, (x, y) in enumerate(zip(ta, tb)):
-            sa = set(_py_shingle_set(x, shingle_n))
-            sb = set(_py_shingle_set(y, shingle_n))
+            sa = set(_py_shingle_set(x, _LSH_SHINGLE_N))
+            sb = set(_py_shingle_set(y, _LSH_SHINGLE_N))
             u = len(sa | sb)
             vals[i] = len(sa & sb) / u if u else float("nan")
         return pd.Series(vals)
@@ -224,20 +227,13 @@ def minhash_lsh_dup_pairs(
     out = out.persist()
     out.count()
     cand.unpersist()
-    if obs is not None:
-        import logging
-
-        dropped = int(obs.get.get("dropped_buckets") or 0)
-        log = logging.getLogger(__name__)
-        if dropped:
-            log.warning(
-                "minhash_lsh_dup_pairs: dropped %d buckets larger than %d ids "
-                "(quadratic-bucket cap; candidates in them are missed — pass "
-                "max_bucket=None for the uncapped result)",
-                dropped, max_bucket,
-            )
-        elif log_dropped:
-            log.info("minhash_lsh_dup_pairs: no buckets exceeded max_bucket=%d", max_bucket)
+    dropped = int(obs.get.get("dropped_buckets") or 0)
+    if dropped:
+        logging.getLogger(__name__).warning(
+            "minhash_lsh_dup_pairs: dropped %d buckets larger than %d ids "
+            "(quadratic-bucket cap; candidates in them are missed)",
+            dropped, _MAX_BUCKET,
+        )
     return out
 
 
@@ -283,12 +279,12 @@ def simhash_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    blocks: int = 4,
 ) -> DataFrame:
     """Hamming-near pairs via the pigeonhole block trick: split the 64-bit
-    simhash into ``blocks`` chunks; any pair within ``max_hamming <
-    blocks`` bits must agree on >=1 chunk → equi-join per chunk, then
-    exact popcount verify (bit_count is JVM-side)."""
+    simhash into 4 chunks of 16 bits; any pair within ``max_hamming < 4``
+    bits must agree on >=1 chunk → equi-join per chunk, then exact
+    popcount verify (bit_count is JVM-side)."""
+    blocks = 4
     width = 64 // blocks
     sh = simhash64(df.select(id_col, text_col), text_col)
     chunks = sh.select(
@@ -333,36 +329,22 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_doc_freq: int | None = 1000,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard via an inverted-index join (each
     pair is generated once per shared shingle, then grouped) — the
     exact-but-quadratic-worst-case baseline the LSH variant approximates.
     Shuffle key = shingle, so common-shingle skew is the hazard:
-    ``max_doc_freq`` drops shingles shared by more than that many
-    documents (a shingle in k docs fans out k² pair rows). Dropping a
-    shingle can only LOWER a pair's computed intersection, so this
-    under-reports Jaccard for pairs whose overlap is dominated by
-    ubiquitous shingles — pass ``None`` for the exact (skew-exposed)
-    result. ``log_dropped`` counts and logs the dropped shingles (one
-    extra aggregate job — off by default in pipelines)."""
+    shingles shared by more than ``_MAX_DOC_FREQ`` documents are dropped
+    (a shingle in k docs fans out k² pair rows). Dropping a shingle can
+    only LOWER a pair's computed intersection, so this under-reports
+    Jaccard for pairs whose overlap is dominated by ubiquitous
+    shingles."""
     sh = df.select(F.col(id_col), shingles(text_col, shingle_n)).select(
         id_col, F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle")
     )
-    if max_doc_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        rare = freq.filter(F.col("df_") <= max_doc_freq)
-        if log_dropped:
-            import logging
-
-            n_dropped = freq.filter(F.col("df_") > max_doc_freq).count()
-            logging.getLogger(__name__).warning(
-                "ngram_jaccard_pairs: dropped %d shingles with doc-freq > %d "
-                "(skew cap; jaccard under-reported for pairs sharing them)",
-                n_dropped, max_doc_freq,
-            )
-        sh = sh.join(F.broadcast(rare.select("shingle")), "shingle")
+    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
+    rare = freq.filter(F.col("df_") <= _MAX_DOC_FREQ)
+    sh = sh.join(F.broadcast(rare.select("shingle")), "shingle")
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))

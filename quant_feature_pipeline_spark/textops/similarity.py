@@ -5,12 +5,10 @@
   top-k via window. At 100 TB the corpus side stays partition-parallel
   and never shuffles (queries are broadcast; the only shuffle is the
   final per-query top-k, k rows per partition after partial ranking).
-- ``lsh_bucket_candidates`` — the scale path: random-hyperplane signs
-  (seeded, deterministic planes materialized as literal arrays) bucket
-  vectors; candidates = bucket-equal pairs (multi-probe by flipping one
-  plane optional). Recall grows with number of tables.
-- ``embedding_near_dup_pairs`` — near-dup by cosine >= threshold over
-  LSH candidates, exact verify on the candidate set.
+- ``ivf_topk`` — the scale path: IVF cells over a seeded or trained
+  coarse quantizer, exact cosine only inside the probed cells.
+- ``embedding_near_dup_pairs`` — near-dup by cosine >= threshold,
+  verified over all pairs.
 """
 
 from __future__ import annotations
@@ -65,54 +63,6 @@ def cosine_topk_bruteforce(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    rng = np.random.RandomState(seed)
-    return rng.randn(n_planes, dim).astype(float).tolist()
-
-
-def lsh_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Bit-sign signature as a long (n_planes <= 63)."""
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(_dot(vec_col, plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig + F.shiftleft(bit, i)
-    return sig
-
-
-def lsh_bucket_candidates(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    dim: int | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """(id_a, id_b) candidate pairs sharing an LSH bucket.
-
-    ``dim`` is required: Spark array columns carry no length in the
-    schema, and inferring it with a ``.first()`` would put a driver
-    round-trip in the middle of a lazy pipeline (plan-building must stay
-    action-free at 100 TB)."""
-    if dim is None:
-        raise ValueError(
-            "lsh_bucket_candidates requires dim= (embedding length); "
-            "array schemas are unsized and plan-building must not run jobs"
-        )
-    planes = _planes(dim, n_planes, seed)
-    sig = df.select(F.col(id_col), lsh_signature(F.col(vec_col), planes).alias("bucket"))
-    a, b = sig.alias("a"), sig.alias("b")
-    return a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
     )
 
 
@@ -268,23 +218,23 @@ def ivf_train_or_load(
     n_cells: int,
     dim: int,
     iters: int = 3,
-    seed: int = 7,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Serve path: load persisted centroids if the artifact exists,
-    else Lloyd-train and persist. First run pays training; every later
-    run (a serving job, a re-deployed pipeline) skips all ``iters``
-    distributed passes and is bit-identical."""
+    else Lloyd-train (from the seed-7 centroids) and persist. First run
+    pays training; every later run (a serving job, a re-deployed
+    pipeline) skips all ``iters`` distributed passes and is
+    bit-identical."""
     import os
 
     if os.path.exists(path):
         return load_ivf_centroids(path)
     cents = ivf_train(
-        df, n_cells, dim, iters=iters, seed=seed, vec_col=vec_col, id_col=id_col
+        df, n_cells, dim, iters=iters, seed=7, vec_col=vec_col, id_col=id_col
     )
     save_ivf_centroids(
-        cents, path, meta={"iters": iters, "seed": seed, "trained": True}
+        cents, path, meta={"iters": iters, "seed": 7, "trained": True}
     )
     return cents
 
@@ -296,7 +246,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     dim: int | None = None,
-    seed: int = 7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -314,11 +263,11 @@ def ivf_topk(
     map-only pass and candidates per query are |corpus|·nprobe/n_cells.
 
     ``centroids`` plugs in a trained quantizer (ivf_train); default is
-    the seeded reproducible one.
+    the reproducible ``ivf_centroids`` one (seed 7).
     """
     if dim is None:
         raise ValueError("ivf_topk requires dim= (embedding length)")
-    cents = centroids if centroids is not None else ivf_centroids(dim, n_cells, seed)
+    cents = centroids if centroids is not None else ivf_centroids(dim, n_cells, 7)
     n_cells = len(cents)
     spark = corpus.sparkSession
     cent_rows = [
@@ -389,26 +338,14 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cosine_threshold: float = 0.95,
-    n_planes: int = 12,
-    seed: int = 42,
-    exact: bool = False,
-    dim: int | None = None,
 ) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine. ``exact=True`` verifies
-    ALL pairs (test oracle); default verifies LSH candidates only and
-    requires ``dim`` (see lsh_bucket_candidates)."""
+    """Near-duplicate pairs (id_a < id_b) by embedding cosine, verified
+    over ALL pairs."""
     vecs = df.select(
         F.col(id_col), _dbl(F.col(vec_col)).alias("_v"), _norm(_dbl(F.col(vec_col))).alias("_n")
     )
-    if exact:
-        a, b = vecs.alias("a"), vecs.alias("b")
-        pairs = a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    else:
-        cand = lsh_bucket_candidates(df, id_col, vec_col, n_planes, dim=dim, seed=seed)
-        pairs = (
-            cand.join(vecs.alias("a"), cand.id_a == F.col(f"a.{id_col}"))
-            .join(vecs.alias("b"), cand.id_b == F.col(f"b.{id_col}"))
-        )
+    a, b = vecs.alias("a"), vecs.alias("b")
+    pairs = a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     cos = F.when(
         (F.col("a._n") > 0) & (F.col("b._n") > 0),
         _dot(F.col("a._v"), F.col("b._v")) / (F.col("a._n") * F.col("b._n")),

@@ -13,17 +13,18 @@ import numpy as np
 import pandas as pd
 
 from quant_feature_pipeline_spark.config import PipelineConfig
-from quant_feature_pipeline_spark.functions.rank import _min_periods, _rank_kernel
+from quant_feature_pipeline_spark.functions.rank import _rank_kernel
 from quant_feature_pipeline_spark.functions.recurrence import supertrend_direction
 
 
 def rolling_rank_series(
     s: pd.Series, window: int, min_periods: int | None = None
 ) -> pd.Series:
-    """Single-series rolling percentile rank (the production kernel)."""
+    """Single-series rolling percentile rank (the production kernel;
+    ``min_periods`` defaults to ``rolling_percentile_rank``'s)."""
+    mp = min_periods if min_periods is not None else max(2, window // 2)
     return pd.Series(
-        _rank_kernel(s.to_numpy(dtype=np.float64), window, _min_periods(window, min_periods)),
-        index=s.index,
+        _rank_kernel(s.to_numpy(dtype=np.float64), window, mp), index=s.index
     )
 
 

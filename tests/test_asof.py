@@ -112,6 +112,20 @@ def test_asof_unknown_strategy_rejected(spark, strategy):
         )
 
 
+def test_asof_misspelt_keyword_raises(spark):
+    """A misspelt option is a TypeError, not a silently ignored keyword
+    (``tolerance=60`` used to run untoleranced and return a 600 s stale
+    match)."""
+    lpdf, rpdf = _left_right()
+    left, right = spark.createDataFrame(lpdf), spark.createDataFrame(rpdf)
+    # splatted, so the static keyword check in test_reachability lets
+    # these deliberate typos through to the runtime check under test
+    with pytest.raises(TypeError, match="tolerance"):
+        asof_join(left, right, **{"tolerance": 60})
+    with pytest.raises(TypeError, match="tolerence_s"):
+        asof_join(left, right, strategy="union_ffill", **{"tolerence_s": 60})
+
+
 def test_asof_nearest(spark):
     lpdf, rpdf = _left_right()
     got = asof_join(
@@ -224,12 +238,15 @@ def test_asof_null_right_values(spark, strategy, direction):
     assert_frame_close(got, want, keys=["ts"])
 
 
-def test_asof_multi_hot_routing_value_identity(spark):
+def test_asof_multi_hot_routing_value_identity(spark, monkeypatch):
     """r6 (VERDICT r5 item 4): asof_join_multi routes hot entities
     through iterated range-bucketed joins; output must EQUAL the fused
     un-routed plan — rows, columns, values — on a skewed input (and
     null-key entities must survive)."""
+    from quant_feature_pipeline_spark.operators import asof as asof_mod
     from quant_feature_pipeline_spark.operators.asof import asof_join_multi
+
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1_000)
 
     t0 = datetime.datetime(2024, 1, 1)
     rows = [("HOT", t0 + datetime.timedelta(seconds=7 * k), float(k)) for k in range(4000)]
@@ -254,7 +271,7 @@ def test_asof_multi_hot_routing_value_identity(spark):
         asof_join_multi(left, rights, route_hot=False).toPandas()
     )
     got = key(
-        asof_join_multi(left, rights, hot_rows=1_000).toPandas()
+        asof_join_multi(left, rights).toPandas()
     )
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) == len(rows)
@@ -266,7 +283,7 @@ def test_asof_multi_hot_routing_value_identity(spark):
             assert g.fillna("ø").equals(w.fillna("ø")) if g.dtype == object else g.equals(w), c
     # tolerance variant too
     want_t = key(asof_join_multi(left, rights, tolerance_s=300, route_hot=False).toPandas())
-    got_t = key(asof_join_multi(left, rights, tolerance_s=300, hot_rows=1_000).toPandas())
+    got_t = key(asof_join_multi(left, rights, tolerance_s=300).toPandas())
     assert len(got_t) == len(want_t)
     for c in got_t.columns:
         g, w = got_t[c], want_t[c]

@@ -94,17 +94,12 @@ def test_chunked_rejects_warmup_larger_than_chunk(spark):
     def ident(sl: dict) -> dict:
         return {"x": sl["close"]}
 
+    # a hard kernel window (ADVICE r4) the chunk size cannot cover must
+    # fail loudly
     with pytest.raises(ValueError, match="warm-up"):
         grouped_apply_chunked(
             df, "entity", "ts", ["close"], ident, ["x"],
             chunk_rows=10, warmup_rows=11,
-        )
-    # same guard for a kernel-declared lookback (ADVICE r4): a hard
-    # window the chunk size cannot cover must fail loudly
-    with pytest.raises(ValueError, match="lookback"):
-        grouped_apply_chunked(
-            df, "entity", "ts", ["close"], ident, ["x"],
-            chunk_rows=10, warmup_rows=5, lookback_rows=11,
         )
 
 
@@ -274,12 +269,14 @@ def _skewed_asof_pair(spark):
     return left, right
 
 
-def test_asof_auto_routes_hot_entity(spark):
+def test_asof_auto_routes_hot_entity(spark, monkeypatch):
     """asof_join(strategy='auto'): hot entities route through the
     bucketed path, cold through union_ffill — results identical to the
     plain union_ffill join (both branches are exact)."""
+    from quant_feature_pipeline_spark.operators import asof as asof_mod
     from quant_feature_pipeline_spark.operators.asof import asof_join
 
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS", 1_000)
     left, right = _skewed_asof_pair(spark)
     for direction, tol in (
         ("backward", None), ("forward", None), ("nearest", None), ("backward", 400)
@@ -293,31 +290,11 @@ def test_asof_auto_routes_hot_entity(spark):
         got = _key(
             asof_join(
                 left, right, direction=direction, tolerance_s=tol,
-                strategy="auto", hot_rows=1_000,
+                strategy="auto",
             ).toPandas()
         )
         assert got.equals(want), (direction, tol)
 
-
-def test_asof_auto_sampled_hot_detection(spark):
-    """hot_detect_sample: routing from a Bernoulli sample (the 100 TB
-    path — no full extra count scan) is still EXACT, whatever the sample
-    decides. Exercised at a fraction/threshold where the hot entity IS
-    detected (expected sample count 50 >> threshold 10) and at one where
-    nothing can be (threshold above the whole sampled row count), so
-    both routing outcomes are covered."""
-    from quant_feature_pipeline_spark.operators.asof import asof_join
-
-    left, right = _skewed_asof_pair(spark)
-    want = _key(asof_join(left, right, strategy="union_ffill").toPandas())
-    for hot_rows in (1_000, 10_000_000):  # detected / undetectable
-        got = _key(
-            asof_join(
-                left, right, strategy="auto",
-                hot_rows=hot_rows, hot_detect_sample=0.01,
-            ).toPandas()
-        )
-        assert got.equals(want), hot_rows
 
 def test_asof_auto_hot_list_past_cap_stays_exact(spark, monkeypatch):
     """The detected hot list is capped; hot entities past the cap take
@@ -327,27 +304,29 @@ def test_asof_auto_hot_list_past_cap_stays_exact(spark, monkeypatch):
 
     left, right = _skewed_asof_pair(spark)
     monkeypatch.setattr(asof_mod, "_HOT_ISIN_MAX", 1)
-    # HOT (5,000 rows) and C1 (300) both exceed hot_rows=200
-    assert len(asof_mod._detect_hot_entities(left, "entity", 200, None)) == 1
+    # HOT (5,000 rows) and C1 (300) both exceed 200 rows
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS", 200)
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 200)
+    assert len(asof_mod._detect_hot_entities(left, "entity", 200)) == 1
     want = _key(
         asof_mod.asof_join(left, right, strategy="union_ffill").toPandas()
     )
     got = _key(
-        asof_mod.asof_join(left, right, strategy="auto", hot_rows=200).toPandas()
+        asof_mod.asof_join(left, right, strategy="auto").toPandas()
     )
     assert got.equals(want)
     multi_want = _key(
         asof_mod.asof_join_multi(left, {"r_": right}, route_hot=False).toPandas()
     )
     multi_got = _key(
-        asof_mod.asof_join_multi(left, {"r_": right}, hot_rows=200).toPandas()
+        asof_mod.asof_join_multi(left, {"r_": right}).toPandas()
     )
     assert multi_got.equals(multi_want)
 
 
 def test_asof_auto_small_input_skips_detection(spark):
     """r6 (VERDICT r5 item 3): when the optimizer's size estimate proves
-    the left is smaller than ``hot_rows`` BYTES (hence < hot_rows rows),
+    the left is smaller than ``_HOT_ROWS`` BYTES (hence < _HOT_ROWS rows),
     the auto router must return the plain union_ffill plan WITHOUT
     running the detection count job — zero routing tax on small inputs."""
     import datetime
@@ -370,7 +349,7 @@ def test_asof_auto_small_input_skips_detection(spark):
     sc = spark.sparkContext
     sc.setJobGroup("asof_skip_probe", "asof_skip_probe")
     try:
-        df = asof_join(left, right)  # default auto, default hot_rows
+        df = asof_join(left, right)  # default auto, 4M-row threshold
         jobs = sc.statusTracker().getJobIdsForGroup("asof_skip_probe")
     finally:
         sc.setJobGroup(None, None)
@@ -379,14 +358,16 @@ def test_asof_auto_small_input_skips_detection(spark):
     assert _key(df.toPandas()).equals(want)
 
 
-def test_asof_auto_null_keys_survive_hot_routing(spark):
+def test_asof_auto_null_keys_survive_hot_routing(spark, monkeypatch):
     """ADVICE r5 (medium): with a detected hot list, rows whose ``by``
     key is NULL must flow to the cold branch, not vanish under the
     three-valued isin split."""
     import datetime
 
+    from quant_feature_pipeline_spark.operators import asof as asof_mod
     from quant_feature_pipeline_spark.operators.asof import asof_join
 
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS", 1_000)
     t0 = datetime.datetime(2024, 1, 1)
     rows = [("HOT", t0 + datetime.timedelta(seconds=7 * k), float(k)) for k in range(5000)]
     rows += [(None, t0 + datetime.timedelta(seconds=60 * k), float(1000 + k)) for k in range(5)]
@@ -398,7 +379,7 @@ def test_asof_auto_null_keys_survive_hot_routing(spark):
         for k in range(12)
     ]
     right = spark.createDataFrame(pd.DataFrame(rrows, columns=["entity", "ts", "rval"]))
-    out = asof_join(left, right, strategy="auto", hot_rows=1_000).toPandas()
+    out = asof_join(left, right, strategy="auto").toPandas()
     assert len(out) == len(rows), "no rows may be lost by the hot split"
     nulls = out[out["entity"].isna()]
     assert len(nulls) == 5

@@ -13,6 +13,11 @@ that only tests run belongs in ``tests/oracles.py``.
 Name loads count when the file imports the name (through an alias too)
 or defines it; attribute loads (``module.name``, ``cfg.field``) count by
 attribute name.
+
+Parameters get the same treatment: every defaulted parameter of a public
+package function is set by some production call (by keyword, by position
+or through a ``*``/``**`` splat), or else it is a constant. And every
+keyword any caller passes, ``tests/`` included, names a real parameter.
 """
 
 from __future__ import annotations
@@ -37,6 +42,19 @@ CALLERS = [
 # consumer calls to build, health-check and export the 45-feature NPZ
 # artifact. No production code calls them; tests/test_flagship.py does.
 SINK_ENTRY_POINTS = {"run_flagship_contract", "flagship_health", "export_npz_contract"}
+
+# Parameters production code leaves at their default on purpose: the sink
+# entry points above, and run_flagship's serve mode (COVERAGE.md S7b),
+# which applies frozen training stats and is reached through
+# run_flagship_contract.
+PARAM_ALLOWLIST = {
+    **{name: {"*"} for name in SINK_ENTRY_POINTS},
+    "run_flagship": {"stats"},
+}
+
+# Parameters that name a column or an output, and a CLI's argv: their
+# default is a schema or process fact, not a configuration.
+_EXEMPT_PARAM = re.compile(r"by|on|src|out|prefix|argv|\w+_col|\w+_prefix")
 
 
 def _py_files(paths: list[Path]) -> list[Path]:
@@ -102,6 +120,109 @@ def _loads() -> list[tuple[Path, int, str, bool]]:
             elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
                 out.append((path, node.lineno, node.attr, True))
     return out
+
+
+def _package_functions(
+    public: bool = True,
+) -> dict[str, list[tuple[Path, ast.FunctionDef]]]:
+    """name -> [(module, def)] of module-level package functions."""
+    out: dict[str, list[tuple[Path, ast.FunctionDef]]] = {}
+    for path in _py_files([PKG]):
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
+                public and (node.name.startswith("_") or path.name == "__init__.py")
+            ):
+                out.setdefault(node.name, []).append((path, node))
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[str]:
+    pos = fn.args.posonlyargs + fn.args.args
+    names = [a.arg for a in pos[len(pos) - len(fn.args.defaults):]]
+    names += [
+        a.arg for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+    return names
+
+
+def _call_sites(paths: list[Path], package_only: bool = False):
+    """(file, line, name, call) for every load of a name; ``call`` is the
+    ``ast.Call`` when the load is the callee, else None. Names resolve as
+    in ``_loads``; with ``package_only`` an import counts only when it is
+    from the package, and an attribute only on such an import."""
+    out = []
+    for path in _py_files(paths):
+        tree = _parse(path)
+        in_pkg = PKG in path.parents
+        alias: dict[str, str] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                not package_only
+                or (node.level and in_pkg)
+                or (node.module or "").startswith(PKG.name)
+            ):
+                for a in node.names:
+                    alias[a.asname or a.name] = a.name
+        own = {
+            n.name for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        } if in_pkg or not package_only else set()
+        callee = {
+            id(n.func): n for n in ast.walk(tree) if isinstance(n, ast.Call)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                name = alias.get(node.id) or (node.id if node.id in own else None)
+            elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                base = node.value
+                name = node.attr if not package_only or (
+                    isinstance(base, ast.Name) and base.id in alias
+                ) else None
+            else:
+                continue
+            if name:
+                out.append((path, node.lineno, name, callee.get(id(node))))
+    return out
+
+
+def _set_params(fn: ast.FunctionDef, call: ast.Call | None) -> set[str]:
+    """The parameters of ``fn`` a call sets; a load that is not a call
+    (a dispatch table, a callback) or a ``**`` splat sets them all."""
+    pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    every = set(pos) | {a.arg for a in fn.args.kwonlyargs}
+    if call is None or any(k.arg is None for k in call.keywords):
+        return every
+    out = {k.arg for k in call.keywords}
+    for i, a in enumerate(call.args):
+        if isinstance(a, ast.Starred):
+            return out | set(pos[i:])
+        if i < len(pos):
+            out.add(pos[i])
+    return out
+
+
+def _param_census() -> tuple[list[str], dict[str, set[str]]]:
+    """(defaulted parameters no production call sets, as ``fn.param``;
+    name -> parameters production calls set). A call from inside the
+    function's own body does not count."""
+    fns = _package_functions()
+    sites = _call_sites(CALLERS)
+    unset, setters = [], {}
+    for name, defs in sorted(fns.items()):
+        spans = [(p, f.lineno, f.end_lineno) for p, f in defs]
+        calls = [
+            c for p, line, n, c in sites
+            if n == name and not _inside(spans, p, line)
+        ]
+        for _, fn in defs:
+            got = set().union(*(_set_params(fn, c) for c in calls))
+            setters[name] = setters.get(name, set()) | got
+            unset += [
+                f"{name}.{a}" for a in _defaulted(fn)
+                if a not in got and not _EXEMPT_PARAM.fullmatch(a)
+            ]
+    return unset, setters
 
 
 def _inside(spans, path: Path, line: int) -> bool:
@@ -222,3 +343,63 @@ def test_coverage_citations_exist():
             ):
                 missing.append(f"{rel}::{name}")
     assert not missing, f"COVERAGE.md cites names that do not exist: {missing}"
+
+
+def test_every_parameter_is_set_by_a_production_caller():
+    """A defaulted parameter only tests set is a constant in disguise:
+    inline its default and delete the branches behind the other values."""
+    unset, _ = _param_census()
+    allowed = {
+        f"{n}.{a}" for n, params in PARAM_ALLOWLIST.items()
+        for _, fn in _package_functions().get(n, [])
+        for a in _defaulted(fn) if "*" in params or a in params
+    }
+    left = sorted(set(unset) - allowed)
+    assert not left, (
+        f"{len(left)} parameters no production caller sets: {left}"
+    )
+
+
+def test_parameter_allowlist_is_exact():
+    """Each allowlisted parameter exists and still has no production
+    setter; one that gains a setter leaves the allowlist."""
+    fns = _package_functions()
+    _, setters = _param_census()
+    for name, params in sorted(PARAM_ALLOWLIST.items()):
+        assert name in fns, f"allowlisted {name} no longer exists"
+        named = params - {"*"} or {
+            a for _, fn in fns[name] for a in _defaulted(fn)
+        }
+        for a in sorted(named):
+            assert any(a in _defaulted(fn) for _, fn in fns[name]), (
+                f"allowlisted {name}.{a} is not a defaulted parameter"
+            )
+            assert a not in setters[name], (
+                f"allowlisted {name}.{a} now has a production setter; "
+                "drop it from PARAM_ALLOWLIST"
+            )
+
+
+def test_every_keyword_names_a_parameter():
+    """A keyword a function does not take is a typo; with no ``**`` sink
+    to swallow it, Python would raise only when the call runs."""
+    fns = _package_functions(public=False)
+    bad = []
+    for path, line, name, call in _call_sites(
+        CALLERS + [ROOT / "tests"], package_only=True
+    ):
+        if call is None or name not in fns:
+            continue
+        ok = set()
+        for _, fn in fns[name]:
+            if fn.args.kwarg is not None:
+                ok = None
+                break
+            ok |= {a.arg for a in fn.args.args + fn.args.kwonlyargs}
+        if ok is None:
+            continue
+        bad += [
+            f"{path.relative_to(ROOT)}:{line} {name}({k.arg}=)"
+            for k in call.keywords if k.arg is not None and k.arg not in ok
+        ]
+    assert not bad, f"keywords that name no parameter: {bad}"

@@ -43,14 +43,6 @@ def test_resample_closed_right_reference_compat(spark):
     assert_frame_close(got, want, keys=["entity", "ts"])
 
 
-def test_resample_drop_incomplete(spark):
-    pdf = make_bars_pdf(n=100, gap_every=5)
-    got = resample_ohlcv(
-        spark.createDataFrame(pdf), "15m", drop_incomplete=True, expected_rows=15
-    ).toPandas()
-    assert (got["bar_count"] >= 15).all()
-
-
 def test_rolling_bars(spark):
     pdf = make_bars_pdf(n=200)
     got = rolling_bars(spark.createDataFrame(pdf), k=5).toPandas()

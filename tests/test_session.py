@@ -63,3 +63,28 @@ def test_jit_flags_reach_session_jvm(tmp_path):
     for flag in JIT_OPTIONS.split():
         assert flag in args, (flag, args)
     assert marker in args, args
+
+
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    """With SPARK_DRIVER_MEMORY unset the driver heap is half the host's
+    physical memory, capped at 16g; the env var overrides it. No JVM
+    starts: the conf get_spark would build with is captured."""
+    from quant_feature_pipeline_spark import session
+
+    seen = {}
+    monkeypatch.setattr(
+        session, "build_session", lambda app, conf: seen.update(conf)
+    )
+    page = 4096
+
+    def host(gib):
+        pages = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": gib * 2**30 // page}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        session.get_spark(cpus=1)
+        return seen["spark.driver.memory"]
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert host(15) == "7680m"  # 7.5g
+    assert host(64) == "16384m"  # 16g
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert host(15) == host(64) == "3g"

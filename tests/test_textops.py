@@ -135,18 +135,19 @@ def test_cosine_topk_vs_numpy(spark):
         np.testing.assert_allclose(g["cosine"].to_numpy(), cos[order], rtol=1e-9)
 
 
-def test_embedding_near_dup_lsh_vs_exact(spark):
-    df, _ = _vecs(spark)
-    exact = embedding_near_dup_pairs(df, cosine_threshold=0.99, exact=True).toPandas()
-    lsh = embedding_near_dup_pairs(
-        df, cosine_threshold=0.99, exact=False, n_planes=8, dim=8
-    ).toPandas()
-    assert (0, 1) in set(map(tuple, exact[["id_a", "id_b"]].to_numpy()))
-    # LSH candidates are a subset; the planted near-dup must survive
-    assert (0, 1) in set(map(tuple, lsh[["id_a", "id_b"]].to_numpy()))
-    assert set(map(tuple, lsh[["id_a", "id_b"]].to_numpy())) <= set(
-        map(tuple, exact[["id_a", "id_b"]].to_numpy())
-    )
+def test_embedding_near_dup_vs_numpy(spark):
+    df, v = _vecs(spark)
+    got = embedding_near_dup_pairs(df, cosine_threshold=0.99).toPandas()
+    found = set(map(tuple, got[["id_a", "id_b"]].to_numpy()))
+    assert (0, 1) in found  # the planted near-dup
+    v64 = np.array([np.array(x, dtype=np.float32).astype(np.float64) for x in v])
+    u = v64 / np.linalg.norm(v64, axis=1)[:, None]
+    cos = u @ u.T
+    want = {
+        (i, j) for i in range(len(v)) for j in range(i + 1, len(v))
+        if cos[i, j] >= 0.99
+    }
+    assert found == want
 
 
 def test_ivf_topk_self_hit_and_cosine_parity(spark):
