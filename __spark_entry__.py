@@ -256,9 +256,7 @@ def q_bb_width_20(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", F.col("value").alias("close")
     )
-    out = apply_window_indicators(
-        ev, *window_indicator_layers(PipelineConfig(bb_window=20, bb_std=2.0), by="user_id")
-    )
+    out = apply_window_indicators(ev, *window_indicator_layers(by="user_id"))
     return out.select(
         "user_id", "ts", "event_id", F.round("bb_width", R6).alias("bb_width")
     )
@@ -666,7 +664,7 @@ def _minhash_oracle_sql(
 
 def q_recurrence_indicators(spark, sf_dir):
     bars = resample_ohlcv(_ticks(spark, sf_dir), "15m", by="user_id").drop("bar_count")
-    out = compute_recurrence_indicators(bars, PipelineConfig(), by="user_id")
+    out = compute_recurrence_indicators(bars, by="user_id")
     cols = ["user_id", "ts", "ema_20", "rsi14", "rsi_event", "macd", "atr14",
             "supertrend_direction"]
     return out.select(*[F.round(c, R6).alias(c) if c not in ("user_id", "ts") else c for c in cols])

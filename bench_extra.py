@@ -20,8 +20,9 @@ import os
 import sys
 import time
 
+from quant_feature_pipeline_spark.session import DEFAULT_CPUS as CPUS
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _spark():

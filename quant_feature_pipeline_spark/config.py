@@ -28,34 +28,43 @@ def tf_interval(tf: str) -> str:
     return f"{tf_seconds(tf)} seconds"
 
 
+# indicator parameters (reference congfigs/base_indicators.yaml)
+SMA_WINDOWS = (5, 10, 20, 50, 100, 200)
+EMA_SPANS = (7, 9, 12, 20, 26, 55, 100, 200)
+RSI_WINDOW = 14
+RSI_EVENT_THRESHOLD = 40.0  # on the reshaped [-100,100] axis
+RSI_MIN_PERSIST = 2
+MACD_FAST = 12
+MACD_SLOW = 26
+MACD_SIGNAL = 9
+BB_WINDOW = 20
+BB_STD = 2.0
+MOM_WINDOW = 14
+ATR_WINDOW = 14
+SUPERTREND_PERIOD = 10
+SUPERTREND_MULT = 3.0
+RV_WINDOWS = (20, 50, 100)
+# step5 normalization
+MOM_TANH_SCALE = 30.0
+
+
 @dataclass
 class PipelineConfig:
-    """Configuration surface mirroring the reference's YAML tree
-    (`/root/reference/congfigs/main_config.yaml`), minus I/O paths.
+    """The timeframes of a run — the part of the reference's YAML tree
+    (`congfigs/main_config.yaml`) a caller chooses. The indicator
+    parameters are the module constants above, and the timeframe merge
+    is always backward with exact matches and no tolerance.
+
+    ``resample_targets[0]`` is the base axis every feature lands on, so
+    ``base_tf`` must equal it.
     """
 
     base_tf: str = "3m"
     resample_targets: tuple[str, ...] = ("3m", "15m", "30m", "2h")
-    # merge (as-of join) options — reference `merge.align_direction`,
-    # `merge.allow_exact_match`, step4 tolerance_ms
-    align_direction: str = "backward"
-    allow_exact_match: bool = True
-    tolerance_ms: int | None = None
-    # indicator parameters (reference congfigs/base_indicators.yaml)
-    sma_windows: tuple[int, ...] = (5, 10, 20, 50, 100, 200)
-    ema_spans: tuple[int, ...] = (7, 9, 12, 20, 26, 55, 100, 200)
-    rsi_window: int = 14
-    rsi_event_threshold: float = 40.0  # on the reshaped [-100,100] axis
-    rsi_min_persist: int = 2
-    macd_fast: int = 12
-    macd_slow: int = 26
-    macd_signal: int = 9
-    bb_window: int = 20
-    bb_std: float = 2.0
-    mom_window: int = 14
-    atr_window: int = 14
-    supertrend_period: int = 10
-    supertrend_mult: float = 3.0
-    rv_windows: tuple[int, ...] = (20, 50, 100)
-    # step5 normalization
-    mom_tanh_scale: float = 30.0
+
+    def __post_init__(self) -> None:
+        if not self.resample_targets or self.base_tf != self.resample_targets[0]:
+            raise ValueError(
+                f"base_tf {self.base_tf!r} must be the first resample target, "
+                f"got resample_targets={self.resample_targets!r}"
+            )

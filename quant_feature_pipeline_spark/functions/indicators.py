@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..config import BB_STD, BB_WINDOW, MOM_WINDOW, RV_WINDOWS, SMA_WINDOWS
+
 
 def _cum(by: str, ts_col: str):
     return (
@@ -70,7 +72,6 @@ def rolling_zscore(
 
 
 def window_indicator_layers(
-    cfg,
     by: str = "entity",
     ts_col: str = "ts",
     src: str = "close",
@@ -83,7 +84,7 @@ def window_indicator_layers(
     return; layers 3-4 the same for the log return (realized vol).
     NaN counts as missing exactly like null (pandas skip-NaN semantics):
     a NaN reaching a cumsum would poison S and Q for every later row of
-    the entity. Expressions are built once per config and reused across
+    the entity. Expressions are built once and reused across
     every timeframe table — Column objects are plan-independent, so the
     py4j construction cost is paid once, not per table. Columns a caller
     never selects are pruned by Catalyst with their window expressions.
@@ -95,14 +96,13 @@ def window_indicator_layers(
     wo = _ord(by, ts_col)
     x = F.col(src).cast("double")
     ok = x.isNotNull() & ~F.isnan(x)
-    sma_ns = list(cfg.sma_windows)
-    lag_ns = sorted({*sma_ns, cfg.bb_window})
+    lag_ns = sorted({*SMA_WINDOWS, BB_WINDOW})
     l1 = {
         "_fw_S": F.sum(F.when(ok, x).otherwise(0.0)).over(wc),
         "_fw_C": F.sum(F.when(ok, 1.0).otherwise(0.0)).over(wc),
         "_fw_Q": F.sum(F.when(ok, x * x).otherwise(0.0)).over(wc),
         "_fw_lag1": F.lag(src, 1).over(wo),
-        "_fw_lagm": F.lag(src, cfg.mom_window).over(wo),
+        "_fw_lagm": F.lag(src, MOM_WINDOW).over(wo),
     }
     prev = F.col("_fw_lag1")
     l2: dict[str, Column] = {
@@ -111,7 +111,7 @@ def window_indicator_layers(
     for n in lag_ns:
         l2[f"_fw_S{n}"] = F.lag("_fw_S", n).over(wo)
         l2[f"_fw_C{n}"] = F.lag("_fw_C", n).over(wo)
-    l2[f"_fw_Q{cfg.bb_window}"] = F.lag("_fw_Q", cfg.bb_window).over(wo)
+    l2[f"_fw_Q{BB_WINDOW}"] = F.lag("_fw_Q", BB_WINDOW).over(wo)
     xr = F.col("_fw_lr").cast("double")
     okr = xr.isNotNull() & ~F.isnan(xr)
     l3 = {
@@ -120,7 +120,7 @@ def window_indicator_layers(
         "_fr_Q": F.sum(F.when(okr, xr * xr).otherwise(0.0)).over(wc),
     }
     l4: dict[str, Column] = {}
-    for n in cfg.rv_windows:
+    for n in RV_WINDOWS:
         l4[f"_fr_S{n}"] = F.lag("_fr_S", n).over(wo)
         l4[f"_fr_C{n}"] = F.lag("_fr_C", n).over(wo)
         l4[f"_fr_Q{n}"] = F.lag("_fr_Q", n).over(wo)
@@ -145,19 +145,19 @@ def window_indicator_layers(
         )
 
     final: dict[str, Column] = {}
-    for n in sma_ns:
+    for n in SMA_WINDOWS:
         c = cnt("_fw", n)
         final[f"sma_{n}"] = F.when(c >= 1, win("_fw", n) / c)
-    bb_n, bb_mp = cfg.bb_window, max(10, cfg.bb_window // 2)
-    c_bb = cnt("_fw", bb_n)
-    ma = F.when(c_bb >= bb_mp, win("_fw", bb_n) / c_bb)
-    sd = F.sqrt(var("_fw", bb_n, 1, bb_mp))
-    final["bb_width"] = F.when(ma != 0, (2.0 * cfg.bb_std * sd) / ma)
+    bb_mp = max(10, BB_WINDOW // 2)
+    c_bb = cnt("_fw", BB_WINDOW)
+    ma = F.when(c_bb >= bb_mp, win("_fw", BB_WINDOW) / c_bb)
+    sd = F.sqrt(var("_fw", BB_WINDOW, 1, bb_mp))
+    final["bb_width"] = F.when(ma != 0, (2.0 * BB_STD * sd) / ma)
     prevm = F.col("_fw_lagm")
     final["mom"] = F.when(
         prevm.isNotNull() & (prevm != 0), F.col(src) / prevm - 1.0
     )
-    for n in cfg.rv_windows:
+    for n in RV_WINDOWS:
         final[f"rv_win{n}"] = F.sqrt(var("_fr", n, 1, 2))
     drop = (
         list(l1) + list(l2) + list(l3) + list(l4)

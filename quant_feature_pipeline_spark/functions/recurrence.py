@@ -39,7 +39,18 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..config import PipelineConfig
+from ..config import (
+    ATR_WINDOW,
+    EMA_SPANS,
+    MACD_FAST,
+    MACD_SIGNAL,
+    MACD_SLOW,
+    RSI_EVENT_THRESHOLD,
+    RSI_MIN_PERSIST,
+    RSI_WINDOW,
+    SUPERTREND_MULT,
+    SUPERTREND_PERIOD,
+)
 from .grouped import grouped_apply, grouped_apply_chunked
 
 
@@ -165,7 +176,7 @@ def supertrend_direction(
 
 
 def _indicator_arrays(
-    c: np.ndarray, h: np.ndarray, low: np.ndarray, cfg: PipelineConfig
+    c: np.ndarray, h: np.ndarray, low: np.ndarray
 ) -> dict[str, np.ndarray]:
     """The per-group indicator math on plain float64 arrays (ts-sorted).
     Same op order per element as the Series-form oracle
@@ -173,22 +184,20 @@ def _indicator_arrays(
     m = len(c)
     new: dict[str, np.ndarray] = {}
 
-    for span in cfg.ema_spans:
+    for span in EMA_SPANS:
         new[f"ema_{span}"] = _ewm_arr(c, _span_com(span))
 
-    reshaped = (_rsi_wilder_arr(c, cfg.rsi_window) - 50.0) * 2.0
-    new[f"rsi{cfg.rsi_window}"] = reshaped
-    ev, ob, os_ = _rsi_events_arr(
-        reshaped, cfg.rsi_event_threshold, cfg.rsi_min_persist
-    )
+    reshaped = (_rsi_wilder_arr(c, RSI_WINDOW) - 50.0) * 2.0
+    new[f"rsi{RSI_WINDOW}"] = reshaped
+    ev, ob, os_ = _rsi_events_arr(reshaped, RSI_EVENT_THRESHOLD, RSI_MIN_PERSIST)
     new["rsi_event"] = ev
     new["rsi_overbought"] = ob
     new["rsi_oversold"] = os_
 
-    ema_fast = _ewm_arr(c, _span_com(cfg.macd_fast))
-    ema_slow = _ewm_arr(c, _span_com(cfg.macd_slow))
+    ema_fast = _ewm_arr(c, _span_com(MACD_FAST))
+    ema_slow = _ewm_arr(c, _span_com(MACD_SLOW))
     macd = ema_fast - ema_slow
-    signal = _ewm_arr(macd, _span_com(cfg.macd_signal))
+    signal = _ewm_arr(macd, _span_com(MACD_SIGNAL))
     new["macd"] = macd
     new["macd_signal"] = signal
     new["macd_histogram"] = macd - signal
@@ -202,37 +211,37 @@ def _indicator_arrays(
         hl, np.maximum(np.abs(h - prev_c), np.abs(low - prev_c))
     )
     tr_np = np.where(np.isnan(tr_np), hl, tr_np)
-    atr = _wilder_arr(tr_np, cfg.atr_window)
-    new[f"atr{cfg.atr_window}"] = atr
+    atr = _wilder_arr(tr_np, ATR_WINDOW)
+    new[f"atr{ATR_WINDOW}"] = atr
     with np.errstate(invalid="ignore", divide="ignore"):
-        new[f"atr{cfg.atr_window}_pct"] = np.where(c > 0, atr / c, np.nan)
+        new[f"atr{ATR_WINDOW}_pct"] = np.where(c > 0, atr / c, np.nan)
 
-    st_atr = _wilder_arr(tr_np, cfg.supertrend_period)
+    st_atr = _wilder_arr(tr_np, SUPERTREND_PERIOD)
     new["supertrend_direction"] = supertrend_direction(
-        h, low, c, st_atr, cfg.supertrend_mult
+        h, low, c, st_atr, SUPERTREND_MULT
     )
     return new
 
 
-def indicator_columns(cfg: PipelineConfig) -> list[str]:
+def indicator_columns() -> list[str]:
     """The recurrence stage's output columns, in _indicator_arrays order."""
-    return [f"ema_{s}" for s in cfg.ema_spans] + [
-        f"rsi{cfg.rsi_window}",
+    return [f"ema_{s}" for s in EMA_SPANS] + [
+        f"rsi{RSI_WINDOW}",
         "rsi_event",
         "rsi_overbought",
         "rsi_oversold",
         "macd",
         "macd_signal",
         "macd_histogram",
-        f"atr{cfg.atr_window}",
-        f"atr{cfg.atr_window}_pct",
+        f"atr{ATR_WINDOW}",
+        f"atr{ATR_WINDOW}_pct",
         "supertrend_direction",
     ]
 
 
 def compute_recurrence_indicators(
     bars: DataFrame,
-    cfg: PipelineConfig | None = None,
+    cfg=None,
     by: str = "entity",
     ts_col: str = "ts",
     chunk_rows: int | None = None,
@@ -253,13 +262,15 @@ def compute_recurrence_indicators(
     single entity's history exceeds task memory: the entity is split
     into warm-up-overlapped chunks that process in parallel (default
     warmup 4096 rows drives the slowest recurrence seed error — span-200
-    EMA — below float64 ulp; see grouped.py)."""
-    cfg = cfg or PipelineConfig()
+    EMA — below float64 ulp; see grouped.py).
+
+    ``cfg`` is accepted and ignored: the indicator parameters are the
+    config.py constants, and callers still pass their PipelineConfig."""
     src = ["close", "high", "low"]
-    new = indicator_columns(cfg)
+    new = indicator_columns()
 
     def kernel(sl: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
-        return _indicator_arrays(sl["close"], sl["high"], sl["low"], cfg)
+        return _indicator_arrays(sl["close"], sl["high"], sl["low"])
 
     if chunk_rows is not None:
         return grouped_apply_chunked(

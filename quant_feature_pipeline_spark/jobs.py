@@ -12,7 +12,7 @@ Spark cluster can run:
         --py-files dist/quant_feature_pipeline_spark.zip \
         jobs/run_features.py \
         --input /data/bars.parquet --checkpoint-root /ck \
-        --base-tf 3m --targets 3m,15m,30m,2h
+        --targets 3m,15m,30m,2h
 
 The job is RESUMABLE: every publish is a Checkpointer snapshot (parquet
 dir + JSON manifest carrying per-entity lineage row counts / max-ts and
@@ -62,7 +62,6 @@ def _parse_args(argv: list[str] | None) -> argparse.Namespace:
                    help="optional extra sink dir (sources.sink.write_table)")
     p.add_argument("--output-format", default="parquet",
                    choices=("parquet", "csv", "both"))
-    p.add_argument("--base-tf", default="3m")
     p.add_argument("--targets", default="3m,15m,30m,2h",
                    help="comma-separated resample targets (first = base axis)")
     p.add_argument("--by", default="entity")
@@ -79,10 +78,8 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
     """One resumable build. Returns the run's metrics dict (also printed
     as the job's final JSON line); the published snapshot's manifest
     carries the per-entity lineage."""
-    cfg = PipelineConfig(
-        base_tf=args.base_tf,
-        resample_targets=tuple(t.strip() for t in args.targets.split(",") if t.strip()),
-    )
+    targets = tuple(t.strip() for t in args.targets.split(",") if t.strip())
+    cfg = PipelineConfig(base_tf=targets[0], resample_targets=targets)
     ck = Checkpointer(args.checkpoint_root, spark)
     bars = spark.read.parquet(args.input)
     if args.input_kind == "tokens":

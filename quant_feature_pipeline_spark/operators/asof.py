@@ -560,8 +560,6 @@ def asof_join_multi(
     rights: dict[str, DataFrame],
     on: str = "ts",
     by: str = "entity",
-    allow_exact_matches: bool = True,
-    tolerance_s: float | None = None,
     axis_tables: dict[str, DataFrame] | None = None,
     route_hot: bool = True,
     bucket_s: int = 3600,
@@ -570,6 +568,9 @@ def asof_join_multi(
     ONE narrow sort — the fused, scale-tuned form of the reference's
     iterated per-timeframe merge loop
     (`/root/reference/step4_merge_features.py:522-535`).
+
+    Exact matches are allowed and there is no tolerance (the reference's
+    merge defaults); the two-table ``asof_join`` takes the other settings.
 
     Two-phase design:
 
@@ -641,8 +642,7 @@ def asof_join_multi(
             cold = asof_join_multi(
                 left.filter(~is_hot),
                 {p: r.filter(~is_hot) for p, r in rights.items()},
-                on=on, by=by, allow_exact_matches=allow_exact_matches,
-                tolerance_s=tolerance_s,
+                on=on, by=by,
                 axis_tables=(
                     {p: a.filter(~is_hot) for p, a in axis_tables.items()}
                     if axis_tables
@@ -654,10 +654,7 @@ def asof_join_multi(
             for p in rights:
                 hot_out = asof_join_bucketed(
                     hot_out, rights[p].filter(is_hot), on=on, by=by,
-                    direction="backward",
-                    allow_exact_matches=allow_exact_matches,
-                    tolerance_s=tolerance_s, right_prefix=p,
-                    bucket_s=bucket_s,
+                    direction="backward", right_prefix=p, bucket_s=bucket_s,
                 ).drop(f"{p}matched_{on}")
             out_cols = [by, on, *lcols] + [
                 f"{p}{c}" for p in rights for c in blocks_h[p]
@@ -704,13 +701,11 @@ def asof_join_multi(
     for x in parts[1:]:
         u = u.unionByName(x)
 
-    # right-before-left at equal ts iff exact matches allowed: the
+    # right before left at equal ts (exact matches allowed): the
     # boolean (_src = -1) sorts false (right) before true (left) asc
-    is_left = F.col("_src") == -1
-    side_order = is_left.asc() if allow_exact_matches else is_left.desc()
     w = (
         Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), side_order)
+        .orderBy(F.col(on).asc(), (F.col("_src") == -1).asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     matched = u.select(
@@ -724,20 +719,6 @@ def asof_join_multi(
             for i in range(len(prefixes))
         ],
     ).filter(F.col("_src") == -1).drop("_src")
-
-    if tolerance_s is not None:
-        matched = matched.select(
-            F.col(by), F.col(on),
-            *[F.col(c) for c in id_cols + carried],
-            *[
-                F.when(
-                    (epoch_seconds(F.col(on)) - epoch_seconds(F.col(f"_m_{i}")))
-                    <= float(tolerance_s),
-                    F.col(f"_m_{i}"),
-                ).alias(f"_m_{i}")
-                for i in range(len(prefixes))
-            ],
-        )
 
     if reattach:
         # wide left payload: re-attach on (by, unique-in-by row id) —

@@ -40,7 +40,14 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.window import Window
 
-from ..config import PipelineConfig, tf_seconds
+from ..config import (
+    ATR_WINDOW,
+    MOM_TANH_SCALE,
+    RSI_WINDOW,
+    RV_WINDOWS,
+    PipelineConfig,
+    tf_seconds,
+)
 from ..functions.indicators import window_indicator_layers
 from ..functions.normalize import market_state, tanh_compress
 from ..functions.rank import rolling_rank_multi
@@ -178,7 +185,7 @@ def run_flagship(
         if approx_percentiles:
             return F.percentile_approx(col, F.lit(p), F.lit(10_000))
         return F.percentile(col, F.lit(p))
-    base_tf = cfg.resample_targets[0]
+    base_tf = cfg.base_tf
     ret_name = f"ret_{base_tf}_log"
     mult = {tf: tf_seconds(tf) // tf_seconds(base_tf) for tf in cfg.resample_targets}
 
@@ -200,7 +207,7 @@ def run_flagship(
     # distribution satisfaction leaves agg output partitioning at
     # hash(entity)), so every recurrence Arrow stage skips its own
     # repartition — same elision run_pipeline ships with (r5)
-    wexprs = window_indicator_layers(cfg, by=by, ts_col=ts_col)
+    wexprs = window_indicator_layers(by=by, ts_col=ts_col)
     inds = {
         tf: indicator_table(
             df, cfg, by=by, ts_col=ts_col, prepartitioned=True,
@@ -254,7 +261,7 @@ def run_flagship(
         bw = F.coalesce(F.col(f"{tf}_bb_width"), F.lit(0.0))
         prep_cols[f"_bw_{tf}"] = F.greatest(bw, F.lit(0.0))
         prep_cols[f"_vl_{tf}"] = F.greatest(F.col(f"_vs_{tf}"), F.lit(0.0))
-        ax = F.coalesce(F.col(f"{tf}_atr{cfg.atr_window}_pct"), F.lit(0.0))
+        ax = F.coalesce(F.col(f"{tf}_atr{ATR_WINDOW}_pct"), F.lit(0.0))
         prep_cols[f"_ax_{tf}"] = F.greatest(ax, F.lit(0.0))
     # consumed by the stats pass, the rank branch, and the join-back —
     # without persistence Catalyst recomputes the merge per consumer
@@ -372,19 +379,19 @@ def run_flagship(
         sel += [
             market_state(F.col(f"{tf}_supertrend_direction")).alias(f"{tf}_market_state"),
             tanh_compress(
-                F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0)), cfg.mom_tanh_scale
+                F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0)), MOM_TANH_SCALE
             ).alias(f"{tf}_mom"),
             (bw_fused * (1.0 - 2.0 * eps) + eps).alias(f"{tf}_bb_width"),
             F.col(f"_vlr_{tf}").alias(f"{tf}_volume"),
             F.least(F.greatest(atr_cal, F.lit(eps)), F.lit(1.0 - eps)).alias(f"{tf}_atr_pct"),
-            F.coalesce(F.col(f"{tf}_rv_win{cfg.rv_windows[0]}"), F.lit(0.0)).alias(f"{tf}_rv"),
+            F.coalesce(F.col(f"{tf}_rv_win{RV_WINDOWS[0]}"), F.lit(0.0)).alias(f"{tf}_rv"),
             F.col(f"{tf}_close").alias(f"{tf}_close"),
         ]
     for tf in rsi_tfs(cfg):
         # reshaped [-100,100] → [-1,1] via /80 clip (step5:942-946)
         rsi_n = F.least(
             F.greatest(
-                F.coalesce(F.col(f"{tf}_rsi{cfg.rsi_window}"), F.lit(0.0)) / 80.0,
+                F.coalesce(F.col(f"{tf}_rsi{RSI_WINDOW}"), F.lit(0.0)) / 80.0,
                 F.lit(-1.0),
             ),
             F.lit(1.0),

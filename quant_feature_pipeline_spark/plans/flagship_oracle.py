@@ -29,7 +29,20 @@ from __future__ import annotations
 
 import math
 
-from ..config import PipelineConfig, tf_seconds
+from ..config import (
+    ATR_WINDOW,
+    BB_STD,
+    BB_WINDOW,
+    MOM_TANH_SCALE,
+    MOM_WINDOW,
+    RSI_EVENT_THRESHOLD,
+    RSI_MIN_PERSIST,
+    RSI_WINDOW,
+    RV_WINDOWS,
+    SUPERTREND_MULT,
+    SUPERTREND_PERIOD,
+    tf_seconds,
+)
 from . import flagship as FL
 
 TFS = ("3m", "15m", "30m", "2h")
@@ -86,15 +99,14 @@ def _bars_ctes() -> str:
     return ",".join(parts)
 
 
-def _rec_cte(tf: str, cfg: PipelineConfig) -> str:
+def _rec_cte(tf: str) -> str:
     """Recursive fold per tf: RSI gains/losses, ATR, SuperTrend bands,
     RSI-event run lengths, and the window_indicator_layers S/Q folds for close
     (bollinger) and log-return (realized vol)."""
-    a14 = 1.0 / cfg.rsi_window
-    a_atr = 1.0 / cfg.atr_window
-    a_st = 1.0 / cfg.supertrend_period
-    thr, mp = cfg.rsi_event_threshold, cfg.rsi_min_persist
-    mult = float(cfg.supertrend_mult)
+    a14 = 1.0 / RSI_WINDOW
+    a_atr = 1.0 / ATR_WINDOW
+    a_st = 1.0 / SUPERTREND_PERIOD
+    thr, mult = RSI_EVENT_THRESHOLD, SUPERTREND_MULT
     return f"""
         rec_{tf} AS (
           SELECT entity, ts, rn, close AS pc, close,
@@ -164,13 +176,13 @@ def _rec_cte(tf: str, cfg: PipelineConfig) -> str:
         )"""
 
 
-def _ind_ctes(tf: str, cfg: PipelineConfig) -> str:
+def _ind_ctes(tf: str) -> str:
     """Windowed layers over the recursion output: bollinger width,
     realized vol (rv_win20), roc momentum, RSI features, atr_pct."""
-    n_bb, mp_bb = cfg.bb_window, max(10, cfg.bb_window // 2)
-    n_rv = cfg.rv_windows[0]
-    n_mom = cfg.mom_window
-    mp = cfg.rsi_min_persist
+    n_bb, mp_bb = BB_WINDOW, max(10, BB_WINDOW // 2)
+    n_rv = RV_WINDOWS[0]
+    n_mom = MOM_WINDOW
+    mp = RSI_MIN_PERSIST
     return f"""
         w_{tf} AS (
           SELECT *,
@@ -204,7 +216,7 @@ def _ind_ctes(tf: str, cfg: PipelineConfig) -> str:
                  CASE WHEN ob_run >= {mp} THEN 1.0 ELSE 0.0 END AS rsi_ob,
                  CASE WHEN os_run >= {mp} THEN 1.0 ELSE 0.0 END AS rsi_os,
                  CASE WHEN close > 0 THEN atr / close END AS atr_pct,
-                 CASE WHEN ma <> 0 THEN (2.0 * {float(cfg.bb_std)!r} * sqrt(bvar)) / ma END AS bb,
+                 CASE WHEN ma <> 0 THEN (2.0 * {BB_STD!r} * sqrt(bvar)) / ma END AS bb,
                  sqrt(rvvar) AS rv,
                  CASE WHEN close_lm IS NOT NULL AND close_lm <> 0
                       THEN close / close_lm - 1.0 END AS mom
@@ -247,7 +259,7 @@ def _merged_cte() -> str:
         )"""
 
 
-def _prep_cte(cfg: PipelineConfig) -> str:
+def _prep_cte() -> str:
     mult = {tf: tf_seconds(tf) // tf_seconds(BASE) for tf in TFS}
     vs = []
     for tf in TFS:
@@ -297,7 +309,7 @@ def _prep_cte(cfg: PipelineConfig) -> str:
         )"""
 
 
-def _rank_cte(cfg: PipelineConfig) -> str:
+def _rank_cte() -> str:
     mult = {tf: tf_seconds(tf) // tf_seconds(BASE) for tf in TFS}
     specs = []
     for tf in TFS:
@@ -366,11 +378,9 @@ def _q6(expr: str) -> str:
 
 def flagship_oracle_sql() -> str:
     """The full standalone oracle statement (round-6 output columns
-    matching q_flagship_features, whose config is the default one over
-    ``TFS``)."""
+    matching q_flagship_features, whose timeframes are ``TFS``)."""
     from ..functions.timefeat import DAY_COS6, DAY_SIN6, HOUR_COS6, HOUR_SIN6
 
-    cfg = PipelineConfig(base_tf="3m", resample_targets=TFS)
     eps = FL.SHRINK_EPS
     scale_bb_a = 1.0 - 2.0 * eps
 
@@ -382,7 +392,7 @@ def flagship_oracle_sql() -> str:
     for tf in TFS:
         out_cols += [
             f"{_q6(f'CASE WHEN dir_{tf} >= 0 THEN 1.0 ELSE -1.0 END')} AS \"{tf}_market_state\"",
-            f"{_q6(f'1.0 - 2.0 / (exp(2.0 * (coalesce(mom_{tf}, 0.0) * {float(cfg.mom_tanh_scale)!r})) + 1.0)')}"
+            f"{_q6(f'1.0 - 2.0 / (exp(2.0 * (coalesce(mom_{tf}, 0.0) * {MOM_TANH_SCALE!r})) + 1.0)')}"
             f" AS \"{tf}_mom\"",
             f"{_q6(f'({FL.FUSE_W_FAST!r} * bwrf_{tf} + {1.0 - FL.FUSE_W_FAST!r} * bwrs_{tf}) * {scale_bb_a!r} + {eps!r}')}"
             f" AS \"{tf}_bb_width\"",
@@ -406,16 +416,16 @@ def flagship_oracle_sql() -> str:
         f"{lut(HOUR_COS6, 'hour(ts)')} AS time_hour_cos",
         _q6("1.0 - 2.0 / (exp(2.0 * (retc / ret_scale)) + 1.0)") + " AS ret_3m_log",
     ]
-    rec = ",".join(_rec_cte(tf, cfg) for tf in TFS)
-    ind = ",".join(_ind_ctes(tf, cfg) for tf in TFS)
+    rec = ",".join(_rec_cte(tf) for tf in TFS)
+    ind = ",".join(_ind_ctes(tf) for tf in TFS)
     return f"""
         WITH RECURSIVE
         {_bars_ctes()},
         {rec},
         {ind},
         {_merged_cte()},
-        {_prep_cte(cfg)},
-        {_rank_cte(cfg)}
+        {_prep_cte()},
+        {_rank_cte()}
         SELECT entity, ts, {', '.join(out_cols)}
         FROM fz CROSS JOIN gam
     """

@@ -6,9 +6,9 @@ Stages (each a lazy DataFrame transformation; checkpointable between):
 1. resample: base bars → one OHLCV table per timeframe (A1)
 2. indicators: per-tf stateless window indicators + ONE grouped Arrow
    recurrence stage of array kernels (functions/grouped.py; SURVEY.md §2.5)
-3. merge: iterated backward as-of join of every larger tf onto the base
-   axis, columns prefixed ``{tf}_`` (J1 + P6,
-   `step4_merge_features.py:340-344, 522-535`)
+3. merge: backward as-of join (exact matches allowed, no tolerance) of
+   every larger tf onto the base axis in one fused pass, columns
+   prefixed ``{tf}_`` (J1 + P6, `step4_merge_features.py:340-344, 522-535`)
 4. features: sliding momentum on the base grid (W1), time encodings
    (W12), market state (W13), RSI normalization (W11), log return (W7),
    tanh compressions — the Step5 feature family
@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig, tf_seconds
+from ..config import MOM_TANH_SCALE, RSI_WINDOW, PipelineConfig, tf_seconds
 from ..functions.indicators import (
     apply_window_indicators,
     window_indicator_layers,
@@ -31,7 +31,7 @@ from ..functions.indicators import (
 from ..functions.normalize import market_state, tanh_compress
 from ..functions.recurrence import compute_recurrence_indicators
 from ..functions.timefeat import time_encodings
-from ..operators.asof import asof_join, asof_join_multi
+from ..operators.asof import asof_join_multi
 from ..operators.resample import resample_ohlcv
 from ..operators.shift import log_return
 from ..tsutil import repartition_by_size
@@ -68,7 +68,8 @@ def indicator_table(
     REUSED across every timeframe (building them per table paid ~750 ms
     of py4j Column construction per tf on the driver). ``window_exprs``:
     pass the prebuilt window_indicator_layers(...) tuple to share it
-    across calls.
+    across calls. ``cfg`` is unused: the indicator parameters are the
+    config.py constants.
 
     ``prepartitioned``: the input is already hash-partitioned by ``by``
     with every entity's rows in one partition (run_pipeline's up-front
@@ -78,11 +79,11 @@ def indicator_table(
     RepartitionByExpression, so this was one full extra shuffle per
     timeframe)."""
     layers, final, drop = window_exprs or window_indicator_layers(
-        cfg, by=by, ts_col=ts_col
+        by=by, ts_col=ts_col
     )
     df = apply_window_indicators(bars_tf, layers, final, drop)
     return compute_recurrence_indicators(
-        df, cfg, by=by, ts_col=ts_col, prepartitioned=prepartitioned
+        df, by=by, ts_col=ts_col, prepartitioned=prepartitioned
     )
 
 
@@ -137,10 +138,9 @@ def merge_timeframes(
     flagship price group keeps ``close``) onto the base axis with
     ``{tf}_`` prefixes.
 
-    A backward ``cfg.align_direction`` fuses all timeframes into ONE
-    sorted window pass (asof_join_multi); forward/nearest run the
-    reference-shaped iterated loop of two-table ``asof_join`` calls
-    (k sorts, k× row-width growth).
+    The merge is backward with exact matches allowed and no tolerance
+    (the reference's default `merge.align_direction`), so all coarser
+    timeframes fuse into ONE sorted window pass (asof_join_multi).
 
     ``axis_tables`` maps tf -> the pre-indicator resampled bar table.
     indicator_table is row-preserving, so each resampled table has
@@ -149,58 +149,40 @@ def merge_timeframes(
     Arrow stage is computed ONCE (payload join) instead of twice
     (r4 scaling work; mapInPandas cannot be column-pruned through).
     """
-    tol = (cfg.tolerance_ms / 1000.0) if cfg.tolerance_ms else None
     rights = {
         f"{tf}_": ind.drop(
             *[c for c in OHLCV if c in ind.columns and c not in keep_right_cols]
         )
         for tf, ind in indicator_tables.items()
     }
-    if cfg.align_direction == "backward":
-        # the base-tf indicator block lives on exactly the base axis —
-        # that's an equi-join, not an as-of join; only coarser tfs as-of.
-        # The as-of runs FIRST, on the naked base: its narrow left payload
-        # (OHLCV) then rides through the union sort, so no re-attach join
-        # exists, and the sort's entity partitioning satisfies the
-        # clustering requirement of both the payload joins and the final
-        # base-block equi-join (no further exchange of the wide frame).
-        base_tf = cfg.resample_targets[0]
-        merged = base
-        base_key = f"{base_tf}_"
-        base_block = None
-        if base_key in rights and cfg.allow_exact_match and tol is None:
-            r = rights.pop(base_key)
-            base_block = r.select(
-                by, ts_col, *[F.col(c).alias(f"{base_key}{c}") for c in r.columns if c not in (by, ts_col)]
-            )
-        if rights:
-            merged = asof_join_multi(
-                merged,
-                rights,
-                on=ts_col,
-                by=by,
-                allow_exact_matches=cfg.allow_exact_match,
-                tolerance_s=tol,
-                axis_tables={
-                    f"{tf}_": ax for tf, ax in (axis_tables or {}).items()
-                    if f"{tf}_" in rights
-                },
-            )
-        if base_block is not None:
-            merged = merged.join(base_block, [by, ts_col], "left")
-        return merged
+    # the base-tf indicator block lives on exactly the base axis —
+    # that's an equi-join, not an as-of join; only coarser tfs as-of.
+    # The as-of runs FIRST, on the naked base: its narrow left payload
+    # (OHLCV) then rides through the union sort, so no re-attach join
+    # exists, and the sort's entity partitioning satisfies the
+    # clustering requirement of both the payload joins and the final
+    # base-block equi-join (no further exchange of the wide frame).
+    base_key = f"{cfg.base_tf}_"
     merged = base
-    for tf, ind in indicator_tables.items():
-        merged = asof_join(
+    base_block = None
+    if base_key in rights:
+        r = rights.pop(base_key)
+        base_block = r.select(
+            by, ts_col, *[F.col(c).alias(f"{base_key}{c}") for c in r.columns if c not in (by, ts_col)]
+        )
+    if rights:
+        merged = asof_join_multi(
             merged,
-            rights[f"{tf}_"],
+            rights,
             on=ts_col,
             by=by,
-            direction=cfg.align_direction,
-            allow_exact_matches=cfg.allow_exact_match,
-            tolerance_s=tol,
-            right_prefix=f"{tf}_",
-        ).drop(f"{tf}_matched_{ts_col}")
+            axis_tables={
+                f"{tf}_": ax for tf, ax in (axis_tables or {}).items()
+                if f"{tf}_" in rights
+            },
+        )
+    if base_block is not None:
+        merged = merged.join(base_block, [by, ts_col], "left")
     return merged
 
 
@@ -211,28 +193,26 @@ def feature_table(
     wide table. Emits per-tf ``{tf}_market_state/{tf}_mom_n/{tf}_rsi_n``
     plus time encodings and the base log return."""
     df = merged
-    base_tf = cfg.resample_targets[0]
     new_cols = {}
     for tf in cfg.resample_targets:
-        st = f"{tf}_supertrend_direction"
-        if st in df.columns:
-            new_cols[f"{tf}_market_state"] = market_state(F.col(st))
-        mom = f"{tf}_mom"
-        if mom in df.columns:
-            new_cols[f"{tf}_mom_n"] = tanh_compress(
-                F.coalesce(F.col(mom), F.lit(0.0)), cfg.mom_tanh_scale
-            )
-        rsi = f"{tf}_rsi{cfg.rsi_window}"
-        if rsi in df.columns:
-            # reshaped [-100,100] → [-1,1] via /80 clip (reference divisor 80,
-            # `step5_featueres_unified.py:942-946`)
-            new_cols[f"{tf}_rsi_n"] = F.least(
-                F.greatest(F.coalesce(F.col(rsi), F.lit(0.0)) / 80.0, F.lit(-1.0)),
-                F.lit(1.0),
-            )
+        new_cols[f"{tf}_market_state"] = market_state(
+            F.col(f"{tf}_supertrend_direction")
+        )
+        new_cols[f"{tf}_mom_n"] = tanh_compress(
+            F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0)), MOM_TANH_SCALE
+        )
+        # reshaped [-100,100] → [-1,1] via /80 clip (reference divisor 80,
+        # `step5_featueres_unified.py:942-946`)
+        new_cols[f"{tf}_rsi_n"] = F.least(
+            F.greatest(
+                F.coalesce(F.col(f"{tf}_rsi{RSI_WINDOW}"), F.lit(0.0)) / 80.0,
+                F.lit(-1.0),
+            ),
+            F.lit(1.0),
+        )
     df = df.withColumns(new_cols)
     df = time_encodings(df, ts_col=ts_col)
-    ret_col = f"ret_{base_tf}_log"
+    ret_col = f"ret_{cfg.base_tf}_log"
     if ret_col not in df.columns:
         df = log_return(df, src="close", out=ret_col, by=by, ts_col=ts_col)
     else:
@@ -285,14 +265,14 @@ def run_pipeline(
     # write_bucketed_table) — the up-front exchange is skipped and the
     # scan's layout plays the role of the repartition below.
     tfs = resample_all(bars, cfg, by=by, ts_col=ts_col, persist=persist_stages)
-    base = tfs[cfg.resample_targets[0]]
+    base = tfs[cfg.base_tf]
     # base log return on the NARROW axis (7 cols) — feature_table would
     # otherwise window-sort the merged ~100-col frame for one lag; the
     # column rides the narrow as-of union like the OHLCV payload
     base = log_return(
-        base, src="close", out=f"ret_{cfg.resample_targets[0]}_log", by=by, ts_col=ts_col
+        base, src="close", out=f"ret_{cfg.base_tf}_log", by=by, ts_col=ts_col
     )
-    wexprs = window_indicator_layers(cfg, by=by, ts_col=ts_col)
+    wexprs = window_indicator_layers(by=by, ts_col=ts_col)
     inds = {
         # the tf tables inherit the entity hash layout (subset-key
         # distribution satisfaction leaves agg output partitioning at

@@ -42,7 +42,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# ``local[N]`` width when the caller names none: SPARK_GRAFT_CPUS, else
+# the cores this process may run on (one Python worker per core)
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 # headroom over the largest measured run: ~290 whole-stage spans
 # across a 4-timeframe flagship run

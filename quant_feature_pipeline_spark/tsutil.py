@@ -21,12 +21,11 @@ def epoch_seconds(col: Column | str) -> Column:
     return c.cast("timestamp_ltz").cast("double")
 
 
-# conf key: target INPUT bytes per partition for the up-front entity
-# hash partitioning. Sized well below the shuffle advisory because the
+# target INPUT bytes per partition for the up-front entity hash
+# partitioning. Sized well below the shuffle advisory because the
 # pipeline's widest intermediate (the ~100-column merged frame) is
 # ~10-25x wider than the narrow bar input that the estimate measures.
-INPUT_BYTES_PER_PARTITION_CONF = "spark.qfps.inputBytesPerPartition"
-DEFAULT_INPUT_BYTES_PER_PARTITION = 8 << 20  # 8 MiB of input per partition
+INPUT_BYTES_PER_PARTITION = 8 << 20  # 8 MiB of input per partition
 
 
 def repartition_by_size(df, *keys):
@@ -35,8 +34,8 @@ def repartition_by_size(df, *keys):
     partitioning scale-adaptive — derive from input size — rather than a
     constant tuned for one scale).
 
-    count = max(defaultParallelism, ceil(estimated_bytes / target)),
-    target = spark.qfps.inputBytesPerPartition (default 8 MiB). The
+    count = max(defaultParallelism,
+                ceil(estimated_bytes / INPUT_BYTES_PER_PARTITION)). The
     count is explicit and deterministic at plan time: deriving it from
     statistics rather than leaving a bare repartition for AQE avoids the
     near-boundary coalescing flips that can merge the downstream WIDE
@@ -56,14 +55,8 @@ def repartition_by_size(df, *keys):
             ", ".join(map(str, keys)),
         )
         return df.repartition(*keys)
-    spark = df.sparkSession
-    target = int(
-        spark.conf.get(
-            INPUT_BYTES_PER_PARTITION_CONF,
-            str(DEFAULT_INPUT_BYTES_PER_PARTITION),
-        )
-    )
     parts = max(
-        spark.sparkContext.defaultParallelism, -(-est // max(target, 1))
+        df.sparkSession.sparkContext.defaultParallelism,
+        -(-est // INPUT_BYTES_PER_PARTITION),
     )
     return df.repartition(parts, *keys)

@@ -12,7 +12,18 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from quant_feature_pipeline_spark.config import PipelineConfig
+from quant_feature_pipeline_spark.config import (
+    ATR_WINDOW,
+    EMA_SPANS,
+    MACD_FAST,
+    MACD_SIGNAL,
+    MACD_SLOW,
+    RSI_EVENT_THRESHOLD,
+    RSI_MIN_PERSIST,
+    RSI_WINDOW,
+    SUPERTREND_MULT,
+    SUPERTREND_PERIOD,
+)
 from quant_feature_pipeline_spark.functions.rank import _rank_kernel
 from quant_feature_pipeline_spark.functions.recurrence import supertrend_direction
 
@@ -75,9 +86,7 @@ def rsi_events(
     )
 
 
-def indicator_frame_ref(
-    pdf: pd.DataFrame, cfg: PipelineConfig, ts_col: str = "ts"
-) -> pd.DataFrame:
+def indicator_frame_ref(pdf: pd.DataFrame, ts_col: str = "ts") -> pd.DataFrame:
     """Single-entity, ts-sorted pandas REFERENCE kernel — the
     Series-based formulation the production array kernel
     (recurrence._indicator_arrays) is asserted bit-identical against
@@ -93,21 +102,21 @@ def indicator_frame_ref(
     low = pdf["low"].astype(np.float64)
     new: dict[str, object] = {}
 
-    for span in cfg.ema_spans:
+    for span in EMA_SPANS:
         new[f"ema_{span}"] = c.ewm(span=span, adjust=False).mean()
 
-    raw_rsi = rsi_wilder(c, cfg.rsi_window)
+    raw_rsi = rsi_wilder(c, RSI_WINDOW)
     reshaped = (raw_rsi - 50.0) * 2.0
-    new[f"rsi{cfg.rsi_window}"] = reshaped
-    ev, ob, os_ = rsi_events(reshaped, cfg.rsi_event_threshold, cfg.rsi_min_persist)
+    new[f"rsi{RSI_WINDOW}"] = reshaped
+    ev, ob, os_ = rsi_events(reshaped, RSI_EVENT_THRESHOLD, RSI_MIN_PERSIST)
     new["rsi_event"] = ev
     new["rsi_overbought"] = ob
     new["rsi_oversold"] = os_
 
-    ema_fast = c.ewm(span=cfg.macd_fast, adjust=False).mean()
-    ema_slow = c.ewm(span=cfg.macd_slow, adjust=False).mean()
+    ema_fast = c.ewm(span=MACD_FAST, adjust=False).mean()
+    ema_slow = c.ewm(span=MACD_SLOW, adjust=False).mean()
     macd = ema_fast - ema_slow
-    signal = macd.ewm(span=cfg.macd_signal, adjust=False).mean()
+    signal = macd.ewm(span=MACD_SIGNAL, adjust=False).mean()
     new["macd"] = macd
     new["macd_signal"] = signal
     new["macd_histogram"] = macd - signal
@@ -122,12 +131,12 @@ def indicator_frame_ref(
     )
     tr_np = np.where(np.isnan(tr_np), hl, tr_np)
     tr = pd.Series(tr_np, index=c.index)
-    atr = _wilder(tr, cfg.atr_window)
-    new[f"atr{cfg.atr_window}"] = atr
-    new[f"atr{cfg.atr_window}_pct"] = np.where(c > 0, atr / c, np.nan)
+    atr = _wilder(tr, ATR_WINDOW)
+    new[f"atr{ATR_WINDOW}"] = atr
+    new[f"atr{ATR_WINDOW}_pct"] = np.where(c > 0, atr / c, np.nan)
 
-    st_atr = _wilder(tr, cfg.supertrend_period).to_numpy()
+    st_atr = _wilder(tr, SUPERTREND_PERIOD).to_numpy()
     new["supertrend_direction"] = supertrend_direction(
-        h.to_numpy(), low.to_numpy(), c.to_numpy(), st_atr, cfg.supertrend_mult
+        h.to_numpy(), low.to_numpy(), c.to_numpy(), st_atr, SUPERTREND_MULT
     )
     return pd.concat([pdf, pd.DataFrame(new, index=pdf.index)], axis=1)

@@ -8,7 +8,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from quant_feature_pipeline_spark.config import PipelineConfig
 from quant_feature_pipeline_spark.functions.grouped import (
     grouped_apply,
     grouped_apply_chunked,
@@ -68,12 +67,11 @@ def test_chunked_recurrence_identical_on_huge_entity(spark):
     (span-200 EMA, (1-alpha)^4096) below float64 ulp."""
     pdf = make_bars_pdf(n=16_000, entities=("HUGE",))
     df = spark.createDataFrame(pdf)
-    cfg = PipelineConfig()
 
-    want = _key(compute_recurrence_indicators(df, cfg).toPandas())
+    want = _key(compute_recurrence_indicators(df).toPandas())
     got = _key(
         compute_recurrence_indicators(
-            df, cfg, chunk_rows=4_096, warmup_rows=4_096
+            df, chunk_rows=4_096, warmup_rows=4_096
         ).toPandas()
     )
     assert len(got) == len(want) == len(pdf)
@@ -162,7 +160,7 @@ def test_stage_metrics_accumulators(spark):
     pdf = make_bars_pdf(n=500, entities=("A", "B", "C"))
     df = spark.createDataFrame(pdf)
     m = StageMetrics(spark, "recurrence")
-    out = compute_recurrence_indicators(df, PipelineConfig(), metrics=m)
+    out = compute_recurrence_indicators(df, metrics=m)
     n = out.count()
     rep = m.report()
     assert n == len(pdf)
@@ -182,14 +180,13 @@ def test_auto_local_chunking_bit_identical(spark):
     pdf = make_bars_pdf(n=16_000, entities=("HUGE", "TINY"))
     pdf = pdf[(pdf.entity == "HUGE") | (pdf.index % 40 == 0)].reset_index(drop=True)
     df = spark.createDataFrame(pdf)
-    cfg = PipelineConfig()
 
     want = _key(
-        compute_recurrence_indicators(df, cfg, auto_chunk_rows=None).toPandas()
+        compute_recurrence_indicators(df, auto_chunk_rows=None).toPandas()
     )
     got = _key(
         compute_recurrence_indicators(
-            df, cfg, auto_chunk_rows=8_000, local_chunk_rows=5_000
+            df, auto_chunk_rows=8_000, local_chunk_rows=5_000
         ).toPandas()
     )
     assert len(got) == len(want) == len(pdf)

@@ -11,7 +11,14 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from quant_feature_pipeline_spark.config import PipelineConfig
+from quant_feature_pipeline_spark.config import (
+    BB_STD,
+    BB_WINDOW,
+    MOM_WINDOW,
+    RV_WINDOWS,
+    SMA_WINDOWS,
+    PipelineConfig,
+)
 from quant_feature_pipeline_spark.functions.indicators import (
     apply_window_indicators,
     rolling_zscore,
@@ -25,14 +32,12 @@ from quant_feature_pipeline_spark.functions.recurrence import (
 from .conftest import assert_frame_close, make_bars_pdf
 from .oracles import indicator_frame_ref
 
-CFG = PipelineConfig()
-
 
 def test_recurrence_stage_matches_pandas_per_entity(spark):
     pdf = make_bars_pdf(n=300, entities=("A", "B", "C"))
-    got = compute_recurrence_indicators(spark.createDataFrame(pdf), CFG).toPandas()
+    got = compute_recurrence_indicators(spark.createDataFrame(pdf)).toPandas()
     want = pd.concat(
-        [indicator_frame_ref(g.copy(), CFG) for _, g in pdf.groupby("entity")],
+        [indicator_frame_ref(g.copy()) for _, g in pdf.groupby("entity")],
         ignore_index=True,
     )
     assert_frame_close(got, want, keys=["entity", "ts"])
@@ -41,7 +46,7 @@ def test_recurrence_stage_matches_pandas_per_entity(spark):
 def test_ema_first_principles(spark):
     pdf = make_bars_pdf(n=200, entities=("A",))
     got = (
-        compute_recurrence_indicators(spark.createDataFrame(pdf), CFG)
+        compute_recurrence_indicators(spark.createDataFrame(pdf))
         .toPandas()
         .sort_values("ts")
     )
@@ -58,7 +63,7 @@ def test_ema_first_principles(spark):
 def test_wilder_rsi_first_principles(spark):
     pdf = make_bars_pdf(n=250, entities=("A",))
     got = (
-        compute_recurrence_indicators(spark.createDataFrame(pdf), CFG)
+        compute_recurrence_indicators(spark.createDataFrame(pdf))
         .toPandas()
         .sort_values("ts")["rsi14"]
         .to_numpy()
@@ -83,7 +88,7 @@ def test_wilder_rsi_first_principles(spark):
 def test_macd_first_principles(spark):
     pdf = make_bars_pdf(n=150, entities=("A",))
     got = (
-        compute_recurrence_indicators(spark.createDataFrame(pdf), CFG)
+        compute_recurrence_indicators(spark.createDataFrame(pdf))
         .toPandas()
         .sort_values("ts")
     )
@@ -109,14 +114,14 @@ def test_rsi_event_persistence():
 
 def test_supertrend_direction_values(spark):
     pdf = make_bars_pdf(n=200, entities=("A", "B"))
-    got = compute_recurrence_indicators(spark.createDataFrame(pdf), CFG).toPandas()
+    got = compute_recurrence_indicators(spark.createDataFrame(pdf)).toPandas()
     assert set(got["supertrend_direction"].unique()) <= {-1.0, 1.0}
 
 
 def test_atr_first_principles(spark):
     pdf = make_bars_pdf(n=150, entities=("A",))
     got = (
-        compute_recurrence_indicators(spark.createDataFrame(pdf), CFG)
+        compute_recurrence_indicators(spark.createDataFrame(pdf))
         .toPandas()
         .sort_values("ts")
     )
@@ -134,19 +139,16 @@ def test_atr_first_principles(spark):
     )
 
 
-def _windows(df, **cfg):
-    """The production window-indicator layers for a PipelineConfig."""
-    return apply_window_indicators(df, *window_indicator_layers(PipelineConfig(**cfg)))
+def _windows(df):
+    """The production window-indicator layers."""
+    return apply_window_indicators(df, *window_indicator_layers())
 
 
 def test_window_indicators_vs_pandas(spark):
     pdf = make_bars_pdf(n=300)
     sdf = spark.createDataFrame(pdf)
     got = rolling_zscore(
-        _windows(
-            sdf, sma_windows=(5, 20), bb_window=20, bb_std=2.0,
-            mom_window=14, rv_windows=(20,),
-        ),
+        _windows(sdf),
         20,
         "close",
         out="z20",
@@ -155,17 +157,18 @@ def test_window_indicators_vs_pandas(spark):
     for e, g in pdf.groupby("entity"):
         g = g.sort_values("ts").reset_index(drop=True)
         r = g.copy()
-        r["sma_5"] = g["close"].rolling(5, min_periods=1).mean()
-        r["sma_20"] = g["close"].rolling(20, min_periods=1).mean()
-        ma = g["close"].rolling(20, min_periods=10).mean()
-        sd = g["close"].rolling(20, min_periods=10).std()
-        r["bb_width"] = 2 * 2.0 * sd / ma
-        r["mom"] = g["close"] / g["close"].shift(14) - 1.0
+        for n in SMA_WINDOWS:
+            r[f"sma_{n}"] = g["close"].rolling(n, min_periods=1).mean()
+        ma = g["close"].rolling(BB_WINDOW, min_periods=10).mean()
+        sd = g["close"].rolling(BB_WINDOW, min_periods=10).std()
+        r["bb_width"] = 2 * BB_STD * sd / ma
+        r["mom"] = g["close"] / g["close"].shift(MOM_WINDOW) - 1.0
         mu = g["close"].rolling(20, min_periods=1).mean()
         sg = g["close"].rolling(20, min_periods=1).std(ddof=0)
         r["z20"] = (g["close"] - mu) / np.maximum(sg, 1e-6)
         lr = np.log(g["close"] / g["close"].shift(1))
-        r["rv_win20"] = lr.rolling(20, min_periods=1).std()
+        for n in RV_WINDOWS:
+            r[f"rv_win{n}"] = lr.rolling(n, min_periods=1).std()
         out.append(r)
     want = pd.concat(out, ignore_index=True)
     # pandas rolling.std over a single point is NaN; Spark stddev_samp null — equal_nan covers
@@ -176,22 +179,19 @@ def test_rollstats_nan_does_not_poison(spark):
     """A single NaN input must behave like a missing value: later windows
     that no longer contain it are unaffected (pandas skip-NaN semantics);
     windows that do contain it use the remaining observations."""
-    pdf = make_bars_pdf(n=40, entities=("A",))
+    pdf = make_bars_pdf(n=60, entities=("A",))
     pdf.loc[10, "close"] = np.nan
     df = spark.createDataFrame(pdf)
-    got = (
-        _windows(df, sma_windows=(5,), bb_window=12)
-        .toPandas().sort_values("ts").reset_index(drop=True)
-    )
+    got = _windows(df).toPandas().sort_values("ts").reset_index(drop=True)
     want = pdf["close"].rolling(5, min_periods=1).mean()
     np.testing.assert_allclose(
         got["sma_5"].to_numpy(), want.to_numpy(), rtol=1e-9, equal_nan=True
     )
     # bb_width sums squares too: the NaN must not poison Q either
-    ma = pdf["close"].rolling(12, min_periods=10).mean()
-    sd = pdf["close"].rolling(12, min_periods=10).std()
+    ma = pdf["close"].rolling(BB_WINDOW, min_periods=10).mean()
+    sd = pdf["close"].rolling(BB_WINDOW, min_periods=10).std()
     np.testing.assert_allclose(
-        got["bb_width"].to_numpy(), (2 * 2.0 * sd / ma).to_numpy(),
+        got["bb_width"].to_numpy(), (2 * BB_STD * sd / ma).to_numpy(),
         rtol=1e-9, equal_nan=True,
     )
 
@@ -203,15 +203,14 @@ def test_indicator_table_stage_reorder_equivalence(spark):
     ORDER may differ."""
     from quant_feature_pipeline_spark.plans.pipeline import indicator_table
 
-    cfg = CFG
     pdf = make_bars_pdf(n=500, entities=("A", "B"), seed=11)
     df = spark.createDataFrame(pdf)
 
     old = apply_window_indicators(
-        compute_recurrence_indicators(df, cfg), *window_indicator_layers(cfg)
+        compute_recurrence_indicators(df), *window_indicator_layers()
     )
 
-    new = indicator_table(df, cfg)
+    new = indicator_table(df, PipelineConfig())
     assert sorted(new.columns) == sorted(old.columns)
     key = ["entity", "ts"]
     a = old.toPandas().sort_values(key).reset_index(drop=True)

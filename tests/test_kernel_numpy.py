@@ -8,7 +8,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from quant_feature_pipeline_spark.config import PipelineConfig
 from quant_feature_pipeline_spark.functions.recurrence import (
     _indicator_arrays,
     indicator_columns,
@@ -16,18 +15,15 @@ from quant_feature_pipeline_spark.functions.recurrence import (
 
 from .oracles import indicator_frame_ref
 
-CFG = PipelineConfig()
-
 
 def _assert_bit_identical(pdf: pd.DataFrame) -> None:
-    ref = indicator_frame_ref(pdf.copy(), CFG)
+    ref = indicator_frame_ref(pdf.copy())
     # the kernel's contract: one group's rows, stable-sorted by ts
     srt = pdf.sort_values("ts", kind="mergesort")
     got = _indicator_arrays(
-        *(srt[c].to_numpy(dtype=np.float64) for c in ("close", "high", "low")),
-        CFG,
+        *(srt[c].to_numpy(dtype=np.float64) for c in ("close", "high", "low"))
     )
-    assert list(got) == indicator_columns(CFG)
+    assert list(got) == indicator_columns()
     assert list(ref.columns) == list(pdf.columns) + list(got)
     for c, g in got.items():
         r = ref[c].to_numpy()

@@ -1,5 +1,5 @@
 """End-to-end pipeline properties: token passthrough, temporal leakage,
-schema contract, non-backward merge directions, checkpoint warm-start
+schema contract, the base-timeframe check, checkpoint warm-start
 equivalence."""
 
 from __future__ import annotations
@@ -12,19 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from quant_feature_pipeline_spark.config import PipelineConfig
-from quant_feature_pipeline_spark.operators.asof import asof_join
 from quant_feature_pipeline_spark.plans.checkpoint import Checkpointer
-from quant_feature_pipeline_spark.plans.pipeline import (
-    OHLCV,
-    indicator_table,
-    resample_all,
-    run_pipeline,
-)
+from quant_feature_pipeline_spark.plans.pipeline import run_pipeline
 from quant_feature_pipeline_spark.plans.schema_contract import schema_sha
 from quant_feature_pipeline_spark.sources.bars import bars_from_tokens
 from quant_feature_pipeline_spark.sources.tokens import synth_token_table
 
-from .conftest import T0, assert_frame_close, make_bars_pdf
+from .conftest import T0, make_bars_pdf
 
 CFG = PipelineConfig(base_tf="3m", resample_targets=("3m", "15m"))
 BAR_COLS = ["entity", "ts", "open", "high", "low", "close", "volume"]
@@ -79,27 +73,13 @@ def test_schema_sha_contract(spark):
     assert sha1 == sha2 and len(sha1) == 40
 
 
-@pytest.mark.parametrize("direction", ["forward", "nearest"])
-def test_pipeline_non_backward_merge(spark, direction):
-    """A forward/nearest ``align_direction`` runs the iterated two-table
-    merge loop: the feature table keeps the base axis, and every
-    ``15m_`` indicator column equals a plain as-of join of the 15m
-    indicator table in that direction."""
-    cfg = PipelineConfig(
-        base_tf="3m", resample_targets=("3m", "15m"), align_direction=direction
-    )
-    bars = spark.createDataFrame(make_bars_pdf()[BAR_COLS])
-    tfs = resample_all(bars, cfg)
-    base = tfs["3m"].select("entity", "ts")
-    right = indicator_table(tfs["15m"], cfg).drop(*OHLCV)
-    want = (
-        asof_join(base, right, direction=direction, right_prefix="15m_")
-        .drop("15m_matched_ts")
-        .toPandas()
-    )
-    got = run_pipeline(bars, cfg).select(*want.columns).toPandas()
-    assert len(got) == base.count()
-    assert_frame_close(got, want, keys=["entity", "ts"], rtol=0, atol=0)
+def test_base_tf_must_be_the_first_target():
+    """The base axis is ``resample_targets[0]``; a different ``base_tf``
+    would name a return column the flagship never emits."""
+    with pytest.raises(ValueError, match="'3m'.*'15m', '1h'"):
+        PipelineConfig(base_tf="3m", resample_targets=("15m", "1h"))
+    with pytest.raises(ValueError):
+        PipelineConfig(base_tf="3m", resample_targets=())
 
 
 def test_checkpoint_warm_start_equivalence(spark, tmp_path):

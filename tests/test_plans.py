@@ -52,14 +52,13 @@ def test_asof_union_ffill_single_window(spark):
 
 def test_prefix_sum_sma_no_sliding_frame(spark):
     """sma must compile to running frames + lag, not O(W) sliding frames."""
-    from quant_feature_pipeline_spark.config import PipelineConfig
     from quant_feature_pipeline_spark.functions.indicators import (
         apply_window_indicators,
         window_indicator_layers,
     )
 
     pdf = make_bars_pdf(n=50)
-    layers = window_indicator_layers(PipelineConfig(sma_windows=(5, 200)))
+    layers = window_indicator_layers()  # SMA_WINDOWS holds 200
     p = _plan(apply_window_indicators(spark.createDataFrame(pdf), *layers))
     # sliding frames print as 'ROWS BETWEEN 199 PRECEDING AND CURRENT ROW'
     assert "199 PRECEDING" not in p

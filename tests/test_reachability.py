@@ -14,6 +14,10 @@ Name loads count when the file imports the name (through an alias too)
 or defines it; attribute loads (``module.name``, ``cfg.field``) count by
 attribute name.
 
+A field is also an option: some production ``PipelineConfig(...)`` call
+must set it to something other than its default, or else it is a
+constant in ``config.py``.
+
 Parameters get the same treatment: every defaulted parameter of a public
 package function is set by some production call (by keyword, by position
 or through a ``*``/``**`` splat), or else it is a constant. And every
@@ -280,6 +284,56 @@ def test_every_config_field_is_read():
     fields, _ = _config_fields()
     _, unread, _ = _reachability()
     assert fields and not unread, f"PipelineConfig fields nothing reads: {unread}"
+
+
+def _config_setters() -> set[str]:
+    """The ``PipelineConfig`` fields some production call sets (by
+    keyword, by position or through a splat) to a value that is not a
+    literal equal to the field's default."""
+    cls = next(
+        n for n in _parse(PKG / "config.py").body
+        if isinstance(n, ast.ClassDef) and n.name == "PipelineConfig"
+    )
+    default = {
+        s.target.id: ast.literal_eval(s.value) for s in cls.body
+        if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+        and s.value is not None
+    }
+    fields = list(default)
+
+    def differs(field: str, value: ast.expr) -> bool:
+        try:
+            return ast.literal_eval(value) != default[field]
+        except ValueError:  # not a literal: a variable, an expression
+            return True
+
+    got: set[str] = set()
+    for _, _, name, call in _call_sites(CALLERS):
+        if name != "PipelineConfig" or call is None:
+            continue
+        for i, a in enumerate(call.args):
+            if isinstance(a, ast.Starred):
+                got |= set(fields[i:])
+                break
+            if i < len(fields) and differs(fields[i], a):
+                got.add(fields[i])
+        for k in call.keywords:
+            if k.arg is None:
+                got |= set(fields)
+            elif k.arg in default and differs(k.arg, k.value):
+                got.add(k.arg)
+    return got
+
+
+def test_every_config_field_is_set_by_production():
+    """A field production never sets (or sets only to its default) is
+    a constant in disguise: move it to a config.py constant and delete
+    the code paths only its other values reached."""
+    fields, _ = _config_fields()
+    unset = [f for f in fields if f not in _config_setters()]
+    assert fields and not unset, (
+        f"{len(unset)} PipelineConfig fields no production call sets: {unset}"
+    )
 
 
 def test_sink_entry_point_allowlist_is_exact():

@@ -88,3 +88,32 @@ def test_default_driver_memory_fits_the_host(monkeypatch):
     assert host(64) == "16384m"  # 16g
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
     assert host(15) == host(64) == "3g"
+
+
+def test_default_parallelism_is_the_host_cores():
+    """With SPARK_GRAFT_CPUS unset, ``local[N]`` is the cores this
+    process may run on, not a fixed width; the env var overrides it. A
+    fresh process, since DEFAULT_CPUS is read at import; no JVM starts:
+    the conf get_spark would build with is printed."""
+    code = (
+        "from quant_feature_pipeline_spark import session\n"
+        "seen = {}\n"
+        "session.build_session = lambda app, conf: seen.update(conf)\n"
+        "session.get_spark()\n"
+        "print(seen['spark.master'], seen['spark.sql.shuffle.partitions'])\n"
+    )
+
+    def run(cpus_env):
+        env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+        if cpus_env is not None:
+            env["SPARK_GRAFT_CPUS"] = cpus_env
+        p = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True,
+            timeout=120, cwd=REPO, env=env,
+        )
+        assert p.returncode == 0, p.stderr[-3000:]
+        return p.stdout.split()
+
+    n = len(os.sched_getaffinity(0))
+    assert run(None) == [f"local[{n}]", str(2 * n)]
+    assert run("3") == ["local[3]", "6"]

@@ -28,7 +28,6 @@ def _job_args(tmp_path, input_path, mode="auto", warmup_bars=600,
         checkpoint_root=str(tmp_path / "ck"),
         output=None,
         output_format="parquet",
-        base_tf="3m",
         targets="3m,15m",
         by="entity",
         ts_col="ts",
