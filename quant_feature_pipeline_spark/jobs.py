@@ -14,13 +14,16 @@ Spark cluster can run:
         --input /data/bars.parquet --checkpoint-root /ck \
         --targets 3m,15m,30m,2h
 
-The job is RESUMABLE: every publish is a Checkpointer snapshot (parquet
-dir + JSON manifest carrying per-entity lineage row counts / max-ts and
-write-latency metrics — Iceberg snapshot commits on a real catalog,
-plans/checkpoint.py). ``--mode auto`` reruns incrementally: only bars
-after ``last_ts - warmup`` are recomputed (the warm-up tail exists
-solely to converge the EMA/Wilder recurrences; its rows are discarded,
-only strictly-new rows publish, keep-last on overlap).
+The job is RESUMABLE: a snapshot is a Checkpointer stage, immutable
+parquet segments under a JSON manifest carrying per-entity lineage row
+counts / min-max ts and write-latency metrics (the Iceberg table model,
+plans/checkpoint.py). A publish writes one segment and then swaps the
+manifest, so a failed publish leaves the previous snapshot live.
+``--mode auto`` reruns incrementally: only bars after
+``last_ts - warmup`` are recomputed (the warm-up tail exists solely to
+converge the EMA/Wilder recurrences; its rows are discarded), and only
+the rows from a short backtrack before ``last_ts`` on are written, as a
+new segment that shadows the history rows it overlaps (keep-last).
 
 No per-row Python anywhere on this path — the pipeline underneath is
 the same Catalyst/Arrow plan the library tests gate.
@@ -31,10 +34,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 import time
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -97,7 +98,7 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
     )
 
     t0 = time.time()
-    plan = ck.resume_plan(FEATURES_STAGE, warmup_s=warmup_s, ts_col=args.ts_col)
+    plan = ck.resume_plan(FEATURES_STAGE, warmup_s=warmup_s)
     incremental = args.mode == "auto" and not plan.full_rebuild
     if incremental:
         # recompute only the tail; warm-up rows converge the recurrences
@@ -105,42 +106,29 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
         # the watermark (ADVICE r5): the bucket labeled last_ts may have
         # been partial at checkpoint time (input bars finer than base_tf)
         # or revised by late arrivals — republishing the last few base
-        # buckets lets merge_increment's keep-last dedup replace any
-        # stale boundary rows, mirroring the reference's 5-period
-        # backtrack (step1_data.py:864-872). Republished rows sit deep
-        # inside the warm-up-converged zone, so their recomputed values
-        # match the full rebuild to the same tolerance as the new rows.
+        # buckets lets the new segment shadow any stale boundary rows
+        # (keep-last), mirroring the reference's 5-period backtrack
+        # (step1_data.py:864-872). Republished rows sit deep inside the
+        # warm-up-converged zone, so their recomputed values match the
+        # full rebuild to the same tolerance as the new rows.
         backtrack_s = 5 * tf_seconds(cfg.base_tf)
         tail = bars.filter(F.col(args.ts_col) >= F.lit(plan.recompute_from))
         feats = run_pipeline(tail, cfg, by=args.by, ts_col=args.ts_col).filter(
             F.col(args.ts_col)
             >= F.lit(plan.last_ts) - F.expr(f"INTERVAL {backtrack_s} SECONDS")
         )
-        publish = ck.merge_increment(
-            FEATURES_STAGE, feats, keys=(args.by, args.ts_col)
-        )
     else:
-        publish = run_pipeline(bars, cfg, by=args.by, ts_col=args.ts_col)
+        feats = run_pipeline(bars, cfg, by=args.by, ts_col=args.ts_col)
     compute_planned_s = time.time() - t0
 
-    # snapshot-publish is atomic-by-rename semantics on a real catalog;
-    # merge_increment reads the CURRENT snapshot lazily, so materialize
-    # the merged result before the overwrite replaces what it reads
+    # a publish writes one new segment and swaps the manifest; until the
+    # swap the previous snapshot stays the live one
     t0 = time.time()
-    staging = None
-    try:
-        if incremental:
-            staging = os.path.join(
-                args.checkpoint_root, f"_staging-{uuid.uuid4().hex[:8]}"
-            )
-            publish.write.mode("overwrite").parquet(staging)
-            publish = spark.read.parquet(staging)
-        path = ck.write(publish, FEATURES_STAGE, by=args.by, ts_col=args.ts_col)
-        publish_s = time.time() - t0
-    finally:
-        # a failed publish must not leave its staging copy behind
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
+    if incremental:
+        ck.merge_increment(FEATURES_STAGE, feats, keys=(args.by, args.ts_col))
+    else:
+        ck.write(feats, FEATURES_STAGE, by=args.by, ts_col=args.ts_col)
+    publish_s = time.time() - t0
 
     if args.output:
         from .sources.sink import write_table
@@ -150,8 +138,10 @@ def build_features(spark: SparkSession, args: argparse.Namespace) -> dict:
     manifest = ck.manifest(FEATURES_STAGE)
     metrics = {
         "mode": "incremental" if incremental else "full",
-        "snapshot": path,
+        "snapshot": os.path.join(args.checkpoint_root, FEATURES_STAGE),
         "rows_published": manifest["metrics"]["total_rows"],
+        "rows_written": manifest["metrics"]["rows_written"],
+        "segments": len(manifest["segments"]),
         "entities": len(manifest["lineage"]),
         "schema_sha": manifest["schema_sha"],
         "plan_s": round(compute_planned_s, 3),

@@ -7,9 +7,9 @@ Reference behaviors re-expressed (not ported):
 - P4 dedup keep-last by ts (`step2_resample.py:143`,
   `tools/incremental.py:33-40`) — here a row_number window
 
-The S5 last-timestamp probe (`tools/io_paths.py:33-134`) is the
-snapshot max(ts) aggregate in ``Checkpointer.resume_plan``
-(plans/checkpoint.py).
+The S5 last-timestamp probe (`tools/io_paths.py:33-134`) is
+``Checkpointer.resume_plan`` (plans/checkpoint.py), which reads the
+newest ts from the snapshot manifest's lineage and runs no Spark job.
 """
 
 from __future__ import annotations

@@ -101,8 +101,9 @@ def test_checkpoint_warm_start_equivalence(spark, tmp_path):
     want = full.toPandas().sort_values("ts").reset_index(drop=True)
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
 
+    # merge_increment commits: the lineage counts the merged snapshot
     manifest = ck.manifest("bars")
-    assert manifest["lineage"]["A"]["rows"] == len(hist)
+    assert manifest["lineage"]["A"]["rows"] == len(pdf)
     assert manifest["schema_sha"] == schema_sha(merged.columns)
 
 
@@ -117,6 +118,51 @@ def test_checkpoint_merge_dedup_keeps_increment(spark, tmp_path):
     assert len(merged) == len(pdf)
     tail = merged.sort_values("ts").tail(10)
     assert (tail["close"] == -1.0).all()
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_resume_plan_reads_no_data(spark, tmp_path, ts_type):
+    """resume_plan takes last_ts from the manifest: it starts no Spark
+    job and agrees with a max(ts) over the snapshot, for both timestamp
+    types, on a one-segment and a two-segment snapshot."""
+    pdf = make_bars_pdf(n=120, entities=("A", "B"))
+    bars = spark.createDataFrame(pdf).withColumn("ts", F.col("ts").cast(ts_type))
+    ck = Checkpointer(str(tmp_path / "ck"), spark)
+    ck.write(bars.where(F.col("ts") < F.lit(T0 + datetime.timedelta(minutes=90))), "bars")
+    tracker = spark.sparkContext.statusTracker()
+
+    def check():
+        jobs = set(tracker.getJobIdsForGroup())
+        plan = ck.resume_plan("bars", warmup_s=600)
+        assert set(tracker.getJobIdsForGroup()) == jobs
+        want = ck.read("bars").agg(F.max("ts")).first()[0]
+        assert not plan.full_rebuild and plan.last_ts == want
+        assert plan.recompute_from == want - datetime.timedelta(seconds=600)
+        return want
+
+    last = check()
+    ck.merge_increment("bars", bars.where(F.col("ts") >= F.lit(last)))
+    assert len(ck.manifest("bars")["segments"]) == 2
+    assert check() > last
+
+
+def test_unsegmented_snapshot_rebuilds(spark, tmp_path):
+    """A stage written before snapshots had segments (parquet files and
+    a manifest without ``segments``) resumes as a full rebuild; the full
+    write that follows replaces its files."""
+    import json
+
+    ck = Checkpointer(str(tmp_path / "ck"), spark)
+    stage = tmp_path / "ck" / "bars"
+    spark.createDataFrame(make_bars_pdf(n=20)).write.parquet(str(stage))
+    (stage / "_manifest.json").write_text(json.dumps({"stage": "bars", "lineage": {}}))
+    assert ck.resume_plan("bars", warmup_s=60).full_rebuild
+
+    pdf = make_bars_pdf(n=30)
+    ck.merge_increment("bars", spark.createDataFrame(pdf))
+    assert ck.read("bars").count() == len(pdf)
+    assert {p.name for p in stage.iterdir()} == {
+        "_manifest.json", *(s["path"] for s in ck.manifest("bars")["segments"])}
 
 
 def test_write_table_fmt_dispatch(spark, tmp_path):
