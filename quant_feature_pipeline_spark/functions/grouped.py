@@ -25,7 +25,6 @@ maxPartitionBytes controls the bound at scale.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -40,42 +39,11 @@ from ..tsutil import repartition_by_size
 
 Kernel = Callable[[dict[str, np.ndarray]], dict[str, np.ndarray]]
 
-
-class StageMetrics:
-    """Per-partition row-count / latency metrics for grouped Arrow
-    stages, backed by Spark accumulators (executors add, the driver
-    reads after an action) — the per-partition lineage + latency surface
-    the incremental-run contract asks for, alongside the per-entity
-    row/max-ts lineage in plans/checkpoint.py."""
-
-    def __init__(self, spark, name: str):
-        sc = spark.sparkContext
-        self.name = name
-        self.rows = sc.accumulator(0)
-        self.groups = sc.accumulator(0)
-        self.partitions = sc.accumulator(0)
-        self.busy_s = sc.accumulator(0.0)
-
-    def report(self) -> dict:
-        """Read AFTER an action has materialized the stage.
-
-        Accumulator caveat (ADVICE r3): Spark guarantees exactly-once
-        accumulator updates only for updates made inside ACTIONS; these
-        are added in a transformation, so task retries, speculative
-        execution, or re-running the stage for a second action add
-        again. Treat the numbers as AT-LEAST-ONCE telemetry (latency
-        hints, skew spotting) — for exact lineage row counts use the
-        checkpoint manifest (plans/checkpoint.py), which derives counts
-        from a deterministic aggregation."""
-        parts = self.partitions.value or 1
-        return {
-            "stage": self.name,
-            "rows": self.rows.value,
-            "groups": self.groups.value,
-            "partitions": self.partitions.value,
-            "busy_wall_s": round(self.busy_s.value, 3),
-            "rows_per_partition": self.rows.value // parts,
-        }
+# grouped_apply's in-task auto-chunking: a group above _AUTO_CHUNK_ROWS
+# rows runs through the kernel in _CHUNK_ROWS-row slices, and output
+# flushes every ~_CHUNK_ROWS rows
+_AUTO_CHUNK_ROWS = 1_048_576
+_CHUNK_ROWS = 262_144
 
 
 def _output_schema(df: DataFrame, new_cols: list[str]) -> T.StructType:
@@ -127,9 +95,6 @@ def grouped_apply(
     src_cols: list[str],
     kernel: Kernel,
     new_cols: list[str],
-    metrics: StageMetrics | None = None,
-    auto_chunk_rows: int | None = 1_048_576,
-    chunk_rows: int = 262_144,
     warmup_rows: int = 4_096,
     lookback_rows: int | None = None,
     prepartitioned: bool = False,
@@ -141,7 +106,7 @@ def grouped_apply(
     ``max(warmup_rows, lookback_rows)`` rows of history per slice, so a
     hard-windowed kernel stays bit-exact no matter how its window
     compares to the default warm-up (ADVICE r4: a window > warmup_rows
-    silently corrupted boundary rows for entities above auto_chunk_rows).
+    silently corrupted boundary rows for entities above _AUTO_CHUNK_ROWS).
     Leave it None for infinite-decay recurrences, where warmup_rows is a
     ulp-convergence bound rather than an exactness requirement.
 
@@ -157,9 +122,9 @@ def grouped_apply(
     only.
 
     Huge-entity auto-dispatch (no caller opt-in): a group above
-    ``auto_chunk_rows`` rows runs through the kernel in ts-ordered
-    ``chunk_rows`` slices with ``warmup_rows`` of replayed history per
-    slice, and output flushes every ~``chunk_rows`` rows, so neither the
+    ``_AUTO_CHUNK_ROWS`` rows runs through the kernel in ts-ordered
+    ``_CHUNK_ROWS`` slices with ``warmup_rows`` of replayed history per
+    slice, and output flushes every ~``_CHUNK_ROWS`` rows, so neither the
     kernel temporaries nor the wide output frame ever cover a whole huge
     entity — with NO plan change: partitioning is preserved, nothing
     extra shuffles or sorts JVM-side, and normal-size groups pay zero
@@ -170,13 +135,13 @@ def grouped_apply(
     use grouped_apply_chunked, which range-splits the entity across the
     cluster."""
     warm = max(warmup_rows, lookback_rows or 0)
+    # bound here, not read inside run: the pickled closure then carries
+    # the values current at plan time (tests monkeypatch the constants)
+    auto_chunk_rows, chunk_rows = _AUTO_CHUNK_ROWS, _CHUNK_ROWS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.time()
         pdf = _concat(batches)
         if pdf is None:
-            if metrics is not None:
-                metrics.partitions.add(1)
             return
         pdf = pdf.sort_values([by, ts_col], kind="mergesort").reset_index(drop=True)
         n = len(pdf)
@@ -196,7 +161,7 @@ def grouped_apply(
             return out
 
         for s, e in zip(starts, ends):
-            if auto_chunk_rows is not None and e - s > auto_chunk_rows:
+            if e - s > auto_chunk_rows:
                 if s > flush_from:  # flush buffered smaller groups first
                     yield assemble(s)
                 for cs in range(s, e, chunk_rows):
@@ -214,11 +179,6 @@ def grouped_apply(
                     yield assemble(e)
         if flush_from < n:
             yield assemble(n)
-        if metrics is not None:
-            metrics.partitions.add(1)
-            metrics.rows.add(n)
-            metrics.groups.add(len(starts))
-            metrics.busy_s.add(time.time() - t0)
 
     schema = _output_schema(df, new_cols)
     if prepartitioned:

@@ -246,9 +246,6 @@ def compute_recurrence_indicators(
     ts_col: str = "ts",
     chunk_rows: int | None = None,
     warmup_rows: int = 4_096,
-    metrics=None,
-    auto_chunk_rows: int | None = 1_048_576,
-    local_chunk_rows: int = 262_144,
     prepartitioned: bool = False,
 ) -> DataFrame:
     """Runs as grouped_apply (explicit hash repartition + mapInPandas),
@@ -280,7 +277,6 @@ def compute_recurrence_indicators(
     # prepartitioned: caller guarantees entity-complete partitions (the
     # pipeline's one up-front repartition) — skips this stage's shuffle
     return grouped_apply(
-        bars, by, ts_col, src, kernel, new, metrics=metrics,
-        auto_chunk_rows=auto_chunk_rows, chunk_rows=local_chunk_rows,
+        bars, by, ts_col, src, kernel, new,
         warmup_rows=warmup_rows, prepartitioned=prepartitioned,
     )

@@ -1,5 +1,5 @@
 from .resample import resample_ohlcv, rolling_bars
-from .asof import asof_join, asof_join_union_ffill, asof_join_bucketed
+from .asof import asof_join, asof_join_bucketed
 from .fill import grid_fill_ranges, ffill, bfill
 from .shift import log_return, boundary_momentum
 from .sessionize import sessionize, session_stats
@@ -10,7 +10,6 @@ __all__ = [
     "resample_ohlcv",
     "rolling_bars",
     "asof_join",
-    "asof_join_union_ffill",
     "asof_join_bucketed",
     "grid_fill_ranges",
     "ffill",

@@ -38,7 +38,7 @@ def streaming_asof_buffered(
     timestamp. Spark's watermark filter guarantees no future row (either
     side) can arrive with event time below the watermark, so every
     emitted left has seen ALL rights with ``right.ts <= left.ts`` —
-    equality with the batch ``asof_join_union_ffill`` follows for rows
+    equality with the batch ``asof_join`` follows for rows
     the watermark has passed, for ANY arrival order. Matching is one
     vectorized ``pd.merge_asof`` per (entity, batch); buffers travel as
     pickled frames in binary state columns. The right buffer is pruned

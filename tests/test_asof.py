@@ -167,9 +167,8 @@ def test_asof_bucketed_bucket_sizes(spark, bucket_s, direction):
 
 def test_asof_multi_duplicate_left_ts_no_fanout(spark):
     """Duplicate left (entity, ts) rows must map 1:1 through the fused
-    multi-asof and the nearest recombine (row-id join, not key join) —
-    both for a narrow left payload, which rides the union sort, and for
-    a wide one (> 12 columns), which re-attaches on a row id."""
+    multi-asof — for a narrow left payload and for a wide one (13
+    columns): every left payload rides the union sort."""
     import pandas as pd
 
     from quant_feature_pipeline_spark.operators.asof import asof_join_multi
@@ -188,9 +187,12 @@ def test_asof_multi_duplicate_left_ts_no_fanout(spark):
 
     wide_cols = [f"w{k}" for k in range(12)]
     wpdf = lpdf.assign(**{c: lpdf["lval"] * 100.0 + k for k, c in enumerate(wide_cols)})
-    wide_df = asof_join_multi(spark.createDataFrame(wpdf), {"r_": right})
-    assert "_mlid" in wide_df._jdf.queryExecution().optimizedPlan().toString()
-    wide = wide_df.toPandas().sort_values("lval").reset_index(drop=True)
+    wide = (
+        asof_join_multi(spark.createDataFrame(wpdf), {"r_": right})
+        .toPandas()
+        .sort_values("lval")
+        .reset_index(drop=True)
+    )
     assert len(wide) == 5
     assert sorted(wide["lval"]) == [0, 1, 2, 3, 4]
     for k, c in enumerate(wide_cols):

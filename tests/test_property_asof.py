@@ -44,8 +44,14 @@ def _frame(offsets, col):
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(loffs=_ts_offsets, roffs=_ts_offsets, direction=st.sampled_from(["backward", "forward", "nearest"]), exact=st.booleans())
-def test_asof_union_ffill_matches_pandas(spark, loffs, roffs, direction, exact):
+@given(
+    loffs=_ts_offsets,
+    roffs=_ts_offsets,
+    direction=st.sampled_from(["backward", "forward", "nearest"]),
+    exact=st.booleans(),
+    tolerance_s=st.sampled_from([None, 60, 600]),
+)
+def test_asof_union_ffill_matches_pandas(spark, loffs, roffs, direction, exact, tolerance_s):
     lpdf, rpdf = _frame(loffs, "lval"), _frame(roffs, "rval")
     got = (
         asof_join(
@@ -53,6 +59,7 @@ def test_asof_union_ffill_matches_pandas(spark, loffs, roffs, direction, exact):
             spark.createDataFrame(rpdf),
             direction=direction,
             allow_exact_matches=exact,
+            tolerance_s=tolerance_s,
         )
         .toPandas()
         .sort_values(["ts", "lval"])
@@ -66,6 +73,7 @@ def test_asof_union_ffill_matches_pandas(spark, loffs, roffs, direction, exact):
         on="ts",
         direction=direction,
         allow_exact_matches=exact,
+        tolerance=None if tolerance_s is None else pd.Timedelta(seconds=tolerance_s),
     ).sort_values(["ts", "lval"]).reset_index(drop=True)
     assert len(got) == len(want)
     np.testing.assert_allclose(

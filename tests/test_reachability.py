@@ -12,7 +12,7 @@ that only tests run belongs in ``tests/oracles.py``.
 
 Name loads count when the file imports the name (through an alias too)
 or defines it; attribute loads (``module.name``, ``cfg.field``) count by
-attribute name.
+attribute name. A load inside a type annotation is not a caller.
 
 A field is also an option: some production ``PipelineConfig(...)`` call
 must set it to something other than its default, or else it is a
@@ -20,8 +20,13 @@ constant in ``config.py``.
 
 Parameters get the same treatment: every defaulted parameter of a public
 package function is set by some production call (by keyword, by position
-or through a ``*``/``**`` splat), or else it is a constant. And every
-keyword any caller passes, ``tests/`` included, names a real parameter.
+or through a ``*``/``**`` splat), or else it is a constant. A ``**name``
+splat sets only the keys of the dict literals (or keyword-only
+``dict(...)`` calls) ``name`` is bound to in the enclosing function. An
+argument that is the enclosing public package function's own defaulted
+parameter sets the callee's parameter only when that parameter is itself
+set. And every keyword any caller passes, ``tests/`` included, names a
+real parameter.
 """
 
 from __future__ import annotations
@@ -115,7 +120,10 @@ def _loads() -> list[tuple[Path, int, str, bool]]:
             n.name for n in tree.body
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
         }
+        ann = _annotation_nodes(tree)
         for node in ast.walk(tree):
+            if id(node) in ann:
+                continue
             if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 if node.id in alias:
                     out.append((path, node.lineno, alias[node.id], False))
@@ -150,11 +158,43 @@ def _defaulted(fn: ast.FunctionDef) -> list[str]:
     return names
 
 
+def _annotation_nodes(tree: ast.Module) -> set[int]:
+    """ids of every node inside a type annotation."""
+    roots = []
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = n.args
+            args = a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]
+            roots += [x.annotation for x in args if x is not None] + [n.returns]
+        elif isinstance(n, ast.AnnAssign):
+            roots.append(n.annotation)
+    return {id(x) for r in roots if r is not None for x in ast.walk(r)}
+
+
+def _scopes(tree: ast.Module) -> dict[int, tuple[ast.AST, ast.AST | None]]:
+    """node id -> (innermost enclosing def or the module, enclosing
+    module-level def or None)."""
+    out: dict[int, tuple[ast.AST, ast.AST | None]] = {}
+
+    def visit(node, inner, outer):
+        for child in ast.iter_child_nodes(node):
+            out[id(child)] = (inner, outer)
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child, outer or (child if node is tree else None))
+            else:
+                visit(child, inner, outer)
+
+    visit(tree, tree, None)
+    return out
+
+
 def _call_sites(paths: list[Path], package_only: bool = False):
-    """(file, line, name, call) for every load of a name; ``call`` is the
-    ``ast.Call`` when the load is the callee, else None. Names resolve as
-    in ``_loads``; with ``package_only`` an import counts only when it is
-    from the package, and an attribute only on such an import."""
+    """(file, line, name, call, scopes) for every load of a name outside
+    an annotation; ``call`` is the ``ast.Call`` when the load is the
+    callee, else None, and ``scopes`` is the load's ``_scopes`` entry.
+    Names resolve as in ``_loads``; with ``package_only`` an import counts
+    only when it is from the package, and an attribute only on such an
+    import."""
     out = []
     for path in _py_files(paths):
         tree = _parse(path)
@@ -175,7 +215,10 @@ def _call_sites(paths: list[Path], package_only: bool = False):
         callee = {
             id(n.func): n for n in ast.walk(tree) if isinstance(n, ast.Call)
         }
+        ann, scopes = _annotation_nodes(tree), _scopes(tree)
         for node in ast.walk(tree):
+            if id(node) in ann:
+                continue
             if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 name = alias.get(node.id) or (node.id if node.id in own else None)
             elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
@@ -186,46 +229,137 @@ def _call_sites(paths: list[Path], package_only: bool = False):
             else:
                 continue
             if name:
-                out.append((path, node.lineno, name, callee.get(id(node))))
+                out.append(
+                    (path, node.lineno, name, callee.get(id(node)), scopes[id(node)])
+                )
     return out
 
 
-def _set_params(fn: ast.FunctionDef, call: ast.Call | None) -> set[str]:
-    """The parameters of ``fn`` a call sets; a load that is not a call
-    (a dispatch table, a callback) or a ``**`` splat sets them all."""
+def _splat_pairs(value: ast.expr, scope: ast.AST) -> list | None:
+    """(key, value) pairs a ``**value`` splat passes: the keys of the dict
+    literals and keyword-only ``dict(...)`` calls the name is bound to in
+    ``scope``, by assignment or as the target of a ``for`` over a literal
+    tuple. None when any binding or use of the name is something else
+    (a parameter, a call result, a mutation)."""
+    if not isinstance(value, ast.Name):
+        return None
+    name = value.id
+    stores = {
+        id(n) for n in ast.walk(scope)
+        if isinstance(n, ast.Name) and n.id == name and isinstance(n.ctx, ast.Store)
+    }
+    bound, seen = [], set()
+    for n in ast.walk(scope):
+        if isinstance(n, ast.arg) and n.arg == name:
+            return None
+        if isinstance(n, (ast.Attribute, ast.Subscript)) and (
+            isinstance(n.value, ast.Name) and n.value.id == name
+        ):
+            return None  # kw.update(...), kw["k"] = ...
+        if isinstance(n, ast.Assign):
+            for t in n.targets:
+                if id(t) in stores:
+                    seen.add(id(t))
+                    bound.append(n.value)
+        elif isinstance(n, ast.For) and isinstance(n.iter, (ast.Tuple, ast.List)):
+            t = n.target
+            if id(t) in stores:
+                seen.add(id(t))
+                bound += n.iter.elts
+            elif isinstance(t, ast.Tuple):
+                for j, e in enumerate(t.elts):
+                    if id(e) in stores:
+                        seen.add(id(e))
+                        bound += [
+                            x.elts[j] if isinstance(x, ast.Tuple)
+                            and len(x.elts) == len(t.elts) else None
+                            for x in n.iter.elts
+                        ]
+    if seen != stores:
+        return None
+    pairs = []
+    for v in bound:
+        if isinstance(v, ast.Dict) and all(
+            isinstance(k, ast.Constant) and isinstance(k.value, str) for k in v.keys
+        ):
+            pairs += [(k.value, x) for k, x in zip(v.keys, v.values)]
+        elif (
+            isinstance(v, ast.Call) and isinstance(v.func, ast.Name)
+            and v.func.id == "dict" and not v.args
+            and all(k.arg is not None for k in v.keywords)
+        ):
+            pairs += [(k.arg, k.value) for k in v.keywords]
+        else:
+            return None
+    return pairs
+
+
+def _set_params(
+    fn: ast.FunctionDef, call: ast.Call | None, scope: ast.AST
+) -> list[tuple[str, ast.expr | None]]:
+    """(parameter, argument) pairs a call sets; the argument is None when
+    it is not known. A load that is not a call (a dispatch table, a
+    callback), a ``*`` splat and a ``**`` splat whose keys are not known
+    (``_splat_pairs``) set every parameter they can reach."""
     pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
-    every = set(pos) | {a.arg for a in fn.args.kwonlyargs}
-    if call is None or any(k.arg is None for k in call.keywords):
+    every = [(a, None) for a in pos + [a.arg for a in fn.args.kwonlyargs]]
+    if call is None:
         return every
-    out = {k.arg for k in call.keywords}
+    out = []
+    for k in call.keywords:
+        pairs = [(k.arg, k.value)] if k.arg else _splat_pairs(k.value, scope)
+        if pairs is None:
+            return every
+        out += pairs
     for i, a in enumerate(call.args):
         if isinstance(a, ast.Starred):
-            return out | set(pos[i:])
+            return out + [(p, None) for p in pos[i:]]
         if i < len(pos):
-            out.add(pos[i])
+            out.append((pos[i], a))
     return out
 
 
 def _param_census() -> tuple[list[str], dict[str, set[str]]]:
     """(defaulted parameters no production call sets, as ``fn.param``;
     name -> parameters production calls set). A call from inside the
-    function's own body does not count."""
+    function's own body does not count. An argument that is a defaulted
+    parameter of the enclosing public package function sets the callee's
+    parameter only once that parameter is set (iterated to a fixed
+    point)."""
     fns = _package_functions()
+    by_def = {(p, f.lineno): f for defs in fns.values() for p, f in defs}
     sites = _call_sites(CALLERS)
-    unset, setters = [], {}
+    # (callee, parameter, None | (enclosing function, its parameter))
+    edges = set()
     for name, defs in sorted(fns.items()):
         spans = [(p, f.lineno, f.end_lineno) for p, f in defs]
-        calls = [
-            c for p, line, n, c in sites
-            if n == name and not _inside(spans, p, line)
-        ]
-        for _, fn in defs:
-            got = set().union(*(_set_params(fn, c) for c in calls))
-            setters[name] = setters.get(name, set()) | got
-            unset += [
-                f"{name}.{a}" for a in _defaulted(fn)
-                if a not in got and not _EXEMPT_PARAM.fullmatch(a)
-            ]
+        for path, line, n, call, (inner, outer) in sites:
+            if n != name or _inside(spans, path, line):
+                continue
+            host = by_def.get((path, getattr(outer, "lineno", None)))
+            for _, fn in defs:
+                for a, arg in _set_params(fn, call, inner):
+                    via = None
+                    if (
+                        host is not None and isinstance(arg, ast.Name)
+                        and arg.id in _defaulted(host)
+                        and not _EXEMPT_PARAM.fullmatch(arg.id)
+                    ):
+                        via = (host.name, arg.id)
+                    edges.add((name, a, via))
+    setters: dict[str, set[str]] = {name: set() for name in fns}
+    grew = True
+    while grew:
+        grew = False
+        for name, a, via in edges:
+            if a not in setters[name] and (via is None or via[1] in setters[via[0]]):
+                setters[name].add(a)
+                grew = True
+    unset = [
+        f"{name}.{a}" for name, defs in sorted(fns.items()) for _, fn in defs
+        for a in _defaulted(fn)
+        if a not in setters[name] and not _EXEMPT_PARAM.fullmatch(a)
+    ]
     return unset, setters
 
 
@@ -308,7 +442,7 @@ def _config_setters() -> set[str]:
             return True
 
     got: set[str] = set()
-    for _, _, name, call in _call_sites(CALLERS):
+    for _, _, name, call, _ in _call_sites(CALLERS):
         if name != "PipelineConfig" or call is None:
             continue
         for i, a in enumerate(call.args):
@@ -439,7 +573,7 @@ def test_every_keyword_names_a_parameter():
     to swallow it, Python would raise only when the call runs."""
     fns = _package_functions(public=False)
     bad = []
-    for path, line, name, call in _call_sites(
+    for path, line, name, call, _ in _call_sites(
         CALLERS + [ROOT / "tests"], package_only=True
     ):
         if call is None or name not in fns:
