@@ -408,7 +408,7 @@ def _ivf_trained_cents_spark(spark, sf_dir) -> list[list[float]]:
     if sf_dir not in _IVF_TRAINED:
         emb = _t(spark, sf_dir, "embeddings")
         _IVF_TRAINED[sf_dir] = ivf_train(
-            emb, n_cells=_IVF_CELLS, dim=_IVF_DIM, iters=_IVF_ITERS, seed=7
+            emb, n_cells=_IVF_CELLS, dim=_IVF_DIM, iters=_IVF_ITERS
         )
     return _IVF_TRAINED[sf_dir]
 
@@ -515,7 +515,7 @@ def q_embed_near_dup(spark, sf_dir):
 
 def q_jaccard_3gram_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    out = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.5)
+    out = ngram_jaccard_pairs(docs)
     return out.select("id_a", "id_b", F.round("jaccard", R6).alias("jaccard"))
 
 
@@ -537,11 +537,11 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 
 def q_simhash_pairs(spark, sf_dir):
     """Oracled against a brute-force ALL-PAIRS hamming scan in numpy
-    (see _simhash_oracle_sql): with max_hamming=3 < blocks=4 the
+    (see _simhash_oracle_sql): with _MAX_HAMMING=3 < 4 blocks the
     pigeonhole block join is guaranteed 100% recall, so the distributed
     output must EQUAL the quadratic reference exactly."""
     docs = _t(spark, sf_dir, "documents")
-    return simhash_dup_pairs(docs, max_hamming=3)
+    return simhash_dup_pairs(docs)
 
 
 _ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -748,7 +748,7 @@ def q_streaming_sessions(spark, sf_dir):
 
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     ev = stream_bars_from_dir(spark, f"{sf_dir}/events*.parquet", schema=schema)
-    out = streaming_session_counts(ev, gap="30 minutes", by="user_id")
+    out = streaming_session_counts(ev, by="user_id")
     name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
     run_stream_to_table(out, name)
     return spark.table(name).select(
@@ -761,7 +761,7 @@ def q_boundary_momentum(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", F.col("value").alias("close")
     )
-    out = boundary_momentum(ev, lookback=3, steps=5, method="boundary", by="user_id")
+    out = boundary_momentum(ev, lookback=3, steps=5, by="user_id")
     return out.select("user_id", "ts", F.round("bmom", R6).alias("bmom"))
 
 
@@ -793,7 +793,7 @@ def q_union_dedup_merge(spark, sf_dir):
 def q_salted_agg(spark, sf_dir):
     """Two-phase salted aggregation == plain GROUP BY (skew path)."""
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
-    out = salted_agg(ev, ["user_id"], {"value": "sum", "ts": "max"}, buckets=8)
+    out = salted_agg(ev, ["user_id"], {"value": "sum", "ts": "max"})
     return out.select(
         "user_id", F.round("sum_value", R2).alias("sum_value"),
         F.col("max_ts"),
@@ -1291,7 +1291,7 @@ def _ivf_trained_cents_py() -> list[list[float]]:
         V = np.stack(
             [np.asarray(v, dtype=np.float64) for v in t.column("embedding").to_pylist()]
         )
-        cents = [list(map(float, c)) for c in ivf_centroids(_IVF_DIM, _IVF_CELLS, seed=7)]
+        cents = [list(map(float, c)) for c in ivf_centroids(_IVF_DIM, _IVF_CELLS)]
         order = np.argsort(ids, kind="stable")
         for _ in range(_IVF_ITERS):
             cents_np = np.array(cents, dtype=np.float64)

@@ -8,7 +8,7 @@ Each mode prints one JSON line.
 Usage:
     python bench_extra.py --query NAME [--reps N]  # first/warm timing of one gate query (same method as bench.py)
     python bench_extra.py --headline [A,B,...]     # first/warm sum over bench.HEADLINE (or the named queries)
-    python bench_extra.py --skew-multi             # asof_join_multi with one hot entity, un-routed vs auto-routed
+    python bench_extra.py --skew-multi             # asof_join_multi with one hot entity, un-routed vs routed
     python bench_extra.py --stream-state50         # streaming as-of state rows over ~50 micro-batches
     python bench_extra.py --explain NAME           # write plans/r06/<NAME>_<PLAN_TAG>.txt (PLAN_TAG defaults to "before")
 """
@@ -110,11 +110,12 @@ def headline(names: list[str] | None = None) -> None:
 
 def skew_multi() -> None:
     """Skew row for the PIPELINE merge (VERDICT r5 item 4): the fused
-    asof_join_multi with one HOT entity, un-routed vs auto-routed.
-    Identical output checksums asserted."""
+    asof_join_multi with one HOT entity, un-routed vs routed: each leg
+    sets the router's ``_HOT_ROWS_MULTI`` threshold, above every entity
+    or below the 20M-row hot one. Identical output checksums asserted."""
     from pyspark.sql import functions as F
 
-    from quant_feature_pipeline_spark.operators.asof import asof_join_multi
+    from quant_feature_pipeline_spark.operators import asof as asof_mod
     from quant_feature_pipeline_spark.session import get_spark
 
     spark = get_spark(
@@ -156,11 +157,11 @@ def skew_multi() -> None:
         rps[p] = spark.read.parquet(rp)
     res = {"left_rows": left.count(), "hot_rows": 20_000_000}
     sums = {}
-    for label, kw in (
-        ("fused_unrouted", {"route_hot": False}),
-        ("auto_routed", {"bucket_s": 900}),
-    ):
-        out = asof_join_multi(left, rps, by="entity", **kw)
+    default_hot_rows = asof_mod._HOT_ROWS_MULTI
+    for label, hot_rows in (("fused_unrouted", 1 << 62), ("routed", 10_000_000)):
+        asof_mod._HOT_ROWS_MULTI = hot_rows
+        out = asof_mod.asof_join_multi(left, rps, by="entity")
+        asof_mod._HOT_ROWS_MULTI = default_hot_rows
         t = time.time()
         row = out.agg(
             F.count(F.lit(1)).alias("n"),
@@ -173,10 +174,10 @@ def skew_multi() -> None:
         ).first()
         res[f"{label}_sec"] = round(time.time() - t, 2)
         sums[label] = (row["n"], int(row["ck"]))
-    res["checksum_equal"] = sums["fused_unrouted"] == sums["auto_routed"]
+    res["checksum_equal"] = sums["fused_unrouted"] == sums["routed"]
     res["out_rows"] = sums["fused_unrouted"][0]
     res["speedup_routed"] = round(
-        res["fused_unrouted_sec"] / res["auto_routed_sec"], 2
+        res["fused_unrouted_sec"] / res["routed_sec"], 2
     )
     spark.stop()
     import shutil

@@ -1,6 +1,7 @@
 """W9/W13 — normalization expressions used by the feature plans.
 
 - momentum tanh compression: ``tanh(x*30)`` (`step5_featueres_unified.py:513-526`)
+- RSI reshape to [-1, 1]: ``clip(x/80, -1, 1)`` (`step5_featueres_unified.py:942-946`)
 - market-state threshold (W13): supertrend_direction >= 0 → 1 else -1
 
 The winsorize+tanh (W8) and power-calibration (W10) steps need global
@@ -20,6 +21,12 @@ from pyspark.sql import functions as F
 
 def tanh_compress(col: Column, scale: float = 30.0) -> Column:
     return F.tanh(col * scale)
+
+
+def rsi_unit(col: Column) -> Column:
+    """RSI reshaped from [-100, 100] to [-1, 1]: divided by 80 (the
+    reference divisor, `step5_featueres_unified.py:942-946`), then clipped."""
+    return F.least(F.greatest(col / 80.0, F.lit(-1.0)), F.lit(1.0))
 
 
 def market_state(col: Column) -> Column:

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..tsutil import epoch_seconds
+from ..tsutil import epoch_seconds, estimated_bytes
 
 _DIRECTIONS = ("backward", "forward", "nearest")
 _STRATEGIES = ("union_ffill", "bucketed", "auto")
@@ -126,12 +126,7 @@ def _detect_hot_entities(left: DataFrame, by: str, hot_rows: int) -> list:
     the cap never changes a result row). Nones are dropped so callers
     can safely build literal isin predicates (ADVICE r5: a None literal
     makes both branch predicates NULL and loses null-key rows)."""
-    try:
-        est_bytes = int(
-            left._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimation must never break the join
-        est_bytes = None
+    est_bytes = estimated_bytes(left)
     if est_bytes is not None and est_bytes < hot_rows:
         return []
     hot = (
@@ -453,8 +448,6 @@ def asof_join_multi(
     on: str = "ts",
     by: str = "entity",
     axis_tables: dict[str, DataFrame] | None = None,
-    route_hot: bool = True,
-    bucket_s: int = 3600,
 ) -> DataFrame:
     """Backward as-of join of MANY right tables onto one left axis with
     ONE narrow sort — the fused, scale-tuned form of the reference's
@@ -502,8 +495,8 @@ def asof_join_multi(
 
     Hot-entity routing (r6, VERDICT r5 item 4): the fused union sorts
     each entity's narrow rows in ONE task, so a single entity holding
-    most of the left would serialize the merge. ``route_hot`` applies
-    the same discipline as asof_join's router: skipped for free when
+    most of the left would serialize the merge. This router applies
+    the same discipline as asof_join's: skipped for free when
     the optimizer's size estimate proves left < ``_HOT_ROWS_MULTI``
     bytes (every gate-scale call), otherwise entities whose left row
     count exceeds ``_HOT_ROWS_MULTI`` route through iterated
@@ -522,35 +515,36 @@ def asof_join_multi(
     two-table router's 4M ``_HOT_ROWS``, whose hot branch replaces a
     WIDE window sort where bucketing pays much earlier.
     """
+    hot_list = _detect_hot_entities(left, by, _HOT_ROWS_MULTI)
+    if not hot_list:  # the common case: the fused one-sort plan
+        return _fused_multi(left, rights, on, by, axis_tables)
+    is_hot = F.col(by).isNotNull() & F.col(by).isin(hot_list)
+    cold = _fused_multi(
+        left.filter(~is_hot),
+        {p: r.filter(~is_hot) for p, r in rights.items()},
+        on, by,
+        {p: a.filter(~is_hot) for p, a in axis_tables.items()} if axis_tables else None,
+    )
+    hot_out = left.filter(is_hot)
+    for p in rights:
+        hot_out = asof_join_bucketed(
+            hot_out, rights[p].filter(is_hot), on=on, by=by,
+            direction="backward", right_prefix=p,
+        ).drop(f"{p}matched_{on}")
+    return cold.unionByName(hot_out.select(*cold.columns))
+
+
+def _fused_multi(
+    left: DataFrame,
+    rights: dict[str, DataFrame],
+    on: str,
+    by: str,
+    axis_tables: dict[str, DataFrame] | None,
+) -> DataFrame:
+    """The fused narrow-match + payload-attach merge (asof_join_multi,
+    phases 1 and 2), with no hot-entity routing."""
     lcols = [c for c in left.columns if c not in (by, on)]
     blocks = {p: [c for c in r.columns if c not in (by, on)] for p, r in rights.items()}
-    if route_hot:
-        hot_list = _detect_hot_entities(left, by, _HOT_ROWS_MULTI)
-        if hot_list:
-            is_hot = F.col(by).isNotNull() & F.col(by).isin(hot_list)
-            cold = asof_join_multi(
-                left.filter(~is_hot),
-                {p: r.filter(~is_hot) for p, r in rights.items()},
-                on=on, by=by,
-                axis_tables=(
-                    {p: a.filter(~is_hot) for p, a in axis_tables.items()}
-                    if axis_tables
-                    else None
-                ),
-                route_hot=False,
-            )
-            hot_out = left.filter(is_hot)
-            for p in rights:
-                hot_out = asof_join_bucketed(
-                    hot_out, rights[p].filter(is_hot), on=on, by=by,
-                    direction="backward", right_prefix=p, bucket_s=bucket_s,
-                ).drop(f"{p}matched_{on}")
-            out_cols = [by, on, *lcols] + [
-                f"{p}{c}" for p in rights for c in blocks[p]
-            ]
-            return cold.select(*out_cols).unionByName(
-                hot_out.select(*out_cols)
-            )
     ts_type = left.schema[on].dataType
     prefixes = list(rights)
 

@@ -46,24 +46,20 @@ def boundary_momentum(
     df: DataFrame,
     lookback: int,
     steps: int,
-    method: str = "boundary",
     src: str = "close",
     out: str = "bmom",
     by: str = "entity",
     ts_col: str = "ts",
 ) -> DataFrame:
     """W2 — boundary-anchored momentum
-    (`/root/reference/step5_featueres_unified.py:320-424`).
+    (`/root/reference/step5_featueres_unified.py:320-424`), the
+    reference's ``boundary`` method.
 
     Positional semantics on the per-entity row grid (0-based rn), with
     buckets of ``steps`` rows anchored at row 0:
       Ls = lookback*steps
-      point:    out[i] = c[i]/c[i-Ls] - 1                     (i >= Ls)
-      boundary: cur = (i//steps)*steps
-                out[i] = c[cur]/c[cur-Ls] - 1                 (i >= Ls)
-      boundary_intra_avg:
-                num = mean(c[bucket_start..i])
-                out[i] = num/c[i-(Ls-steps)] - 1              (i >= Ls)
+      cur = (i//steps)*steps
+      out[i] = c[cur]/c[cur-Ls] - 1                           (i >= Ls)
       warm-up rows -> 0 (reference ffills NaN then zero-fills).
 
     Spark-first: cur's close is `first(src)` over the bucket
@@ -81,31 +77,12 @@ def boundary_momentum(
         .orderBy(ts_col)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_ord2 = Window.partitionBy(by).orderBy(ts_col)
-    if method == "point":
-        prev = F.lag(src, Ls).over(w_ord2)
-        raw = F.when(
-            (F.col("_rn") >= Ls) & prev.isNotNull() & (prev != 0),
-            F.col(src) / prev - 1.0,
-        )
-    elif method == "boundary":
-        bs = F.first(src).over(w_bucket)
-        dfi = dfi.withColumn("_bs", bs)
-        prev = F.lag("_bs", Ls).over(w_ord2)
-        raw = F.when(
-            (F.col("_rn") >= Ls) & prev.isNotNull() & (prev != 0),
-            F.col("_bs") / prev - 1.0,
-        )
-    elif method == "boundary_intra_avg":
-        ref_shift = max(0, Ls - steps)
-        num = F.avg(src).over(w_bucket)
-        prev = F.lag(src, ref_shift).over(w_ord2)
-        raw = F.when(
-            (F.col("_rn") >= Ls) & prev.isNotNull() & (prev != 0),
-            num / prev - 1.0,
-        )
-    else:
-        raise ValueError(f"method must be point/boundary/boundary_intra_avg: {method}")
+    dfi = dfi.withColumn("_bs", F.first(src).over(w_bucket))
+    prev = F.lag("_bs", Ls).over(w_ord)
+    raw = F.when(
+        (F.col("_rn") >= Ls) & prev.isNotNull() & (prev != 0),
+        F.col("_bs") / prev - 1.0,
+    )
     return (
         dfi.withColumn(out, F.coalesce(raw, F.lit(0.0)))
         .drop("_rn", "_bucket", "_bs")

@@ -21,13 +21,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salt_column(ts_col: str = "ts", buckets: int = 8) -> Column:
-    """Deterministic salt in [0, buckets) from the event time."""
-    return F.pmod(F.xxhash64(F.col(ts_col)), F.lit(buckets)).cast("int")
+# salt buckets: a hot key's rows spread over this many partial groups
+_SALT_BUCKETS = 8
 
 
-def add_salt(df: DataFrame, ts_col: str = "ts", buckets: int = 8, out: str = "_salt") -> DataFrame:
-    return df.withColumn(out, salt_column(ts_col, buckets))
+def salt_column(ts_col: str = "ts") -> Column:
+    """Deterministic salt in [0, _SALT_BUCKETS) from the event time."""
+    return F.pmod(F.xxhash64(F.col(ts_col)), F.lit(_SALT_BUCKETS)).cast("int")
+
+
+def add_salt(df: DataFrame, ts_col: str = "ts", out: str = "_salt") -> DataFrame:
+    return df.withColumn(out, salt_column(ts_col))
 
 
 def salted_agg(
@@ -35,7 +39,6 @@ def salted_agg(
     key_cols: list[str],
     aggs: dict[str, str],
     ts_col: str = "ts",
-    buckets: int = 8,
 ) -> DataFrame:
     """Two-phase aggregation: groupBy(key, salt) partials then merge.
 
@@ -60,7 +63,7 @@ def salted_agg(
             merge_exprs.append(F.max(pname).alias(f"{how}_{c}"))
         else:
             raise ValueError(f"non-mergeable agg: {how}")
-    salted = add_salt(df, ts_col, buckets)
+    salted = add_salt(df, ts_col)
     partial = salted.groupBy(*key_cols, "_salt").agg(*partial_exprs)
     return partial.groupBy(*key_cols).agg(*merge_exprs)
 

@@ -49,7 +49,7 @@ from ..config import (
     tf_seconds,
 )
 from ..functions.indicators import window_indicator_layers
-from ..functions.normalize import market_state, tanh_compress
+from ..functions.normalize import market_state, rsi_unit, tanh_compress
 from ..functions.rank import rolling_rank_multi
 from ..functions.timefeat import time_encodings_rounded
 from ..operators.shift import log_return
@@ -142,15 +142,6 @@ class FlagshipStats:
             gammas=d["gammas"],
             ret_std=d["ret_std"],
         )
-
-    def save(self, path: str) -> None:
-        with open(path, "w") as fh:
-            fh.write(self.to_json())
-
-    @classmethod
-    def load(cls, path: str) -> "FlagshipStats":
-        with open(path) as fh:
-            return cls.from_json(fh.read())
 
 
 def run_flagship(
@@ -388,14 +379,7 @@ def run_flagship(
             F.col(f"{tf}_close").alias(f"{tf}_close"),
         ]
     for tf in rsi_tfs(cfg):
-        # reshaped [-100,100] → [-1,1] via /80 clip (step5:942-946)
-        rsi_n = F.least(
-            F.greatest(
-                F.coalesce(F.col(f"{tf}_rsi{RSI_WINDOW}"), F.lit(0.0)) / 80.0,
-                F.lit(-1.0),
-            ),
-            F.lit(1.0),
-        )
+        rsi_n = rsi_unit(F.coalesce(F.col(f"{tf}_rsi{RSI_WINDOW}"), F.lit(0.0)))
         sel += [
             rsi_n.alias(f"{tf}_rsi"),
             F.coalesce(F.col(f"{tf}_rsi_event"), F.lit(0.0)).alias(f"{tf}_rsi_event"),

@@ -28,7 +28,7 @@ from ..functions.indicators import (
     apply_window_indicators,
     window_indicator_layers,
 )
-from ..functions.normalize import market_state, tanh_compress
+from ..functions.normalize import market_state, rsi_unit, tanh_compress
 from ..functions.recurrence import compute_recurrence_indicators
 from ..functions.timefeat import time_encodings
 from ..operators.asof import asof_join_multi
@@ -201,14 +201,8 @@ def feature_table(
         new_cols[f"{tf}_mom_n"] = tanh_compress(
             F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0)), MOM_TANH_SCALE
         )
-        # reshaped [-100,100] → [-1,1] via /80 clip (reference divisor 80,
-        # `step5_featueres_unified.py:942-946`)
-        new_cols[f"{tf}_rsi_n"] = F.least(
-            F.greatest(
-                F.coalesce(F.col(f"{tf}_rsi{RSI_WINDOW}"), F.lit(0.0)) / 80.0,
-                F.lit(-1.0),
-            ),
-            F.lit(1.0),
+        new_cols[f"{tf}_rsi_n"] = rsi_unit(
+            F.coalesce(F.col(f"{tf}_rsi{RSI_WINDOW}"), F.lit(0.0))
         )
     df = df.withColumns(new_cols)
     df = time_encodings(df, ts_col=ts_col)

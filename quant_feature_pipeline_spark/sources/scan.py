@@ -78,9 +78,8 @@ def dedup_keep_last(
     )
 
 
-def slice_time_range(df: DataFrame, start=None, end=None, ts_col: str = "ts") -> DataFrame:
+def slice_time_range(df: DataFrame, start=None, ts_col: str = "ts") -> DataFrame:
+    """Rows at or after ``start`` (all rows when it is None)."""
     if start is not None:
         df = df.filter(F.col(ts_col) >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col(ts_col) <= F.lit(end))
     return df

@@ -115,16 +115,16 @@ def run_stream_to_table(
 
 def streaming_session_counts(
     stream: DataFrame,
-    gap: str = "30 minutes",
     by: str = "entity",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Gap-based session windows with a 10-minute late-data watermark
-    (the built-in streaming analog of operators.sessionize)."""
+    """Gap-based session windows (30-minute gap) with a 10-minute
+    late-data watermark (the built-in streaming analog of
+    operators.sessionize)."""
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
         stream.withWatermark(ts_col, "10 minutes")
-        .groupBy(F.col(by), F.session_window(F.col(ts_col), gap).alias("sw"))
+        .groupBy(F.col(by), F.session_window(F.col(ts_col), "30 minutes").alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             by,

@@ -23,27 +23,35 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def shingles(text_col: str, n: int = 3, out: str = "shingles"):
-    """Distinct word n-gram array (JVM-side). n=1 → distinct words."""
+# word n-gram size of every shingle set (MinHash and exact Jaccard), and
+# the seed of the MinHash permutation parameters
+_SHINGLE_N = 3
+_MINHASH_SEED = 1315423911
+
+
+def shingles(text_col: str, out: str = "shingles"):
+    """Distinct word ``_SHINGLE_N``-gram array (JVM-side)."""
+    n = _SHINGLE_N
     words = F.split(F.trim(F.lower(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))), r"\s+")
-    if n == 1:
-        return F.array_distinct(words).alias(out)
     idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
     ).alias(out)
 
 
-# word n-gram size of the MinHash shingles, and the seed of the
-# permutation parameters
-_LSH_SHINGLE_N = 3
-_MINHASH_SEED = 1315423911
 # candidate buckets above this many ids are dropped: a bucket of k ids
 # emits k·(k-1)/2 pairs
 _MAX_BUCKET = 1024
 # shingles shared by more than this many documents are dropped: a
 # shingle in k documents fans out k² pair rows
 _MAX_DOC_FREQ = 1000
+# SimHash pairs within this many differing bits. The pigeonhole join
+# finds all of them only while _MAX_HAMMING < _SIMHASH_BLOCKS: a pair
+# differing in fewer bits than there are blocks agrees on a whole block
+_MAX_HAMMING = 3
+_SIMHASH_BLOCKS = 4
+# exact n-gram Jaccard pairs at or above this similarity
+_JACCARD_THRESHOLD = 0.5
 
 
 def _minhash_perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -91,7 +99,7 @@ def minhash_signatures(
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig_udf(texts: pd.Series) -> pd.Series:
-        sets = [_py_shingle_set(t, _LSH_SHINGLE_N) for t in texts]
+        sets = [_py_shingle_set(t, _SHINGLE_N) for t in texts]
         n = len(sets)
         lens = np.fromiter((len(x) for x in sets), dtype=np.int64, count=n)
         sig = np.empty((n, num_perm), dtype=np.uint64)
@@ -201,8 +209,8 @@ def minhash_lsh_dup_pairs(
     def _jac_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
         vals = np.empty(len(ta), dtype=np.float64)
         for i, (x, y) in enumerate(zip(ta, tb)):
-            sa = set(_py_shingle_set(x, _LSH_SHINGLE_N))
-            sb = set(_py_shingle_set(y, _LSH_SHINGLE_N))
+            sa = set(_py_shingle_set(x, _SHINGLE_N))
+            sb = set(_py_shingle_set(y, _SHINGLE_N))
             u = len(sa | sb)
             vals[i] = len(sa & sb) / u if u else float("nan")
         return pd.Series(vals)
@@ -278,13 +286,12 @@ def simhash_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 3,
 ) -> DataFrame:
     """Hamming-near pairs via the pigeonhole block trick: split the 64-bit
-    simhash into 4 chunks of 16 bits; any pair within ``max_hamming < 4``
-    bits must agree on >=1 chunk → equi-join per chunk, then exact
+    simhash into 4 chunks of 16 bits; any pair within ``_MAX_HAMMING``
+    (< 4) bits must agree on >=1 chunk → equi-join per chunk, then exact
     popcount verify (bit_count is JVM-side)."""
-    blocks = 4
+    blocks = _SIMHASH_BLOCKS
     width = 64 // blocks
     sh = simhash64(df.select(id_col, text_col), text_col)
     chunks = sh.select(
@@ -318,7 +325,7 @@ def simhash_dup_pairs(
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
         .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= _MAX_HAMMING)
     )
     return pairs
 
@@ -327,10 +334,9 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact all-pairs n-gram Jaccard via an inverted-index join (each
+    """Exact all-pairs ``_SHINGLE_N``-gram Jaccard, pairs at or above
+    ``_JACCARD_THRESHOLD``, via an inverted-index join (each
     pair is generated once per shared shingle, then grouped) — the
     exact-but-quadratic-worst-case baseline the LSH variant approximates.
     Shuffle key = shingle, so common-shingle skew is the hazard:
@@ -339,7 +345,7 @@ def ngram_jaccard_pairs(
     only LOWER a pair's computed intersection, so this under-reports
     Jaccard for pairs whose overlap is dominated by ubiquitous
     shingles."""
-    sh = df.select(F.col(id_col), shingles(text_col, shingle_n)).select(
+    sh = df.select(F.col(id_col), shingles(text_col)).select(
         id_col, F.size("shingles").alias("n_sh"), F.explode("shingles").alias("shingle")
     )
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
@@ -357,4 +363,4 @@ def ngram_jaccard_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     jac = (F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))).alias("jaccard")
-    return inter.select("id_a", "id_b", jac).filter(F.col("jaccard") >= threshold)
+    return inter.select("id_a", "id_b", jac).filter(F.col("jaccard") >= _JACCARD_THRESHOLD)

@@ -66,12 +66,16 @@ def cosine_topk_bruteforce(
     )
 
 
-def ivf_centroids(dim: int, n_cells: int, seed: int = 7) -> list[list[float]]:
+# seed of the initial IVF centroids
+_IVF_SEED = 7
+
+
+def ivf_centroids(dim: int, n_cells: int) -> list[list[float]]:
     """Deterministic coarse-quantizer centroids. Plain seeded Gaussians —
     at scale you would Lloyd-refine these offline and persist them (the
     assignment/probe plumbing below is identical either way); fixed
     literals keep the whole index reproducible and SQL-oracle-able."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(_IVF_SEED)
     return rng.randn(n_cells, dim).astype(float).tolist()
 
 
@@ -80,7 +84,6 @@ def ivf_train(
     n_cells: int,
     dim: int,
     iters: int = 3,
-    seed: int = 7,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[list[float]]:
@@ -106,7 +109,7 @@ def ivf_train(
 
     from pyspark.sql import types as T
 
-    cents = [list(map(float, c)) for c in ivf_centroids(dim, n_cells, seed)]
+    cents = [list(map(float, c)) for c in ivf_centroids(dim, n_cells)]
     # NULL embeddings are excluded from TRAINING outright (ADVICE r4:
     # _assign zero-substituted them but _cell_stats crashed on the None;
     # a null vector carries no signal for the quantizer either way —
@@ -222,7 +225,7 @@ def ivf_train_or_load(
     id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Serve path: load persisted centroids if the artifact exists,
-    else Lloyd-train (from the seed-7 centroids) and persist. First run
+    else Lloyd-train (from the seeded centroids) and persist. First run
     pays training; every later run (a serving job, a re-deployed
     pipeline) skips all ``iters`` distributed passes and is
     bit-identical."""
@@ -230,11 +233,9 @@ def ivf_train_or_load(
 
     if os.path.exists(path):
         return load_ivf_centroids(path)
-    cents = ivf_train(
-        df, n_cells, dim, iters=iters, seed=7, vec_col=vec_col, id_col=id_col
-    )
+    cents = ivf_train(df, n_cells, dim, iters=iters, vec_col=vec_col, id_col=id_col)
     save_ivf_centroids(
-        cents, path, meta={"iters": iters, "seed": 7, "trained": True}
+        cents, path, meta={"iters": iters, "seed": _IVF_SEED, "trained": True}
     )
     return cents
 
@@ -263,11 +264,11 @@ def ivf_topk(
     map-only pass and candidates per query are |corpus|·nprobe/n_cells.
 
     ``centroids`` plugs in a trained quantizer (ivf_train); default is
-    the reproducible ``ivf_centroids`` one (seed 7).
+    the reproducible seeded ``ivf_centroids`` one.
     """
     if dim is None:
         raise ValueError("ivf_topk requires dim= (embedding length)")
-    cents = centroids if centroids is not None else ivf_centroids(dim, n_cells, 7)
+    cents = centroids if centroids is not None else ivf_centroids(dim, n_cells)
     n_cells = len(cents)
     spark = corpus.sparkSession
     cent_rows = [

@@ -21,6 +21,15 @@ def epoch_seconds(col: Column | str) -> Column:
     return c.cast("timestamp_ltz").cast("double")
 
 
+def estimated_bytes(df) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, or None when
+    Catalyst cannot produce one (estimation must never break a plan)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001
+        return None
+
+
 # target INPUT bytes per partition for the up-front entity hash
 # partitioning. Sized well below the shuffle advisory because the
 # pipeline's widest intermediate (the ~100-column merged frame) is
@@ -43,10 +52,7 @@ def repartition_by_size(df, *keys):
     memory. Tiny inputs get defaultParallelism partitions; big inputs
     scale linearly with bytes. Falls back, with a warning, to a bare
     AQE-coalescible repartition when no estimate is available."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — estimation must never break the plan
-        est = None
+    est = estimated_bytes(df)
     if est is None or est <= 0:
         log.warning(
             "repartition_by_size: no size estimate for the input keyed by %s; "

@@ -248,8 +248,6 @@ def test_asof_multi_hot_routing_value_identity(spark, monkeypatch):
     from quant_feature_pipeline_spark.operators import asof as asof_mod
     from quant_feature_pipeline_spark.operators.asof import asof_join_multi
 
-    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1_000)
-
     t0 = datetime.datetime(2024, 1, 1)
     rows = [("HOT", t0 + datetime.timedelta(seconds=7 * k), float(k)) for k in range(4000)]
     rows += [("C1", t0 + datetime.timedelta(seconds=61 * k), float(100 + k)) for k in range(50)]
@@ -269,12 +267,12 @@ def test_asof_multi_hot_routing_value_identity(spark, monkeypatch):
     def key(pdf):
         return pdf.sort_values(["entity", "ts", "lval"]).reset_index(drop=True)
 
-    want = key(
-        asof_join_multi(left, rights, route_hot=False).toPandas()
-    )
-    got = key(
-        asof_join_multi(left, rights).toPandas()
-    )
+    # un-routed reference: no entity reaches the threshold
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1 << 62)
+    want = key(asof_join_multi(left, rights).toPandas())
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1_000)
+    assert asof_mod._detect_hot_entities(left, "entity", 1_000) == ["HOT"]
+    got = key(asof_join_multi(left, rights).toPandas())
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) == len(rows)
     for c in got.columns:

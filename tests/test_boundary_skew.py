@@ -20,54 +20,35 @@ from quant_feature_pipeline_spark.plans.features_contract import (
 from .conftest import assert_frame_close, make_bars_pdf
 
 
-def _reference_loop(close: np.ndarray, L: int, steps: int, method: str, a: int = 0) -> np.ndarray:
-    """Direct transcription of the reference's positional semantics."""
+def _reference_loop(close: np.ndarray, L: int, steps: int) -> np.ndarray:
+    """Direct transcription of the reference's ``boundary`` method, buckets
+    anchored at row 0."""
     n = len(close)
     Ls = L * steps
     out = np.full(n, np.nan)
-    min_start = Ls + a
-    if method == "point":
-        for i in range(min_start, n):
-            p = i - Ls
-            if p >= 0 and close[p] != 0:
-                out[i] = close[i] / close[p] - 1.0
-    elif method == "boundary":
-        for i in range(min_start, n):
-            cur = ((i - a) // steps) * steps + a
-            p = cur - Ls
-            if 0 <= p and cur < n and close[p] != 0:
-                out[i] = close[cur] / close[p] - 1.0
-    else:  # boundary_intra_avg
-        ref_shift = max(0, Ls - steps)
-        cs = np.cumsum(close)
-        for i in range(max(min_start, ref_shift + a), n):
-            start = ((i - a) // steps) * steps + a
-            if start > i:
-                continue
-            total = cs[i] - (cs[start - 1] if start > 0 else 0.0)
-            avg = total / (i - start + 1)
-            p = i - ref_shift
-            if p >= 0 and close[p] != 0:
-                out[i] = avg / close[p] - 1.0
+    for i in range(Ls, n):
+        cur = (i // steps) * steps
+        p = cur - Ls
+        if 0 <= p and close[p] != 0:
+            out[i] = close[cur] / close[p] - 1.0
     return pd.Series(out).ffill().fillna(0.0).to_numpy()
 
 
-@pytest.mark.parametrize("method", ["point", "boundary", "boundary_intra_avg"])
-@pytest.mark.parametrize("anchor", [0])  # the engine anchors buckets at row 0
+# boundary is the engine's one method, anchored at row 0; the ids keep
+# their [anchor-method] form
+@pytest.mark.parametrize("method", ["boundary"])
+@pytest.mark.parametrize("anchor", [0])
 def test_boundary_momentum_vs_reference(spark, method, anchor):
     pdf = make_bars_pdf(n=200, entities=("A", "B"))
     got = (
         boundary_momentum(
-            spark.createDataFrame(pdf), lookback=3, steps=5, method=method,
-            out="bmom",
+            spark.createDataFrame(pdf), lookback=3, steps=5, out="bmom",
         )
         .toPandas()
         .sort_values(["entity", "ts"])
     )
     for e, g in pdf.groupby("entity"):
-        want = _reference_loop(
-            g.sort_values("ts")["close"].to_numpy(), 3, 5, method, anchor
-        )
+        want = _reference_loop(g.sort_values("ts")["close"].to_numpy(), 3, 5)
         np.testing.assert_allclose(
             got[got.entity == e]["bmom"].to_numpy(), want, rtol=1e-9, atol=1e-12,
             err_msg=f"{method} anchor={anchor} entity={e}",
@@ -77,9 +58,7 @@ def test_boundary_momentum_vs_reference(spark, method, anchor):
 def test_salted_agg_equals_plain(spark):
     pdf = make_bars_pdf(n=300, entities=("A", "B", "HOT"))
     sdf = spark.createDataFrame(pdf)
-    got = salted_agg(
-        sdf, ["entity"], {"volume": "sum", "close": "max"}, buckets=8
-    ).toPandas()
+    got = salted_agg(sdf, ["entity"], {"volume": "sum", "close": "max"}).toPandas()
     want = (
         sdf.groupBy("entity")
         .agg(F.sum("volume").alias("sum_volume"), F.max("close").alias("max_close"))

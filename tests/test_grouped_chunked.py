@@ -295,12 +295,10 @@ def test_asof_auto_hot_list_past_cap_stays_exact(spark, monkeypatch):
         asof_mod.asof_join(left, right, strategy="auto").toPandas()
     )
     assert got.equals(want)
-    multi_want = _key(
-        asof_mod.asof_join_multi(left, {"r_": right}, route_hot=False).toPandas()
-    )
-    multi_got = _key(
-        asof_mod.asof_join_multi(left, {"r_": right}).toPandas()
-    )
+    multi_got = _key(asof_mod.asof_join_multi(left, {"r_": right}).toPandas())
+    # un-routed reference: no entity reaches the threshold
+    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1 << 62)
+    multi_want = _key(asof_mod.asof_join_multi(left, {"r_": right}).toPandas())
     assert multi_got.equals(multi_want)
 
 

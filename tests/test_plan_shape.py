@@ -37,7 +37,6 @@ def test_time_range_predicate_reaches_scan(spark):
     s = slice_time_range(
         _events(spark).select("user_id", "ts", "value"),
         start=datetime.datetime(2024, 1, 2),
-        end=None,
     )
     scan_lines = [l for l in _plan(s).splitlines() if "FileScan" in l]
     assert scan_lines and "ts" in scan_lines[0]

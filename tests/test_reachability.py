@@ -1,7 +1,8 @@
 """Every public name in the package has a production caller.
 
 An AST walk over the package finds each public module-level ``def`` and
-``class`` and each ``PipelineConfig`` field, then looks for a load of it
+``class``, each public method of such a class and each ``PipelineConfig``
+field, then looks for a load of it
 in the caller sources: the package itself, ``jobs/``, ``__spark_entry__.py``,
 ``perfbench/``, ``bench.py``, ``bench_extra.py`` and ``tools/``. A load
 inside the name's own body does not count, nor does a load from a
@@ -12,26 +13,31 @@ that only tests run belongs in ``tests/oracles.py``.
 
 Name loads count when the file imports the name (through an alias too)
 or defines it; attribute loads (``module.name``, ``cfg.field``) count by
-attribute name. A load inside a type annotation is not a caller.
+attribute name, and for a method ``Class.method`` only in a file that
+imports or defines ``Class`` or imports its module. A load inside a type
+annotation is not a caller.
 
 A field is also an option: some production ``PipelineConfig(...)`` call
 must set it to something other than its default, or else it is a
 constant in ``config.py``.
 
 Parameters get the same treatment: every defaulted parameter of a public
-package function is set by some production call (by keyword, by position
-or through a ``*``/``**`` splat), or else it is a constant. A ``**name``
+package function or method is set by some production call (by keyword,
+by position or through a ``*``/``**`` splat) to something other than a
+literal equal to its default, or else it is a constant. A ``**name``
 splat sets only the keys of the dict literals (or keyword-only
 ``dict(...)`` calls) ``name`` is bound to in the enclosing function. An
 argument that is the enclosing public package function's own defaulted
 parameter sets the callee's parameter only when that parameter is itself
-set. And every keyword any caller passes, ``tests/`` included, names a
-real parameter.
+set. The frozen ``bench.py`` counts only through ``FROZEN_BENCH_KWARGS``.
+And every keyword any caller passes, ``tests/`` included, names a real
+parameter.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import re
 from pathlib import Path
 
@@ -49,8 +55,13 @@ CALLERS = [
 
 # The contract-sink entry points (COVERAGE.md S7): the packaged API a
 # consumer calls to build, health-check and export the 45-feature NPZ
-# artifact. No production code calls them; tests/test_flagship.py does.
-SINK_ENTRY_POINTS = {"run_flagship_contract", "flagship_health", "export_npz_contract"}
+# artifact, with the manifest's dict view; and the serve-mode restore of
+# frozen training stats from their JSON artifact (S7b). No production
+# code calls them; tests/test_flagship.py does.
+SINK_ENTRY_POINTS = {
+    "run_flagship_contract", "flagship_health", "export_npz_contract",
+    "FeatureManifest.to_dict", "FlagshipStats.from_json",
+}
 
 # Parameters production code leaves at their default on purpose: the sink
 # entry points above, and run_flagship's serve mode (COVERAGE.md S7b),
@@ -60,6 +71,26 @@ PARAM_ALLOWLIST = {
     **{name: {"*"} for name in SINK_ENTRY_POINTS},
     "run_flagship": {"stats"},
 }
+
+# Parameters kept only because the frozen bench.py passes them, each
+# with the bench.py line of the call that does: the deletion list of the
+# next change to bench.py. The census does not count bench.py as a
+# caller; it counts these instead. ``iters`` and ``sort_cols`` are
+# passed at their defaults; both ``cfg`` are ignored (the indicator
+# parameters are config.py constants).
+FROZEN_BENCH_KWARGS = {
+    "run_pipeline.input_partitioned": 139,
+    "write_bucketed_table.path": 126,
+    "write_bucketed_table.sort_cols": 126,
+    "indicator_table.cfg": 257,
+    "run_flagship.approx_percentiles": 514,
+    "compute_recurrence_indicators.cfg": 621,
+    "compute_recurrence_indicators.chunk_rows": 621,
+    "compute_recurrence_indicators.warmup_rows": 621,
+    "asof_join.bucket_s": 685,
+    "ivf_train_or_load.iters": 731,
+}
+BENCH = ROOT / "bench.py"
 
 # Parameters that name a column or an output, and a CLI's argv: their
 # default is a schema or process fact, not a configuration.
@@ -79,7 +110,8 @@ def _parse(path: Path) -> ast.Module:
 
 def _public_defs() -> dict[str, list[tuple[Path, int, int]]]:
     """name -> [(module, first line, last line)] of public module-level
-    defs and classes outside ``__init__.py``."""
+    defs and classes outside ``__init__.py``, and of the public methods
+    of those classes as ``Class.method``."""
     defs: dict[str, list[tuple[Path, int, int]]] = {}
     for path in _py_files([PKG]):
         if path.name == "__init__.py":
@@ -91,7 +123,51 @@ def _public_defs() -> dict[str, list[tuple[Path, int, int]]]:
                 defs.setdefault(node.name, []).append(
                     (path, node.lineno, node.end_lineno)
                 )
+                for m in _methods(node):
+                    defs.setdefault(f"{node.name}.{m.name}", []).append(
+                        (path, m.lineno, m.end_lineno)
+                    )
     return defs
+
+
+def _methods(node: ast.AST) -> list[ast.FunctionDef]:
+    """The public methods of a class; [] for anything else."""
+    if not isinstance(node, ast.ClassDef):
+        return []
+    return [
+        m for m in node.body
+        if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not m.name.startswith("_")
+    ]
+
+
+@functools.lru_cache(maxsize=None)
+def _known_names(path: Path) -> set[str]:
+    """The names a file imports (``from ... import``, modules included,
+    by their own name, not an alias) or defines at module level."""
+    tree = _parse(path)
+    names = {
+        a.name for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom) for a in n.names
+    }
+    return names | set(_module_names(tree))
+
+
+def _names_load(name: str, home: Path, path: Path, attr: str, is_attr: bool) -> bool:
+    """Whether a load of ``attr`` in ``path`` is a load of the public
+    name ``name`` defined in module ``home``: a module-level name by its
+    own name; a method ``Class.method`` by an attribute load of
+    ``method`` in a file that imports or defines ``Class`` or imports
+    ``home`` as a module. ``obj.method`` cannot be typed, so a file that
+    names neither cannot call the method (``df.write.save()`` is not
+    ``FlagshipStats.save``)."""
+    cls, _, method = name.rpartition(".")
+    if attr != method:
+        return False
+    if not cls:
+        return True
+    known = _known_names(path)
+    return is_attr and (cls in known or home.stem in known)
 
 
 def _config_fields() -> tuple[list[str], tuple[Path, int, int]]:
@@ -137,25 +213,53 @@ def _loads() -> list[tuple[Path, int, str, bool]]:
 def _package_functions(
     public: bool = True,
 ) -> dict[str, list[tuple[Path, ast.FunctionDef]]]:
-    """name -> [(module, def)] of module-level package functions."""
+    """name -> [(module, def)] of module-level package functions; with
+    ``public``, only the public ones, plus the public methods of public
+    classes as ``Class.method``."""
     out: dict[str, list[tuple[Path, ast.FunctionDef]]] = {}
     for path in _py_files([PKG]):
         for node in _parse(path).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
-                public and (node.name.startswith("_") or path.name == "__init__.py")
+            if public and (
+                getattr(node, "name", "_").startswith("_")
+                or path.name == "__init__.py"
             ):
+                continue
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 out.setdefault(node.name, []).append((path, node))
+            elif public:
+                for m in _methods(node):
+                    out.setdefault(f"{node.name}.{m.name}", []).append((path, m))
+    return out
+
+
+def _defaults(fn: ast.FunctionDef) -> dict[str, ast.expr]:
+    """parameter -> its default expression, for the defaulted ones."""
+    pos = fn.args.posonlyargs + fn.args.args
+    out = {
+        a.arg: d for a, d in zip(pos[len(pos) - len(fn.args.defaults):], fn.args.defaults)
+    }
+    out.update(
+        (a.arg, d) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    )
     return out
 
 
 def _defaulted(fn: ast.FunctionDef) -> list[str]:
-    pos = fn.args.posonlyargs + fn.args.args
-    names = [a.arg for a in pos[len(pos) - len(fn.args.defaults):]]
-    names += [
-        a.arg for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
-        if d is not None
-    ]
-    return names
+    return list(_defaults(fn))
+
+
+def _is_default(arg: ast.expr | None, default: ast.expr) -> bool:
+    """Whether a call argument is the parameter's default: the same
+    expression, or a literal equal to it. An unknown argument is not."""
+    if arg is None:
+        return False
+    if ast.dump(arg) == ast.dump(default):
+        return True
+    try:
+        return ast.literal_eval(arg) == ast.literal_eval(default)
+    except (ValueError, TypeError, SyntaxError):  # not a literal
+        return False
 
 
 def _annotation_nodes(tree: ast.Module) -> set[int]:
@@ -173,14 +277,16 @@ def _annotation_nodes(tree: ast.Module) -> set[int]:
 
 def _scopes(tree: ast.Module) -> dict[int, tuple[ast.AST, ast.AST | None]]:
     """node id -> (innermost enclosing def or the module, enclosing
-    module-level def or None)."""
+    module-level def or method of a module-level class, or None)."""
     out: dict[int, tuple[ast.AST, ast.AST | None]] = {}
+
+    top = {id(tree)} | {id(n) for n in tree.body if isinstance(n, ast.ClassDef)}
 
     def visit(node, inner, outer):
         for child in ast.iter_child_nodes(node):
             out[id(child)] = (inner, outer)
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child, outer or (child if node is tree else None))
+                visit(child, child, outer or (child if id(node) in top else None))
             else:
                 visit(child, inner, outer)
 
@@ -295,13 +401,15 @@ def _splat_pairs(value: ast.expr, scope: ast.AST) -> list | None:
 
 
 def _set_params(
-    fn: ast.FunctionDef, call: ast.Call | None, scope: ast.AST
+    fn: ast.FunctionDef, call: ast.Call | None, scope: ast.AST, bound: bool
 ) -> list[tuple[str, ast.expr | None]]:
     """(parameter, argument) pairs a call sets; the argument is None when
-    it is not known. A load that is not a call (a dispatch table, a
-    callback), a ``*`` splat and a ``**`` splat whose keys are not known
+    it is not known. With ``bound`` (a method; the package has no public
+    staticmethod), the first parameter is ``self``/``cls`` and takes no
+    argument. A load that is not a call (a dispatch table, a callback),
+    a ``*`` splat and a ``**`` splat whose keys are not known
     (``_splat_pairs``) set every parameter they can reach."""
-    pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    pos = [a.arg for a in fn.args.posonlyargs + fn.args.args][int(bound):]
     every = [(a, None) for a in pos + [a.arg for a in fn.args.kwonlyargs]]
     if call is None:
         return every
@@ -319,35 +427,46 @@ def _set_params(
     return out
 
 
-def _param_census() -> tuple[list[str], dict[str, set[str]]]:
-    """(defaulted parameters no production call sets, as ``fn.param``;
-    name -> parameters production calls set). A call from inside the
-    function's own body does not count. An argument that is a defaulted
-    parameter of the enclosing public package function sets the callee's
-    parameter only once that parameter is set (iterated to a fixed
-    point)."""
+def _param_census(
+    callers: list[Path] = CALLERS, assume: tuple[str, ...] = ()
+) -> tuple[list[str], dict[str, set[str]]]:
+    """(defaulted parameters no call in ``callers`` sets, as
+    ``fn.param``; name -> parameters those calls set). A call from
+    inside the function's own body does not count, nor does an argument
+    that is the parameter's default (``_is_default``). An argument that
+    is a defaulted parameter of the enclosing public package function or
+    method sets the callee's parameter only once that parameter is set
+    (iterated to a fixed point). The ``fn.param`` names in ``assume``
+    count as set from the start."""
     fns = _package_functions()
-    by_def = {(p, f.lineno): f for defs in fns.values() for p, f in defs}
-    sites = _call_sites(CALLERS)
+    by_def = {(p, f.lineno): (n, f) for n, defs in fns.items() for p, f in defs}
+    sites = _call_sites(callers)
     # (callee, parameter, None | (enclosing function, its parameter))
     edges = set()
     for name, defs in sorted(fns.items()):
         spans = [(p, f.lineno, f.end_lineno) for p, f in defs]
         for path, line, n, call, (inner, outer) in sites:
-            if n != name or _inside(spans, path, line):
+            if not _names_load(name, spans[0][0], path, n, True) or _inside(
+                spans, path, line
+            ):
                 continue
-            host = by_def.get((path, getattr(outer, "lineno", None)))
+            host, hfn = by_def.get((path, getattr(outer, "lineno", None)), (None, None))
             for _, fn in defs:
-                for a, arg in _set_params(fn, call, inner):
+                default = _defaults(fn)
+                for a, arg in _set_params(fn, call, inner, "." in name):
+                    if a in default and _is_default(arg, default[a]):
+                        continue
                     via = None
                     if (
-                        host is not None and isinstance(arg, ast.Name)
-                        and arg.id in _defaulted(host)
+                        hfn is not None and isinstance(arg, ast.Name)
+                        and arg.id in _defaulted(hfn)
                         and not _EXEMPT_PARAM.fullmatch(arg.id)
                     ):
-                        via = (host.name, arg.id)
+                        via = (host, arg.id)
                     edges.add((name, a, via))
     setters: dict[str, set[str]] = {name: set() for name in fns}
+    for name, _, a in (x.rpartition(".") for x in assume):
+        setters[name].add(a)
     grew = True
     while grew:
         grew = False
@@ -383,7 +502,8 @@ def _reachability():
         callers = {
             name: [
                 ld for ld in live
-                if ld[2] == name and not _inside(spans, ld[0], ld[1])
+                if _names_load(name, spans[0][0], ld[0], ld[2], ld[3])
+                and not _inside(spans, ld[0], ld[1])
             ]
             for name, spans in defs.items()
         }
@@ -533,10 +653,19 @@ def test_coverage_citations_exist():
     assert not missing, f"COVERAGE.md cites names that do not exist: {missing}"
 
 
+def _production_census() -> tuple[list[str], dict[str, set[str]]]:
+    """The parameter census over the callers except bench.py, with
+    ``FROZEN_BENCH_KWARGS`` set."""
+    return _param_census(
+        [c for c in CALLERS if c != BENCH], tuple(FROZEN_BENCH_KWARGS)
+    )
+
+
 def test_every_parameter_is_set_by_a_production_caller():
-    """A defaulted parameter only tests set is a constant in disguise:
-    inline its default and delete the branches behind the other values."""
-    unset, _ = _param_census()
+    """A defaulted parameter only tests set, or production sets only to
+    its default, is a constant in disguise: inline its default and
+    delete the branches behind the other values."""
+    unset, _ = _production_census()
     allowed = {
         f"{n}.{a}" for n, params in PARAM_ALLOWLIST.items()
         for _, fn in _package_functions().get(n, [])
@@ -548,11 +677,35 @@ def test_every_parameter_is_set_by_a_production_caller():
     )
 
 
+def test_frozen_bench_kwargs_are_exact():
+    """Each listed parameter exists, the cited bench.py line passes it,
+    and (when it has a default) no other production call sets it; one
+    that gains another setter leaves the list."""
+    fns = _package_functions()
+    _, others = _param_census([c for c in CALLERS if c != BENCH])
+    calls = {
+        (line, name): (call, scope)
+        for _, line, name, call, (scope, _) in _call_sites([BENCH])
+        if call is not None
+    }
+    for key, line in sorted(FROZEN_BENCH_KWARGS.items()):
+        name, _, a = key.rpartition(".")
+        assert name in fns, f"{key}: no public package function {name}"
+        fn = fns[name][0][1]
+        assert (line, name) in calls, f"{key}: bench.py:{line} does not call {name}"
+        passed = {p for p, _ in _set_params(fn, *calls[line, name], False)}
+        assert a in passed, f"{key}: bench.py:{line} does not pass {a}"
+        assert a not in _defaulted(fn) or a not in others[name], (
+            f"{key} now has a production setter besides bench.py; "
+            "drop it from FROZEN_BENCH_KWARGS"
+        )
+
+
 def test_parameter_allowlist_is_exact():
     """Each allowlisted parameter exists and still has no production
     setter; one that gains a setter leaves the allowlist."""
     fns = _package_functions()
-    _, setters = _param_census()
+    _, setters = _production_census()
     for name, params in sorted(PARAM_ALLOWLIST.items()):
         assert name in fns, f"allowlisted {name} no longer exists"
         named = params - {"*"} or {

@@ -2,14 +2,19 @@
 
 from __future__ import annotations
 
+import re
+from itertools import combinations
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from quant_feature_pipeline_spark.operators.dedup import dedup_exact
+from quant_feature_pipeline_spark.textops import dedup as dedup_mod
 from quant_feature_pipeline_spark.textops.dedup import (
     minhash_lsh_dup_pairs,
     ngram_jaccard_pairs,
+    simhash64,
     simhash_dup_pairs,
 )
 from quant_feature_pipeline_spark.textops.quality import (
@@ -71,28 +76,53 @@ def test_minhash_jaccard_matches_jvm_ngram_path(spark):
     IDENTICAL — this pins the Python twin to the JVM tokenizer."""
     docs = _docs(spark)
     mh = minhash_lsh_dup_pairs(docs, jaccard_threshold=None).toPandas()
-    ng = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.0).toPandas()
+    ng = ngram_jaccard_pairs(docs).toPandas()
     merged = mh.merge(ng, on=["id_a", "id_b"], suffixes=("_mh", "_ng"))
     assert len(merged) > 0
     assert (merged["jaccard_mh"] == merged["jaccard_ng"]).all(), merged
 
 
 def test_simhash_pairs(spark):
+    """The pigeonhole block join returns exactly the brute-force pairs:
+    every pair within _MAX_HAMMING bits, with its popcount, and no
+    other pair. Recall holds only while _MAX_HAMMING < the block count."""
+    assert dedup_mod._MAX_HAMMING < dedup_mod._SIMHASH_BLOCKS
     docs = _docs(spark)
-    pairs = simhash_dup_pairs(docs, max_hamming=10).toPandas()
-    found = set(map(tuple, pairs[["id_a", "id_b"]].to_numpy()))
-    assert (0, 1) in found
-    assert pairs[(pairs.id_a == 0) & (pairs.id_b == 1)]["hamming"].iloc[0] == 0
+    sims = dict(simhash64(docs).select("doc_id", "simhash").collect())
+    want = {
+        (a, b): bin((sims[a] ^ sims[b]) & (2**64 - 1)).count("1")
+        for a, b in combinations(sorted(sims), 2)
+    }
+    want = {k: h for k, h in want.items() if h <= dedup_mod._MAX_HAMMING}
+    pairs = simhash_dup_pairs(docs).toPandas()
+    got = {(a, b): h for a, b, h in zip(pairs.id_a, pairs.id_b, pairs.hamming)}
+    assert got == want
+    assert got[(0, 1)] == 0
+
+
+def _shingle_set(text: str) -> set[str]:
+    """Word 3-grams after lower-casing and dropping punctuation."""
+    words = re.sub(r"[^\w\s]", "", text.lower()).split()
+    return {" ".join(words[i:i + 3]) for i in range(max(len(words) - 3, 0) + 1)}
 
 
 def test_ngram_jaccard_pairs(spark):
+    """Exactly the brute-force pairs with 3-gram Jaccard >= 0.5, each with
+    its exact Jaccard."""
     docs = _docs(spark)
-    pairs = ngram_jaccard_pairs(docs, shingle_n=3, threshold=0.3).toPandas()
-    found = set(map(tuple, pairs[["id_a", "id_b"]].to_numpy()))
-    assert (0, 1) in found and (0, 2) in found
+    pdf = docs.toPandas()
+    sets = {i: _shingle_set(t) for i, t in zip(pdf.doc_id, pdf.text)}
+    want = {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a, b in combinations(sorted(sets), 2)
+    }
+    want = {k: j for k, j in want.items() if j >= 0.5}
+    pairs = ngram_jaccard_pairs(docs).toPandas()
+    got = {(a, b): j for a, b, j in zip(pairs.id_a, pairs.id_b, pairs.jaccard)}
+    assert got == want
+    assert (0, 1) in got and (0, 2) in got
     # formatting-only edit: same after normalization -> jaccard 1.0
-    j06 = pairs[(pairs.id_a == 0) & (pairs.id_b == 6)]
-    assert len(j06) == 1 and j06["jaccard"].iloc[0] == 1.0
+    assert got[(0, 6)] == 1.0
 
 
 def test_quality_and_langid_and_tokens(spark):
@@ -188,10 +218,10 @@ def test_ivf_train_matches_numpy_lloyd(spark):
     )
     df = spark.createDataFrame(pdf)
 
-    got = np.array(ivf_train(df, n_cells=3, dim=8, iters=3, seed=7))
+    got = np.array(ivf_train(df, n_cells=3, dim=8, iters=3))
 
     # numpy Lloyd, same init / same iteration count
-    cents = np.array(ivf_centroids(8, 3, seed=7))
+    cents = np.array(ivf_centroids(8, 3))
     for _ in range(3):
         d = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)

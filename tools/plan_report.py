@@ -77,7 +77,6 @@ def main() -> None:
             slice_time_range(
                 ev.select("user_id", "ts", "value"),
                 start=datetime.datetime(2024, 1, 2),
-                end=None,
             ),
             "the ts bound reaches the parquet FileScan (row-group pruning), and the "
             "projection prunes the scan to the 3 referenced columns.",
