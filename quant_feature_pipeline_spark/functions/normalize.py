@@ -18,9 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..config import MOM_TANH_SCALE
 
-def tanh_compress(col: Column, scale: float = 30.0) -> Column:
-    return F.tanh(col * scale)
+
+def tanh_compress(col: Column) -> Column:
+    return F.tanh(col * MOM_TANH_SCALE)
 
 
 def rsi_unit(col: Column) -> Column:

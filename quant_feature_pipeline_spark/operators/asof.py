@@ -5,36 +5,36 @@ each left row at time ts, attach the latest right row with
 ``right.ts <= ts`` (backward; forward/nearest + ``allow_exact_matches`` +
 ``tolerance`` configurable per `congfigs/main_config.yaml` merge block).
 
-Spark has no built-in as-of join, so two from-scratch formulations sit
-behind the one entry point ``asof_join``:
+Spark has no built-in as-of join. This module has ONE from-scratch
+algorithm, the union fill (``_union_ffill``), pure Catalyst: union left
+and right on the time axis, tag provenance, and fill the right payload
+with a running ``last(x, ignorenulls=True)`` over the preceding frame —
+ordered by ts ascending for backward, by ts DESCENDING for forward (the
+same frame on the reversed time axis), both for nearest (the closer
+wins, ties go backward) — then keep the left rows. At equal ts the right
+row sorts first exactly when exact matches count, in both fills. Every
+frame is a running one, so the fill is linear per partition; one sort
+per direction (two for nearest), one exchange, no join, no Python.
+Tolerance is one post-mask on the filled right timestamp. The fill
+target is ONE struct holding (matched ts, every right value column) —
+per-column fills would skip a matched row's legitimate NULL value and
+pair an older row's value with the newer matched_ts, diverging from
+``pd.merge_asof`` (ADVICE r3).
 
-1. The union fill (``_union_ffill``, the default) — pure Catalyst: union
-   left and right on the time axis, tag provenance, and fill the right
-   payload over ``(PARTITION BY entity ORDER BY ts, side)`` — backward
-   with ``last(x, ignorenulls=True)`` over the preceding frame, forward
-   with ``first`` over the following frame, nearest with both (the
-   closer wins, ties go backward); then keep left rows. One sort-based
-   window per entity partition (two only for nearest without exact
-   matches), whole-stage codegen, no Python. Exact-match falls out of
-   the tag's sort position; tolerance is one post-mask on the filled
-   right timestamp. The fill target is ONE struct holding (matched ts,
-   every right value column) — per-column fills would skip a matched
-   row's legitimate NULL value and pair an older row's value with the
-   newer matched_ts, diverging from ``pd.merge_asof`` (ADVICE r3).
+It runs under two partitionings:
 
-2. ``asof_join_bucketed`` — range-partitioned variant for few/huge
-   entities: bucket ts into ranges, carry each bucket's latest
-   preceding right row in via a small per-bucket ffill, equi-join on
-   (entity, bucket), then pick max(right_ts <= ts) per left row.
-   Bounded duplication (right rows appear in exactly their own bucket
-   + one carry row per later bucket-front), partition-parallel inside
-   a single entity — this is what survives a 100x scale-up on a
-   single hot symbol.
+1. by entity (``asof_join(strategy="union_ffill")``) — one sort task
+   per entity;
+2. by (entity, time bucket) (``asof_join_bucketed``) — for few/huge
+   entities: each bucket additionally receives the edge right row of the
+   nearest earlier (backward) and/or later (forward) bucket that has
+   right rows, found by the same union fill over the small bucket axis,
+   so a single hot symbol's timeline sorts in parallel tasks.
 
 ``asof_join`` validates its arguments and routes (``strategy="auto"``
-sends hot entities to the bucketed form, the rest to the union fill);
-``asof_join_multi`` fuses k backward right tables into one narrow sort.
-Both formulations are cross-checked against a pandas oracle in
+sends hot entities to the bucketed partitioning, the rest to the entity
+one); ``asof_join_multi`` fuses k backward right tables into one narrow
+sort. Both partitionings are cross-checked against a pandas oracle in
 tests/test_asof.py.
 """
 
@@ -66,23 +66,6 @@ def _check_direction(direction: str) -> None:
         raise ValueError(
             f"direction must be one of {', '.join(_DIRECTIONS)}, got {direction!r}"
         )
-
-
-def _dup_rank(df: DataFrame, part_cols: list[str], on: str):
-    """Deterministic per-row id within ``part_cols``: row_number ordered
-    by (on, content-hash tiebreaker). ``monotonically_increasing_id`` is
-    NOT stable across task retries or plan re-executions when upstream
-    row order is shuffle-dependent — two recomputations of the same
-    frame can assign different ids, silently mispairing any later
-    self-join on the id (ADVICE r2). A row_number keyed on row CONTENT
-    is: rows that tie on the full hash are byte-identical, hence
-    interchangeable, so any assignment among them yields the same
-    relation."""
-    h2 = F.xxhash64(F.lit(7), *[F.col(c) for c in df.columns])
-    w = Window.partitionBy(*[F.col(c) for c in part_cols]).orderBy(
-        F.col(on).asc(), h2.asc()
-    )
-    return F.row_number().over(w)
 
 
 def _right_payload(left: DataFrame, right: DataFrame, on: str, vcols: list[str]):
@@ -151,24 +134,24 @@ def asof_join(
     strategy: str = "auto",
     bucket_s: int = 3600,
 ) -> DataFrame:
-    """The as-of join: validates, then routes to a formulation (module
-    docstring). Key types, ``direction`` and ``strategy`` are checked
-    before any Spark job runs.
+    """The as-of join: validates, then routes to a partitioning of the
+    union fill (module docstring). Key types, ``direction`` and
+    ``strategy`` are checked before any Spark job runs.
 
-    ``strategy="union_ffill"`` and ``"bucketed"`` pick a formulation;
-    ``bucket_s`` is the bucketed one's time-bucket width.
+    ``strategy="union_ffill"`` partitions by entity, ``"bucketed"`` by
+    (entity, time bucket); ``bucket_s`` is the bucket width.
     ``strategy="auto"`` (the DEFAULT since r5 — VERDICT r4: the skew-
     aware path used to be opt-in, so the default entry point kept the
     single-task hot-entity sort) routes entities whose LEFT history
     exceeds ``_HOT_ROWS`` rows to ``asof_join_bucketed`` (the entity's
     timeline splits across time buckets, so one symbol holding 90% of
     rows is not one straggler sort task) and everything else to the
-    one-window union fill.
+    entity-partitioned union fill.
 
     Detection runs EAGERLY at call time (``_detect_hot_entities``: free
     on inputs whose size estimate is below the threshold, one bounded
     count aggregate otherwise). Eagerness buys the common case: with NO
-    hot entity the call returns the plain one-window union-fill plan —
+    hot entity the call returns the plain union-fill plan —
     no anti/semi joins, no empty bucketed branch, no union (r5: the lazy
     always-both-branches form cost 2-3x on non-skewed inputs, the usual
     shape). Otherwise the branches split on a LITERAL ``isin`` filter
@@ -200,19 +183,19 @@ def asof_join(
             f"strategy must be one of {', '.join(_STRATEGIES)}, got {strategy!r}"
         )
     kw = dict(
-        on=on, by=by, direction=direction,
+        on=on, direction=direction,
         allow_exact_matches=allow_exact_matches,
         tolerance_s=tolerance_s, right_prefix=right_prefix,
     )
     if strategy == "bucketed":
-        return asof_join_bucketed(left, right, bucket_s=bucket_s, **kw)
+        return asof_join_bucketed(left, right, by=by, bucket_s=bucket_s, **kw)
     hot_list = _detect_hot_entities(left, by, _HOT_ROWS) if strategy == "auto" else []
     if not hot_list:  # the common case: the one-window plan
-        return _union_ffill(left, right, **kw)
+        return _union_ffill(left, right, [by], **kw)
     is_hot = F.col(by).isNotNull() & F.col(by).isin(hot_list)
-    cold_out = _union_ffill(left.filter(~is_hot), right.filter(~is_hot), **kw)
+    cold_out = _union_ffill(left.filter(~is_hot), right.filter(~is_hot), [by], **kw)
     hot_out = asof_join_bucketed(
-        left.filter(is_hot), right.filter(is_hot), bucket_s=bucket_s, **kw
+        left.filter(is_hot), right.filter(is_hot), by=by, bucket_s=bucket_s, **kw
     )
     return cold_out.unionByName(hot_out)
 
@@ -220,55 +203,58 @@ def asof_join(
 def _union_ffill(
     left: DataFrame,
     right: DataFrame,
+    keys: list[str],
     on: str,
-    by: str,
     direction: str,
     allow_exact_matches: bool,
     tolerance_s: float | None,
     right_prefix: str,
 ) -> DataFrame:
-    """The union fill (module docstring, formulation 1).
+    """The union fill (module docstring) partitioned by ``keys``; the
+    output starts with ``keys`` and ``on``.
 
-    Tag order at equal ts: the backward frame sorts right (side 0)
-    before left (side 1) when exact matches count, after otherwise. The
-    forward frame sorts right after left only for ``direction="forward"``
-    with exact matches. With exact matches nearest's forward frame keeps
-    the backward sort — it then misses the equal-ts right row, but the
-    backward fill catches that row at distance 0, which the pick
-    prefers anyway — so both fills share ONE sort; without exact matches
-    nearest's two frames need opposite tag orders (two sorts, still one
-    exchange). Both fills are frames over the SAME entity-partitioned
-    union, evaluated row-aligned: no recombination join and no synthetic
-    row id (ADVICE r2)."""
-    vcols = [c for c in right.columns if c not in (by, on)]
-    lcols = [c for c in left.columns if c not in (by, on)]
+    Both fills are the same running frame over the same partitioned
+    union, the forward one on the reversed time axis; a right row sorts
+    before a left row at equal ts exactly when exact matches count.
+    Right rows at equal ts sort by their payload, so backward takes the
+    greatest of them and forward the least: ``pd.merge_asof``'s last and
+    first when duplicates arrive in payload order. Spark rows have no
+    input order, so the pick is content-defined: the same on every run
+    and in both partitionings (the bucketed edge rows are the same max
+    and min). Right value columns must therefore be orderable (not
+    maps). The fills are evaluated row-aligned: no recombination join
+    and no synthetic row id (ADVICE r2)."""
+    vcols = [c for c in right.columns if c not in (*keys, on)]
+    lcols = [c for c in left.columns if c not in (*keys, on)]
     pay_type, pay_expr = _right_payload(left, right, on, vcols)
     u = left.select(
-        F.col(by), F.col(on), F.lit(1).alias("_side"),
+        *keys, F.col(on), F.lit(1).alias("_side"),
         *[F.col(c) for c in lcols],
         F.lit(None).cast(pay_type).alias("_rpay"),
     ).unionByName(
         right.select(
-            F.col(by), F.col(on), F.lit(0).alias("_side"),
+            *keys, F.col(on), F.lit(0).alias("_side"),
             *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
             pay_expr.alias("_rpay"),
         )
     )
+    side = F.col("_side").asc() if allow_exact_matches else F.col("_side").desc()
 
-    def frame(right_first: bool) -> Window:
-        side = F.col("_side").asc() if right_first else F.col("_side").desc()
-        return Window.partitionBy(by).orderBy(F.col(on).asc(), side)
+    def fill(asc: bool, name: str):
+        ts, pay = F.col(on), F.col("_rpay")  # desc is asc reversed: nulls last
+        w = Window.partitionBy(*keys).orderBy(
+            ts.asc() if asc else ts.desc(), side, pay.asc() if asc else pay.desc()
+        )
+        w = w.rowsBetween(Window.unboundedPreceding, 0)
+        return F.last(pay, ignorenulls=True).over(w).alias(name)
 
     fills = []
     if direction != "forward":
-        w = frame(allow_exact_matches).rowsBetween(Window.unboundedPreceding, 0)
-        fills.append(F.last(F.col("_rpay"), ignorenulls=True).over(w).alias("_bpay"))
+        fills.append(fill(True, "_bpay"))
     if direction != "backward":
-        w = frame(not (direction == "forward" and allow_exact_matches))
-        w = w.rowsBetween(0, Window.unboundedFollowing)
-        fills.append(F.first(F.col("_rpay"), ignorenulls=True).over(w).alias("_fpay"))
+        fills.append(fill(False, "_fpay"))
     filled = u.select(
-        F.col(by), F.col(on), F.col("_side"), *[F.col(c) for c in lcols], *fills,
+        *keys, F.col(on), F.col("_side"), *[F.col(c) for c in lcols], *fills,
     ).filter(F.col("_side") == 1)
 
     def dist(p: str):
@@ -293,7 +279,7 @@ def _union_ffill(
             return F.when(use_b, F.col(f"_bpay.{f}")).when(f_ok, F.col(f"_fpay.{f}"))
 
     return filled.select(
-        F.col(by), F.col(on), *[F.col(c) for c in lcols],
+        *keys, F.col(on), *[F.col(c) for c in lcols],
         *[pick(f"v{i}").alias(f"{right_prefix}{c}") for i, c in enumerate(vcols)],
         pick("m").alias(f"{right_prefix}matched_{on}"),
     )
@@ -310,136 +296,38 @@ def asof_join_bucketed(
     right_prefix: str = "",
     bucket_s: int = 3600,
 ) -> DataFrame:
-    """Range-partitioned as-of join (pure Catalyst), all three directions.
+    """The union fill partitioned by (entity, ``bucket_s``-second time
+    bucket), all three directions (module docstring, partitioning 2).
 
-    Scale path for few/huge entities: a single entity's timeline is split
-    into ``bucket_s``-second ranges that process in parallel. Right rows
-    equi-join into their own bucket; each bucket additionally receives ONE
-    carry row — the nearest right row from any earlier (backward) / later
-    (forward) bucket — computed by a cheap per-bucket fill over the (tiny)
-    bucket axis. ``nearest`` composes the two directional passes.
+    A bucket's own right rows cannot see across its edges, so each
+    bucket of the left also receives, as an extra right row, the edge
+    row of the nearest earlier bucket that has right rows (its latest
+    row; backward and nearest) and of the nearest later one (its
+    earliest row; forward and nearest). A carried row keeps its own ts,
+    outside the bucket, so exact-match, tolerance and nearest need no
+    special case. The carry is the union fill over the bucket axis: one
+    edge struct per right bucket, filled onto the left's distinct
+    buckets with exact matches off.
     """
     _check_direction(direction)
-    fwd = direction == "forward"
-    nearest = direction == "nearest"
-    vcols = [c for c in right.columns if c not in (by, on)]
-    lcols = [c for c in left.columns if c not in (by, on)]
-    bucket = lambda c: F.floor(epoch_seconds(F.col(c)) / bucket_s).cast("long")  # noqa: E731
-
-    # deterministic per-row id within (by, bucket): the row_number's
-    # (by, _bkt) hash partitioning is exactly the downstream join key, so
-    # Catalyst reuses the exchange — and unlike the previous
-    # monotonically_increasing_id it is stable under task retry.
-    l_b = left.withColumn("_bkt", bucket(on))
-    l_b = l_b.withColumn("_lid", _dup_rank(l_b, [by, "_bkt"], on))
-    r_b = right.withColumn("_bkt", bucket(on))
-
-    # boundary right row per (entity, bucket) for each needed direction:
-    # latest for backward carry, earliest for forward carry
-    def _carry(carry_fwd: bool) -> DataFrame:
-        w_last = Window.partitionBy(by, "_bkt").orderBy(
-            F.col(on).asc() if carry_fwd else F.col(on).desc()
-        )
-        lpb = (
-            r_b.withColumn("_rn", F.row_number().over(w_last))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .select(by, "_bkt", *[F.col(c).alias(f"_c_{c}") for c in vcols + [on]])
-        )
-        # bucket axis = all buckets seen on either side; fill the
-        # boundary payload over the axis excluding the current bucket, so
-        # bucket b gets "nearest right strictly before b's start"
-        # (backward) / "strictly after b's end" (forward)
-        axis = l_b.select(by, "_bkt").unionByName(r_b.select(by, "_bkt")).distinct()
-        if carry_fwd:
-            w_carry = (
-                Window.partitionBy(by)
-                .orderBy("_bkt")
-                .rowsBetween(1, Window.unboundedFollowing)
+    bkt = F.floor(epoch_seconds(F.col(on)) / bucket_s).cast("long").alias("_bkt")
+    l_b, r_b = left.select("*", bkt), right.select("*", bkt)
+    rcols = [on] + [c for c in right.columns if c not in (by, on)]
+    axis = l_b.select(by, "_bkt").distinct()
+    rights = r_b.select(by, "_bkt", *rcols)
+    for carry_dir, edge in (("backward", F.max), ("forward", F.min)):
+        if direction in (carry_dir, "nearest"):
+            # a bucket's latest/earliest right row: the struct orders by
+            # ts, then by payload, like the fill's equal-ts tie order
+            edges = r_b.groupBy(by, "_bkt").agg(edge(F.struct(*rcols)).alias("_e"))
+            carry = _union_ffill(axis, edges, [by], "_bkt", carry_dir, False, None, "")
+            rights = rights.unionByName(
+                carry.filter(F.col("_e").isNotNull()).select(by, "_bkt", "_e.*")
             )
-            fill = lambda c: F.first(c, ignorenulls=True).over(w_carry)  # noqa: E731
-        else:
-            w_carry = (
-                Window.partitionBy(by)
-                .orderBy("_bkt")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            fill = lambda c: F.last(c, ignorenulls=True).over(w_carry)  # noqa: E731
-        return axis.join(lpb, [by, "_bkt"], "left").select(
-            by, "_bkt", *[fill(f"_c_{c}").alias(f"_p_{c}") for c in vcols + [on]]
-        )
-
-    # candidates: right rows in the same bucket ∪ the carry row(s);
-    # nearest needs carries from BOTH directions
-    same = r_b.select(by, "_bkt", *[F.col(c).alias(f"_p_{c}") for c in vcols + [on]])
-    candidates = same
-    for cf in ([False, True] if nearest else [fwd]):
-        candidates = candidates.unionByName(
-            _carry(cf).filter(F.col(f"_p_{on}").isNotNull())
-        )
-
-    d_fwd = epoch_seconds(F.col(f"_p_{on}")) - epoch_seconds(F.col(on))
-    d_bwd = epoch_seconds(F.col(on)) - epoch_seconds(F.col(f"_p_{on}"))
-    if nearest:
-        cond_ts = (
-            F.lit(True)
-            if allow_exact_matches
-            else F.col(f"_p_{on}") != F.col(on)
-        )
-        delta = F.abs(d_fwd)
-    elif fwd:
-        cond_ts = (
-            F.col(f"_p_{on}") >= F.col(on)
-            if allow_exact_matches
-            else F.col(f"_p_{on}") > F.col(on)
-        )
-        delta = d_fwd
-    else:
-        cond_ts = (
-            F.col(f"_p_{on}") <= F.col(on)
-            if allow_exact_matches
-            else F.col(f"_p_{on}") < F.col(on)
-        )
-        delta = d_bwd
-    if tolerance_s is not None:
-        cond_ts = cond_ts & (delta <= float(tolerance_s))
-    joined = l_b.join(candidates, [by, "_bkt"], "left").withColumn(
-        "_ok", F.coalesce(cond_ts, F.lit(False))
-    )
-    # best candidate per left row = admissible row with min |ts delta|,
-    # picked with ONE hash aggregation: max_by/min_by over an ordering
-    # struct partial-combines map-side, so only one candidate row per
-    # (_lid, partition) reaches the shuffle — a row_number window here
-    # would instead sort-shuffle EVERY candidate row keyed by _lid.
-    # A left row with no admissible candidate keeps exactly one null row.
-    payload = F.struct(F.col("_ok"), *[F.col(f"_p_{c}") for c in vcols + [on]])
-    if nearest:
-        # min |delta| among admissible; ties prefer the backward match
-        # (smaller right ts), matching pandas merge_asof 'nearest'
-        pick = F.min_by(
-            payload, F.struct(~F.col("_ok"), F.abs(d_fwd), F.col(f"_p_{on}"))
-        )
-    elif fwd:
-        # smallest admissible right ts: ok-first (~_ok sorts false<true),
-        # then min p_on (null p_on only occurs on not-ok rows)
-        pick = F.min_by(payload, F.struct(~F.col("_ok"), F.col(f"_p_{on}")))
-    else:
-        pick = F.max_by(payload, F.struct(F.col("_ok"), F.col(f"_p_{on}")))
-    picked = joined.groupBy(by, "_bkt", "_lid").agg(
-        F.first(on).alias(on),
-        *[F.first(c).alias(c) for c in lcols],
-        pick.alias("_best"),
-    )
-    value_exprs = [
-        F.when(F.col("_best._ok"), F.col(f"_best._p_{c}")).alias(f"{right_prefix}{c}")
-        for c in vcols
-    ]
-    rts = F.when(F.col("_best._ok"), F.col(f"_best._p_{on}")).alias(
-        f"{right_prefix}matched_{on}"
-    )
-    return picked.select(
-        F.col(by), F.col(on), *[F.col(c) for c in lcols], *value_exprs, rts
-    )
+    return _union_ffill(
+        l_b, rights, [by, "_bkt"], on, direction,
+        allow_exact_matches, tolerance_s, right_prefix,
+    ).drop("_bkt")
 
 
 def asof_join_multi(
@@ -505,11 +393,12 @@ def asof_join_multi(
     results union. Both branches are exact, so routing is
     performance-only (value identity pinned in tests/test_asof.py).
 
-    Threshold note (measured, bench_extra.py --skew-multi): the fused
-    union rows are NARROW (~60 bytes), so a 20M-row hot entity still
-    sorts faster in one task than the iterated bucketed alternative
-    (25.6 s vs 39.4 s at 23.1M rows, 87% hot, 2 rights — checksums
-    equal). ``_HOT_ROWS_MULTI`` therefore sits at 64M rows — the
+    Threshold note (bench_extra.py --skew-multi): the fused union rows
+    are NARROW (~60 bytes), so a 20M-row hot entity sorted in one task
+    (25.6 s at 23.1M rows, 87% hot, 2 rights) beat the routed branch
+    (39.4 s) when that branch was a candidate-join bucketed join; the
+    bucketed union fill that replaced it has not been re-measured at
+    that size. ``_HOT_ROWS_MULTI`` sits at 64M rows — the
     point where ONE task's sort buffer reaches ~4 GB and the concern
     stops being wall-clock and becomes task memory — far above the
     two-table router's 4M ``_HOT_ROWS``, whose hot branch replaces a

@@ -42,7 +42,6 @@ from pyspark.sql.window import Window
 
 from ..config import (
     ATR_WINDOW,
-    MOM_TANH_SCALE,
     RSI_WINDOW,
     RV_WINDOWS,
     PipelineConfig,
@@ -369,9 +368,7 @@ def run_flagship(
         atr_cal = F.pow(_clip01(F.col(f"_axf_{tf}")), F.lit(gammas[tf]))
         sel += [
             market_state(F.col(f"{tf}_supertrend_direction")).alias(f"{tf}_market_state"),
-            tanh_compress(
-                F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0)), MOM_TANH_SCALE
-            ).alias(f"{tf}_mom"),
+            tanh_compress(F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0))).alias(f"{tf}_mom"),
             (bw_fused * (1.0 - 2.0 * eps) + eps).alias(f"{tf}_bb_width"),
             F.col(f"_vlr_{tf}").alias(f"{tf}_volume"),
             F.least(F.greatest(atr_cal, F.lit(eps)), F.lit(1.0 - eps)).alias(f"{tf}_atr_pct"),

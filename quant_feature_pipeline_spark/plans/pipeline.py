@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import MOM_TANH_SCALE, RSI_WINDOW, PipelineConfig, tf_seconds
+from ..config import RSI_WINDOW, PipelineConfig, tf_seconds
 from ..functions.indicators import (
     apply_window_indicators,
     window_indicator_layers,
@@ -199,7 +199,7 @@ def feature_table(
             F.col(f"{tf}_supertrend_direction")
         )
         new_cols[f"{tf}_mom_n"] = tanh_compress(
-            F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0)), MOM_TANH_SCALE
+            F.coalesce(F.col(f"{tf}_mom"), F.lit(0.0))
         )
         new_cols[f"{tf}_rsi_n"] = rsi_unit(
             F.coalesce(F.col(f"{tf}_rsi{RSI_WINDOW}"), F.lit(0.0))

@@ -212,8 +212,13 @@ def test_asof_null_right_values(spark, strategy, direction):
     """A matched right row with NULL in a value column must yield that
     NULL (paired with its own matched_ts) — not an older row's value
     (ADVICE r3: independent per-column ignorenulls fills mixed rows).
-    Two value columns with nulls planted on different rows so a
-    row-mixing bug is visible in either column."""
+    Entity A: two value columns with nulls planted on different rows so
+    a row-mixing bug is visible in either column. Entities C and D: the
+    NULL sits on a row carried across hour-bucket edges. C: rights
+    (00:10, 5.0) and (01:10, NULL), left at 02:30, which matches NULL @
+    01:10 backward and nearest. D: NULLs on the first and the last right
+    row of hour buckets, lefts every 20 minutes across eight buckets,
+    four of them with no right row."""
     rng = np.random.RandomState(11)
     lts = [T0 + datetime.timedelta(seconds=int(s)) for s in range(30, 3600, 90)]
     lpdf = pd.DataFrame({"entity": "A", "ts": lts, "lval": rng.randn(len(lts))})
@@ -228,16 +233,32 @@ def test_asof_null_right_values(spark, strategy, direction):
     )
     rpdf.loc[rpdf.index % 3 == 1, "rval"] = np.nan
     rpdf.loc[rpdf.index % 3 == 2, "rval2"] = np.nan
+
+    def at(h, m):
+        return T0 + datetime.timedelta(hours=h, minutes=m)
+
+    carried = [
+        ("C", 0, 10, 5.0), ("C", 1, 10, None), ("D", 0, 20, 1.0),
+        ("D", 1, 10, None), ("D", 1, 40, 2.0), ("D", 3, 5, 4.0),
+        ("D", 3, 50, None), ("D", 6, 15, None), ("D", 6, 45, 7.0),
+    ]
+    rpdf = pd.concat([rpdf, pd.DataFrame(
+        [(e, at(h, m), v, float(k)) for k, (e, h, m, v) in enumerate(carried)],
+        columns=["entity", "ts", "rval", "rval2"],
+    )], ignore_index=True)
+    lpdf = pd.concat([lpdf, pd.DataFrame(
+        [("C", at(2, 30), 0.0)]
+        + [("D", at(0, 20 * k), float(k)) for k in range(24)],
+        columns=["entity", "ts", "lval"],
+    )], ignore_index=True)
     got = asof_join(
         spark.createDataFrame(lpdf),
         spark.createDataFrame(rpdf),
         direction=direction,
         strategy=strategy,
     ).toPandas()
-    lg, rg = lpdf.sort_values("ts"), rpdf.drop(columns=["entity"]).sort_values("ts")
-    rg = rg.assign(matched_ts=rg["ts"])
-    want = pd.merge_asof(lg, rg, on="ts", direction=direction)
-    assert_frame_close(got, want, keys=["ts"])
+    want = _oracle(lpdf, rpdf, direction, True, None)
+    assert_frame_close(got, want, keys=["entity", "ts", "lval"])
 
 
 def test_asof_multi_hot_routing_value_identity(spark, monkeypatch):
@@ -255,8 +276,13 @@ def test_asof_multi_hot_routing_value_identity(spark, monkeypatch):
     left = spark.createDataFrame(pd.DataFrame(rows, columns=["entity", "ts", "lval"]))
     rights = {}
     for j, p in enumerate(("a_", "b_")):
+        # rights span several hour buckets of the hot branch; the last
+        # one (k = 19) is NULL and is carried across the later buckets
         rr = [
-            (e, t0 + datetime.timedelta(minutes=(3 + j) * k), float(10 * j + k))
+            (
+                e, t0 + datetime.timedelta(minutes=(13 + 4 * j) * k),
+                None if k == 19 else float(10 * j + k),
+            )
             for e in ("HOT", "C1", None)
             for k in range(20)
         ]

@@ -40,9 +40,9 @@ def test_dimension_joins_broadcast(spark):
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 def test_asof_union_ffill_single_window(spark, direction, exact):
     """The union-fill as-of join must stay one sorted Window over one
-    union — no join, no extra shuffle beyond the two inputs. Nearest's
-    two fills share the one sort when exact matches count; only nearest
-    without exact matches needs a second sort (opposite tag orders)."""
+    union — no join, no extra shuffle beyond the two inputs. Nearest
+    runs both fills, one per time-axis direction: two sorts, still one
+    exchange."""
     from quant_feature_pipeline_spark.operators.asof import asof_join
 
     pdf = make_bars_pdf(n=50)
@@ -56,11 +56,37 @@ def test_asof_union_ffill_single_window(spark, direction, exact):
             strategy="union_ffill",
         )
     )
-    sorts = 2 if (direction, exact) == ("nearest", False) else 1
+    sorts = 2 if direction == "nearest" else 1
     assert p.count("Exchange") == 1
     assert p.count("Window") == sorts
     assert p.count("Sort") == sorts
     assert "Join" not in p
+
+
+@pytest.mark.parametrize("strategy", ["union_ffill", "bucketed"])
+def test_asof_plans_use_running_frames_only(spark, strategy):
+    """Every as-of fill is a running frame: a frame that ends at
+    unbounded following is re-evaluated for every row, quadratic in the
+    partition. Neither strategy joins: the bucketed carry is the union
+    fill over the bucket axis, so no left row meets a candidate join."""
+    from quant_feature_pipeline_spark.operators.asof import asof_join
+
+    pdf = make_bars_pdf(n=50)
+    left = spark.createDataFrame(pdf[["entity", "ts", "close"]])
+    right = spark.createDataFrame(
+        pdf[["entity", "ts", "volume"]].rename(columns={"volume": "v"})
+    )
+    for direction in ("backward", "forward", "nearest"):
+        for exact in (True, False):
+            p = _plan(
+                asof_join(
+                    left, right, direction=direction, allow_exact_matches=exact,
+                    strategy=strategy,
+                )
+            ).lower()
+            assert "unboundedpreceding" in p, (direction, exact)
+            assert "unboundedfollowing" not in p, (direction, exact)
+            assert "join" not in p, (direction, exact)
 
 
 def test_prefix_sum_sma_no_sliding_frame(spark):

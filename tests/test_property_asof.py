@@ -52,19 +52,9 @@ def _frame(offsets, col):
     tolerance_s=st.sampled_from([None, 60, 600]),
 )
 def test_asof_union_ffill_matches_pandas(spark, loffs, roffs, direction, exact, tolerance_s):
+    """Both partitionings of the union fill: by entity, and by (entity,
+    900 s bucket), where the 0-7200 s offsets span nine buckets."""
     lpdf, rpdf = _frame(loffs, "lval"), _frame(roffs, "rval")
-    got = (
-        asof_join(
-            spark.createDataFrame(lpdf),
-            spark.createDataFrame(rpdf),
-            direction=direction,
-            allow_exact_matches=exact,
-            tolerance_s=tolerance_s,
-        )
-        .toPandas()
-        .sort_values(["ts", "lval"])
-        .reset_index(drop=True)
-    )
     r = rpdf.copy()
     r["matched_ts"] = r["ts"]
     want = pd.merge_asof(
@@ -75,10 +65,26 @@ def test_asof_union_ffill_matches_pandas(spark, loffs, roffs, direction, exact, 
         allow_exact_matches=exact,
         tolerance=None if tolerance_s is None else pd.Timedelta(seconds=tolerance_s),
     ).sort_values(["ts", "lval"]).reset_index(drop=True)
-    assert len(got) == len(want)
-    np.testing.assert_allclose(
-        got["rval"].to_numpy(), want["rval"].to_numpy(), rtol=0, atol=0
-    )
+    for strategy in ("union_ffill", "bucketed"):
+        got = (
+            asof_join(
+                spark.createDataFrame(lpdf),
+                spark.createDataFrame(rpdf),
+                direction=direction,
+                allow_exact_matches=exact,
+                tolerance_s=tolerance_s,
+                strategy=strategy,
+                bucket_s=900,
+            )
+            .toPandas()
+            .sort_values(["ts", "lval"])
+            .reset_index(drop=True)
+        )
+        assert len(got) == len(want), strategy
+        np.testing.assert_allclose(
+            got["rval"].to_numpy(), want["rval"].to_numpy(), rtol=0, atol=0,
+            err_msg=strategy,
+        )
 
 
 @settings(

@@ -24,7 +24,9 @@ constant in ``config.py``.
 Parameters get the same treatment: every defaulted parameter of a public
 package function or method is set by some production call (by keyword,
 by position or through a ``*``/``**`` splat) to something other than a
-literal equal to its default, or else it is a constant. A ``**name``
+literal equal to its default, or else it is a constant. A package
+module-level literal constant (imported by name, or read as
+``module.NAME``) counts as its value. A ``**name``
 splat sets only the keys of the dict literals (or keyword-only
 ``dict(...)`` calls) ``name`` is bound to in the enclosing function. An
 argument that is the enclosing public package function's own defaulted
@@ -249,17 +251,87 @@ def _defaulted(fn: ast.FunctionDef) -> list[str]:
     return list(_defaults(fn))
 
 
-def _is_default(arg: ast.expr | None, default: ast.expr) -> bool:
-    """Whether a call argument is the parameter's default: the same
-    expression, or a literal equal to it. An unknown argument is not."""
+def _is_default(arg: ast.expr | None, default: ast.expr, path: Path) -> bool:
+    """Whether a call argument in ``path`` is the parameter's default: the
+    same expression, or a literal equal to it, once a name of a package
+    module-level literal constant is read as its value
+    (``_constant_value``). An unknown argument is not."""
     if arg is None:
         return False
+    arg = _constant_value(arg, path)
     if ast.dump(arg) == ast.dump(default):
         return True
     try:
         return ast.literal_eval(arg) == ast.literal_eval(default)
     except (ValueError, TypeError, SyntaxError):  # not a literal
         return False
+
+
+def _module_file(parts: tuple[str, ...]) -> Path | None:
+    """The source file of the dotted module ``parts`` under the repo."""
+    base = ROOT.joinpath(*parts)
+    for f in (base.with_suffix(".py"), base / "__init__.py"):
+        if f.is_file():
+            return f
+    return None
+
+
+@functools.lru_cache(maxsize=None)
+def _package_imports(path: Path) -> dict[str, tuple[Path, str | None]]:
+    """local name -> (package module, imported name) for each name a file
+    imports from a package module, and -> (module, None) for a package
+    module it imports as a whole (``from .. import config``,
+    ``import quant_feature_pipeline_spark.config as c``)."""
+    out: dict[str, tuple[Path, str | None]] = {}
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.ImportFrom):
+            base = path.parents[node.level - 1].relative_to(ROOT).parts if node.level else ()
+            mod = base + tuple(node.module.split(".") if node.module else ())
+            if not mod or mod[0] != PKG.name:
+                continue
+            for a in node.names:
+                sub, home = _module_file(mod + (a.name,)), _module_file(mod)
+                if sub or home:
+                    out[a.asname or a.name] = (sub, None) if sub else (home, a.name)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                f = _module_file(tuple(a.name.split(".")))
+                if a.asname and a.name.startswith(f"{PKG.name}.") and f:
+                    out[a.asname] = (f, None)
+    return out
+
+
+@functools.lru_cache(maxsize=None)
+def _literal_constants(path: Path) -> dict[str, ast.expr]:
+    """NAME -> value of a module's module-level ``NAME = <literal>``."""
+    out = {}
+    for node in _parse(path).body:
+        if isinstance(node, ast.Assign) and len(node.targets) == 1 and isinstance(
+            node.targets[0], ast.Name
+        ):
+            try:
+                ast.literal_eval(node.value)
+            except (ValueError, TypeError, SyntaxError):
+                continue
+            out[node.targets[0].id] = node.value
+    return out
+
+
+def _constant_value(arg: ast.expr, path: Path) -> ast.expr:
+    """The literal a package module-level constant names when ``arg`` is
+    a bare name ``path`` imports from the package or ``module.NAME`` on a
+    package module it imports; else ``arg`` itself."""
+    imports = _package_imports(path)
+    if isinstance(arg, ast.Name) and arg.id in imports:
+        home, name = imports[arg.id]
+    elif (
+        isinstance(arg, ast.Attribute) and isinstance(arg.value, ast.Name)
+        and imports.get(arg.value.id, (None, ""))[1] is None
+    ):
+        home, name = imports[arg.value.id][0], arg.attr
+    else:
+        return arg
+    return _literal_constants(home).get(name, arg) if name else arg
 
 
 def _annotation_nodes(tree: ast.Module) -> set[int]:
@@ -454,7 +526,7 @@ def _param_census(
             for _, fn in defs:
                 default = _defaults(fn)
                 for a, arg in _set_params(fn, call, inner, "." in name):
-                    if a in default and _is_default(arg, default[a]):
+                    if a in default and _is_default(arg, default[a], path):
                         continue
                     via = None
                     if (
