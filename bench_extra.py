@@ -8,7 +8,6 @@ Each mode prints one JSON line.
 Usage:
     python bench_extra.py --query NAME [--reps N]  # first/warm timing of one gate query (same method as bench.py)
     python bench_extra.py --headline [A,B,...]     # first/warm sum over bench.HEADLINE (or the named queries)
-    python bench_extra.py --skew-multi             # asof_join_multi with one hot entity, un-routed vs routed
     python bench_extra.py --stream-state50         # streaming as-of state rows over ~50 micro-batches
     python bench_extra.py --explain NAME           # write plans/r06/<NAME>_<PLAN_TAG>.txt (PLAN_TAG defaults to "before")
 """
@@ -106,86 +105,6 @@ def headline(names: list[str] | None = None) -> None:
     out["probe_start"] = probe0
     out["probe_end"] = _probe()
     print(json.dumps(out))
-
-
-def skew_multi() -> None:
-    """Skew row for the PIPELINE merge (VERDICT r5 item 4): the fused
-    asof_join_multi with one HOT entity, un-routed vs routed: each leg
-    sets the router's ``_HOT_ROWS_MULTI`` threshold, above every entity
-    or below the 20M-row hot one. Identical output checksums asserted."""
-    from pyspark.sql import functions as F
-
-    from quant_feature_pipeline_spark.operators import asof as asof_mod
-    from quant_feature_pipeline_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="bench-skew-multi", cpus=CPUS,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    t0 = 1704067200
-    hot = spark.range(20_000_000).select(
-        F.lit("HOT").alias("entity"),
-        F.timestamp_seconds(t0 + F.col("id")).alias("ts"),
-        (F.col("id") % 997).cast("double").alias("lval"),
-    )
-    cold = spark.range(31 * 100_000).select(
-        F.concat(F.lit("C"), (F.col("id") % 31).cast("string")).alias("entity"),
-        F.timestamp_seconds(t0 + (F.col("id") / 31).cast("long") * 30).alias("ts"),
-        (F.col("id") % 991).cast("double").alias("lval"),
-    )
-    left = hot.unionByName(cold)
-    ents = spark.range(32).select(
-        F.when(F.col("id") == 31, F.lit("HOT"))
-        .otherwise(F.concat(F.lit("C"), F.col("id").cast("string")))
-        .alias("entity")
-    )
-    rights = {}
-    for j, p in enumerate(("a_", "b_")):
-        rights[p] = ents.crossJoin(
-            spark.range(22_300).select(
-                F.timestamp_seconds(t0 + F.col("id") * (900 + 60 * j)).alias("ts"),
-                (F.col("id") % (83 + j)).cast("double").alias(f"v{j}"),
-            )
-        )
-    lp = "/tmp/skewm_left"
-    left.write.mode("overwrite").parquet(lp)
-    left = spark.read.parquet(lp)
-    rps = {}
-    for p, r in rights.items():
-        rp = f"/tmp/skewm_r{p}"
-        r.write.mode("overwrite").parquet(rp)
-        rps[p] = spark.read.parquet(rp)
-    res = {"left_rows": left.count(), "hot_rows": 20_000_000}
-    sums = {}
-    default_hot_rows = asof_mod._HOT_ROWS_MULTI
-    for label, hot_rows in (("fused_unrouted", 1 << 62), ("routed", 10_000_000)):
-        asof_mod._HOT_ROWS_MULTI = hot_rows
-        out = asof_mod.asof_join_multi(left, rps, by="entity")
-        asof_mod._HOT_ROWS_MULTI = default_hot_rows
-        t = time.time()
-        row = out.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.pmod(
-                    F.xxhash64("entity", "ts", "lval", "a_v0", "b_v1"),
-                    F.lit(1_000_000_007),
-                )
-            ).alias("ck"),
-        ).first()
-        res[f"{label}_sec"] = round(time.time() - t, 2)
-        sums[label] = (row["n"], int(row["ck"]))
-    res["checksum_equal"] = sums["fused_unrouted"] == sums["routed"]
-    res["out_rows"] = sums["fused_unrouted"][0]
-    res["speedup_routed"] = round(
-        res["fused_unrouted_sec"] / res["routed_sec"], 2
-    )
-    spark.stop()
-    import shutil
-
-    shutil.rmtree(lp, ignore_errors=True)
-    for p in rps:
-        shutil.rmtree(f"/tmp/skewm_r{p}", ignore_errors=True)
-    print(json.dumps(res))
 
 
 def stream_state_50() -> None:
@@ -329,8 +248,6 @@ def main() -> None:
         i = sys.argv.index("--headline")
         names = sys.argv[i + 1].split(",") if len(sys.argv) > i + 1 else None
         headline(names)
-    elif "--skew-multi" in sys.argv:
-        skew_multi()
     elif "--stream-state50" in sys.argv:
         stream_state_50()
     elif "--query" in sys.argv:

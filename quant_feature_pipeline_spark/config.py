@@ -56,7 +56,10 @@ class PipelineConfig:
     is always backward with exact matches and no tolerance.
 
     ``resample_targets[0]`` is the base axis every feature lands on, so
-    ``base_tf`` must equal it.
+    ``base_tf`` must equal it. Every target must be a whole multiple of
+    ``base_tf``: each coarse bar is then a rollup of whole base bars, which
+    is what lets the timeframe merge match by key
+    (``plans.pipeline.merge_timeframes``).
     """
 
     base_tf: str = "3m"
@@ -67,4 +70,11 @@ class PipelineConfig:
             raise ValueError(
                 f"base_tf {self.base_tf!r} must be the first resample target, "
                 f"got resample_targets={self.resample_targets!r}"
+            )
+        base_s = tf_seconds(self.base_tf)
+        uneven = [tf for tf in self.resample_targets if tf_seconds(tf) % base_s]
+        if uneven:
+            raise ValueError(
+                f"resample targets {uneven!r} are not whole multiples of "
+                f"base_tf {self.base_tf!r}"
             )

@@ -33,9 +33,10 @@ It runs under two partitionings:
 
 ``asof_join`` validates its arguments and routes (``strategy="auto"``
 sends hot entities to the bucketed partitioning, the rest to the entity
-one); ``asof_join_multi`` fuses k backward right tables into one narrow
-sort. Both partitionings are cross-checked against a pandas oracle in
-tests/test_asof.py.
+one). Both partitionings are cross-checked against a pandas oracle in
+tests/test_asof.py. The pipeline's timeframe merge needs no general
+as-of: every coarse bar is a rollup of the base axis, so it matches by
+key (``plans.pipeline.merge_timeframes``).
 """
 
 from __future__ import annotations
@@ -50,15 +51,12 @@ from ..tsutil import epoch_seconds, estimated_bytes
 _DIRECTIONS = ("backward", "forward", "nearest")
 _STRATEGIES = ("union_ffill", "bucketed", "auto")
 
-# cap on the detected hot-entity list: both routers split on a literal
+# cap on the detected hot-entity list: the router splits on a literal
 # isin over it, and hot entities past the cap stay on the cold path
 _HOT_ISIN_MAX = 10_000
-# left rows above which an entity is hot: asof_join's router replaces a
-# WIDE window sort, so bucketing pays early; asof_join_multi's fused
-# sort moves ~60-byte rows and stays faster in one task up to the point
-# where a task's sort buffer reaches ~4 GB (see asof_join_multi)
+# left rows above which an entity is hot: the router replaces a WIDE
+# window sort, so bucketing pays early
 _HOT_ROWS = 4_000_000
-_HOT_ROWS_MULTI = 64_000_000
 
 
 def _check_direction(direction: str) -> None:
@@ -94,8 +92,7 @@ def _right_payload(left: DataFrame, right: DataFrame, on: str, vcols: list[str])
 
 
 def _detect_hot_entities(left: DataFrame, by: str, hot_rows: int) -> list:
-    """Bounded hot-entity list for skew routing (shared by asof_join and
-    asof_join_multi).
+    """Bounded hot-entity list for asof_join's skew routing.
 
     Free fast path (r6, VERDICT r5 item 3): Catalyst size estimates
     derive from on-disk/in-memory BYTES (>= 1 byte/row by a wide margin
@@ -104,9 +101,9 @@ def _detect_hot_entities(left: DataFrame, by: str, hot_rows: int) -> list:
     and the empty list returns with ZERO jobs. Otherwise one count
     aggregate collects the by-construction-bounded list (< total_rows /
     hot_rows entries), capped at ``_HOT_ISIN_MAX``
-    names so the callers' literal ``isin`` stays small; hot entities past
+    names so the router's literal ``isin`` stays small; hot entities past
     the cap take the exact cold path (routing is performance-only, so
-    the cap never changes a result row). Nones are dropped so callers
+    the cap never changes a result row). Nones are dropped so the caller
     can safely build literal isin predicates (ADVICE r5: a None literal
     makes both branch predicates NULL and loses null-key rows)."""
     est_bytes = estimated_bytes(left)
@@ -329,169 +326,3 @@ def asof_join_bucketed(
         allow_exact_matches, tolerance_s, right_prefix,
     ).drop("_bkt")
 
-
-def asof_join_multi(
-    left: DataFrame,
-    rights: dict[str, DataFrame],
-    on: str = "ts",
-    by: str = "entity",
-    axis_tables: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """Backward as-of join of MANY right tables onto one left axis with
-    ONE narrow sort — the fused, scale-tuned form of the reference's
-    iterated per-timeframe merge loop
-    (`step4_merge_features.py:522-535`).
-
-    Exact matches are allowed and there is no tolerance (the reference's
-    merge defaults); the two-table ``asof_join`` takes the other settings.
-
-    Two-phase design:
-
-    1. **Narrow match**: union only (by, on, side, one matched-ts column
-       per right table, the left payload) and forward-fill the matched
-       timestamps in a single window pass. Row width is ~(3+k) columns
-       plus the left payload, so the sort moves ~60 bytes/row instead
-       of the full (and growing) right payload — at 15M rows x 4 timeframes that is ~400MB sorted vs ~7.5GB for
-       the payload-carrying formulation (measured 104s -> ~20s).
-    2. **Payload attach**: equi-join each right table on
-       (by, matched_ts) — plain hash joins Catalyst/AQE can broadcast
-       or co-partition. Right tables must be unique on (by, on)
-       (resampled tables are); the generic two-table asof_join handles
-       duplicate-ts rights.
-
-    Each dict key is the output column prefix for that right table
-    (reference P6 `{tf}_` prefixing, `step4_merge_features.py:340-344`).
-
-    Left-payload handling: the left payload rides straight through the
-    union sort — the row only grows by the payload width, every left
-    row maps 1:1 by construction (duplicate left timestamps included),
-    and no re-attach join exists at all. Production lefts are narrow:
-    the pipeline base carries 6 payload columns and the flagship base
-    6 plus one ``_vs_{tf}`` per timeframe. The sort output stays
-    hash-partitioned on ``by``, which satisfies the clustering
-    requirement of every (by, matched_ts) payload join — Catalyst
-    inserts no further exchange for them.
-
-    ``axis_tables`` (r4 scaling work): optional per-prefix tables whose
-    (by, on) rows are IDENTICAL to the matching right table's — e.g. the
-    pre-indicator resampled bars when rights are 1:1 row-preserving
-    indicator outputs. The narrow match only consumes (by, on), but a
-    right table behind an opaque Arrow stage (mapInPandas) cannot be
-    column-pruned through — without the hint the full indicator compute
-    runs TWICE (once to feed the narrow union, once in the payload
-    join). The caller owns the rows-identical guarantee.
-
-    Hot-entity routing (r6, VERDICT r5 item 4): the fused union sorts
-    each entity's narrow rows in ONE task, so a single entity holding
-    most of the left would serialize the merge. This router applies
-    the same discipline as asof_join's: skipped for free when
-    the optimizer's size estimate proves left < ``_HOT_ROWS_MULTI``
-    bytes (every gate-scale call), otherwise entities whose left row
-    count exceeds ``_HOT_ROWS_MULTI`` route through iterated
-    range-bucketed two-table joins — partition-parallel inside the
-    entity — while cold entities keep the fused one-sort plan; the two
-    results union. Both branches are exact, so routing is
-    performance-only (value identity pinned in tests/test_asof.py).
-
-    Threshold note (bench_extra.py --skew-multi): the fused union rows
-    are NARROW (~60 bytes), so a 20M-row hot entity sorted in one task
-    (25.6 s at 23.1M rows, 87% hot, 2 rights) beat the routed branch
-    (39.4 s) when that branch was a candidate-join bucketed join; the
-    bucketed union fill that replaced it has not been re-measured at
-    that size. ``_HOT_ROWS_MULTI`` sits at 64M rows — the
-    point where ONE task's sort buffer reaches ~4 GB and the concern
-    stops being wall-clock and becomes task memory — far above the
-    two-table router's 4M ``_HOT_ROWS``, whose hot branch replaces a
-    WIDE window sort where bucketing pays much earlier.
-    """
-    hot_list = _detect_hot_entities(left, by, _HOT_ROWS_MULTI)
-    if not hot_list:  # the common case: the fused one-sort plan
-        return _fused_multi(left, rights, on, by, axis_tables)
-    is_hot = F.col(by).isNotNull() & F.col(by).isin(hot_list)
-    cold = _fused_multi(
-        left.filter(~is_hot),
-        {p: r.filter(~is_hot) for p, r in rights.items()},
-        on, by,
-        {p: a.filter(~is_hot) for p, a in axis_tables.items()} if axis_tables else None,
-    )
-    hot_out = left.filter(is_hot)
-    for p in rights:
-        hot_out = asof_join_bucketed(
-            hot_out, rights[p].filter(is_hot), on=on, by=by,
-            direction="backward", right_prefix=p,
-        ).drop(f"{p}matched_{on}")
-    return cold.unionByName(hot_out.select(*cold.columns))
-
-
-def _fused_multi(
-    left: DataFrame,
-    rights: dict[str, DataFrame],
-    on: str,
-    by: str,
-    axis_tables: dict[str, DataFrame] | None,
-) -> DataFrame:
-    """The fused narrow-match + payload-attach merge (asof_join_multi,
-    phases 1 and 2), with no hot-entity routing."""
-    lcols = [c for c in left.columns if c not in (by, on)]
-    blocks = {p: [c for c in r.columns if c not in (by, on)] for p, r in rights.items()}
-    ts_type = left.schema[on].dataType
-    prefixes = list(rights)
-
-    # Narrow union encoding: a right row sets exactly ONE matched-ts, so
-    # the union carries (src_idx, rts) — 2 columns — instead of k
-    # nullable timestamp columns (k x 8 bytes/row through the shuffle
-    # AND the sort). The k per-table fill columns only materialize in
-    # the window OUTPUT, after the sort. Left rows are _src = -1.
-    l_tagged = left.select(
-        F.col(by), F.col(on),
-        *[F.col(c) for c in lcols],
-        F.lit(-1).cast("int").alias("_src"),
-        F.lit(None).cast(ts_type).alias("_rts"),
-    )
-    parts = [l_tagged]
-    for i, p in enumerate(prefixes):
-        sel = [F.col(by), F.col(on)]
-        sel += [F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols]
-        sel += [
-            F.lit(i).cast("int").alias("_src"),
-            F.col(on).cast(ts_type).alias("_rts"),
-        ]
-        axis = (axis_tables or {}).get(p, rights[p])
-        parts.append(axis.select(*sel))
-    u = parts[0]
-    for x in parts[1:]:
-        u = u.unionByName(x)
-
-    # right before left at equal ts (exact matches allowed): the
-    # boolean (_src = -1) sorts false (right) before true (left) asc
-    w = (
-        Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), (F.col("_src") == -1).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = u.select(
-        F.col(by), F.col(on),
-        *[F.col(c) for c in lcols],
-        F.col("_src"),
-        *[
-            F.last(F.when(F.col("_src") == i, F.col("_rts")), ignorenulls=True)
-            .over(w)
-            .alias(f"_m_{i}")
-            for i in range(len(prefixes))
-        ],
-    ).filter(F.col("_src") == -1).drop("_src")
-    for i, p in enumerate(prefixes):
-        r = rights[p].select(
-            F.col(by).alias(f"_rby_{i}"),
-            F.col(on).alias(f"_ron_{i}"),
-            *[F.col(c).alias(f"{p}{c}") for c in blocks[p]],
-        )
-        out = out.join(
-            r,
-            (F.col(by) == F.col(f"_rby_{i}")) & (F.col(f"_m_{i}") == F.col(f"_ron_{i}")),
-            "left",
-        ).drop(f"_rby_{i}", f"_ron_{i}")
-    return out.select(
-        F.col(by), F.col(on), *[F.col(c) for c in lcols],
-        *[F.col(f"{p}{c}") for p in prefixes for c in blocks[p]],
-    )

@@ -8,8 +8,8 @@ forward-fill; generic ffill/bfill on request (`fill_nan`,
 Spark-first: ``grid_fill_ranges`` explodes each bar over its own
 validity range (no driver loop, no O(grid) sort); ffill is
 ``last(x, ignorenulls=True)`` over an unbounded-preceding row frame;
-bfill is the mirrored ``first`` over the following frame. All Catalyst,
-one shuffle on entity.
+bfill is the same running frame on the reversed time axis (ts DESC).
+All Catalyst, one shuffle on entity.
 
 The reference's OHLCV seeding rules (open/high/low from the filled
 close, volume 0) have no implementation here: the pipeline fills no
@@ -26,24 +26,16 @@ from pyspark.sql.window import Window
 from ..config import tf_seconds
 
 
-def _w_back(by: str, ts_col: str):
+def _w_running(by: str, order):
     return (
         Window.partitionBy(by)
-        .orderBy(ts_col)
+        .orderBy(order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
 
 
-def _w_fwd(by: str, ts_col: str):
-    return (
-        Window.partitionBy(by)
-        .orderBy(ts_col)
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-
-
 def ffill(df: DataFrame, cols: list[str], by: str = "entity", ts_col: str = "ts") -> DataFrame:
-    w = _w_back(by, ts_col)
+    w = _w_running(by, F.col(ts_col).asc())
     return df.select(
         *[c for c in df.columns if c not in cols],
         *[F.last(c, ignorenulls=True).over(w).alias(c) for c in cols],
@@ -51,10 +43,12 @@ def ffill(df: DataFrame, cols: list[str], by: str = "entity", ts_col: str = "ts"
 
 
 def bfill(df: DataFrame, cols: list[str], by: str = "entity", ts_col: str = "ts") -> DataFrame:
-    w = _w_fwd(by, ts_col)
+    # ffill on the reversed time axis: a frame ending at unbounded
+    # following is re-evaluated for every row, quadratic per entity
+    w = _w_running(by, F.col(ts_col).desc())
     return df.select(
         *[c for c in df.columns if c not in cols],
-        *[F.first(c, ignorenulls=True).over(w).alias(c) for c in cols],
+        *[F.last(c, ignorenulls=True).over(w).alias(c) for c in cols],
     )
 
 

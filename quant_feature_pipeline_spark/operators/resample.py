@@ -18,12 +18,27 @@ Parquet stats pruning upstream. No UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import tf_interval, tf_seconds
 from ..tsutil import epoch_seconds
+
+
+def bucket_window(ts: Column, tf: str, closed: str) -> Column:
+    """The ``tf`` bucket of ``ts`` as Spark's epoch-aligned window struct
+    (``start``, ``end``).
+
+    closed="left"  -> bucket [start, end)   (leakage-free; resample_ohlcv's default)
+    closed="right" -> bucket (start, end]   (reference-compat,
+                      `step2_resample.py:229` label/closed='right')
+    """
+    if closed == "right":
+        # shift ts by -1us so a row exactly on a boundary lands in the
+        # bucket that *ends* at its timestamp
+        ts = ts - F.expr("INTERVAL 1 MICROSECOND")
+    return F.window(ts, tf_interval(tf))
 
 
 def resample_ohlcv(
@@ -35,21 +50,11 @@ def resample_ohlcv(
 ) -> DataFrame:
     """Tumbling OHLCV aggregation onto timeframe ``tf``; every bucket is
     labelled with its end and kept, with its row count in ``bar_count``.
-
-    closed="left"  -> bucket [start, end)   (leakage-free default)
-    closed="right" -> bucket (start, end]   (reference-compat,
-                      `/root/reference/step2_resample.py:229` label/closed='right')
-    """
-    ts = F.col(ts_col)
-    if closed == "right":
-        # shift ts by -1us so a row exactly on a boundary lands in the
-        # bucket that *ends* at its timestamp
-        bucket_ts = ts - F.expr("INTERVAL 1 MICROSECOND")
-    else:
-        bucket_ts = ts
-    win = F.window(bucket_ts, tf_interval(tf))
+    ``closed`` picks the bucket boundaries (``bucket_window``). The
+    streaming resample runs the same aggregate list on a watermarked
+    stream."""
     agg = (
-        bars.groupBy(F.col(by), win.alias("w"))
+        bars.groupBy(F.col(by), bucket_window(F.col(ts_col), tf, closed).alias("w"))
         .agg(
             F.min_by("open", ts_col).alias("open"),
             F.max("high").alias("high"),

@@ -210,9 +210,9 @@ def run_flagship(
     # both depend only on (entity, ts, volume/close), which are base
     # columns, so computing them here sorts a 12-column frame once
     # instead of window-sorting the ~100-column merged frame after the
-    # as-of; the derived columns ride the narrow union as left payload
-    # (run_pipeline has shipped log_return this way since r4). Same
-    # expressions on the same rows — bit-identical.
+    # merge, whose match windows reuse this same sort (run_pipeline has
+    # shipped log_return this way since r4). Same expressions on the
+    # same rows — bit-identical.
     base = tfs[base_tf]
     wc_v = (
         Window.partitionBy(by)
@@ -236,7 +236,6 @@ def run_flagship(
 
     df = merge_timeframes(
         base, inds, cfg, by=by, ts_col=ts_col, keep_right_cols=("close",),
-        axis_tables=tfs,
     )
 
     # rank-stage inputs + base log return (all JVM expressions).

@@ -6,9 +6,11 @@ Stages (each a lazy DataFrame transformation; checkpointable between):
 1. resample: base bars → one OHLCV table per timeframe (A1)
 2. indicators: per-tf stateless window indicators + ONE grouped Arrow
    recurrence stage of array kernels (functions/grouped.py; SURVEY.md §2.5)
-3. merge: backward as-of join (exact matches allowed, no tolerance) of
-   every larger tf onto the base axis in one fused pass, columns
-   prefixed ``{tf}_`` (J1 + P6, `step4_merge_features.py:340-344, 522-535`)
+3. merge: backward as-of match (exact matches allowed, no tolerance) of
+   every larger tf onto the base axis, columns prefixed ``{tf}_``
+   (J1 + P6, `step4_merge_features.py:340-344, 522-535`). Every coarse
+   bar is a rollup of the base axis, so the match is a key lookup: two
+   running windows on the base's order and one equi-join per tf
 4. features: sliding momentum on the base grid (W1), time encodings
    (W12), market state (W13), RSI normalization (W11), log return (W7),
    tanh compressions — the Step5 feature family
@@ -22,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..config import RSI_WINDOW, PipelineConfig, tf_seconds
 from ..functions.indicators import (
@@ -31,8 +34,7 @@ from ..functions.indicators import (
 from ..functions.normalize import market_state, rsi_unit, tanh_compress
 from ..functions.recurrence import compute_recurrence_indicators
 from ..functions.timefeat import time_encodings
-from ..operators.asof import asof_join_multi
-from ..operators.resample import resample_ohlcv
+from ..operators.resample import bucket_window, resample_ohlcv
 from ..operators.shift import log_return
 from ..tsutil import repartition_by_size
 
@@ -131,7 +133,6 @@ def merge_timeframes(
     by: str = "entity",
     ts_col: str = "ts",
     keep_right_cols: tuple[str, ...] = (),
-    axis_tables: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Step4 equivalent: as-of join each tf's indicators (OHLCV dropped,
     P2; ``keep_right_cols`` exempts columns the consumer needs, e.g. the
@@ -139,48 +140,64 @@ def merge_timeframes(
     ``{tf}_`` prefixes.
 
     The merge is backward with exact matches allowed and no tolerance
-    (the reference's default `merge.align_direction`), so all coarser
-    timeframes fuse into ONE sorted window pass (asof_join_multi).
-
-    ``axis_tables`` maps tf -> the pre-indicator resampled bar table.
-    indicator_table is row-preserving, so each resampled table has
-    exactly the indicator table's (entity, ts) rows — feeding the cheap
-    resampled table to the narrow as-of match means the opaque indicator
-    Arrow stage is computed ONCE (payload join) instead of twice
-    (r4 scaling work; mapInPandas cannot be column-pruned through).
+    (the reference's default `merge.align_direction`). Every coarse
+    table is a rollup of the base axis (``resample_all``; every target
+    is a whole multiple of ``base_tf``), so the coarse bar labelled K
+    holds exactly the base labels in (K-P, K]. The backward match of base
+    row t is therefore a key: t itself when t closes its coarse bucket,
+    else the label of the latest earlier bucket that holds a base row.
+    Two running windows on the base's own (entity, ts) order compute it
+    (``lag`` of the bucket label, then ``last(ignorenulls)`` of the label
+    where it changes), and each coarse table equi-joins on
+    (entity, matched ts). The windows reuse the sort the base already
+    has, and the joins' clustering on entity is the base's partitioning.
     """
     rights = {
-        f"{tf}_": ind.drop(
+        tf: ind.drop(
             *[c for c in OHLCV if c in ind.columns and c not in keep_right_cols]
         )
         for tf, ind in indicator_tables.items()
     }
-    # the base-tf indicator block lives on exactly the base axis —
-    # that's an equi-join, not an as-of join; only coarser tfs as-of.
-    # The as-of runs FIRST, on the naked base: its narrow left payload
-    # (OHLCV) then rides through the union sort, so no re-attach join
-    # exists, and the sort's entity partitioning satisfies the
-    # clustering requirement of both the payload joins and the final
-    # base-block equi-join (no further exchange of the wide frame).
-    base_key = f"{cfg.base_tf}_"
+
+    def block(tf: str, key: str) -> DataFrame:  # (by, key, {tf}_ values)
+        r = rights.pop(tf)
+        return r.select(
+            by, F.col(ts_col).alias(key),
+            *[F.col(c).alias(f"{tf}_{c}") for c in r.columns if c not in (by, ts_col)],
+        )
+
+    # the base-tf block lives on exactly the base axis: a [by, ts] join
+    base_block = block(cfg.base_tf, ts_col) if cfg.base_tf in rights else None
     merged = base
-    base_block = None
-    if base_key in rights:
-        r = rights.pop(base_key)
-        base_block = r.select(
-            by, ts_col, *[F.col(c).alias(f"{base_key}{c}") for c in r.columns if c not in (by, ts_col)]
-        )
     if rights:
-        merged = asof_join_multi(
-            merged,
-            rights,
-            on=ts_col,
-            by=by,
-            axis_tables={
-                f"{tf}_": ax for tf, ax in (axis_tables or {}).items()
-                if f"{tf}_" in rights
-            },
+        ts, coarse = F.col(ts_col), list(rights)
+        # _k: the label of t's coarse bucket, ceil(t/P)*P (Spark takes one
+        # window() per projection); _p: the previous base row's _k; _m:
+        # t when t closes its bucket, else the latest _p where _k changed
+        for i, tf in enumerate(coarse):
+            merged = merged.withColumn(f"_k{i}", bucket_window(ts, tf, "right").end)
+        w = Window.partitionBy(by).orderBy(ts_col)
+        merged = merged.withColumns(
+            {f"_p{i}": F.lag(f"_k{i}").over(w) for i in range(len(coarse))}
         )
+        w = w.rowsBetween(Window.unboundedPreceding, 0)
+        merged = merged.withColumns(
+            {
+                f"_m{i}": F.when(F.col(f"_k{i}") == ts, ts).otherwise(
+                    F.last(
+                        F.when(F.col(f"_p{i}") != F.col(f"_k{i}"), F.col(f"_p{i}")),
+                        ignorenulls=True,
+                    ).over(w)
+                )
+                for i in range(len(coarse))
+            }
+        )
+        out = [by, ts_col, *[c for c in base.columns if c not in (by, ts_col)]]
+        for i, tf in enumerate(coarse):
+            r = block(tf, f"_m{i}")
+            out += r.columns[2:]
+            merged = merged.join(r, [by, f"_m{i}"], "left")
+        merged = merged.select(*out)
     if base_block is not None:
         merged = merged.join(base_block, [by, ts_col], "left")
     return merged
@@ -262,7 +279,7 @@ def run_pipeline(
     base = tfs[cfg.base_tf]
     # base log return on the NARROW axis (7 cols) — feature_table would
     # otherwise window-sort the merged ~100-col frame for one lag; the
-    # column rides the narrow as-of union like the OHLCV payload
+    # merge's match windows reuse this sort
     base = log_return(
         base, src="close", out=f"ret_{cfg.base_tf}_log", by=by, ts_col=ts_col
     )
@@ -279,7 +296,5 @@ def run_pipeline(
         )
         for tf, df in tfs.items()
     }
-    merged = merge_timeframes(
-        base, inds, cfg, by=by, ts_col=ts_col, axis_tables=tfs,
-    )
+    merged = merge_timeframes(base, inds, cfg, by=by, ts_col=ts_col)
     return feature_table(merged, cfg, by=by, ts_col=ts_col)

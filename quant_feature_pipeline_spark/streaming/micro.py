@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import tf_interval
+from ..operators.resample import resample_ohlcv
 
 
 def stream_bars_from_dir(
@@ -41,21 +41,11 @@ def streaming_resample(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming tumbling OHLCV with a 10-minute late-data watermark;
-    same agg dict as the batch resample (A1)."""
+    the batch resample's aggregate list (``resample_ohlcv``, A1)."""
     # watermarks require TIMESTAMP_LTZ; parquet from other engines is NTZ
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, "10 minutes")
-        .groupBy(F.col(by), F.window(F.col(ts_col), tf_interval(tf)).alias("w"))
-        .agg(
-            F.min_by("open", ts_col).alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", ts_col).alias("close"),
-            F.sum("volume").alias("volume"),
-            F.count(F.lit(1)).alias("bar_count"),
-        )
-        .select(by, F.col("w.end").alias(ts_col), "open", "high", "low", "close", "volume", "bar_count")
+    return resample_ohlcv(
+        stream.withWatermark(ts_col, "10 minutes"), tf, by=by, ts_col=ts_col
     )
 
 

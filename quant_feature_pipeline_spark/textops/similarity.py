@@ -79,6 +79,30 @@ def ivf_centroids(dim: int, n_cells: int) -> list[list[float]]:
     return rng.randn(n_cells, dim).astype(float).tolist()
 
 
+def _cell_assigner(cents: list[list[float]]):
+    """A pandas UDF mapping each vector to its nearest centroid's index
+    (a NULL vector counts as the zero vector): the L2 argmin ranked by
+    |c|² − 2·v·c, the dot product summed over dimensions in order."""
+    cents_np = np.array(cents, dtype=np.float64)
+    c2_np = np.array([float(np.dot(c, c)) for c in cents], dtype=np.float64)
+
+    @F.pandas_udf("int")
+    def _assign(vs):  # no hints: postponed annotations break eval-type inference
+        import pandas as pd
+
+        if not len(vs):
+            return pd.Series(np.empty(0, dtype=np.int32))
+        zero = np.zeros(cents_np.shape[1])
+        v = np.stack([x if x is not None else zero for x in vs.to_numpy()])
+        dots = np.zeros((len(v), len(cents_np)), dtype=np.float64)
+        for d in range(cents_np.shape[1]):
+            dots += v[:, [d]] * cents_np[None, :, d]
+        scores = c2_np[None, :] - 2.0 * dots
+        return pd.Series(scores.argmin(axis=1).astype(np.int32))
+
+    return _assign
+
+
 def ivf_train(
     df: DataFrame,
     n_cells: int,
@@ -92,9 +116,9 @@ def ivf_train(
     in shuffle arrival order, so two runs could differ in the last ulp
     and no external oracle could reproduce the result).
 
-    Each iteration is (1) a MAP-ONLY vectorized Arrow assignment (the
-    same per-dimension sequential fold as ivf_topk's assignment kernel,
-    so an independent numpy replica reproduces every score bit) and
+    Each iteration is (1) a MAP-ONLY vectorized Arrow assignment (ivf_topk's
+    kernel, ``_cell_assigner``: a per-dimension sequential fold an
+    independent numpy replica reproduces to every score bit) and
     (2) ONE grouped Arrow stage per cell that sorts the cell's members
     by ``id_col`` and runs ``np.add.reduce`` over rows in that fixed
     order — a deterministic fold an oracle replays exactly. Only
@@ -111,7 +135,7 @@ def ivf_train(
 
     cents = [list(map(float, c)) for c in ivf_centroids(dim, n_cells)]
     # NULL embeddings are excluded from TRAINING outright (ADVICE r4:
-    # _assign zero-substituted them but _cell_stats crashed on the None;
+    # the assignment zero-substituted them but _cell_stats crashed on the None;
     # a null vector carries no signal for the quantizer either way —
     # ivf_topk still assigns null corpus rows to the zero-vector cell)
     vecs = (
@@ -128,21 +152,6 @@ def ivf_train(
     )
     try:
         for _ in range(iters):
-            cents_np = np.array(cents, dtype=np.float64)
-            c2_np = np.array([float(np.dot(c, c)) for c in cents], dtype=np.float64)
-
-            @F.pandas_udf("int")
-            def _assign(vs):  # no hints: postponed annotations break eval-type inference
-                if not len(vs):
-                    return pd.Series(np.empty(0, dtype=np.int32))
-                zero = np.zeros(cents_np.shape[1])
-                v = np.stack([x if x is not None else zero for x in vs.to_numpy()])
-                dots = np.zeros((len(v), len(cents_np)), dtype=np.float64)
-                for d in range(cents_np.shape[1]):
-                    dots += v[:, [d]] * cents_np[None, :, d]
-                scores = c2_np[None, :] - 2.0 * dots
-                return pd.Series(scores.argmin(axis=1).astype(np.int32))
-
             def _cell_stats(pdf: pd.DataFrame) -> pd.DataFrame:
                 pdf = pdf.sort_values("_id", kind="mergesort")
                 vs = pdf["_v"].to_numpy()
@@ -167,7 +176,7 @@ def ivf_train(
                 )
 
             rows = (
-                vecs.select("_id", "_v", _assign(F.col("_v")).alias("_cell"))
+                vecs.select("_id", "_v", _cell_assigner(cents)(F.col("_v")).alias("_cell"))
                 .groupBy("_cell")
                 .applyInPandas(_cell_stats, schema=stats_schema)
                 .collect()
@@ -293,25 +302,8 @@ def ivf_topk(
     # list_dot_product, so scores (and near-tie argmins) stay
     # bit-identical across all three engines; ties pick the lowest
     # cell_id (np.argmin first-min == the window's cell_id tiebreak).
-    cents_np = np.array(cents, dtype=np.float64)
-    c2_np = np.array([float(np.dot(cc, cc)) for cc in cents], dtype=np.float64)
-
-    @F.pandas_udf("int")
-    def _assign(vecs):
-        import pandas as pd
-
-        if not len(vecs):
-            return pd.Series(np.empty(0, dtype=np.int32))
-        zero = np.zeros(cents_np.shape[1])
-        v = np.stack([x if x is not None else zero for x in vecs.to_numpy()])
-        dots = np.zeros((len(v), len(cents_np)), dtype=np.float64)
-        for d in range(cents_np.shape[1]):
-            dots += v[:, [d]] * cents_np[None, :, d]
-        scores = c2_np[None, :] - 2.0 * dots
-        return pd.Series(scores.argmin(axis=1).astype(np.int32))
-
     corpus_cells = c.select(
-        id_col, _assign(F.col("_cv")).alias("cell_id"), "_cv", "_cn"
+        id_col, _cell_assigner(cents)(F.col("_cv")).alias("cell_id"), "_cv", "_cn"
     )
     q = queries.select(
         F.col(query_id_col), _dbl(F.col(vec_col)).alias("_qv"), _norm(_dbl(F.col(vec_col))).alias("_qn")

@@ -165,47 +165,6 @@ def test_asof_bucketed_bucket_sizes(spark, bucket_s, direction):
     assert_frame_close(got, want, keys=["entity", "ts", "lval"])
 
 
-def test_asof_multi_duplicate_left_ts_no_fanout(spark):
-    """Duplicate left (entity, ts) rows must map 1:1 through the fused
-    multi-asof — for a narrow left payload and for a wide one (13
-    columns): every left payload rides the union sort."""
-    import pandas as pd
-
-    from quant_feature_pipeline_spark.operators.asof import asof_join_multi
-
-    lts = [T0 + datetime.timedelta(minutes=m) for m in (1, 5, 5, 5, 9)]
-    lpdf = pd.DataFrame({"entity": "A", "ts": lts, "lval": range(5)})
-    left = spark.createDataFrame(lpdf)
-    rts = [T0 + datetime.timedelta(minutes=m) for m in (0, 4, 8)]
-    right = spark.createDataFrame(
-        pd.DataFrame({"entity": "A", "ts": rts, "rval": [10.0, 20.0, 30.0]})
-    )
-    out = asof_join_multi(left, {"r_": right}).toPandas()
-    assert len(out) == 5
-    assert sorted(out["lval"]) == [0, 1, 2, 3, 4]
-    assert (out[out["lval"] > 0].sort_values("lval")["r_rval"] == [20.0] * 3 + [30.0]).all()
-
-    wide_cols = [f"w{k}" for k in range(12)]
-    wpdf = lpdf.assign(**{c: lpdf["lval"] * 100.0 + k for k, c in enumerate(wide_cols)})
-    wide = (
-        asof_join_multi(spark.createDataFrame(wpdf), {"r_": right})
-        .toPandas()
-        .sort_values("lval")
-        .reset_index(drop=True)
-    )
-    assert len(wide) == 5
-    assert sorted(wide["lval"]) == [0, 1, 2, 3, 4]
-    for k, c in enumerate(wide_cols):
-        assert (wide[c] == wide["lval"] * 100.0 + k).all(), c
-    narrow = out.sort_values("lval").reset_index(drop=True)
-    assert wide["ts"].equals(narrow["ts"])
-    assert wide["r_rval"].equals(narrow["r_rval"])
-
-    near = asof_join(left, right, direction="nearest").toPandas()
-    assert len(near) == 5
-    assert sorted(near["lval"]) == [0, 1, 2, 3, 4]
-
-
 @pytest.mark.parametrize("strategy", STRATEGIES)
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 def test_asof_null_right_values(spark, strategy, direction):
@@ -259,51 +218,3 @@ def test_asof_null_right_values(spark, strategy, direction):
     ).toPandas()
     want = _oracle(lpdf, rpdf, direction, True, None)
     assert_frame_close(got, want, keys=["entity", "ts", "lval"])
-
-
-def test_asof_multi_hot_routing_value_identity(spark, monkeypatch):
-    """r6 (VERDICT r5 item 4): asof_join_multi routes hot entities
-    through iterated range-bucketed joins; output must EQUAL the fused
-    un-routed plan — rows, columns, values — on a skewed input (and
-    null-key entities must survive)."""
-    from quant_feature_pipeline_spark.operators import asof as asof_mod
-    from quant_feature_pipeline_spark.operators.asof import asof_join_multi
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = [("HOT", t0 + datetime.timedelta(seconds=7 * k), float(k)) for k in range(4000)]
-    rows += [("C1", t0 + datetime.timedelta(seconds=61 * k), float(100 + k)) for k in range(50)]
-    rows += [(None, t0 + datetime.timedelta(seconds=67 * k), float(900 + k)) for k in range(5)]
-    left = spark.createDataFrame(pd.DataFrame(rows, columns=["entity", "ts", "lval"]))
-    rights = {}
-    for j, p in enumerate(("a_", "b_")):
-        # rights span several hour buckets of the hot branch; the last
-        # one (k = 19) is NULL and is carried across the later buckets
-        rr = [
-            (
-                e, t0 + datetime.timedelta(minutes=(13 + 4 * j) * k),
-                None if k == 19 else float(10 * j + k),
-            )
-            for e in ("HOT", "C1", None)
-            for k in range(20)
-        ]
-        rights[p] = spark.createDataFrame(
-            pd.DataFrame(rr, columns=["entity", "ts", f"v{j}"])
-        )
-
-    def key(pdf):
-        return pdf.sort_values(["entity", "ts", "lval"]).reset_index(drop=True)
-
-    # un-routed reference: no entity reaches the threshold
-    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1 << 62)
-    want = key(asof_join_multi(left, rights).toPandas())
-    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1_000)
-    assert asof_mod._detect_hot_entities(left, "entity", 1_000) == ["HOT"]
-    got = key(asof_join_multi(left, rights).toPandas())
-    assert list(got.columns) == list(want.columns)
-    assert len(got) == len(want) == len(rows)
-    for c in got.columns:
-        g, w = got[c], want[c]
-        if g.dtype.kind == "f":
-            assert np.allclose(g.fillna(-1), w.fillna(-1)), c
-        else:
-            assert g.fillna("ø").equals(w.fillna("ø")) if g.dtype == object else g.equals(w), c

@@ -278,7 +278,7 @@ def test_asof_auto_routes_hot_entity(spark, monkeypatch):
 
 def test_asof_auto_hot_list_past_cap_stays_exact(spark, monkeypatch):
     """The detected hot list is capped; hot entities past the cap take
-    the cold union_ffill branch. Both routers split on one literal isin
+    the cold union_ffill branch. The router splits on one literal isin
     over the capped list, and the result is still the exact join."""
     from quant_feature_pipeline_spark.operators import asof as asof_mod
 
@@ -286,7 +286,6 @@ def test_asof_auto_hot_list_past_cap_stays_exact(spark, monkeypatch):
     monkeypatch.setattr(asof_mod, "_HOT_ISIN_MAX", 1)
     # HOT (5,000 rows) and C1 (300) both exceed 200 rows
     monkeypatch.setattr(asof_mod, "_HOT_ROWS", 200)
-    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 200)
     assert len(asof_mod._detect_hot_entities(left, "entity", 200)) == 1
     want = _key(
         asof_mod.asof_join(left, right, strategy="union_ffill").toPandas()
@@ -295,11 +294,6 @@ def test_asof_auto_hot_list_past_cap_stays_exact(spark, monkeypatch):
         asof_mod.asof_join(left, right, strategy="auto").toPandas()
     )
     assert got.equals(want)
-    multi_got = _key(asof_mod.asof_join_multi(left, {"r_": right}).toPandas())
-    # un-routed reference: no entity reaches the threshold
-    monkeypatch.setattr(asof_mod, "_HOT_ROWS_MULTI", 1 << 62)
-    multi_want = _key(asof_mod.asof_join_multi(left, {"r_": right}).toPandas())
-    assert multi_got.equals(multi_want)
 
 
 def test_asof_auto_small_input_skips_detection(spark):

@@ -75,11 +75,15 @@ def test_schema_sha_contract(spark):
 
 def test_base_tf_must_be_the_first_target():
     """The base axis is ``resample_targets[0]``; a different ``base_tf``
-    would name a return column the flagship never emits."""
+    would name a return column the flagship never emits. Every target
+    is a whole multiple of it, so the merge matches by key."""
     with pytest.raises(ValueError, match="'3m'.*'15m', '1h'"):
         PipelineConfig(base_tf="3m", resample_targets=("15m", "1h"))
     with pytest.raises(ValueError):
         PipelineConfig(base_tf="3m", resample_targets=())
+    # a target that is no whole multiple of the base is no rollup of it
+    with pytest.raises(ValueError, match=r"\['5m'\].*'3m'"):
+        PipelineConfig(base_tf="3m", resample_targets=("3m", "5m"))
 
 
 def test_checkpoint_warm_start_equivalence(spark, tmp_path):

@@ -15,7 +15,6 @@ import datetime
 from pyspark.sql import functions as F
 
 from quant_feature_pipeline_spark.config import PipelineConfig
-from quant_feature_pipeline_spark.operators.asof import asof_join_multi
 from quant_feature_pipeline_spark.plans.pipeline import run_pipeline
 from quant_feature_pipeline_spark.sources.bars import bars_from_events
 from quant_feature_pipeline_spark.sources.scan import slice_time_range
@@ -106,17 +105,19 @@ def test_pipeline_exchange_budget_2tf(spark):
         persist_stages=False,
     )
     n = _plan(feat).count("Exchange")
-    assert n <= 14, n
+    assert n <= 9, n
 
 
-def test_multi_asof_narrow_no_reattach(spark):
-    """The left payload rides through the union sort, and the plan stays
-    within a small exchange budget."""
-    ev = _events(spark)
-    bars = bars_from_events(ev).select(
+def test_pipeline_merge_has_no_union(spark):
+    """The timeframe merge matches each coarse bar by key: two running
+    windows on the base's (entity, ts) order and one equi-join per
+    timeframe. No left/right union is sorted anywhere in the plan."""
+    bars = bars_from_events(_events(spark)).select(
         "entity", "ts", "open", "high", "low", "close", "volume"
     )
-    r1 = bars.select("entity", "ts", F.col("close").alias("c1"))
-    r2 = bars.select("entity", "ts", F.col("close").alias("c2"))
-    p = _plan(asof_join_multi(bars, {"a_": r1, "b_": r2}))
-    assert p.count("Exchange") <= 10, p.count("Exchange")
+    feat = run_pipeline(
+        bars,
+        PipelineConfig(base_tf="3m", resample_targets=("3m", "15m", "30m", "2h")),
+        persist_stages=False,
+    )
+    assert "Union" not in _plan(feat)

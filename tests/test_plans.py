@@ -89,6 +89,18 @@ def test_asof_plans_use_running_frames_only(spark, strategy):
             assert "join" not in p, (direction, exact)
 
 
+def test_bfill_running_frame_only(spark):
+    """bfill is the ffill frame on the reversed time axis: a frame that
+    ends at unbounded following is re-evaluated for every row, quadratic
+    in the entity."""
+    from quant_feature_pipeline_spark.operators.fill import bfill
+
+    pdf = make_bars_pdf(n=50)
+    p = _plan(bfill(spark.createDataFrame(pdf), ["close"])).lower()
+    assert "unboundedpreceding" in p
+    assert "unboundedfollowing" not in p
+
+
 def test_prefix_sum_sma_no_sliding_frame(spark):
     """sma must compile to running frames + lag, not O(W) sliding frames."""
     from quant_feature_pipeline_spark.functions.indicators import (

@@ -53,12 +53,17 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from quant_feature_pipeline_spark.config import PipelineConfig
-    from quant_feature_pipeline_spark.operators.asof import asof_join, asof_join_multi
-    from quant_feature_pipeline_spark.plans.pipeline import run_pipeline
+    from quant_feature_pipeline_spark.operators.asof import asof_join
+    from quant_feature_pipeline_spark.plans.pipeline import (
+        merge_timeframes,
+        resample_all,
+        run_pipeline,
+    )
     from quant_feature_pipeline_spark.session import get_spark
     from quant_feature_pipeline_spark.sources.bars import bars_from_events
     from quant_feature_pipeline_spark.sources.scan import slice_time_range
     from quant_feature_pipeline_spark.textops.similarity import ivf_topk
+    from quant_feature_pipeline_spark.tsutil import repartition_by_size
 
     spark = get_spark(cpus=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -70,6 +75,10 @@ def main() -> None:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     dim = len(emb.select("embedding").first()[0])
+    cfg3 = PipelineConfig(base_tf="3m", resample_targets=("3m", "15m", "30m"))
+    # the merge's inputs as run_pipeline builds them: one up-front
+    # entity partitioning feeds the resample rollups
+    tfs = resample_all(repartition_by_size(bars, "entity"), cfg3)
 
     exhibits = [
         (
@@ -104,16 +113,14 @@ def main() -> None:
             "branch, unioned — never one straggler sort task.",
         ),
         (
-            "Multi-timeframe as-of (fused)",
-            asof_join_multi(
-                bars,
-                {
-                    "a_": bars.select("entity", "ts", F.col("close").alias("c1")),
-                    "b_": bars.select("entity", "ts", F.col("close").alias("c2")),
-                },
-            ),
-            "the union carries (src_idx, rts) — sort width independent of the "
-            "timeframe count; payload attach joins reuse HashPartitioning(entity).",
+            "Multi-timeframe merge (keyed join)",
+            merge_timeframes(tfs["3m"], tfs, cfg3, keep_right_cols=("close",)),
+            "every coarse bar is a rollup of the base axis, so each base row's "
+            "backward match is a key: two running windows on the base's (entity, "
+            "ts) order compute it, and each coarse table equi-joins on (entity, "
+            "matched ts) — no union, and the windows and joins reuse the "
+            "HashPartitioning(entity) of the resampled tables (the census "
+            "includes the 3-tf resample chain).",
         ),
         (
             "Full 2-tf pipeline",
